@@ -1,5 +1,9 @@
 package graft
 
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main. Contract: runs the catalog on
   * `SPARK_GRAFT_SF_DIR`, prints ONE machine-parseable JSON line, and
   * writes the full-fidelity per-query results to `bench_detail.json`.
@@ -48,59 +52,23 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    // ERROR, not WARN: stray WARN lines (DAGScheduler cancel races,
-    // streaming AQE notices) land on the output stream between the
-    // timed region and the JSON summary line, and the harness only
-    // keeps the last ~2000 chars of build output — noise there can
-    // push the JSON line out of the captured window.
-    spark.sparkContext.setLogLevel("ERROR")
-    // JVM/session warmup outside the timed region: file-index + codegen
-    // + scheduler paths, so the first measured query isn't charged ~4s
-    // of one-time startup cost
-    for (tbl <- Seq("region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events", "documents", "embeddings"))
-      try sources.Tables(spark, sfDir, tbl).write
-        .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    // Warm the ORC writer/reader classload too (a 1-row roundtrip):
-    // q53's r6 cold time was ~8× its warm time and the delta was pure
-    // first-touch ORC classloading, not plan cost.
-    try {
-      val orcWarm = java.nio.file.Files.createTempDirectory("graft_orc_warm")
-      val p = orcWarm.resolve("t").toString
-      spark.range(1).write.mode("overwrite").orc(p)
-      spark.read.orc(p).write.format("noop").mode("overwrite").save()
-      org.apache.commons.io.FileUtils.deleteQuietly(orcWarm.toFile)
-    } catch { case _: Throwable => }
-    // Warm the VARIANT machinery (parse_json → binary Variant →
-    // variant_get): q57's r7 cold was 7.5 s vs 3.3 s warm — the delta
-    // was Variant classloading + codegen first-touch, the same mode as
-    // q53's ORC cost, so it gets the same treatment.
-    try spark.range(1)
-      .selectExpr("""variant_get(parse_json('{"k":1}'), '$.k', 'bigint')""")
-      .write.format("noop").mode("overwrite").save()
+    // Stop FIRST, print LAST: spark.stop() logs its shutdown lines
+    // before the summary is emitted, so the JSON stays the final line
+    // of program output (only sbt's own "[success]" follows it inside
+    // the harness's captured tail).
+    val (line, detail) = Harness.withSession()(run(_, Harness.sfDir, args.toSeq))
+    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
+      detail.getBytes("UTF-8"))
     catch { case _: Throwable => }
-    // Warm the Structured Streaming machinery too (micro-batch planner,
-    // state store provider, streaming-agg codegen) with a one-batch
-    // rate-source aggregate, so the first measured st* query isn't
-    // charged that one-time cost either.
-    try {
-      val q = spark.readStream.format("rate")
-        .option("rowsPerSecond", "1").option("numPartitions", "1").load()
-        .groupBy(org.apache.spark.sql.functions.col("value") % 2).count()
-        .writeStream.format("memory").queryName("bench_warm")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(15000); q.stop()
-    } catch { case _: Throwable => }
-    // Optional args: query-name prefixes to run (iteration aid);
-    // no args = full suite (the driver contract).
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => args.exists(n.startsWith) }
+    println(line)
+    System.out.flush()
+  }
+
+  /** Runs the catalog rows whose names start with one of `prefixes`
+    * (every row when none are given) under the protocol above, and
+    * returns the summary line and the `bench_detail.json` body. */
+  def run(spark: SparkSession, sfDir: String, prefixes: Seq[String]): (String, String) = {
+    Harness.warmUp(spark, sfDir)
     // EXECUTION order is a seeded shuffle (r12): the r6/r7/r10/r11
     // host-drag episodes each landed on a contiguous span of the fixed
     // alphabetical order, so the same (st/t) families absorbed the
@@ -115,88 +83,63 @@ object Bench {
     // executed position as "pos" so any drag window is locatable in
     // the artifact.
     val orderSeed = 21L
-    val ordered = new scala.util.Random(orderSeed)
-      .shuffle(selected.toSeq.sortBy(_._1))
-    // the drag sentinel's fixed workload: one 1-row parquet, written
-    // once outside the timed region; each sentinel run reads it
-    // through the same noop sink as the queries
+    val ordered = new scala.util.Random(orderSeed).shuffle(Harness.select(prefixes))
     val SentinelEvery = 10
-    val sentinelPath =
-      try {
-        val d = java.nio.file.Files.createTempDirectory("graft_sentinel")
-        val p = d.resolve("ref").toString
-        spark.range(1).repartition(1).write.mode("overwrite").parquet(p)
-        Some(p)
-      } catch { case _: Throwable => None }
-    def sentinelOnce(): Double = {
-      val t0 = System.nanoTime()
-      try sentinelPath.foreach(p => spark.read.parquet(p)
-        .write.format("noop").mode("overwrite").save())
-      catch { case _: Throwable => }
-      (System.nanoTime() - t0) / 1e9
-    }
     // sentinel entries: (key, runs, pass, pos-within-pass)
-    val sentinels =
-      scala.collection.mutable.ArrayBuffer[(String, Seq[Double], Int, Int)]()
-    val runsOf = scala.collection.mutable.Map[String,
-      scala.collection.mutable.ArrayBuffer[Double]]()
-    val healthOf = scala.collection.mutable.Map[String, (Int, Double, Int)]()
-    // THREE INTERLEAVED PASSES over the seeded order (see header): a
-    // query's runs land minutes apart, so a drag burst corrupts at most
-    // one of them and the median stays clean.
-    for (pass <- 0 until 3) {
-      var execPos = 0
-      var si = 0
-      ordered.zipWithIndex.foreach { case ((name, fn), qi) =>
-        if (sentinelPath.nonEmpty && qi % SentinelEvery == 0) {
-          // one sentinel probe per lattice point PER PASS: the probe
-          // timestamps drag at this point of THIS pass — three-run
-          // triples here would measure one instant thrice
-          sentinels += ((f"_sentinel_p${pass}_$si%02d",
-            Seq(sentinelOnce()), pass, execPos))
-          si += 1
+    val sentinels = ArrayBuffer[(String, Seq[Double], Int, Int)]()
+    val runsOf = mutable.Map[String, ArrayBuffer[Double]]()
+    val healthOf = mutable.Map[String, (Int, Double, Int)]()
+    Harness.withTempDir("graft_sentinel") { dir =>
+      // the drag sentinel's fixed workload: one 1-row parquet, written
+      // once outside the timed region; each sentinel run reads it
+      // through the same noop sink as the queries
+      val sentinelPath =
+        try {
+          val p = dir.resolve("ref").toString
+          spark.range(1).repartition(1).write.mode("overwrite").parquet(p)
+          Some(p)
+        } catch { case _: Throwable => None }
+      def sentinelOnce(): Double = Harness.timed {
+        try sentinelPath.foreach(p => Harness.sink(spark.read.parquet(p)))
+        catch { case _: Throwable => }
+      }._2
+      // THREE INTERLEAVED PASSES over the seeded order (see header): a
+      // query's runs land minutes apart, so a drag burst corrupts at most
+      // one of them and the median stays clean.
+      for (pass <- 0 until 3) {
+        var execPos = 0
+        var si = 0
+        ordered.zipWithIndex.foreach { case ((name, fn), qi) =>
+          if (sentinelPath.nonEmpty && qi % SentinelEvery == 0) {
+            // one sentinel probe per lattice point PER PASS: the probe
+            // timestamps drag at this point of THIS pass — three-run
+            // triples here would measure one instant thrice
+            sentinels += ((f"_sentinel_p${pass}_$si%02d",
+              Seq(sentinelOnce()), pass, execPos))
+            si += 1
+            execPos += 1
+          }
+          runsOf.getOrElseUpdate(name, ArrayBuffer[Double]()) += Harness.timed {
+            try Harness.sink(fn(spark, sfDir))
+            catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
+          }._2
+          // Health sentinel (r8 item 2): cache/storage state AFTER each
+          // run. A leaked cache/localCheckpoint shows up as monotone
+          // growth of these two numbers across the suite — the r8 "p01
+          // warm 2× cold" question took a cross-round no-op to falsify;
+          // these fields make that class self-diagnosing in one artifact.
+          // The drain runs after EVERY run (not just the triple's last)
+          // so that the reading is deterministic and pass N+1 does not
+          // inherit pass N's pending blocks.
+          Harness.drain(spark)
+          if (pass == 2) {
+            val sc = spark.sparkContext
+            val storageMb =
+              sc.getRDDStorageInfo.map(_.memSize).sum / (1024.0 * 1024.0)
+            healthOf(name) = (sc.getPersistentRDDs.size, storageMb, execPos)
+          }
           execPos += 1
         }
-        val t0 = System.nanoTime()
-        // noop sink: full materialization of every output row/column —
-        // a bare .count() lets Catalyst prune projections and sorts.
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-        runsOf.getOrElseUpdate(name,
-          scala.collection.mutable.ArrayBuffer[Double]()) +=
-          (System.nanoTime() - t0) / 1e9
-        // Health sentinel (r8 item 2): cache/storage state AFTER each
-        // run. A leaked cache/localCheckpoint shows up as monotone
-        // growth of these two numbers across the suite — the r8 "p01
-        // warm 2× cold" question took a cross-round no-op to falsify;
-        // these fields make that class self-diagnosing in one artifact.
-        //
-        // The sentinel measures RETAINED state, not GC timing: the
-        // run's DataFrame just went out of scope, and correctly-
-        // released blocks (a returned result's own checkpoint —
-        // d07/d09/g01/q73 hand back exactly one) sit in the
-        // ContextCleaner's reference queue until a GC notices. Nudge
-        // the collector and give the cleaner a bounded window, OUTSIDE
-        // the timed region, so the reading is deterministic: a genuine
-        // leak is a STRONG reference inside operator state — it
-        // survives any number of GCs and still shows as nonzero;
-        // everything else reads 0 every time instead of "0 unless the
-        // cleaner was behind". Running it after EVERY run (not just
-        // the triple's last) also keeps pass N+1 from inheriting
-        // pass N's pending blocks.
-        val sc = spark.sparkContext
-        val gcDeadline = System.nanoTime() + 2_000_000_000L
-        while (sc.getPersistentRDDs.nonEmpty && System.nanoTime() < gcDeadline) {
-          System.gc()
-          Thread.sleep(100)
-        }
-        if (pass == 2) {
-          val prdds = sc.getPersistentRDDs.size
-          val storageMb =
-            sc.getRDDStorageInfo.map(_.memSize).sum / (1024.0 * 1024.0)
-          healthOf(name) = (prdds, storageMb, execPos)
-        }
-        execPos += 1
       }
     }
     val results = ordered.map { case (name, _) =>
@@ -205,11 +148,8 @@ object Bench {
     }.sortBy(_._1) // report alphabetically whatever the executed order
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def spread(xs: Seq[Double]): Double = xs.max - xs.min
-    // Locale.ROOT: a comma-decimal default locale would break the JSON
-    def f(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def f1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+    def f(v: Double): String = Harness.num(v)
+    def f1(v: Double): String = Harness.num(v, 1)
     val timings = results.map(r => (r._1, r._2))
     val medTotal = timings.map(r => median(r._2)).sum
     val coldTotal = timings.map(_._2.head).sum
@@ -218,26 +158,24 @@ object Bench {
     // runs, median, spread per query, full query names, 3-decimal;
     // prdds/storage_mb are the post-query cache-leak sentinel (both
     // should be flat across the alphabetical run order).
-    try {
-      val full = results.map { case (k, runs, prdds, storageMb, pos) =>
-        "\"" + k + "\":{\"runs\":[" + runs.map(f).mkString(",") +
-          "],\"cold\":" + f(runs.head) + ",\"med\":" + f(median(runs)) +
-          ",\"spread\":" + f(spread(runs)) +
-          ",\"prdds\":" + prdds + ",\"storage_mb\":" + f1(storageMb) +
-          ",\"pos\":" + pos + "}"
-      }.mkString("{", ",", "}")
-      val sent = sentinels.map { case (k, runs, pass, pos) =>
-        "\"" + k + "\":{\"runs\":[" + runs.map(f).mkString(",") +
-          "],\"med\":" + f(median(runs)) +
-          ",\"spread\":" + f(spread(runs)) +
-          ",\"pass\":" + pass + ",\"pos\":" + pos + "}"
-      }.mkString("{", ",", "}")
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
-        (s"""{"value":${f(medTotal)},"cold_total":${f(coldTotal)},""" +
-         s""""runs_per_query":3,"order_seed":$orderSeed,""" +
-         s""""sentinel_every":$SentinelEvery,"sentinels":$sent,""" +
-         s""""queries":$full,"sf":"$sfDir"}""").getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+    val full = results.map { case (k, runs, prdds, storageMb, pos) =>
+      "\"" + k + "\":{\"runs\":[" + runs.map(f).mkString(",") +
+        "],\"cold\":" + f(runs.head) + ",\"med\":" + f(median(runs)) +
+        ",\"spread\":" + f(spread(runs)) +
+        ",\"prdds\":" + prdds + ",\"storage_mb\":" + f1(storageMb) +
+        ",\"pos\":" + pos + "}"
+    }.mkString("{", ",", "}")
+    val sent = sentinels.map { case (k, runs, pass, pos) =>
+      "\"" + k + "\":{\"runs\":[" + runs.map(f).mkString(",") +
+        "],\"med\":" + f(median(runs)) +
+        ",\"spread\":" + f(spread(runs)) +
+        ",\"pass\":" + pass + ",\"pos\":" + pos + "}"
+    }.mkString("{", ",", "}")
+    val detail =
+      s"""{"value":${f(medTotal)},"cold_total":${f(coldTotal)},""" +
+      s""""runs_per_query":3,"order_seed":$orderSeed,""" +
+      s""""sentinel_every":$SentinelEvery,"sentinels":$sent,""" +
+      s""""queries":$full,"sf":"$sfDir"}"""
     // The driver captures only the TAIL of the build output (observed:
     // last ~2000 chars, with sbt's "[success] ..." line inside it). The
     // r7 line crossed that window at 176 queries and the head of the
@@ -270,14 +208,6 @@ object Bench {
       val keep = byCost.drop(drop).sortBy(_._1)
       line = buildLine(keep, drop, median(byCost(drop - 1)._2))
     }
-    // Stop FIRST, print LAST: spark.stop() logs its shutdown lines
-    // before the summary is emitted, so the JSON stays the final line
-    // of program output (only sbt's own "[success]" follows it inside
-    // the harness's captured tail). A shutdown-race exception from
-    // stop() must not eat the summary — it is the whole point of the
-    // program.
-    try spark.stop() catch { case _: Throwable => }
-    println(line)
-    System.out.flush()
+    (line, detail)
   }
 }

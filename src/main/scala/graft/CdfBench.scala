@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Measurement harness for the partitioned change-data-feed read
   * price: builds a partitioned table with N leaves over
   * `SPARK_GRAFT_SF_DIR`'s documents, commits ONE merge between two
@@ -29,39 +31,35 @@ package graft
   * (default counts: dense 64 256; sparse 64 256 1024).
   */
 object CdfBench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Harness.withSession()(run(_, Harness.sfDir, args.toSeq))
+
+  /** Runs the leaf-count sweep `args` (`[sparse] [n...]`) and prints one
+    * JSON line per count. */
+  def run(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sparse = args.contains("sparse")
-    val nums = args.filterNot(_ == "sparse").toSeq.map(_.toInt)
-    val counts =
-      if (nums.nonEmpty) nums else if (sparse) Seq(64, 256, 1024) else Seq(64, 256)
+    val (sparse, counts) =
+      Harness.sparseArgs(args, Seq(64, 256), Seq(64, 256, 1024))
     val W = operators.Warehouse
     counts.foreach { n =>
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_cdfbench_$n").resolve("t").toString
-      val docs = graft.sources.Tables(spark, sfDir, "documents")
-        .select(col("doc_id"), col("n_chars"))
-        .withColumn("s", pmod(col("doc_id"), lit(n)).cast("string"))
-      docs.write.partitionBy("s").mode("overwrite").parquet(root)
-      W.compactManifestedPartitioned(spark, root, targetFileBytes = 1L << 30)
-      val v1 = W.rootSnapshots(root).last
-      val delta =
-        if (sparse) docs.filter(pmod(col("doc_id"), lit(1024)) < 4)
-        else docs.filter(col("doc_id") % 5 === 0)
-      W.upsertManifestedPartitioned(spark, root,
-        delta.withColumn("n_chars", col("n_chars") * 0 - 1), "doc_id")
-      val v2 = W.rootSnapshots(root).last
-      val t0 = System.nanoTime()
-      val rows = W.tableChangesPartitioned(spark, root, "doc_id", v1, v2).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"metric":"cdf_leaves${if (sparse) "_sparse" else ""}","nLeaves":$n,"changed_rows":$rows,"sec":$sec%.2f}""")
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(root).getParentFile)
+      Harness.withTempDir(s"graft_cdfbench_$n") { dir =>
+        val root = dir.resolve("t").toString
+        val docs = graft.sources.Tables(spark, sfDir, "documents")
+          .select(col("doc_id"), col("n_chars"))
+          .withColumn("s", pmod(col("doc_id"), lit(n)).cast("string"))
+        docs.write.partitionBy("s").mode("overwrite").parquet(root)
+        W.compactManifestedPartitioned(spark, root, targetFileBytes = 1L << 30)
+        val v1 = W.rootSnapshots(root).last
+        val delta =
+          if (sparse) docs.filter(pmod(col("doc_id"), lit(1024)) < 4)
+          else docs.filter(col("doc_id") % 5 === 0)
+        W.upsertManifestedPartitioned(spark, root,
+          delta.withColumn("n_chars", col("n_chars") * 0 - 1), "doc_id")
+        val v2 = W.rootSnapshots(root).last
+        val (rows, sec) =
+          Harness.timed(W.tableChangesPartitioned(spark, root, "doc_id", v1, v2).count())
+        println(s"""{"metric":"cdf_leaves${if (sparse) "_sparse" else ""}","nLeaves":$n,"changed_rows":$rows,"sec":${Harness.num(sec, 2)}}""")
+      }
     }
-    spark.stop()
   }
 }

@@ -8,19 +8,13 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val prefixes = args.drop(1)
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val selected =
-      if (prefixes.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => prefixes.exists(n.startsWith) }
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      println(s"\n========== $name ==========")
-      try println(fn(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
+    Harness.withSession() { spark =>
+      Harness.select(args.drop(1).toSeq).foreach { case (name, fn) =>
+        println(s"\n========== $name ==========")
+        try println(fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
+      }
     }
-    spark.stop()
   }
 }

@@ -9,8 +9,6 @@ import org.apache.spark.sql.execution.FormattedMode
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = GraftSession.builder("8").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val picks = Seq(
       "q02_filter_project" -> "filter/column pruning pushed to parquet",
       "q03_join_broadcast" -> "dimension joins broadcast; fact never shuffles pre-agg",
@@ -74,17 +72,20 @@ object Plans {
     val out = new StringBuilder
     out ++= "# PLANS — formatted physical plans (generated by `graft.Plans`)\n"
     out ++= s"\nData: `$sfDir`. Regenerate: `sbt \"runMain graft.Plans\"`.\n"
-    picks.foreach { case (name, why) =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode)
-      out ++= s"\n## $name — $why\n\n```\n"
-      // full tree + the per-node details (PushedFilters/ReadSchema are
-      // the point), capped so pathological plans can't flood the file
-      out ++= plan.linesIterator.take(120).mkString("\n")
-      out ++= "\n```\n"
+    // a fixed 8 cores, not SPARK_GRAFT_CPUS: the shuffle partition
+    // counts in the plans must not depend on the host
+    Harness.withSession(cpus = "8") { spark =>
+      picks.foreach { case (name, why) =>
+        val plan = SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.explainString(FormattedMode)
+        out ++= s"\n## $name — $why\n\n```\n"
+        // full tree + the per-node details (PushedFilters/ReadSchema are
+        // the point), capped so pathological plans can't flood the file
+        out ++= plan.linesIterator.take(120).mkString("\n")
+        out ++= "\n```\n"
+      }
     }
     Files.writeString(Paths.get("PLANS.md"), out.toString)
-    spark.stop()
     println("PLANS.md written")
   }
 }

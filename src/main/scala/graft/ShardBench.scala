@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Measurement harness for the sharded-CDC commit price: runs the
   * SAME pipeline as the st28 gate query
   * (`CdcApply.runCdcApplyManifestedPartitioned`) at several shard
@@ -24,15 +26,13 @@ package graft
   * (default shard counts: 4 32; sparse default: 4 64).
   */
 object ShardBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sparse = args.contains("sparse")
-    val nums = args.filterNot(_ == "sparse").toSeq.map(_.toInt)
-    val counts =
-      if (nums.nonEmpty) nums else if (sparse) Seq(4, 64) else Seq(4, 32)
+  def main(args: Array[String]): Unit =
+    Harness.withSession()(run(_, Harness.sfDir, args.toSeq))
+
+  /** Runs the shard-count sweep `args` (`[sparse] [n...]`) and prints
+    * one JSON line per count. */
+  def run(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
+    val (sparse, counts) = Harness.sparseArgs(args, Seq(4, 32), Seq(4, 64))
     if (sparse) {
       // STEADY-STATE per-batch commit price: keys bounded to 4 of 64
       // shard classes, table creation (batch 0: bootstrap + first
@@ -54,33 +54,29 @@ object ShardBench {
       val parts = (0 until 4).map(i =>
         graft.operators.eagerCut(ev.filter(pmod(col("event_id"), lit(4)) === i)))
       counts.foreach { n =>
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_shardbench_$n").resolve("t").toString
-        streaming.CdcApply.applyBatchManifestedPartitioned(
-          parts(0), root, nShards = n, Some(0L))
-        val t0 = System.nanoTime()
-        (1 until 4).foreach(i => streaming.CdcApply
-          .applyBatchManifestedPartitioned(parts(i), root, nShards = n,
-            Some(i.toLong)))
-        operators.Warehouse.compactManifestedPartitioned(spark, root,
-          targetFileBytes = 1L << 30)
-        val sec = (System.nanoTime() - t0) / 1e9
-        val rows = operators.Warehouse.readManifestedPartitioned(spark, root)
-          .count()
-        println(f"""{"metric":"st28_shards_sparse","nShards":$n,"mod":$mod,"rows":$rows,"batches":3,"sec":$sec%.2f}""")
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(root).getParentFile)
+        Harness.withTempDir(s"graft_shardbench_$n") { dir =>
+          val root = dir.resolve("t").toString
+          streaming.CdcApply.applyBatchManifestedPartitioned(
+            parts(0), root, nShards = n, Some(0L))
+          val sec = Harness.timed {
+            (1 until 4).foreach(i => streaming.CdcApply
+              .applyBatchManifestedPartitioned(parts(i), root, nShards = n,
+                Some(i.toLong)))
+            operators.Warehouse.compactManifestedPartitioned(spark, root,
+              targetFileBytes = 1L << 30)
+          }._2
+          val rows = operators.Warehouse.readManifestedPartitioned(spark, root)
+            .count()
+          println(s"""{"metric":"st28_shards_sparse","nShards":$n,"mod":$mod,"rows":$rows,"batches":3,"sec":${Harness.num(sec, 2)}}""")
+        }
       }
     } else counts.foreach { n =>
-      val root = java.nio.file.Files.createTempDirectory(s"graft_shardbench_$n")
-      val t0 = System.nanoTime()
-      val out = streaming.CdcApply.runCdcApplyManifestedPartitioned(
-        spark, sfDir, root.resolve("t").toString, nShards = n)
-      val rows = out.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"metric":"st28_shards","nShards":$n,"rows":$rows,"sec":$sec%.2f}""")
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+      Harness.withTempDir(s"graft_shardbench_$n") { dir =>
+        val (rows, sec) = Harness.timed(streaming.CdcApply
+          .runCdcApplyManifestedPartitioned(spark, sfDir, dir.resolve("t").toString,
+            nShards = n).count())
+        println(s"""{"metric":"st28_shards","nShards":$n,"rows":$rows,"sec":${Harness.num(sec, 2)}}""")
+      }
     }
-    spark.stop()
   }
 }
