@@ -89,7 +89,7 @@ object Bench {
     val sentinels = ArrayBuffer[(String, Seq[Double], Int, Int)]()
     val runsOf = mutable.Map[String, ArrayBuffer[Double]]()
     val healthOf = mutable.Map[String, (Int, Double, Int)]()
-    Harness.withTempDir("graft_sentinel") { dir =>
+    TempDirs.withTempDir("graft_sentinel") { dir =>
       // the drag sentinel's fixed workload: one 1-row parquet, written
       // once outside the timed region; each sentinel run reads it
       // through the same noop sink as the queries

@@ -42,7 +42,7 @@ object CdfBench {
       Harness.sparseArgs(args, Seq(64, 256), Seq(64, 256, 1024))
     val W = operators.Warehouse
     counts.foreach { n =>
-      Harness.withTempDir(s"graft_cdfbench_$n") { dir =>
+      TempDirs.withTempDir(s"graft_cdfbench_$n") { dir =>
         val root = dir.resolve("t").toString
         val docs = graft.sources.Tables(spark, sfDir, "documents")
           .select(col("doc_id"), col("n_chars"))

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The run harness shared by the catalog mains (Bench, Repeat, Verify,
   * Explain, Plans, ShardBench, CdfBench): session, query selection,
-  * warm-up, the timed noop-sink run, the persisted-RDD drain, temp
-  * dirs, `[sparse] [n...]` arguments and JSON numbers, each written
+  * warm-up, the timed noop-sink run, the persisted-RDD drain,
+  * `[sparse] [n...]` arguments and JSON numbers, each written
   * once so that every main sets up and measures the same way.
   */
 object Harness {
@@ -59,7 +58,7 @@ object Harness {
     // ORC writer/reader classload (a 1-row round trip): q53's r6 cold
     // time was ~8× its warm time and the delta was pure first-touch ORC
     // classloading, not plan cost.
-    quietly(withTempDir("graft_orc_warm") { d =>
+    quietly(TempDirs.withTempDir("graft_orc_warm") { d =>
       val p = d.resolve("t").toString
       spark.range(1).write.mode("overwrite").orc(p)
       sink(spark.read.orc(p))
@@ -95,13 +94,6 @@ object Harness {
       System.gc()
       Thread.sleep(100)
     }
-  }
-
-  /** Runs `body` on a fresh temp dir and deletes the dir afterwards,
-    * also when `body` throws. */
-  def withTempDir[T](prefix: String)(body: Path => T): T = {
-    val dir = Files.createTempDirectory(prefix)
-    try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   /** `[sparse] [n...]`: the sparse flag and the given counts, or the

@@ -54,7 +54,7 @@ object ShardBench {
       val parts = (0 until 4).map(i =>
         graft.operators.eagerCut(ev.filter(pmod(col("event_id"), lit(4)) === i)))
       counts.foreach { n =>
-        Harness.withTempDir(s"graft_shardbench_$n") { dir =>
+        TempDirs.withTempDir(s"graft_shardbench_$n") { dir =>
           val root = dir.resolve("t").toString
           streaming.CdcApply.applyBatchManifestedPartitioned(
             parts(0), root, nShards = n, Some(0L))
@@ -71,7 +71,7 @@ object ShardBench {
         }
       }
     } else counts.foreach { n =>
-      Harness.withTempDir(s"graft_shardbench_$n") { dir =>
+      TempDirs.withTempDir(s"graft_shardbench_$n") { dir =>
         val (rows, sec) = Harness.timed(streaming.CdcApply
           .runCdcApplyManifestedPartitioned(spark, sfDir, dir.resolve("t").toString,
             nShards = n).count())

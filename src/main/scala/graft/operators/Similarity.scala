@@ -1150,13 +1150,9 @@ object Similarity {
     // Eager write at build time + per-(pid, sf) overwritten path is the
     // q53/q69 interchange convention: bounded on disk (one dir per
     // process per scale factor, rewritten in place), never accumulating
-    "s15_pq_index_roundtrip" -> ((s, d) => {
-      val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_pq_index_${ProcessHandle.current().pid()}_" +
-          java.nio.file.Paths.get(d).getFileName).toString
-      pqIndexRoundtrip(t(s, d, "embeddings"), out)
-        .orderBy(col("q_id"), col("rk"))
-    }),
+    "s15_pq_index_roundtrip" -> ((s, d) =>
+      pqIndexRoundtrip(t(s, d, "embeddings"), graft.TempDirs.pidScoped("pq_index", d))
+        .orderBy(col("q_id"), col("rk"))),
     "s02_knn_lsh" -> ((s, d) =>
       knnLsh(t(s, d, "embeddings")).orderBy(col("q_id"), col("rk"))),
     "s07_knn_mips_pruned" -> ((s, d) =>
@@ -1201,9 +1197,7 @@ object Similarity {
 
   private[graft] def cachedIndex(kind: String, sfDir: String)
                                 (build: String => Unit): String = {
-    val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${kind}_${ProcessHandle.current().pid()}_" +
-        java.nio.file.Paths.get(sfDir).getFileName).toString
+    val dir = graft.TempDirs.pidScoped(kind, sfDir)
     val marker = java.nio.file.Paths.get(dir, "_BUILT")
     indexLocks.computeIfAbsent(dir, _ => new Object).synchronized {
       if (!java.nio.file.Files.exists(marker)) {

@@ -21,9 +21,7 @@ trait WarehouseQueries { this: Warehouse.type =>
   private[operators] def formatRoundtrip(s: SparkSession, d: String, fmt: String,
       write: (DataFrame, String) => Unit,
       read: (org.apache.spark.sql.types.StructType, String) => DataFrame): DataFrame = {
-    val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${fmt}_slice_${ProcessHandle.current().pid()}_" +
-        java.nio.file.Paths.get(d).getFileName).toString
+    val out = graft.TempDirs.pidScoped(s"${fmt}_slice", d)
     val slice = t(s, d, "lineitem")
       .filter(col("l_quantity") >= 25)
       .select(col("l_orderkey"), col("l_linestatus"), col("l_quantity"),

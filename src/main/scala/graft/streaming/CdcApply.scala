@@ -58,25 +58,12 @@ object CdcApply {
 
   /** Read the state table back in flat row form. */
   def readState(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
-      .select(col("user_id"), col("s.ts_us").as("ts_us"), col("s.event_id").as("event_id"),
-        col("s.event_type").as("event_type"), col("s.value_q").as("value_q"))
+    flatState(spark.read.parquet(stateDir))
 
   def runCdcApply(spark: SparkSession, dir: String, stateDir: String): DataFrame = {
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt")
-    try {
-      val q = EventStreams.readEventStream(scoped, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         batchId: Long) =>
-          applyBatch(batch.toDF(), stateDir)
-        }
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+    val scoped = EventStreams.scopedSession(spark)
+    EventStreams.runForeachBatch(EventStreams.readEventStream(scoped, dir)) { (batch, _) =>
+      applyBatch(batch, stateDir)
     }
     readState(scoped, stateDir)
   }
@@ -305,14 +292,9 @@ object CdcApply {
   def runCdcApplyManifestedPartitioned(spark: SparkSession, dir: String,
                                        rootDir: String,
                                        nShards: Int = 4): DataFrame = {
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
+    val scoped = EventStreams.scopedSession(spark)
     runShardedCdcStream(scoped, dir, rootDir, nShards)
-    graft.operators.Warehouse.readManifestedPartitioned(scoped, rootDir)
-      .select(col("user_id"), col("s.ts_us").as("ts_us"),
-        col("s.event_id").as("event_id"),
-        col("s.event_type").as("event_type"), col("s.value_q").as("value_q"))
+    flatState(graft.operators.Warehouse.readManifestedPartitioned(scoped, rootDir))
   }
 
   /** The sharded CDC micro-batch loop shared by st28 and st31's
@@ -324,34 +306,22 @@ object CdcApply {
                                              rootDir: String, nShards: Int,
                                              afterBatch: Long => Unit =
                                                _ => ()): Unit = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcp_ckpt")
-    try {
-      val q = EventStreams.readEventStream(scoped, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         batchId: Long) =>
-          applyBatchManifestedPartitioned(batch.toDF(), rootDir, nShards,
-            Some(batchId))
-          afterBatch(batchId)
-          // per-leaf maintenance under the live stream — each shard
-          // folds independently (embarrassingly parallel at scale)
-          if (batchId % 4 == 3) {
-            graft.operators.Warehouse.compactManifestedPartitioned(
-              batch.sparkSession, rootDir, targetFileBytes = 1L << 30)
-            ()
-          }
-        }
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+    EventStreams.runForeachBatch(EventStreams.readEventStream(scoped, dir)) { (batch, batchId) =>
+      applyBatchManifestedPartitioned(batch, rootDir, nShards, Some(batchId))
+      afterBatch(batchId)
+      // per-leaf maintenance under the live stream — each shard
+      // folds independently (embarrassingly parallel at scale)
+      if (batchId % 4 == 3) {
+        graft.operators.Warehouse.compactManifestedPartitioned(
+          batch.sparkSession, rootDir, targetFileBytes = 1L << 30)
+        ()
+      }
     }
   }
 
   def runCdcApplyManifested(spark: SparkSession, dir: String,
                             tableDir: String): DataFrame = {
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
+    val scoped = EventStreams.scopedSession(spark)
     runManifestedCdcStream(scoped, dir, tableDir)
     flatState(graft.operators.Warehouse.readManifested(scoped, tableDir))
   }
@@ -366,23 +336,14 @@ object CdcApply {
                                      tableDir: String,
                                      afterBatch: (DataFrame, Long) => Unit =
                                        (_, _) => ()): Unit = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcm_ckpt")
-    try {
-      val q = EventStreams.readEventStream(scoped, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         batchId: Long) =>
-          applyBatchManifested(batch.toDF(), tableDir, Some(batchId))
-          afterBatch(batch.toDF(), batchId)
-          if (batchId % 4 == 3) {
-            graft.operators.Warehouse.compactManifested(
-              batch.sparkSession, tableDir, targetFileBytes = 1L << 30)
-            ()
-          }
-        }
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+    EventStreams.runForeachBatch(EventStreams.readEventStream(scoped, dir)) { (batch, batchId) =>
+      applyBatchManifested(batch, tableDir, Some(batchId))
+      afterBatch(batch, batchId)
+      if (batchId % 4 == 3) {
+        graft.operators.Warehouse.compactManifested(
+          batch.sparkSession, tableDir, targetFileBytes = 1L << 30)
+        ()
+      }
     }
   }
 
@@ -463,9 +424,7 @@ object CdcApply {
                                    tableDir: String,
                                    deleteTypes: Set[String],
                                    sealLagUs: Long = 3_600_000_000L): DataFrame = {
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
+    val scoped = EventStreams.scopedSession(spark)
     // the moving horizon: monotone max event time across batches (the
     // stream's own watermark is per-query state; this loop's driver-
     // side register rebuilds conservatively from later batches after a

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * The demonstration workload ([[runCdfMirror]], query `st30`) is the
   * canonical one: replicate a CDC-maintained keyed table into a mirror
-  * the consumer owns. The writer loop is st27's VERBATIM (same
-  * commits, same periodic delete-compaction under the live stream);
+  * the consumer owns. The writer is st27's loop,
+  * [[CdcApply.runManifestedCdcStream]] (same commits, same periodic
+  * delete-compaction under the live stream);
   * the consumer rides its `foreachBatch` hook at zero lag, so the
   * feed windows it consumes are exactly the version ranges a
   * production tailing consumer would see — including windows a
@@ -226,8 +227,7 @@ object ChangeFeedStream {
                        pollIntervalMs: Long = 50L): CdfConsumerHandle = {
     val stopFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
+    val scoped = EventStreams.scopedSession(spark)
     val W = graft.operators.Warehouse
     val t = new Thread(() => {
       try {
@@ -255,9 +255,7 @@ object ChangeFeedStream {
                               srcRoot: String, mirrorRoot: String,
                               nShards: Int = 4): DataFrame = {
     val W = graft.operators.Warehouse
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
+    val scoped = EventStreams.scopedSession(spark)
     val lastConsumed = new java.util.concurrent.atomic.AtomicLong(0L)
     def tail(): Unit = {
       val head = W.rootSnapshots(srcRoot).lastOption.getOrElse(0L)
@@ -268,8 +266,7 @@ object ChangeFeedStream {
     CdcApply.runShardedCdcStream(scoped, dir, srcRoot, nShards,
       { _ => tail() })
     tail() // drain the trailing fold-only window (nets zero, commits nothing)
-    CdcApply.flatState(W.readManifestedPartitioned(scoped, mirrorRoot)
-      .select(col("user_id"), col("s")))
+    CdcApply.flatState(W.readManifestedPartitioned(scoped, mirrorRoot))
   }
 
   /** The st30 loop: st27's CDC writer maintains `srcTable` from the
@@ -282,9 +279,7 @@ object ChangeFeedStream {
   def runCdfMirror(spark: SparkSession, dir: String, srcTable: String,
                    mirrorTable: String): DataFrame = {
     val W = graft.operators.Warehouse
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
+    val scoped = EventStreams.scopedSession(spark)
     val lastConsumed = new java.util.concurrent.atomic.AtomicLong(0L)
     def tail(): Unit = {
       val head = W.snapshots(srcTable).lastOption.getOrElse(0L)

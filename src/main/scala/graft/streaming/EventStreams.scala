@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types._
 import graft.operators.dsum
 
@@ -28,10 +29,8 @@ object EventStreams {
 
   /** File-source stream over a scale-factor dir (ts normalized to the
     * engine's microsecond TimestampType, as in graft.sources.Tables).
-    * The testdata ships `events.parquet` as a single FILE; Spark's
-    * FileStreamSource only monitors directories, so the file is staged
-    * (hard-linked/copied once) into a per-sf temp dir — in production
-    * the source would already be a directory of files.
+    * The testdata ships `events.parquet` as a single FILE, so it is
+    * read through [[stagedTable]].
     *
     * The testdata's ts column has shipped under two parquet
     * annotations across driver generations — TIMESTAMP(NANOS) (reads
@@ -41,31 +40,54 @@ object EventStreams {
     * normalization accordingly; both paths land on identical
     * micros-truncated instants (session timezone pinned UTC). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(dir, "events.parquet")
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      "graft_stream", Paths.get(dir).getFileName.toString)
-    Files.createDirectories(staged)
-    val dst = staged.resolve("events.parquet")
-    if (!Files.exists(dst))
-      try Files.createLink(dst, src)
-      catch { case _: Exception =>
-        Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING) }
+    val staged = stagedTable(dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(staged.toString).schema("ts").dataType match {
+    spark.read.parquet(staged).schema("ts").dataType match {
       case LongType =>
         spark.readStream
           .schema(rawSchema)
-          .parquet(staged.toString)
+          .parquet(staged)
           .withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case tsType =>
         val sch = StructType(rawSchema.map(f =>
           if (f.name == "ts") f.copy(dataType = tsType) else f))
         spark.readStream
           .schema(sch)
-          .parquet(staged.toString)
+          .parquet(staged)
           .withColumn("ts", col("ts").cast(TimestampType))
     }
+  }
+
+  /** Stages the single-file table `fileName` of scale-factor dir `dir`
+    * into a directory the file stream source can monitor (Spark's
+    * FileStreamSource only monitors directories; in production the
+    * source would already be a directory of files) and returns that
+    * directory. The file is hard-linked, or copied where a link fails.
+    *
+    * Staleness guard: the staged copy is reused only while its size AND
+    * mtime still match the source. The staging dir is keyed by the sf
+    * dir's basename, so testdata regenerated in place (a hard link to
+    * the old inode would keep serving deleted data) and a second sf dir
+    * with the same basename both re-stage on their next use. */
+  private[streaming] def stagedTable(dir: String, fileName: String): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val src = Paths.get(dir, fileName)
+    val staged = Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_stage_${fileName.stripSuffix(".parquet")}",
+      Paths.get(dir).getFileName.toString)
+    Files.createDirectories(staged)
+    val dst = staged.resolve(fileName)
+    val fresh = Files.exists(dst) &&
+      Files.size(dst) == Files.size(src) &&
+      Files.getLastModifiedTime(dst) == Files.getLastModifiedTime(src)
+    if (!fresh) {
+      Files.deleteIfExists(dst)
+      try Files.createLink(dst, src)
+      catch { case _: Exception =>
+        Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.COPY_ATTRIBUTES) }
+    }
+    staged.toString
   }
 
   /** Count–Min sketch as a STREAMING aggregate: the token stream folds
@@ -277,30 +299,15 @@ object EventStreams {
     * memory writes), else java.io.tmpdir. A long-running production
     * stream would checkpoint to durable storage instead — this path is
     * for bounded run-to-completion queries whose state dies with them. */
-  private def scratchDir(): java.nio.file.Path = {
+  private[graft] def scratchBase: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = if (java.nio.file.Files.isWritable(shm)) shm
-               else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(base, "graft_ckpt")
+    if (java.nio.file.Files.isWritable(shm)) shm
+    else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
   }
 
-  /** Build the stream with `build`, run it to completion into a memory
-    * sink, drop the throwaway checkpoint. The stream is planned on a
-    * CLONED session (`spark.newSession()` — same SparkContext, isolated
-    * runtime conf) so the streaming-specific conf overrides below never
-    * leak into concurrently-planned batch queries on the caller's
-    * session:
-    * - `noDataMicroBatches=false` skips the trailing watermark-only
-    *   micro-batch — safe exactly when the sink does not rely on
-    *   watermark-triggered emission: complete-mode aggregates (every
-    *   batch rewrites the full result) and append-mode operators that
-    *   emit on arrival (dropDuplicates, inner stream-stream join).
-    *   Append-mode *aggregates* would need it; none are registered here.
-    * - AQE is disabled for stateful workloads, so streaming gets no
-    *   runtime partition coalescing: size state partitions to the batch
-    *   volume by hand (what AQE would have picked). The state-partition
-    *   count is pinned into the checkpoint, which is throwaway here; a
-    *   durable 100 TB stream would pick this once, at provisioning time. */
+  private def scratchDir(): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchBase, "graft_ckpt")
+
   /** The RocksDB state-store provider conf — the 100 TB default for any
     * stateful query (state spills off-heap/disk instead of growing the
     * executor heap with active keys). */
@@ -330,66 +337,109 @@ object EventStreams {
     // stream-stream joins this is pure fixed cost.
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
 
-  private[graft] def runBounded(spark: SparkSession, name: String,
-      build: SparkSession => DataFrame, outputMode: String,
-      noDataBatches: Boolean = false,
-      extraConf: Map[String, String] = Map.empty,
-      onFinish: org.apache.spark.sql.streaming.StreamingQuery => Unit = _ => ()): DataFrame = {
+  /** The session every bounded stream is planned on: a CLONE of `spark`
+    * (`newSession()` — same SparkContext, isolated runtime conf), so the
+    * streaming-specific conf below never leaks into concurrently-planned
+    * batch queries on the caller's session:
+    * - `noDataMicroBatches=false` skips the trailing watermark-only
+    *   micro-batch — safe exactly when the sink does not rely on
+    *   watermark-triggered emission: complete-mode aggregates (every
+    *   batch rewrites the full result), append-mode operators that
+    *   emit on arrival (dropDuplicates, inner stream-stream join) and
+    *   every `foreachBatch` loop. Timeout-driven and outer-join
+    *   emission pass `noDataBatches = true`.
+    * - AQE is disabled for stateful workloads, so streaming gets no
+    *   runtime partition coalescing: size state partitions to the batch
+    *   volume by hand (what AQE would have picked). The state-partition
+    *   count is pinned into the checkpoint, which is throwaway here; a
+    *   durable 100 TB stream would pick this once, at provisioning time. */
+  private[graft] def scopedSession(spark: SparkSession, noDataBatches: Boolean = false,
+      extraConf: Map[String, String] = Map.empty): SparkSession = {
     val scoped = spark.newSession()
     scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       noDataBatches.toString)
     scoped.conf.set("spark.sql.shuffle.partitions", "8")
     extraConf.foreach { case (k, v) => scoped.conf.set(k, v) }
+    scoped
+  }
+
+  /** The one run-to-completion loop: starts the configured stream on a
+    * throwaway [[scratchDir]] checkpoint, processes everything available
+    * (plus, with `noDataBatches`, the trailing watermark-only batch),
+    * runs `onFinish` on the live query, stops it, and deletes the
+    * checkpoint. The stop and the delete also run when the stream or
+    * `onFinish` throws; the failure propagates. */
+  private[graft] def runToCompletion(writer: DataStreamWriter[Row],
+      noDataBatches: Boolean = false,
+      onFinish: StreamingQuery => Unit = _ => ()): Unit = {
     val ckpt = scratchDir()
     try {
-      val q = build(scoped).writeStream.format("memory").queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt.toString).start()
+      val q = writer.option("checkpointLocation", ckpt.toString).start()
       try {
         q.processAllAvailable()
-        if (noDataBatches) {
-          // Timeout-driven/outer-join emission happens in the watermark-
-          // only batch AFTER the last data batch (the watermark computed
-          // at the END of batch N only takes effect in batch N+1);
-          // processAllAvailable only promises the data batches. Wait for
-          // one COMMITTED zero-input batch strictly after the last
-          // batch that carried rows, read straight off the progress log
-          // — a driver-side array, no per-poll count jobs (the r6 form
-          // re-counted the memory sink every 100 ms and additionally
-          // required count stability, costing seconds per query).
-          // Progress is reported post-commit, so once the entry exists
-          // the sink already holds the flushed rows. Deadline-bounded;
-          // one no-data batch suffices — with no further data the
-          // watermark is final, so that batch fires every due timer and
-          // eviction.
-          def flushed: Boolean = {
-            val ps = q.recentProgress
-            val lastData = ps.filter(_.numInputRows > 0L).map(_.batchId)
-              .maxOption.getOrElse(-1L)
-            ps.exists(p => p.numInputRows == 0L && p.batchId > lastData)
-          }
-          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-          // rethrow a failure in the watermark-only batch immediately —
-          // a dead query can never flush, and spinning to the deadline
-          // would surface as a row-count mismatch with the real stream
-          // exception swallowed. Exponential backoff (5 → 160 ms): on a
-          // loaded host a fixed fine-grained poll steals scheduler time
-          // from the very micro-batch it is waiting on; backoff keeps
-          // the fast path fast (first checks within ~15 ms) and the
-          // slow path cheap (≤ ~7 wakeups/s once the batch is slow).
-          var napMs = 5L
-          while (!flushed && System.nanoTime() < deadline) {
-            q.exception.foreach(e => throw e)
-            Thread.sleep(napMs)
-            napMs = math.min(napMs * 2, 160L)
-          }
-          q.exception.foreach(e => throw e)
-        }
+        if (noDataBatches) awaitWatermarkFlush(q)
         onFinish(q)
       } finally q.stop()
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
     }
+  }
+
+  /** Timeout-driven/outer-join emission happens in the watermark-only
+    * batch AFTER the last data batch (the watermark computed at the END
+    * of batch N only takes effect in batch N+1); processAllAvailable
+    * only promises the data batches. Waits for one COMMITTED zero-input
+    * batch strictly after the last batch that carried rows, read
+    * straight off the progress log — a driver-side array, no per-poll
+    * count jobs (the r6 form re-counted the memory sink every 100 ms and
+    * additionally required count stability, costing seconds per query).
+    * Progress is reported post-commit, so once the entry exists the sink
+    * already holds the flushed rows. Deadline-bounded; one no-data batch
+    * suffices — with no further data the watermark is final, so that
+    * batch fires every due timer and eviction. */
+  private def awaitWatermarkFlush(q: StreamingQuery): Unit = {
+    def flushed: Boolean = {
+      val ps = q.recentProgress
+      val lastData = ps.filter(_.numInputRows > 0L).map(_.batchId)
+        .maxOption.getOrElse(-1L)
+      ps.exists(p => p.numInputRows == 0L && p.batchId > lastData)
+    }
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    // rethrow a failure in the watermark-only batch immediately — a
+    // dead query can never flush, and spinning to the deadline would
+    // surface as a row-count mismatch with the real stream exception
+    // swallowed. Exponential backoff (5 → 160 ms): on a loaded host a
+    // fixed fine-grained poll steals scheduler time from the very
+    // micro-batch it is waiting on; backoff keeps the fast path fast
+    // (first checks within ~15 ms) and the slow path cheap (≤ ~7
+    // wakeups/s once the batch is slow).
+    var napMs = 5L
+    while (!flushed && System.nanoTime() < deadline) {
+      q.exception.foreach(e => throw e)
+      Thread.sleep(napMs)
+      napMs = math.min(napMs * 2, 160L)
+    }
+    q.exception.foreach(e => throw e)
+  }
+
+  /** [[runToCompletion]] with a `foreachBatch` sink: `body` gets each
+    * micro-batch and its id. */
+  private[graft] def runForeachBatch(stream: DataFrame, outputMode: String = "append")
+                                    (body: (DataFrame, Long) => Unit): Unit =
+    runToCompletion(stream.writeStream.outputMode(outputMode)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => body(batch.toDF(), batchId) })
+
+  /** Build the stream with `build` on a [[scopedSession]], run it to
+    * completion into a memory sink named `name`, and return the sink's
+    * table. */
+  private[graft] def runBounded(spark: SparkSession, name: String,
+      build: SparkSession => DataFrame, outputMode: String,
+      noDataBatches: Boolean = false,
+      extraConf: Map[String, String] = Map.empty,
+      onFinish: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val scoped = scopedSession(spark, noDataBatches, extraConf)
+    runToCompletion(build(scoped).writeStream.format("memory").queryName(name)
+      .outputMode(outputMode), noDataBatches, onFinish)
     // the memory sink registers its view in the scoped session's catalog
     scoped.table(name)
   }
@@ -408,21 +458,9 @@ object EventStreams {
     * snapshot read back from disk. */
   def runToParquet(spark: SparkSession, dir: String, outDir: String)
                   (transform: DataFrame => DataFrame): DataFrame = {
-    val scoped = spark.newSession()
-    scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = scratchDir()
-    try {
-      val q = transform(readEventStream(scoped, dir)).writeStream
-        .outputMode("complete")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         batchId: Long) =>
-          batch.write.mode("overwrite").parquet(outDir)
-        }
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+    val scoped = scopedSession(spark)
+    runForeachBatch(transform(readEventStream(scoped, dir)), "complete") { (batch, _) =>
+      batch.write.mode("overwrite").parquet(outDir)
     }
     scoped.read.parquet(outDir)
   }

@@ -1,0 +1,218 @@
+package graft.streaming
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.TempDirs
+import graft.operators.{Similarity, TextAnalysis, Warehouse}
+
+/** The online lifecycle of a persisted retrieval index — serve, ingest,
+  * compact — written once and run under a real stream. An [[Index]]
+  * supplies the family; two ride the kernel: the PQ-coded ANN index
+  * ([[Ann]], st21–st23) and the BM25 inverted index ([[Bm25]],
+  * st24–st26).
+  *
+  *  - [[serve]]: a stream of queries is answered batch by batch against
+  *    the index built over the whole table. A query's answer depends
+  *    only on the index, never on other queries, so the union over any
+  *    micro-batching of the query stream equals the batch answer: st21
+  *    and st24 answer to the batch s13 and t23 oracles. The index
+  *    relations are static, re-planned per batch, and hold no streaming
+  *    state (st18's stream-static contract).
+  *  - [[ingest]]: the index is built over the base population (`key %
+  *    baseMod != 0`) and each relation that grows seeds a manifested
+  *    table as generation 0. The rest of the table arrives as TWO staged
+  *    files (`maxFilesPerTrigger = 1`), so even the bounded replay runs
+  *    two real commits. Per batch: encode the batch alone into one frame
+  *    per grown relation (a narrow map over the arrival), commit each
+  *    through [[Warehouse.appendManifested]] (one immutable generation
+  *    and one atomic pointer swap, so a reader at any instant resolves a
+  *    complete committed relation), then serve against base +
+  *    delta-so-far. The last batch's serve covers the complete delta and
+  *    is the result: batching must be invisible to the final answer.
+  *  - [[compactedServe]]: folds each grown relation's generation list
+  *    back to one ([[Warehouse.compactManifested]], a pointer commit, so
+  *    a racing reader resolves the old list or the folded one, both
+  *    complete), then serves again. Compaction must be invisible to
+  *    results, so st23/st26 answer to the st22/st25 oracles. It ingests
+  *    first if this process has no table yet; in catalog order the
+  *    ingest row just ran, so the row prices compact + serve.
+  *
+  * Exactly-once: `foreachBatch` is at-least-once on restart — a batch
+  * re-fired after a failure runs its body again — so every write a
+  * batch makes is keyed by its batchId, which is stable across restarts
+  * from one checkpoint. The serve output overwrites its own
+  * `batch=<batchId>` directory, and the ingest commit writes generation
+  * `batchId + 1` (`appendManifested(genId = ...)`; the base seed is
+  * generation 0), so a re-fired batch rewrites identical content and
+  * leaves the pointer untouched. At-least-once execution plus
+  * idempotent per-batch writes gives exactly-once index state and
+  * results.
+  *
+  * Frozen statistics: ingestion never retrains. Delta vectors encode
+  * against the base codebooks; delta postings score with the base
+  * index's df and corpus scalars. Production search engines run the
+  * same contract between merges (new segments are searchable at once;
+  * global statistics refresh on the compaction cadence), trading drift
+  * for availability; s12's reconstruction error is the ANN retrain
+  * trigger. A BM25 query term first seen in the delta has no frozen df
+  * row and is dropped — deterministic, and replayed by the st25 oracle.
+  *
+  * Scale (100 TB): the index builds once and serves forever; per batch
+  * the serve is the batch serve plan (broadcast query side, the index
+  * relations never shuffle), the encode is embarrassingly parallel,
+  * and the grown relations are the only things that grow — immutable
+  * generations folded back to one on the maintenance cadence.
+  */
+object IndexLifecycle {
+
+  /** One index family.
+    *
+    * @param kind    cache kind of the index over the whole table; the
+    *                base index is `<kind>base`. Also the stem of this
+    *                family's pid-scoped dirs.
+    * @param table   the single-file testdata table it indexes
+    * @param key     the table's row id
+    * @param baseMod rows with `key % baseMod != 0` are the base
+    *                population; the rest arrive under ingest
+    * @param queryMod rows with `key % queryMod == 0` are the queries
+    * @param build   writes the index layout over a table into a dir
+    * @param grown   the index relations ingestion appends to
+    * @param encode  given a session and the base index dir: an arrival
+    *                batch → one frame per `grown` relation
+    * @param answer  given a session and an index dir: (queries, the
+    *                `grown` relations) → the served top-k rows */
+  final case class Index(
+      kind: String, table: String, key: String, baseMod: Int, queryMod: Int,
+      build: (DataFrame, String) => Unit,
+      grown: Seq[String],
+      encode: (SparkSession, String) => DataFrame => Seq[DataFrame],
+      answer: (SparkSession, String) => (DataFrame, Seq[DataFrame]) => DataFrame) {
+
+    /** The index over the whole table, or over the base population;
+      * built at most once per (process, sf) — the steady state an
+      * arriving batch sees is "the index already exists". */
+    def built(spark: SparkSession, dir: String, base: Boolean): String =
+      Similarity.cachedIndex(if (base) s"${kind}base" else kind, dir) { d =>
+        val all = graft.sources.Tables(spark, dir, table)
+        build(if (base) all.filter(col(key) % baseMod =!= 0) else all, d)
+      }
+
+    /** The manifested table of grown relation `rel` — deterministic, so
+      * a test can read it concurrently while the catalog row runs. */
+    def tableDir(rel: String, dir: String): String = pidScoped(s"ingest_$rel", dir)
+
+    private def pidScoped(what: String, dir: String): String =
+      TempDirs.pidScoped(s"${kind}_$what", dir)
+
+    /** This family's pid-scoped dir `what` for sf `dir`, emptied, so
+      * repeated runs in one process start from nothing. */
+    private[streaming] def fresh(what: String, dir: String): String = {
+      val p = pidScoped(what, dir)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+      p
+    }
+
+    private[streaming] def queries(spark: SparkSession, dir: String): DataFrame =
+      graft.sources.Tables(spark, dir, table).filter(col(key) % queryMod === 0)
+  }
+
+  /** PQ-coded ANN: the s15 `buildPqIndex` layout; the codes grow, the
+    * codebooks stay frozen. */
+  val Ann: Index = Index("pq", "embeddings", "vec_id", baseMod = 10, queryMod = 400,
+    build = Similarity.buildPqIndex(_, _),
+    grown = Seq("codes"),
+    encode = (s, idx) => {
+      val cb = s.read.parquet(s"$idx/codebooks")
+      batch => Seq(Similarity.encodeWithCodebooks(batch, cb))
+    },
+    answer = (s, idx) => {
+      val cb = s.read.parquet(s"$idx/codebooks")
+      (queries, grown) => Similarity.adcServeQueries(queries, cb, grown.head, 5)
+    })
+
+  private val Bm25QueryMod = 50
+
+  /** BM25: the t24 `buildBm25Index` layout; postings and doc lengths
+    * grow, df and the corpus scalars stay frozen. A document never
+    * splits across batches, so a batch's tf is the document's tf. */
+  val Bm25: Index = Index("bm25", "documents", "doc_id", baseMod = 3, queryMod = Bm25QueryMod,
+    build = TextAnalysis.buildBm25Index,
+    grown = Seq("postings", "doclens"),
+    encode = (_, _) => batch => Seq(
+      batch.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .filter(col("w") =!= "")
+        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf")),
+      TextAnalysis.bm25DocLens(batch)),
+    answer = (s, idx) => {
+      val dfreq = s.read.parquet(s"$idx/dfreq")
+      val stats = s.read.parquet(s"$idx/stats")
+      (queries, grown) => TextAnalysis.bm25Score(grown(0), grown(1), dfreq, stats,
+        TextAnalysis.bm25QueryWorkload(queries, Bm25QueryMod), 5)
+    })
+
+  /** Streams the queries (`key % queryMod == 0`) of the staged table
+    * against the index over the whole table; returns the union of the
+    * per-batch answers. */
+  def serve(spark: SparkSession, dir: String, ix: Index): DataFrame = {
+    val idx = ix.built(spark, dir, base = false)
+    val scoped = EventStreams.scopedSession(spark)
+    val grown = ix.grown.map(r => scoped.read.parquet(s"$idx/$r"))
+    val answer = ix.answer(scoped, idx)
+    val staged = EventStreams.stagedTable(dir, s"${ix.table}.parquet")
+    val out = ix.fresh("serve_out", dir)
+    EventStreams.runForeachBatch(
+      scoped.readStream.schema(scoped.read.parquet(staged).schema).parquet(staged)
+        .filter(col(ix.key) % ix.queryMod === 0)) { (batch, batchId) =>
+      answer(batch, grown).write.mode("overwrite").parquet(s"$out/batch=$batchId")
+    }
+    // batch=N is layout, not data: partition discovery surfaces it as a
+    // column — drop it so the result is independent of how the stream
+    // chopped the queries
+    scoped.read.parquet(out).drop("batch")
+  }
+
+  /** Streams the non-base rows into the grown relations, serving after
+    * every commit; returns the last batch's serve. */
+  def ingest(spark: SparkSession, dir: String, ix: Index): DataFrame = {
+    val idx = ix.built(spark, dir, base = true)
+    val scoped = EventStreams.scopedSession(spark)
+    val tables = ix.grown.map(r => ix.fresh(s"ingest_$r", dir))
+    // at 100 TB the seed is a pointer to the base relation, not a copy
+    ix.grown.zip(tables).foreach { case (r, t) =>
+      Warehouse.appendManifested(scoped, t, scoped.read.parquet(s"$idx/$r"))
+    }
+    val stage = ix.fresh("ingest_src", dir)
+    val delta = graft.sources.Tables(scoped, dir, ix.table).filter(col(ix.key) % ix.baseMod === 0)
+    val half = col(ix.key) % (2 * ix.baseMod) === 0
+    delta.filter(half).coalesce(1).write.mode("overwrite").parquet(s"$stage/b1")
+    delta.filter(!half).coalesce(1).write.mode("overwrite").parquet(s"$stage/b2")
+    val encode = ix.encode(scoped, idx)
+    val answer = ix.answer(scoped, idx)
+    val queries = ix.queries(scoped, dir)
+    val out = ix.fresh("ingest_out", dir)
+    EventStreams.runForeachBatch(
+      scoped.readStream.schema(scoped.read.parquet(s"$stage/b1").schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$stage/*")) { (batch, batchId) =>
+      encode(batch).zip(tables).foreach { case (frame, t) =>
+        Warehouse.appendManifested(scoped, t, frame, genId = Some(batchId + 1))
+      }
+      answer(queries, tables.map(Warehouse.readManifested(scoped, _)))
+        .write.mode("overwrite").parquet(s"$out/batch=$batchId")
+    }
+    val last = new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("batch="))
+      .map(_.getName.stripPrefix("batch=").toLong).max
+    scoped.read.parquet(s"$out/batch=$last")
+  }
+
+  /** Compacts every grown relation to one generation, then serves. */
+  def compactedServe(spark: SparkSession, dir: String, ix: Index): DataFrame = {
+    val tables = ix.grown.map(ix.tableDir(_, dir))
+    if (!new java.io.File(tables.head, "_current").exists()) ingest(spark, dir, ix)
+    val idx = ix.built(spark, dir, base = true)
+    val scoped = EventStreams.scopedSession(spark)
+    tables.foreach(Warehouse.compactManifested(scoped, _))
+    ix.answer(scoped, idx)(ix.queries(scoped, dir),
+      tables.map(Warehouse.readManifested(scoped, _)))
+  }
+}

@@ -12,6 +12,13 @@ object StreamingQueries {
 
   private val tsUs = "(epoch_ns(ts) // 1000)"
 
+  /** Runs a row that writes its tables under a fresh temp root, and
+    * materializes the result into the block manager before the root is
+    * deleted — also when the run throws — so repeated verify/bench runs
+    * never accumulate table dirs in java.io.tmpdir. */
+  private def overTempRoot(prefix: String)(run: java.nio.file.Path => DataFrame): DataFrame =
+    graft.TempDirs.withTempDir(prefix)(root => graft.operators.eagerCut(run(root)))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st01_stream_tumbling" -> ((s, d) =>
       EventStreams.runToBatch(s, d, "st01_mem", "complete")(EventStreams.tumbling(_))
@@ -39,42 +46,24 @@ object StreamingQueries {
       EventStreams.runBounded(s, "st18_mem",
         scoped => EventStreams.staticEnrichRollup(scoped, d), "complete")
         .orderBy(col("w_start_us"), col("segment"))),
-    // streaming ANN serve: a query-vector stream answered per micro-
-    // batch against the persisted PQ index (st18's stream-static
-    // contract over the s15 layout; serving is stateless per query, so
-    // the replay hash-matches the batch s13 oracle)
+    // the online retrieval-index lifecycle (see IndexLifecycle): a
+    // query stream served against the persisted index, a stream of new
+    // rows ingested under frozen statistics with a serve after every
+    // commit, then compaction and a serve again — for the PQ index
+    // (st21-st23, the batch s13/s17 oracles) and the BM25 index
+    // (st24-st26, the t23 and frozen-stats oracles)
     "st21_stream_ann_serve" -> ((s, d) =>
-      AnnServeStream.runAnnServe(s, d).orderBy(col("q_id"), col("rk"))),
-    // streaming ANN index maintenance (the ingestion half of the
-    // lifecycle): micro-batches delta-encode against the frozen base
-    // codebooks, commit via manifest-pointer append, serve after every
-    // commit; the final serve covers the complete delta, so the replay
-    // answers to the batch s17 oracle
+      IndexLifecycle.serve(s, d, IndexLifecycle.Ann).orderBy(col("q_id"), col("rk"))),
     "st22_stream_ann_ingest" -> ((s, d) =>
-      AnnIngestStream.runAnnIngest(s, d).orderBy(col("q_id"), col("rk"))),
-    // the maintenance step: compact the streamed-in generation list to
-    // one (pointer commit — reader-safe), serve again from the
-    // manifest; same oracle — compaction invisible to results
+      IndexLifecycle.ingest(s, d, IndexLifecycle.Ann).orderBy(col("q_id"), col("rk"))),
     "st23_stream_ann_compact_serve" -> ((s, d) =>
-      AnnIngestStream.runCompactedServe(s, d).orderBy(col("q_id"), col("rk"))),
-    // streaming BM25 serving: query docs answered batch by batch
-    // against the persisted inverted index (the text mirror of st21;
-    // stateless per query, so the replay hash-matches the batch
-    // t23/t24 oracle)
+      IndexLifecycle.compactedServe(s, d, IndexLifecycle.Ann).orderBy(col("q_id"), col("rk"))),
     "st24_stream_bm25_serve" -> ((s, d) =>
-      Bm25ServeStream.runBm25Serve(s, d).orderBy(col("q_id"), col("rk"))),
-    // streaming BM25 index ingestion (the text mirror of st22): new
-    // docs tokenize into partial postings, commit as manifest
-    // generations, serve after every commit with FROZEN base df/avgdl
-    // (the segment-ingestion contract); the final serve answers to
-    // the frozen-stats oracle
+      IndexLifecycle.serve(s, d, IndexLifecycle.Bm25).orderBy(col("q_id"), col("rk"))),
     "st25_stream_bm25_ingest" -> ((s, d) =>
-      Bm25IngestStream.runBm25Ingest(s, d).orderBy(col("q_id"), col("rk"))),
-    // the maintenance step: compact both streamed-in generation lists
-    // to one, serve again with the same frozen stats; same oracle —
-    // compaction invisible to results (the st23 move for text)
+      IndexLifecycle.ingest(s, d, IndexLifecycle.Bm25).orderBy(col("q_id"), col("rk"))),
     "st26_stream_bm25_compact_serve" -> ((s, d) =>
-      Bm25IngestStream.runCompactedServe(s, d).orderBy(col("q_id"), col("rk"))),
+      IndexLifecycle.compactedServe(s, d, IndexLifecycle.Bm25).orderBy(col("q_id"), col("rk"))),
     // streaming quality monitor: windowed event-type mix + exact-integer
     // TVD numerator vs uniform (the v05 gate, online)
     "st17_stream_mix_drift" -> ((s, d) =>
@@ -107,12 +96,10 @@ object StreamingQueries {
     // foreachBatch parquet sink: each micro-batch overwrites the output
     // dir with the complete-mode snapshot; result read back from disk
     // (same semantics as st01, pinned by the same oracle)
-    "st07_stream_sink_parquet" -> ((s, d) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_st07").resolve("agg").toString
-      EventStreams.runToParquet(s, d, out)(EventStreams.tumbling(_))
-        .orderBy(col("w_start_us"), col("event_type"))
-    }),
+    "st07_stream_sink_parquet" -> ((s, d) =>
+      overTempRoot("graft_st07")(root =>
+        EventStreams.runToParquet(s, d, root.resolve("agg").toString)(EventStreams.tumbling(_))
+          .orderBy(col("w_start_us"), col("event_type")))),
     // stream-stream LEFT OUTER interval join: null-padded rows for
     // expired unmatched views emit in the trailing watermark-only batch
     // (noDataBatches = true); views inside the final watermark horizon
@@ -144,31 +131,18 @@ object StreamingQueries {
     // streaming CDC apply: foreachBatch LWW merge into a parquet state
     // table; final state must equal the batch last-per-key answer under
     // any micro-batch partitioning of the input
-    "st11_cdc_apply" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_st11")
-      val state = root.resolve("state").toString
-      // materialize the final state into the block manager, then delete
-      // the scratch parquet — repeated verify/bench runs must not
-      // accumulate state dirs in /tmp (the checkpoint dir is already
-      // cleaned by runCdcApply itself)
-      val out = graft.operators.eagerCut(
-        CdcApply.runCdcApply(s, d, state).orderBy(col("user_id")))
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      out
-    }),
+    "st11_cdc_apply" -> ((s, d) =>
+      overTempRoot("graft_st11")(root =>
+        CdcApply.runCdcApply(s, d, root.resolve("state").toString).orderBy(col("user_id")))),
     // the st11 CDC loop onto the TRANSACTIONAL manifested table (r13):
     // per batch a tombstone retires the superseded keys and the merged
     // rows append — two CAS-guarded commits, periodic delete-compaction
     // under the live stream; same event-time-LWW oracle as st11 (the
     // state-table mechanism must be invisible in the result)
-    "st27_stream_cdc_manifested" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_st27")
-      val table = root.resolve("table").toString
-      val out = graft.operators.eagerCut(
-        CdcApply.runCdcApplyManifested(s, d, table).orderBy(col("user_id")))
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      out
-    }),
+    "st27_stream_cdc_manifested" -> ((s, d) =>
+      overTempRoot("graft_st27")(root =>
+        CdcApply.runCdcApplyManifested(s, d, root.resolve("table").toString)
+          .orderBy(col("user_id")))),
     // the CDC loop onto a SHARDED manifested root (r14/r16): state
     // hash-sharded into shard=<k> leaves, per-batch O(touched-shard)
     // upsertManifestedPartitioned commits + one root version map
@@ -176,15 +150,10 @@ object StreamingQueries {
     // (steady leaves skip) under the live stream; SAME
     // event-time-LWW oracle as st11/st27 — the third state mechanism
     // under one oracle text, so none of them can drift
-    "st28_stream_cdc_sharded" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_st28")
-      val table = root.resolve("table").toString
-      val out = graft.operators.eagerCut(
-        CdcApply.runCdcApplyManifestedPartitioned(s, d, table)
-          .orderBy(col("user_id")))
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      out
-    }),
+    "st28_stream_cdc_sharded" -> ((s, d) =>
+      overTempRoot("graft_st28")(root =>
+        CdcApply.runCdcApplyManifestedPartitioned(s, d, root.resolve("table").toString)
+          .orderBy(col("user_id")))),
     // the CDC loop over a feed carrying DELETES (r15): 'error' events
     // are the delete op; markers ride the stream (LWW keeps the
     // any-batch-partitioning invariance — a per-batch tombstone route
@@ -192,15 +161,10 @@ object StreamingQueries {
     // retire to the tombstone side at the sealed horizon, and the
     // final state is read UNFILTERED — physical removal is the
     // contract the oracle hashes
-    "st29_stream_cdc_deletes" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_st29")
-      val table = root.resolve("table").toString
-      val out = graft.operators.eagerCut(
-        CdcApply.runCdcApplyManifestedDeletes(s, d, table, Set("error"))
-          .orderBy(col("user_id")))
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      out
-    }),
+    "st29_stream_cdc_deletes" -> ((s, d) =>
+      overTempRoot("graft_st29")(root =>
+        CdcApply.runCdcApplyManifestedDeletes(s, d, root.resolve("table").toString,
+          Set("error")).orderBy(col("user_id")))),
     // STREAMING change-feed consumption (r19 — Delta readChangeFeed's
     // streaming shape): the st27 writer maintains the source table
     // while a zero-lag consumer tails its manifest versions, reads
@@ -209,31 +173,19 @@ object StreamingQueries {
     // commits; fold-crossing windows net to zero and commit nothing.
     // The mirror must equal the batch LWW answer — the FOURTH state
     // mechanism under the one CdcLwwOracleSql text
-    "st30_stream_cdf_mirror" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_st30")
-      val src = root.resolve("src").toString
-      val mirror = root.resolve("mirror").toString
-      val out = graft.operators.eagerCut(
-        ChangeFeedStream.runCdfMirror(s, d, src, mirror)
-          .orderBy(col("user_id")))
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      out
-    }),
+    "st30_stream_cdf_mirror" -> ((s, d) =>
+      overTempRoot("graft_st30")(root =>
+        ChangeFeedStream.runCdfMirror(s, d, root.resolve("src").toString,
+          root.resolve("mirror").toString).orderBy(col("user_id")))),
     // the PARTITIONED feed consumer (r19): st28's sharded writer
     // maintains the source root; the consumer tails its ROOT versions
     // — initial sync by deep clone (replication's snapshot-then-tail
     // shape), then incremental windows through the partitioned row
     // ops, O(touched) at both ends. Fifth mechanism, same oracle
-    "st31_stream_cdf_mirror_sharded" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_st31")
-      val src = root.resolve("src").toString
-      val mirror = root.resolve("mirror").toString
-      val out = graft.operators.eagerCut(
-        ChangeFeedStream.runCdfMirrorPartitioned(s, d, src, mirror)
-          .orderBy(col("user_id")))
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      out
-    }),
+    "st31_stream_cdf_mirror_sharded" -> ((s, d) =>
+      overTempRoot("graft_st31")(root =>
+        ChangeFeedStream.runCdfMirrorPartitioned(s, d, root.resolve("src").toString,
+          root.resolve("mirror").toString).orderBy(col("user_id")))),
     // Spark 4 transformWithState (state v2): ValueState running profile
     // on the RocksDB store, update mode; final profile per key must
     // equal the batch aggregate

@@ -24,14 +24,14 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("withTempDir deletes its dir after a normal return and after a throw") {
-    val returned = Harness.withTempDir("graft_harness_spec") { d =>
+    val returned = TempDirs.withTempDir("graft_harness_spec") { d =>
       Files.createDirectories(d.resolve("a/b"))
       Files.writeString(d.resolve("a/b/f"), "x")
       d
     }
     assert(!Files.exists(returned))
     var thrown: Path = null
-    intercept[IllegalStateException](Harness.withTempDir("graft_harness_spec") { d =>
+    intercept[IllegalStateException](TempDirs.withTempDir("graft_harness_spec") { d =>
       thrown = d
       Files.writeString(d.resolve("f"), "x")
       throw new IllegalStateException("boom")

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, IndexLifecycle}
 import graft.operators.Similarity
 
 /** Watermark semantics across micro-batches: data later than the
@@ -463,10 +463,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ann ingest: reader racing the manifested commits always sees complete code sets; final serve == batch upsert") {
-    import graft.streaming.AnnIngestStream
     val sf = "/root/testdata/sf0.001"
     val emb = graft.sources.Tables(spark, sf, "embeddings")
-    val codesDir = AnnIngestStream.codesTableDir(sf)
+    val codesDir = IndexLifecycle.Ann.tableDir("codes", sf)
     // reader thread: from the moment the codes table exists, every
     // resolved snapshot must be COMPLETE — every visible vector carries
     // exactly m=8 subspace codes (a partially-written batch visible
@@ -502,7 +501,7 @@ class StreamingSpec extends SparkSpec {
       }
     })
     reader.start()
-    val got = try AnnIngestStream.runAnnIngest(spark, sf)
+    val got = try IndexLifecycle.ingest(spark, sf, IndexLifecycle.Ann)
       .orderBy("q_id", "rk").collect().toSeq
     finally { stop = true; reader.join(30000) }
     assert(failures.isEmpty, s"racing reader hit: ${failures.asScala.toSeq.take(3)}")
@@ -517,22 +516,95 @@ class StreamingSpec extends SparkSpec {
           Similarity.buildPqIndex(emb.filter(col("vec_id") % 10 =!= 0), d)))
       .orderBy("q_id", "rk").collect().toSeq
     assert(got == want, s"streamed ingest diverged from batch upsert")
+    checkCompaction(IndexLifecycle.Ann, sf, got)
+  }
 
-    // maintenance (st23): the manifest lists one generation per commit
-    // (base seed + 2 batches); compaction folds it to ONE and changes
-    // nothing the serve returns
+  test("bm25 ingest: postings and doclens list 3 generations, 1 after compaction; compacted serve == ingest serve") {
+    val sf = "/root/testdata/sf0.001"
+    val got = IndexLifecycle.ingest(spark, sf, IndexLifecycle.Bm25)
+      .orderBy("q_id", "rk").collect().toSeq
+    assert(got.nonEmpty, "streamed bm25 ingest served nothing")
+    checkCompaction(IndexLifecycle.Bm25, sf, got)
+  }
+
+  /** Maintenance (st23/st26), after an ingest that served `ingested`:
+    * every grown relation's manifest lists one generation per commit
+    * (base seed + 2 batches), compaction folds each to ONE, and the
+    * compacted serve returns exactly what the ingest served. */
+  private def checkCompaction(ix: IndexLifecycle.Index, sf: String,
+                              ingested: Seq[Row]): Unit = {
     // generation lines only — `#stats:`/`#txn:` lines are manifest
     // METADATA, not generations (the format contract)
-    def gensListed() = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(codesDir, "_current"))
+    def gensListed(rel: String) = Files
+      .readString(java.nio.file.Paths.get(ix.tableDir(rel, sf), "_current"))
       .trim.split("\n").count(!_.startsWith("#"))
-    val gensBefore = gensListed()
-    assert(gensBefore == 3, s"expected 3 listed generations, got $gensBefore")
-    val compacted = AnnIngestStream.runCompactedServe(spark, sf)
+    for (rel <- ix.grown)
+      assert(gensListed(rel) == 3, s"$rel: expected 3 listed generations, got ${gensListed(rel)}")
+    val compacted = IndexLifecycle.compactedServe(spark, sf, ix)
       .orderBy("q_id", "rk").collect().toSeq
-    val gensAfter = gensListed()
-    assert(gensAfter == 1, s"compaction should leave one listed generation, got $gensAfter")
-    assert(compacted == want, "compaction changed served results")
+    for (rel <- ix.grown)
+      assert(gensListed(rel) == 1,
+        s"$rel: compaction should leave one listed generation, got ${gensListed(rel)}")
+    assert(compacted == ingested, "compaction changed served results")
+  }
+
+  /** Names in `dir` starting with `prefix`. */
+  private def entries(dir: java.nio.file.Path, prefix: String): Set[String] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(prefix)).toSet
+    finally ls.close()
+  }
+
+  test("runner error path: a throwing foreachBatch body propagates, stops the query, deletes its checkpoint") {
+    val ckptsBefore = entries(EventStreams.scratchBase, "graft_ckpt")
+    val boom = new IllegalStateException("foreachBatch body failed")
+    val scoped = EventStreams.scopedSession(spark)
+    val e = intercept[Exception] {
+      EventStreams.runForeachBatch(
+        EventStreams.readEventStream(scoped, "/root/testdata/sf0.001")) { (_, _) => throw boom }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(_ eq boom),
+      s"the body's exception is not in the cause chain of $e")
+    assert(scoped.streams.active.isEmpty && spark.streams.active.isEmpty,
+      "a failed run left a query active")
+    val leaked = entries(EventStreams.scratchBase, "graft_ckpt") -- ckptsBefore
+    assert(leaked.isEmpty, s"a failed run left checkpoints behind: $leaked")
+  }
+
+  test("readEventStream re-stages a same-basename sf dir holding different events") {
+    import spark.implicits._
+    val roots = Seq.fill(2)(Files.createTempDirectory("graft-stage-spec"))
+    def sfDir(root: java.nio.file.Path, ids: Seq[Long]): String = {
+      val tmp = root.resolve("w").toString
+      ids.map(id => (id, (1700000000000000L + id) * 1000L, 1L, "view", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val sf = Files.createDirectories(root.resolve("sf_same"))
+      Files.move(part.toPath, sf.resolve("events.parquet"))
+      sf.toString
+    }
+    def streamedIds(dir: String, name: String): Seq[Long] =
+      EventStreams.runBounded(spark, name,
+        s => EventStreams.readEventStream(s, dir).select(col("event_id")), "append")
+        .collect().map(_.getLong(0)).toSeq.sorted
+    try {
+      val first = sfDir(roots(0), Seq(1L, 2L, 3L))
+      val second = sfDir(roots(1), Seq(10L, 11L))
+      assert(streamedIds(first, "stage_spec_first") == Seq(1L, 2L, 3L))
+      assert(streamedIds(second, "stage_spec_second") == Seq(10L, 11L),
+        "the second sf dir streamed the first one's staged events")
+    } finally roots.foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+  }
+
+  test("st07 leaves no graft_st07 root in java.io.tmpdir") {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    val before = entries(tmp, "graft_st07")
+    val rows = graft.streaming.StreamingQueries.queries("st07_stream_sink_parquet")(
+      spark, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    val leaked = entries(tmp, "graft_st07") -- before
+    assert(leaked.isEmpty, s"st07 left its root behind: $leaked")
   }
 
   test("CDC apply: final state invariant under batch split and order") {
