@@ -399,22 +399,17 @@ object Relational {
         pairs.select((col("p") * 2).as("src"), (col("s") * 2 + 1).as("dst"))
           .unionAll(pairs.select((col("s") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
           .repartition(nPart, col("src")))
-      und.createOrReplaceTempView("q55_und")
-      val out = s.sql("""WITH RECURSIVE reach(node, dist) AS (
-           SELECT DISTINCT src AS node, 0 AS dist FROM q55_und WHERE src % 200 = 1
+      withTempView(und, "q55_und") { v =>
+        s.sql(s"""WITH RECURSIVE reach(node, dist) AS (
+           SELECT DISTINCT src AS node, 0 AS dist FROM $v WHERE src % 200 = 1
            UNION ALL
            SELECT u.dst AS node, r.dist + 1 AS dist
-           FROM reach r JOIN q55_und u ON u.src = r.node
+           FROM reach r JOIN $v u ON u.src = r.node
            WHERE r.dist < 2)
          SELECT CAST(dist AS BIGINT) AS dist, count(DISTINCT node) AS n_nodes
          FROM (SELECT node, min(dist) AS dist FROM reach GROUP BY node)
          GROUP BY dist ORDER BY dist""")
-      // drop the view immediately: analysis already inlined the
-      // checkpointed relation into `out`, and a catalog-held reference
-      // would keep every run's checkpoint blocks alive (leak — the
-      // bench's prdds sentinel is the detector)
-      s.catalog.dropTempView("q55_und")
-      out
+      }
     }),
 
     // ---- correlated LATERAL top-n (same text runs in DuckDB)

@@ -11,10 +11,10 @@ import graft.model.TableClassifier
   * other table passed through untouched. A user of the reference swaps
   * their JDBC url for a table registry and runs this.
   *
-  * Each table becomes one independent Spark job (derive is a narrow
-  * stage, apply is one join) — at 100 TB tables can run concurrently,
-  * unlike the reference's strictly sequential single connection
-  * (`OMT:79-80`).
+  * Each table becomes one independent Spark job (derive and merge are
+  * one narrow projection over one scan) — at 100 TB tables can run
+  * concurrently, unlike the reference's strictly sequential single
+  * connection (`OMT:79-80`).
   */
 object ZhModifier {
 

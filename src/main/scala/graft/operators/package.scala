@@ -75,6 +75,19 @@ package object operators {
       (org.apache.spark.sql.graftshim.wrapInternalRdd(df.sparkSession, rdd, df.schema), rdd)
     }
 
+  /** Runs `body` with `df` registered as a temp view under a fresh
+    * `prefix_<uuid>` name, which `body` receives, and drops the view in a
+    * `finally`. `body` must return an analyzed DataFrame: analysis has
+    * inlined the view's relation, so dropping it is safe, and a
+    * catalog-held reference would keep a checkpointed relation's blocks
+    * alive (the bench's prdds sentinel is the detector). The fresh name
+    * never replaces a caller's view or races a concurrent invocation. */
+  private[graft] def withTempView(df: DataFrame, prefix: String)(body: String => DataFrame): DataFrame = {
+    val view = s"${prefix}_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    df.createTempView(view)
+    try body(view) finally df.sparkSession.catalog.dropTempView(view)
+  }
+
   /** Load `name`.parquet from the scale-factor dir. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.sources.Tables(spark, dir, name)

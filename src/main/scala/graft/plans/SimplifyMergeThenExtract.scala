@@ -11,10 +11,10 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * when `k_lit` provably matches a literal key of one of the concatenated
   * `CreateMap`s — including through the conditional-merge shape
-  * `element_at(CASE WHEN matched THEN map_concat(…) ELSE tags END, k)`
-  * that `applyUpdates` produces, where the extraction distributes into
-  * the branches. Chained enrichments (zhEnrich → applyUpdates → project
-  * the merged keys back out, e.g. the z02 pipeline) otherwise build the
+  * `element_at(CASE WHEN selected THEN map_concat(…) ELSE tags END, k)`
+  * that `ZhEnrich.enrichTable` produces, where the extraction distributes
+  * into the branches. Chained enrichments (enrichTable → project the
+  * merged keys back out, e.g. the z02 pipeline) otherwise build the
   * whole merged map per row only to extract two constant keys from it.
   *
   * Correctness guards:

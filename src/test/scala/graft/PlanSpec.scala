@@ -344,6 +344,32 @@ class PlanSpec extends SparkSpec {
       new java.io.File(dir).getParentFile)
   }
 
+  test("q55 leaves the session's temp views as it found them") {
+    graft.sources.Tables.registerAll(spark, sf)
+    spark.range(3).createOrReplaceTempView("q55_und") // a caller's own view
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    try {
+      val bfs = SparkEntry.queries("q55_recursive_bfs")(spark, sf)
+      assert(views == before)
+      assert(spark.table("q55_und").count() == 3)
+      assert(bfs.collect().nonEmpty)
+    } finally spark.catalog.dropTempView("q55_und")
+  }
+
+  test("withTempView drops its view when the body throws") {
+    var seen = ""
+    val err = intercept[IllegalStateException] {
+      graft.operators.withTempView(spark.range(2).toDF(), "probe") { v =>
+        seen = v
+        assert(spark.catalog.tableExists(v))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed")
+    assert(seen.startsWith("probe_") && !spark.catalog.tableExists(seen))
+  }
+
   test("merge-then-extract fires in the applied-enrichment projection") {
     import graft.operators.ZhEnrich
     import graft.sources.OsmFixture

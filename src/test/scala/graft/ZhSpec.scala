@@ -12,12 +12,14 @@ import graft.model.TableClassifier
   * inventory in FIXTURES.md §A. */
 class ZhSpec extends SparkSpec {
 
+  private def osmSchema(idName: String, idNullable: Boolean): StructType = StructType(Seq(
+    StructField(idName, LongType, nullable = idNullable),
+    StructField("name", StringType, nullable = true),
+    StructField("tags", MapType(StringType, StringType, valueContainsNull = true), nullable = true),
+    StructField("geometry", StringType, nullable = true)))
+
   private def osmFixture(idName: String = "id"): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(idName, LongType, nullable = false),
-      StructField("name", StringType, nullable = true),
-      StructField("tags", MapType(StringType, StringType, valueContainsNull = true), nullable = true),
-      StructField("geometry", StringType, nullable = true)))
+    val schema = osmSchema(idName, idNullable = false)
     val rows = Seq(
       Row(1L, "北京市", Map.empty[String, String], "g1"),
       Row(2L, "Springfield", Map.empty[String, String], "g2"),
@@ -240,10 +242,10 @@ class ZhSpec extends SparkSpec {
     assert(got.toSeq == expected.toSeq)
   }
 
-  test("applyUpdates merges right-wins and preserves bystander columns") {
+  test("enrichTable merges right-wins and preserves bystander columns") {
     val df = osmFixture()
     val out = ZhEnrich.enrichTable(df, "id").cache()
-    assert(out.count() == 11) // all rows survive (left join)
+    assert(out.count() == 11) // all rows survive
     val r11 = out.filter(col("id") === 11).select("tags").head().getMap[String, String](0)
     assert(r11("amenity") == "cafe")           // bystander key survives merge
     assert(r11("name:zh-Hans") == "广州")
@@ -257,6 +259,104 @@ class ZhSpec extends SparkSpec {
     // geometry column passes through untouched
     assert(out.filter(col("id") === 1).select("geometry").head().getString(0) == "g1")
     out.unpersist()
+  }
+
+  /** The join formulation `enrichTable` once had: derive the updates,
+    * LEFT JOIN them back on the id, merge right-wins. With unique ids the
+    * one-projection `enrichTable` must equal it. */
+  private def joinReference(df: DataFrame, idCol: String): DataFrame = {
+    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    val u = ZhEnrich.zhEnrich(df, idCol).select(
+      col("id").as("_uid"), col("hans").as("_uhans"), col("hant").as("_uhant"))
+    df.join(u, df(idCol) === u("_uid"), "left")
+      .withColumn("tags",
+        when(col("_uid").isNotNull,
+          map_concat(
+            coalesce(col("tags"), map()),
+            map(lit("name:zh-Hans"), col("_uhans"), lit("name:zh-Hant"), col("_uhant"))))
+          .otherwise(col("tags")))
+      .drop("_uid", "_uhans", "_uhant")
+  }
+
+  /** Rows as comparable values: maps become sorted pair lists, and the
+    * rows are sorted, so two frames compare as multisets. */
+  private def canon(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+    case m: scala.collection.Map[_, _] => m.toSeq.map { case (k, v) => s"$k=$v" }.sorted.mkString("{", ",", "}")
+    case v => String.valueOf(v)
+  }.mkString("|")).sorted
+
+  private def generatedFrame(n: Int, seed: Long): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val names = Seq("北京市", "头发", "頭髮", "广州", "東京タワー", "成田 Airport",
+      "Springfield", "Main Street", "", null)
+    val tagss: Seq[Map[String, String]] = Seq(null, Map.empty,
+      Map("name:zh" -> "萬國碼"), Map("name:zh" -> ""),
+      Map("name:zh-Hans" -> ""), Map("name:zh-Hant" -> ""),
+      Map("name:zh-Hans" -> "", "name:zh-Hant" -> ""),
+      Map("name:zh-Hans" -> "东京", "name:zh-Hant" -> "東京"),
+      Map("name:zh-Hans" -> "头发"), Map("name:zh-Hant" -> "頭髮", "amenity" -> "cafe"),
+      Map("amenity" -> "cafe"))
+    val rows = (1 to n).map(i =>
+      Row(i.toLong, names(rnd.nextInt(names.size)), tagss(rnd.nextInt(tagss.size)), s"g$i"))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), osmSchema("osm_id", idNullable = true))
+  }
+
+  test("enrichTable equals the join formulation on unique ids") {
+    val fixture = osmFixture()
+    assert(canon(ZhEnrich.enrichTable(fixture, "id")) == canon(joinReference(fixture, "id")))
+    val gen = generatedFrame(600, 4L)
+    // every row class is present: "" targets, name:zh only, already
+    // enriched, Latin names
+    val kinds = gen.select(
+      count(when(element_at(col("tags"), "name:zh-Hans") === "", 1)),
+      count(when(element_at(col("tags"), "name:zh").isNotNull && col("name").isNull, 1)),
+      count(when(size(col("tags")) >= 2 &&
+        element_at(col("tags"), "name:zh-Hans") =!= "", 1)),
+      count(when(col("name").isin("Springfield", "Main Street"), 1))).head()
+    assert((0 until 4).forall(kinds.getLong(_) > 0), kinds)
+    val got = ZhEnrich.enrichTable(gen, "osm_id")
+    assert(got.columns.toSeq == gen.columns.toSeq)
+    assert(canon(got) == canon(joinReference(gen, "osm_id")))
+  }
+
+  test("enrichTable keeps one row per input row when osm_id repeats") {
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(7L, "北京市", Map.empty[String, String], "g1"),
+      Row(7L, "頭髮", Map("amenity" -> "cafe"), "g2"),   // same id, own update
+      Row(null, "广州", Map.empty[String, String], "g3"), // null id: unchanged
+      Row(9L, "Springfield", null, "g4")), 2),             // null tags, no update
+      osmSchema("osm_id", idNullable = true))
+    val out = ZhEnrich.enrichTable(df, "osm_id")
+      .select(col("geometry"), col("tags")).collect()
+      .map(r => r.getString(0) -> Option(r.getMap[String, String](1)).map(_.toMap)).toSeq
+    assert(out.size == 4, out)
+    assert(out.toMap == Map(
+      "g1" -> Some(Map("name:zh-Hans" -> "北京市", "name:zh-Hant" -> "北京市")),
+      "g2" -> Some(Map("amenity" -> "cafe", "name:zh-Hans" -> "头发", "name:zh-Hant" -> "頭髮")),
+      "g3" -> Some(Map.empty[String, String]),
+      "g4" -> None))
+  }
+
+  test("enrichTable over parquet is one scan with no join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    TempDirs.withTempDir("graft-zhplan") { dir =>
+      val path = dir.resolve("osm").toString
+      osmFixture().write.parquet(path)
+      val out = ZhEnrich.enrichTable(spark.read.parquet(path), "id")
+      assert(out.collect().length == 11)
+      val qe = out.queryExecution
+      assert(qe.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+        qe.optimizedPlan)
+      val helper = new AdaptiveSparkPlanHelper {}
+      def nodes[T](pf: PartialFunction[SparkPlan, T]) = helper.collect(qe.executedPlan)(pf)
+      assert(nodes { case j: BaseJoinExec => j }.isEmpty, qe.executedPlan)
+      assert(nodes { case b: BroadcastExchangeExec => b }.isEmpty, qe.executedPlan)
+      assert(nodes { case s: FileSourceScanExec => s }.size == 1, qe.executedPlan)
+    }
   }
 
   test("idempotence: enriching an enriched table emits zero updates") {
