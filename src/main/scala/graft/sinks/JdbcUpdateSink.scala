@@ -13,7 +13,10 @@ import org.apache.spark.sql.DataFrame
   *    deletes the reference's hand-rolled escaping (`hstoreEscape`,
   *    `OMT:184-194`) and its SQL-injection surface (X7 in SURVEY.md);
   *  - batches flush every `batchSize` rows — same commit cadence
-  *    semantics as the reference's per-chunk `executeBatch`.
+  *    semantics as the reference's per-chunk `executeBatch`;
+  *  - a partition opens its connection and prepares its statement only
+  *    when its first row arrives, so a partition with no rows (all of
+  *    them on an idempotent re-run) opens no connection.
   *
   * At 100 TB the bottleneck is the database, not Spark: size
   * `updates.repartition(n)` to the DB's safe concurrent-writer count.
@@ -29,20 +32,22 @@ object JdbcUpdateSink {
     val cols = setCols :+ idCol
     updates.select(cols.head, cols.tail: _*).foreachPartition {
       (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val conn = DriverManager.getConnection(url)
-        try {
-          val st = conn.prepareStatement(sql)
-          var pending = 0
-          rows.foreach { r =>
-            var i = 0
-            while (i < cols.length) { st.setObject(i + 1, r.get(i)); i += 1 }
-            st.addBatch()
-            pending += 1
-            if (pending >= batchSize) { st.executeBatch(); pending = 0 }
-          }
-          if (pending > 0) st.executeBatch()
-          ()
-        } finally conn.close()
+        if (rows.hasNext) {
+          val conn = DriverManager.getConnection(url)
+          try {
+            val st = conn.prepareStatement(sql)
+            var pending = 0
+            rows.foreach { r =>
+              var i = 0
+              while (i < cols.length) { st.setObject(i + 1, r.get(i)); i += 1 }
+              st.addBatch()
+              pending += 1
+              if (pending >= batchSize) { st.executeBatch(); pending = 0 }
+            }
+            if (pending > 0) st.executeBatch()
+            ()
+          } finally conn.close()
+        }
     }
   }
 }

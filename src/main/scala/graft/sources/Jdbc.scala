@@ -2,16 +2,17 @@ package graft.sources
 
 import java.sql.DriverManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** JDBC source surface — the reference's native habitat, Spark-first.
   *
   * The reference opens one connection and hand-chunks scans with
   * `BETWEEN` ranges driven by `max(id)` (`OMTZHModifier.java:107-146`);
   * here the same access path is a partitioned JDBC read whose bounds
-  * come from one min/max query — which also fixes the reference's two
-  * scan holes (negative ids never scanned; `id == maxID` dropped when
-  * the chunk size divides it exactly, `OMT:130`).
+  * come from one min/max statement on the driver's own connection, as
+  * the reference's `max(id)` does, so the read itself starts no Spark
+  * job. It also fixes the reference's two scan holes (negative ids never
+  * scanned; `id == maxID` dropped when the chunk size divides it
+  * exactly, `OMT:130`).
   */
 object Jdbc {
 
@@ -28,24 +29,36 @@ object Jdbc {
   }
 
   /** S5 partitioned range scan: numPartitions parallel readers over
-    * [min(id), max(id)] — no holes, no driver-side chunk loop. */
+    * [min(id), max(id)] — no holes, no driver-side chunk loop.
+    *
+    * The bounds come from `SELECT MIN(idCol), MAX(idCol) FROM table` on
+    * one driver connection, not from a Spark job. They only set Spark's
+    * strides: its first partition reads `idCol < stride OR idCol IS
+    * NULL` and its last has no upper limit, so MAX itself is the
+    * `upperBound`: every row is read without a `+ 1`, which would
+    * overflow at `Long.MaxValue`. An empty table (null MIN) is a plain
+    * single-partition read. */
   def readPartitioned(spark: SparkSession, url: String, table: String,
                       idCol: String, numPartitions: Int = 4): DataFrame = {
-    val bounds = spark.read.format("jdbc")
-      .option("url", url)
-      .option("query", s"SELECT MIN($idCol) AS lo, MAX($idCol) AS hi FROM $table")
-      .load().first()
-    if (bounds.isNullAt(0)) // empty table: plain (single-partition) read
-      spark.read.format("jdbc").option("url", url).option("dbtable", table).load()
-    else spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("partitionColumn", idCol)
-      // MIN/MAX come back as whatever integral/decimal type the dialect
-      // maps — go through Number, not getLong
-      .option("lowerBound", bounds.getAs[Number](0).longValue)
-      .option("upperBound", bounds.getAs[Number](1).longValue + 1) // exclusive
-      .option("numPartitions", numPartitions)
-      .load()
+    val bounds = {
+      val conn = DriverManager.getConnection(url)
+      try {
+        val rs = conn.createStatement().executeQuery(s"SELECT MIN($idCol), MAX($idCol) FROM $table")
+        rs.next()
+        // BIGINT, INTEGER or DECIMAL, as the column is: go through Number, not getLong
+        Option(rs.getObject(1)).map(lo =>
+          (lo.asInstanceOf[Number].longValue, rs.getObject(2).asInstanceOf[Number].longValue))
+      } finally conn.close()
+    }
+    val reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
+    bounds match {
+      case None => reader.load()
+      case Some((lo, hi)) => reader
+        .option("partitionColumn", idCol)
+        .option("lowerBound", lo)
+        .option("upperBound", hi)
+        .option("numPartitions", numPartitions)
+        .load()
+    }
   }
 }

@@ -19,6 +19,11 @@ is within the metric's regression bound, and lists every run that failed,
 returned `correct` false or counted `failed` > 0. The exit code is 1 when
 such a run exists, else 0. Each run's end-to-end metrics go to standard
 error as it finishes.
+
+After the pairs it runs `--trace 1` once per side at the first seed and
+prints the listener counts (`spark.jobs`, `spark.stages`, `spark.tasks`)
+and every `sources.*` and `sinks.*` layer metric side by side, so the
+count a change names can be read off the same invocation.
 """
 import argparse
 import json
@@ -28,10 +33,14 @@ import subprocess
 import sys
 
 
-def run_once(checkout, workload, seed, seconds):
+COUNTS = ("spark.jobs", "spark.stages", "spark.tasks")
+LAYERS = ("sources.", "sinks.")
+
+
+def run_once(checkout, workload, seed, seconds, trace=0):
     """One benchmark run; returns its result object, or None if it failed."""
     cmd = [sys.executable, "zhbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True)
     lines = p.stdout.strip().splitlines()
@@ -65,6 +74,26 @@ def verdict(parent, change, better):
     return wins, losses, ties, gain
 
 
+def note_bad(bad, side, seed, r):
+    """Adds the run to `bad` when it failed, returned `correct` false or
+    counted `failed` > 0."""
+    if r is None or not r.get("correct") or r.get("failed", 0) > 0:
+        bad.append((side, seed, None if r is None else
+                    {k: r.get(k) for k in ("correct", "attempted", "failed")}))
+
+
+def print_counts(traced, seed):
+    """The traced runs' listener counts and source/sink layer metrics."""
+    mp, mc = (traced[s]["metrics"] if traced[s] else {} for s in ("parent", "change"))
+    names = [n for n in COUNTS if n in mp or n in mc]
+    names += sorted(n for n in set(mp) | set(mc) if n.startswith(LAYERS))
+    print(f"traced (--trace 1) seed {seed}:")
+    print(f"{'metric':24} {'parent':>14} {'change':>14}")
+    for n in names:
+        p, c = (f"{m[n]['value']:.4g}" if n in m else "-" for m in (mp, mc))
+        print(f"{n:24} {p:>14} {c:>14}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent")
@@ -86,9 +115,7 @@ def main():
         for side in order:
             r = run_once(sides[side], a.workload, seed, a.seconds)
             runs[side].append(r)
-            if r is None or not r.get("correct") or r.get("failed", 0) > 0:
-                bad.append((side, seed, None if r is None else
-                            {k: r.get(k) for k in ("correct", "attempted", "failed")}))
+            note_bad(bad, side, seed, r)
             got = "failed" if r is None else " ".join(
                 f"{m['name']}={r['metrics'][m['name']]['value']:.4g}"
                 for m in metrics if m["name"] in r.get("metrics", {}))
@@ -117,6 +144,11 @@ def main():
               f"{f'{cmed:.4g} [{cq1:.4g}-{cq3:.4g}]':>30} "
               f"{f'{wins}/{losses}/{ties}':>8} {'yes' if gain else 'no':>5} "
               f"{'ok' if within else 'OVER':>6}")
+    traced = {}
+    for side in ("parent", "change"):
+        traced[side] = run_once(sides[side], a.workload, a.seed, a.seconds, trace=1)
+        note_bad(bad, side, f"{a.seed} (traced)", traced[side])
+    print_counts(traced, a.seed)
     for side, seed, what in bad:
         print(f"bad run: {side} seed {seed}: {what or 'no result'}")
     sys.exit(1 if bad else 0)
