@@ -365,15 +365,10 @@ trait WarehouseChanges { this: Warehouse.type =>
         "root restore cannot roll a partition out of existence without " +
         "destroying its later-version history; delete those leaves " +
         "explicitly first if that is the intent")
-    val st = beginRootTransition(fs, root, leaves, None,
-      "restoreManifestedPartitioned")
-    val map = parCommitLeaves(target.keySet.toSeq.sorted,
-      refresh = () => refreshClaim(fs, st, root, None)) { rel =>
-      rel -> restoreManifested(spark, new HPath(root, rel).toString,
-        target(rel))
-    }.toMap
-    commitRootManifest(fs, root, st, map, None)
-    st.next
+    rootTransition(fs, root, leaves, None, "restoreManifestedPartitioned") { _ =>
+      target.keySet.toSeq.sorted.map(rel => () =>
+        (rel, restoreManifested(spark, new HPath(root, rel).toString, target(rel)), ()))
+    }._1.next
   }
 
   /** RESTORE — version rollback as a NEW commit (Delta `RESTORE TABLE
@@ -399,32 +394,28 @@ trait WarehouseChanges { this: Warehouse.type =>
     * table size. */
   def restoreManifested(spark: SparkSession, dir: String, version: Long): Long = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    withTableLock(root) {
-      val pointer = new HPath(root, "_current")
-      val head = headBody(fs, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"restoreManifested: $dir has no committed table"))
-      val expected = manifestVersions(fs, root).lastOption.getOrElse(0L)
-      if (version == expected) return expected
-      val hist = new HPath(root, s"_manifest-$version")
-      if (!ManifestIo.exists(fs, hist))
-        throw new IllegalArgumentException(
-          s"restoreManifested: snapshot $version of $dir is not retained " +
-            s"(available: ${manifestVersions(fs, root).mkString(", ")})")
-      val snap = ManifestIo.readString(fs, hist)
-      val gens = parseGens(snap)
-      // resolve #ref: entries (unmaterialized shallow clones) exactly as
-      // readManifestedAt does — a referenced generation lives in the
-      // SOURCE table's directory, so probing `root/g` would spuriously
-      // report it garbage-collected
-      val refs = parseRefs(snap)
-      gens.find(g => !ManifestIo.isDirectory(fs, entryPath(root, refs, g))).foreach { g =>
-        throw new IllegalStateException(
-          s"restoreManifested: snapshot $version of $dir lists $g, which " +
-            "has been garbage-collected (retention window moved past it)")
+    leafCommit(fs, root, "restoreManifested") { h =>
+      if (version == h.version) h.version
+      else {
+        val hist = new HPath(root, s"_manifest-$version")
+        if (!ManifestIo.exists(fs, hist))
+          throw new IllegalArgumentException(
+            s"restoreManifested: snapshot $version of $dir is not retained " +
+              s"(available: ${manifestVersions(fs, root).mkString(", ")})")
+        val snap = ManifestIo.readString(fs, hist)
+        val gens = parseGens(snap)
+        // resolve #ref: entries (unmaterialized shallow clones) exactly as
+        // readManifestedAt does — a referenced generation lives in the
+        // SOURCE table's directory, so probing `root/g` would spuriously
+        // report it garbage-collected
+        val refs = parseRefs(snap)
+        gens.find(g => !ManifestIo.isDirectory(fs, entryPath(root, refs, g))).foreach { g =>
+          throw new IllegalStateException(
+            s"restoreManifested: snapshot $version of $dir lists $g, which " +
+              "has been garbage-collected (retention window moved past it)")
+        }
+        h.commit(gens, statsForGens(parseStats(snap), gens))
       }
-      commitManifest(fs, root, pointer, gens, expected, parseTxns(head),
-        statsForGens(parseStats(snap), gens))
     }
   }
 

@@ -136,46 +136,10 @@ trait WarehouseConstraints { this: Warehouse.type =>
     * committed version. */
   def addCheckConstraint(spark: SparkSession, dir: String, name: String,
                          predicate: String): Long = {
-    require(!name.contains(":") && !name.contains("\n") && name.nonEmpty,
-      s"addCheckConstraint: constraint name must be nonempty without " +
-        s"':' or newline, got '$name'")
+    requireConstraintName("addCheckConstraint", name)
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    withTableLock(root) {
-      // bounded CAS loop, expected version captured WITH the head and
-      // BEFORE the validation scan: a cross-process write landing
-      // during the scan would otherwise commit rows the scan never saw
-      // under the new constraint (and the late expected-read could
-      // even drop its generation from the pointer) — with the early
-      // capture that write surfaces as a version-CAS loss here and the
-      // retry re-reads AND re-scans, so the committed constraint is a
-      // whole-table invariant including last-instant arrivals.
-      var attempt = 0
-      var out = -1L
-      while (out < 0) {
-        val head = headBody(fs, root).getOrElse(
-          throw new IllegalArgumentException(
-            s"addCheckConstraint: $dir has no committed table"))
-        val expected = manifestVersions(fs, root).lastOption.getOrElse(0L)
-        val existing = parseConstraints(head)
-        require(!existing.contains(name),
-          s"addCheckConstraint: $dir already has constraint '$name' " +
-            s"CHECK (${existing(name)}) — drop it first to replace")
-        // the whole-table validation: the one table scan this op costs
-        requireConstraints(
-          Some(manifestBody(Seq.empty, Map.empty,
-            Seq(constraintLine(name, predicate)))),
-          readManifested(spark, dir), "addCheckConstraint")
-        try out = commitManifest(fs, root, new HPath(root, "_current"),
-          parseGens(head), expected, parseTxns(head),
-          parseStats(head) :+ constraintLine(name, predicate))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt >= 5) throw e
-        }
-      }
-      out
-    }
+    addConstraintCommit(spark, fs, root, "addCheckConstraint", name, predicate,
+      pinned = None)
   }
 
   /** DROP CONSTRAINT: metadata-only commit removing the line.
@@ -183,32 +147,68 @@ trait WarehouseConstraints { this: Warehouse.type =>
   def dropCheckConstraint(spark: SparkSession, dir: String,
                           name: String): Long = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    withTableLock(root) {
-      var attempt = 0
-      var out = -1L
-      while (out < 0) {
-        val head = headBody(fs, root).getOrElse(
-          throw new IllegalArgumentException(
-            s"dropCheckConstraint: $dir has no committed table"))
-        val expected = manifestVersions(fs, root).lastOption.getOrElse(0L)
-        val line = constraintLines(head)
-          .find(_.startsWith(ConstraintPrefix + name + ":")).getOrElse(
-            throw new IllegalArgumentException(
-              s"dropCheckConstraint: $dir has no constraint '$name' " +
-                s"(live: ${parseConstraints(head).keys.toSeq.sorted
-                  .mkString(", ")})"))
-        try out = commitManifest(fs, root, new HPath(root, "_current"),
-          parseGens(head), expected, parseTxns(head),
-          parseStats(head).filterNot(_ == line))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt >= 5) throw e
-        }
+    dropConstraintCommit(fs, root, "dropCheckConstraint", name, converge = false)
+  }
+
+  private def requireConstraintName(op: String, name: String): Unit =
+    require(!name.contains(":") && !name.contains("\n") && name.nonEmpty,
+      s"$op: constraint name must be nonempty without ':' or newline, " +
+        s"got '$name'")
+
+  /** The duplicate probe: refuse an existing constraint `name` — unless
+    * `converge` and it already carries this exact predicate (a crashed
+    * prior partitioned add), which returns true (nothing to commit). */
+  private def constraintPresent(op: String, leaf: HPath, head: String,
+                                name: String, predicate: String,
+                                converge: Boolean): Boolean =
+    parseConstraints(head).get(name) match {
+      case Some(p) if converge && p == predicate => true
+      case Some(p) => throw new IllegalArgumentException(
+        s"$op: $leaf already has constraint '$name' CHECK ($p) — drop it " +
+          "first to replace")
+      case None => false
+    }
+
+  /** The ADD commit step both forms run on [[leafCommit]] (5
+    * attempts): probe for a duplicate, validate the leaf's CURRENT rows,
+    * commit the line. The validation scan is why the early `expected`
+    * capture matters here: a write landing during it surfaces as a CAS
+    * loss, and the retry re-reads AND re-scans, so the committed
+    * constraint is a whole-table invariant including last-instant
+    * arrivals. A partitioned walk passes `pinned` — the head snapshot
+    * it took BEFORE its root-wide scan, which already validated this
+    * leaf, so only a retry re-scans (leaf-sized, not the root scan) —
+    * and converges on a leaf already carrying the line. */
+  private def addConstraintCommit(spark: SparkSession, fs: HFs, leaf: HPath,
+                                  op: String, name: String, predicate: String,
+                                  pinned: Option[(String, Long)]): Long = {
+    val line = constraintLine(name, predicate)
+    leafCommit(fs, leaf, op, attempts = 5, pinned = pinned) { h =>
+      if (constraintPresent(op, leaf, h.body, name, predicate, pinned.isDefined))
+        h.version
+      else {
+        if (pinned.isEmpty || h.attempt > 0)
+          requireConstraints(Some(manifestBody(Seq.empty, Map.empty, Seq(line))),
+            readManifested(spark, leaf.toString), op)
+        h.commit(h.gens, h.stats :+ line)
       }
-      out
     }
   }
+
+  /** The DROP commit step both forms run on [[leafCommit]] (5
+    * attempts). A leaf without the name refuses, or — `converge`, the
+    * partitioned walk — is recorded as-is (a crashed prior drop). */
+  private def dropConstraintCommit(fs: HFs, leaf: HPath, op: String,
+                                   name: String, converge: Boolean): Long =
+    leafCommit(fs, leaf, op, attempts = 5) { h =>
+      constraintLines(h.body).find(_.startsWith(ConstraintPrefix + name + ":")) match {
+        case Some(l) => h.commit(h.gens, h.stats.filterNot(_ == l))
+        case None if converge => h.version
+        case None => throw new IllegalArgumentException(
+          s"$op: $leaf has no constraint '$name' " +
+            s"(live: ${parseConstraints(h.body).keys.toSeq.sorted.mkString(", ")})")
+      }
+    }
 
   /** ADD CONSTRAINT across a PARTITIONED root — the table-level DDL
     * (Delta constraints are table state; the per-leaf surface alone
@@ -224,92 +224,34 @@ trait WarehouseConstraints { this: Warehouse.type =>
     * CONVERGENT for a crashed prior attempt: a leaf already carrying
     * this exact (name, predicate) line skips (its head is recorded
     * as-is); the same name with a DIFFERENT predicate refuses loudly.
-    * A cross-process write racing a leaf's metadata commit surfaces
-    * as that leaf's version CAS loss; the bounded retry re-validates
-    * that LEAF's current rows (leaf-sized scan, not the root scan)
-    * before recommitting, so last-instant arrivals are covered
-    * exactly as in [[addCheckConstraint]]. Returns the published root
-    * version. */
+    * Returns the published root version. */
   def addCheckConstraintPartitioned(spark: SparkSession, rootDir: String,
                                     name: String, predicate: String): Long = {
-    require(!name.contains(":") && !name.contains("\n") && name.nonEmpty,
-      s"addCheckConstraintPartitioned: constraint name must be nonempty " +
-        s"without ':' or newline, got '$name'")
+    val op = "addCheckConstraintPartitioned"
+    requireConstraintName(op, name)
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
-    val leaves = manifestLeaves(fs, root)
-    require(leaves.nonEmpty && leaves.forall(l => leafKvs(root, l).nonEmpty),
-      s"addCheckConstraintPartitioned: $rootDir has no k=v leaves — " +
-        "it is a plain leaf; use addCheckConstraint")
-    val line = constraintLine(name, predicate)
+    val leaves = requireKvLeaves(fs, root, op, rootDir, "addCheckConstraint")
     // duplicate probe + head/version SNAPSHOT of every leaf, taken
-    // BEFORE the root-wide validation scan: the first CAS attempt per
-    // leaf uses these as its expected values, so a write landing DURING
-    // the scan (a concurrent upsert that claims the root only at commit
-    // time, or a direct leaf append) surfaces as a CAS loss and takes
-    // the leaf re-validation path below — the same early-capture rule
-    // the non-partitioned addCheckConstraint applies. Refusals (dup
-    // name with different predicate, headless leaf) happen here,
-    // before the claim — they leave nothing behind. Convergence rule
-    // per leaf: same line → crashed prior attempt, fine.
-    val pre: Map[String, (String, Long)] = parCommitLeaves(leaves) { leaf =>
-      val rel = relPath(root, leaf)
-      val h = headBody(fs, leaf).getOrElse(
-        throw new IllegalArgumentException(
-          s"addCheckConstraintPartitioned: leaf $rel has no " +
-            "committed table"))
-      parseConstraints(h).get(name).foreach { p =>
-        require(p == predicate,
-          s"addCheckConstraintPartitioned: leaf $rel " +
-            s"already has constraint '$name' CHECK ($p) — drop it " +
-            "first to replace")
-      }
-      rel -> ((h, manifestVersions(fs, leaf).lastOption.getOrElse(0L)))
+    // BEFORE the root-wide validation scan: each leaf's first commit
+    // attempt anchors on it, so a write landing DURING the scan (a
+    // concurrent upsert that claims the root only at commit time, or a
+    // direct leaf append) surfaces as a CAS loss and takes the leaf
+    // re-validation path. Refusals (dup name with different predicate,
+    // headless leaf) happen here, before the claim — they leave
+    // nothing behind.
+    val pre: Map[HPath, (String, Long)] = parCommitLeaves(leaves) { leaf =>
+      val h = headBody(fs, leaf).getOrElse(throw new IllegalArgumentException(
+        s"$op: leaf ${relPath(root, leaf)} has no committed table"))
+      constraintPresent(op, leaf, h, name, predicate, converge = true)
+      leaf -> ((h, headVersion(fs, leaf)))
     }.toMap
     requireConstraints(
-      Some(manifestBody(Seq.empty, Map.empty, Seq(line))),
-      readManifestedPartitioned(spark, rootDir),
-      "addCheckConstraintPartitioned")
-    val st = beginRootTransition(fs, root, leaves, None,
-      "addCheckConstraintPartitioned")
-    val map = parCommitLeaves(leaves,
-      refresh = () => refreshClaim(fs, st, root, None)) { leaf =>
-      val rel = relPath(root, leaf)
-      rel -> withTableLock(leaf) {
-        var attempt = 0
-        var v = -1L
-        // pre-scan snapshot — any intervening write fails this CAS
-        var (head, expected) = pre(rel)
-        while (v < 0) {
-          if (constraintLines(head).contains(line)) v = expected // converged
-          else {
-            try v = commitManifest(fs, leaf, new HPath(leaf, "_current"),
-              parseGens(head), expected, parseTxns(head),
-              parseStats(head) :+ line)
-            catch {
-              case e: java.util.ConcurrentModificationException =>
-                attempt += 1
-                if (attempt >= 5) throw e
-                // a write overtook the pre-scan snapshot — re-read the
-                // head and re-validate the leaf's CURRENT rows before
-                // recommitting (leaf-sized scan, not the root scan)
-                head = headBody(fs, leaf).getOrElse(
-                  throw new IllegalArgumentException(
-                    s"addCheckConstraintPartitioned: leaf $rel has no " +
-                      "committed table"))
-                expected =
-                  manifestVersions(fs, leaf).lastOption.getOrElse(0L)
-                requireConstraints(
-                  Some(manifestBody(Seq.empty, Map.empty, Seq(line))),
-                  readManifested(spark, leaf.toString),
-                  "addCheckConstraintPartitioned")
-            }
-          }
-        }
-        v
-      }
-    }.toMap
-    commitRootManifest(fs, root, st, map, None)
-    st.next
+      Some(manifestBody(Seq.empty, Map.empty, Seq(constraintLine(name, predicate)))),
+      readManifestedPartitioned(spark, rootDir), op)
+    rootTransition(fs, root, leaves, None, op) { _ =>
+      leaves.map(leaf => () => (relPath(root, leaf),
+        addConstraintCommit(spark, fs, leaf, op, name, predicate, pre.get(leaf)), ()))
+    }._1.next
   }
 
   /** DROP CONSTRAINT across a partitioned root: the line is removed
@@ -319,50 +261,26 @@ trait WarehouseConstraints { this: Warehouse.type =>
     * version. */
   def dropCheckConstraintPartitioned(spark: SparkSession, rootDir: String,
                                      name: String): Long = {
+    val op = "dropCheckConstraintPartitioned"
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
-    val leaves = manifestLeaves(fs, root)
-    require(leaves.nonEmpty && leaves.forall(l => leafKvs(root, l).nonEmpty),
-      s"dropCheckConstraintPartitioned: $rootDir has no k=v leaves — " +
-        "it is a plain leaf; use dropCheckConstraint")
+    val leaves = requireKvLeaves(fs, root, op, rootDir, "dropCheckConstraint")
     val anywhere = parCommitLeaves(leaves) { leaf =>
-      headBody(fs, leaf).exists(h =>
-        parseConstraints(h).contains(name))
+      headBody(fs, leaf).exists(h => parseConstraints(h).contains(name))
     }
     require(anywhere.contains(true),
-      s"dropCheckConstraintPartitioned: no leaf of $rootDir has " +
-        s"constraint '$name'")
-    val st = beginRootTransition(fs, root, leaves, None,
-      "dropCheckConstraintPartitioned")
-    val map = parCommitLeaves(leaves,
-      refresh = () => refreshClaim(fs, st, root, None)) { leaf =>
-      val rel = relPath(root, leaf)
-      rel -> withTableLock(leaf) {
-        var attempt = 0
-        var v = -1L
-        while (v < 0) {
-          val head = headBody(fs, leaf).getOrElse(
-            throw new IllegalArgumentException(
-              s"dropCheckConstraintPartitioned: leaf $rel has no " +
-                "committed table"))
-          val expected = manifestVersions(fs, leaf).lastOption.getOrElse(0L)
-          constraintLines(head)
-            .find(_.startsWith(ConstraintPrefix + name + ":")) match {
-            case None => v = expected // converged (or never had it)
-            case Some(l) =>
-              try v = commitManifest(fs, leaf, new HPath(leaf, "_current"),
-                parseGens(head), expected, parseTxns(head),
-                parseStats(head).filterNot(_ == l))
-              catch {
-                case e: java.util.ConcurrentModificationException =>
-                  attempt += 1
-                  if (attempt >= 5) throw e
-              }
-          }
-        }
-        v
-      }
-    }.toMap
-    commitRootManifest(fs, root, st, map, None)
-    st.next
+      s"$op: no leaf of $rootDir has constraint '$name'")
+    rootTransition(fs, root, leaves, None, op) { _ =>
+      leaves.map(leaf => () => (relPath(root, leaf),
+        dropConstraintCommit(fs, leaf, op, name, converge = true), ()))
+    }._1.next
+  }
+
+  /** The leaves of a partitioned root, refusing a plain leaf. */
+  private def requireKvLeaves(fs: HFs, root: HPath, op: String, rootDir: String,
+                              leafOp: String): Seq[HPath] = {
+    val leaves = manifestLeaves(fs, root)
+    require(leaves.nonEmpty && leaves.forall(l => leafKvs(root, l).nonEmpty),
+      s"$op: $rootDir has no k=v leaves — it is a plain leaf; use $leafOp")
+    leaves
   }
 }

@@ -116,11 +116,11 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * same window bounds [[readManifestedAt]] time travel: raise
     * `retainSnapshots` to keep more history, exactly Iceberg/Delta's
     * count-bounded snapshot retention. ONE logical writer per leaf,
-    * like every table format — but violations are now caught, not
-    * silent: in-process writers serialize on the per-table lock, and
-    * a cross-process compaction whose pointer read was overtaken
-    * fails its CAS loudly (the stale fold becomes [[vacuum]] food)
-    * rather than burying the interleaved append.
+    * like every table format — but violations are caught, not silent
+    * (the [[leafCommit]] contract, one attempt): a cross-process
+    * compaction whose head read was overtaken fails its CAS loudly
+    * (the stale fold becomes [[vacuum]] food) rather than burying the
+    * interleaved append.
     *
     * `alsoRetainVersions` (r19): snapshot versions pinned from this
     * fold's GC regardless of the count/time windows — the partitioned
@@ -146,49 +146,31 @@ trait WarehouseLeaf { this: Warehouse.type =>
         s"than 4 would overflow the 64-bit Morton key; beyond 4, cluster " +
         s"on the highest-selectivity pair instead), got $zorderBy")
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    withTableLock(root) {
-    // LEAF directories only (the compact() convention): a partitioned
-    // root's k=v children each get their OWN manifest — adoption here
-    // would create an empty generation beside them and readers through
-    // the pointer would see an empty table. Fail loud, point at the
-    // per-leaf entry point. (.gen-* dirs are dot-prefixed, so a
-    // manifested leaf itself still walks as a leaf.)
-    ManifestIo.list(fs, root)
-      .find(st => st.isDirectory && !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.startsWith("_")).foreach { sub =>
-        throw new IllegalArgumentException(
-          s"compactManifested: $dir contains subdirectory ${sub.getPath.getName} — " +
-            "it is a partitioned root, not a leaf; use compactManifestedPartitioned")
-      }
-    val pointer = new HPath(root, "_current")
-    // adopt a plain leaf on first contact: its loose parquet files
-    // become generation 0 (one-time migration — run it before any
-    // concurrent reader exists, like any format conversion). Adoption
-    // keys off the HEAD, not the pointer file: a leaf whose pointer is
-    // absent but whose trail is not is a crashed pointer swap, and
-    // re-adopting it would drop every post-gen-0 generation.
-    if (headBody(fs, root).isEmpty) {
-      val gen0 = new HPath(root, ".gen-0")
-      fs.mkdirs(gen0)
+    leafCommit(fs, root, "compactManifested", before = () => {
+      // LEAF directories only (the compact() convention): a partitioned
+      // root's k=v children each get their OWN manifest — adoption here
+      // would create an empty generation beside them and readers through
+      // the pointer would see an empty table. Fail loud, point at the
+      // per-leaf entry point. (.gen-* dirs are dot-prefixed, so a
+      // manifested leaf itself still walks as a leaf.)
       ManifestIo.list(fs, root)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .foreach(st => ManifestIo.rename(fs, st.getPath,
-          new HPath(gen0, st.getPath.getName)))
-      commitManifest(fs, root, pointer, Seq(".gen-0"),
-        manifestVersions(fs, root).lastOption.getOrElse(0L),
-        stats = collectStats(fs, hconf(spark), root, ".gen-0"))
-    }
+        .find(st => st.isDirectory && !st.getPath.getName.startsWith(".") &&
+          !st.getPath.getName.startsWith("_")).foreach { sub =>
+          throw new IllegalArgumentException(
+            s"compactManifested: $dir contains subdirectory ${sub.getPath.getName} — " +
+              "it is a partitioned root, not a leaf; use compactManifestedPartitioned")
+        }
+      // adopt a plain leaf on first contact: its loose parquet files
+      // become generation 0 (one-time migration — run it before any
+      // concurrent reader exists, like any format conversion)
+      adoptLoose(fs, root, hconf(spark), always = true)(())
+    }) { h =>
     // the manifest may list SEVERAL generations (streaming appends via
-    // appendManifested) — compaction folds them all into one. The
-    // pointer and trail head are read at the SAME point (under the
-    // in-process lock); `expected` anchors the version CAS at commit.
-    // Txn markers carry through the fold — maintenance must never
-    // reset a writer's exactly-once state.
-    val head = headBody(fs, root).get
-    val cur = parseGens(head)
-    val curTxns = parseTxns(head)
-    val curRefs = parseRefs(head)
-    val expected = manifestVersions(fs, root).lastOption.getOrElse(0L)
+    // appendManifested) — compaction folds them all into one. Txn
+    // markers carry through the fold — maintenance must never reset a
+    // writer's exactly-once state.
+    val cur = h.gens
+    val curRefs = parseRefs(h.body)
     val bytes = cur.map(g => ManifestIo.list(fs, entryPath(root, curRefs, g))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum).sum
@@ -314,13 +296,13 @@ trait WarehouseLeaf { this: Warehouse.type =>
       case None => folded.repartition(nFiles)
     }).write.mode("overwrite").parquet(new HPath(root, next).toString)
     // CAS commit: if a cross-process writer advanced the trail since
-    // `expected` was read, this THROWS (the fold is stale — it misses
+    // the head was read, this THROWS (the fold is stale — it misses
     // that writer's generation) and the folded directory is left as
     // an orphan for [[vacuum]]; the caller re-runs the compaction.
     // CHECK constraint lines carry through the fold — compaction is
     // content-preserving, so the invariant they state still holds
-    val v = commitManifest(fs, root, pointer, Seq(next), expected, curTxns,
-      constraintLines(head) ++ collectStats(fs, hconf(spark), root, next))
+    val v = h.commit(Seq(next),
+      constraintLines(h.body) ++ collectStats(fs, hconf(spark), root, next))
     // SNAPSHOT RETENTION: a manifest version survives this GC if it is
     // within the COUNT window (the last `retainSnapshots` before this
     // commit) OR within the TIME window (`retainFor`, anchored on the
@@ -409,23 +391,15 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * generation 0 fails loudly instead of overwriting the adopted
     * data.
     *
-    * MULTI-WRITER safety (r13): within one JVM, appenders to the same
-    * table serialize through the per-table lock — two interleaved
-    * in-process appenders both land, in some order, with no lost
-    * generation. ACROSS processes the commit is guarded by the
-    * version CAS ([[commitManifest]]: `_manifest-v` is claimed by
-    * create-exclusive): a writer whose `expected` version was
-    * overtaken gets ConcurrentModificationException at commit and
-    * RETRIES here (bounded) — re-reading the pointer, renumbering its
-    * generation, rewriting, recommitting — so a committed generation
-    * can never be silently dropped from the pointer. The one hazard
-    * the CAS cannot close is two UNNUMBERED cross-process appenders
-    * racing the same generation NAME before either commits (their
-    * data writes can interleave); producers that may race across
-    * processes key their batches with `genId` (disjoint deterministic
-    * content — the streaming contract above) or coordinate
-    * externally, exactly as with every table format's conditional-PUT
-    * commit.
+    * MULTI-WRITER safety: the [[leafCommit]] contract, with a budget
+    * of 5 attempts — a retry renumbers an unnumbered generation past
+    * the winner's and rewrites it. The one hazard the CAS cannot close
+    * is two UNNUMBERED cross-process appenders racing the same
+    * generation NAME before either commits (their data writes can
+    * interleave); producers that may race across processes key their
+    * batches with `genId` (disjoint deterministic content — the
+    * streaming contract above) or coordinate externally, exactly as
+    * with every table format's conditional-PUT commit.
     *
     * Schema may EVOLVE additively across generations (a later batch
     * adds a column): [[readManifested]]/[[readManifestedAt]] merge
@@ -437,96 +411,75 @@ trait WarehouseLeaf { this: Warehouse.type =>
   def appendManifested(spark: SparkSession, dir: String, df: DataFrame,
                        genId: Option[Long] = None): Long = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    withTableLock(root) {
-    fs.mkdirs(root)
-    val pointer = new HPath(root, "_current")
-    // first-contact adoption keys off the HEAD: a pointer-less leaf
-    // with a live `_manifest-*` trail is a crashed pointer swap (see
-    // [[headBody]]) — it must resolve forward, never re-adopt
-    if (headBody(fs, root).isEmpty) {
-      val loose = ManifestIo.list(fs, root)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      val gen0 = new HPath(root, ".gen-0")
-      if (loose.nonEmpty) {
-        require(genId.forall(_ != 0L),
-          s"appendManifested: $dir holds pre-existing loose parquet " +
-            "files, adopted as generation 0 — a genId=0 append would " +
-            "overwrite them; key the producer's batches from a nonzero " +
-            "id or compactManifested the leaf first")
-        fs.mkdirs(gen0)
-        loose.foreach(st => ManifestIo.rename(fs, st.getPath,
-          new HPath(gen0, st.getPath.getName)))
-        commitManifest(fs, root, pointer, Seq(".gen-0"),
-          manifestVersions(fs, root).lastOption.getOrElse(0L),
-          stats = collectStats(fs, hconf(spark), root, ".gen-0"))
-      } else if (ManifestIo.list(fs, gen0)
-                   .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))) {
-        // a crash BETWEEN the adoption move and its pointer commit
-        // leaves gen-0 populated with no pointer — without this,
-        // the no-genId append below would number itself 0 and
-        // OVERWRITE the adopted data. Commit the missing pointer
-        // first. (A producer's own stranded genId=0 first batch lands
-        // here too, harmlessly: its retry overwrites generation 0
-        // with identical deterministic content, pointer unchanged.)
-        commitManifest(fs, root, pointer, Seq(".gen-0"),
-          manifestVersions(fs, root).lastOption.getOrElse(0L),
-          stats = collectStats(fs, hconf(spark), root, ".gen-0"))
-      }
-    }
-    // optimistic-CAS commit loop: in-process writers never collide
-    // (the lock serializes them); a cross-process writer that overtook
-    // this one surfaces as ConcurrentModificationException from the
-    // version CAS, and the retry re-reads the pointer — renumbering an
-    // unnumbered generation past the winner's — and rewrites. Bounded:
-    // persistent loss means a writer storm the deployment should be
-    // coordinating explicitly, and the loop failing loudly beats
-    // spinning.
-    //
     // CHECK constraints gate the incoming batch BEFORE anything is
     // written (one O(batch) job, zero when unconstrained) and are
-    // RE-validated inside the loop whenever the re-read head's
-    // constraint set differs from the one last validated (r20 ADVICE):
-    // a retry whose CAS was lost to a cross-process addCheckConstraint
-    // must not commit rows that add's whole-table scan never saw —
-    // that scan ran before this batch's data existed and this batch
+    // RE-validated on a retry whenever the re-read head's constraint
+    // set differs from the one last validated (r20 ADVICE): a retry
+    // whose CAS was lost to a cross-process addCheckConstraint must
+    // not commit rows that add's whole-table scan never saw — that
+    // scan ran before this batch's data existed and this batch
     // validated against the pre-constraint head, so without the
     // re-check BOTH gates would miss. Steady state re-parses the same
     // head and spends no extra job.
-    var attempt = 0
-    var committed = -1L
     var validatedCons: Option[Map[String, String]] = None
-    while (committed < 0) {
-      val hb = headBody(fs, root)
-      val (gens, txns, carried) = hb match {
-        case Some(b) => (parseGens(b), parseTxns(b), parseStats(b))
-        case None => (Seq.empty[String], Map.empty[String, Long], Seq.empty[String])
-      }
-      val liveCons = hb.map(parseConstraints).getOrElse(Map.empty)
+    leafCommit(fs, root, "appendManifested", attempts = 5, orEmpty = true,
+      before = () => {
+        fs.mkdirs(root)
+        adoptLoose(fs, root, hconf(spark), always = false)(
+          require(genId.forall(_ != 0L),
+            s"appendManifested: $dir holds pre-existing loose parquet " +
+              "files, adopted as generation 0 — a genId=0 append would " +
+              "overwrite them; key the producer's batches from a nonzero " +
+              "id or compactManifested the leaf first"))
+      }) { h =>
+      val liveCons = parseConstraints(h.body)
       if (!validatedCons.contains(liveCons)) {
-        requireConstraints(hb, df, "appendManifested",
+        requireConstraints(Some(h.body), df, "appendManifested",
           readManifested(spark, dir).schema)
         validatedCons = Some(liveCons)
       }
-      val expected = manifestVersions(fs, root).lastOption.getOrElse(0L)
-      val nextId = genId.getOrElse(nextEntryId(fs, root, gens))
+      val nextId = genId.getOrElse(nextEntryId(fs, root, h.gens))
       val next = s".gen-$nextId"
       df.write.mode("overwrite").parquet(new HPath(root, next).toString)
-      if (gens.contains(next)) committed = nextId // idempotent re-fire
-      else {
-        try {
-          commitManifest(fs, root, pointer, gens :+ next, expected, txns,
-            statsForGens(carried, gens) ++ collectStats(fs, hconf(spark), root, next))
-          committed = nextId
-        } catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt >= 5) throw e
-        }
-      }
-    }
-    committed
+      if (!h.gens.contains(next)) // else an idempotent re-fire
+        h.commit(h.gens :+ next,
+          statsForGens(h.stats, h.gens) ++ collectStats(fs, hconf(spark), root, next))
+      nextId
     }
   }
+
+  /** First-contact ADOPTION of a leaf, run under its lock before the
+    * first head read: when nothing is committed, the loose parquet
+    * files become generation 0 (`refuseLoose` runs first when there
+    * are any), committed at the trail head. Adoption keys off the
+    * HEAD, not the pointer file: a pointer-less leaf with a live
+    * `_manifest-*` trail is a crashed pointer swap (see [[headBody]]),
+    * and re-adopting it would drop every post-gen-0 generation.
+    * `always` (compaction) commits an empty `.gen-0` too. Otherwise a
+    * leaf without loose files commits only a populated `.gen-0`: a
+    * crash BETWEEN the adoption move and its pointer commit leaves
+    * gen-0 populated with no pointer — without this, a no-genId
+    * append would number itself 0 and OVERWRITE the adopted data. (A
+    * producer's own stranded genId=0 first batch lands here too,
+    * harmlessly: its retry overwrites generation 0 with identical
+    * deterministic content, pointer unchanged.) */
+  private def adoptLoose(fs: HFs, root: HPath,
+                         conf: org.apache.hadoop.conf.Configuration,
+                         always: Boolean)(refuseLoose: => Unit): Unit =
+    if (headBody(fs, root).isEmpty) {
+      val gen0 = new HPath(root, ".gen-0")
+      val loose = ManifestIo.list(fs, root)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      if (loose.nonEmpty) refuseLoose
+      if (always || loose.nonEmpty || ManifestIo.list(fs, gen0)
+            .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))) {
+        fs.mkdirs(gen0)
+        loose.foreach(st => ManifestIo.rename(fs, st.getPath,
+          new HPath(gen0, st.getPath.getName)))
+        commitManifest(fs, root, new HPath(root, "_current"), Seq(".gen-0"),
+          headVersion(fs, root), stats = collectStats(fs, conf, root, ".gen-0"))
+      }
+    }
 
   /** Scan a committed generation list: the union of the data
     * generations with any `.del-` tombstones applied in ID ORDER — a
@@ -800,47 +753,46 @@ trait WarehouseLeaf { this: Warehouse.type =>
     require(keys.columns.length == 1,
       s"deleteManifested: keys must be exactly the key column, got " +
         keys.columns.mkString(", "))
-    require(txn.forall(t => !t._1.contains("\n") && !t._1.contains(":")),
-      s"deleteManifested: txn appId must not contain ':' or newline: $txn")
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    withTableLock(root) {
-      val pointer = new HPath(root, "_current")
-      val head = headBody(fs, root).getOrElse(throw new IllegalArgumentException(
-        s"deleteManifested: $dir has no committed table"))
-      val gens = parseGens(head)
-      val txns = parseTxns(head)
-      val expected = manifestVersions(fs, root).lastOption.getOrElse(0L)
-      val alreadyApplied =
-        txn.exists { case (app, ver) => txns.get(app).exists(_ >= ver) }
-      if (alreadyApplied) -1L
-      else {
-        // refuse an unknown key column AT COMMIT TIME (footer-only schema
-        // probe of one data generation) — otherwise the mistake would
-        // surface later, as a reader's resolution error
-        val key = keys.columns.head
-        // resolve #ref: entries (unmaterialized shallow clones) — the
-        // probed generation may live in the SOURCE table's directory
-        // (the upsertManifested schema probe got the same fix)
-        val delRefs = parseRefs(head)
-        gens.find(!_.startsWith(".del-")).foreach { g =>
-          val cols = spark.read.parquet(entryPath(root, delRefs, g).toString).columns
-          require(cols.contains(key),
-            s"deleteManifested: $dir has no column '$key' " +
-              s"(columns: ${cols.mkString(", ")})")
-        }
-        val nextId = nextEntryId(fs, root, gens)
-        val next = s".del-$nextId"
-        keys.distinct().write.mode("overwrite")
-          .parquet(new HPath(root, next).toString)
-        // tombstones carry no stats of their own (they are read in
-        // full — delete-sized); the data generations' lines carry
-        commitManifest(fs, root, pointer, gens :+ next, expected,
-          txn.fold(txns) { case (app, ver) => txns + (app -> ver) },
-          statsForGens(parseStats(head), gens))
-        nextId
-      }
-    }
+    val key = keys.columns.head
+    tombstoneCommit(fs, root, "deleteManifested", txn,
+      probe = h => requireKeyColumn(spark, root, h.body, key, "deleteManifested", dir)) {
+      del => keys.distinct().write.mode("overwrite").parquet(del.toString)
+    }._1
   }
+
+  /** The tombstone commit step both delete forms run on
+    * [[leafCommit]]: `probe` the head, draw the next entry id, `place`
+    * the key set's files at `.del-<id>`, commit the old list plus the
+    * tombstone. Returns (tombstone id, committed version); a txn replay
+    * returns (-1, head version). */
+  private[operators] def tombstoneCommit(fs: HFs, leaf: HPath, op: String,
+      txn: Option[(String, Long)], probe: LeafHead => Unit = _ => ())(
+      place: HPath => Unit): (Long, Long) =
+    leafCommit(fs, leaf, op, txn = txn.map(_ -> ((v: Long) => (-1L, v)))) { h =>
+      probe(h)
+      val nextId = nextEntryId(fs, leaf, h.gens)
+      val del = s".del-$nextId"
+      place(new HPath(leaf, del))
+      // tombstones carry no stats of their own (they are read in
+      // full — delete-sized); the data generations' lines carry
+      (nextId, h.commit(h.gens :+ del, statsForGens(h.stats, h.gens)))
+    }
+
+  /** Refuse an unknown key column AT COMMIT TIME — a footer-only schema
+    * probe of one data generation of `head`; otherwise the mistake
+    * would surface later, as a reader's resolution error. The probed
+    * generation resolves through `#ref:` ([[entryPath]]): on an
+    * unmaterialized shallow clone it lives in the SOURCE table's
+    * directory. */
+  private[operators] def requireKeyColumn(spark: SparkSession, leaf: HPath,
+                                          head: String, key: String, op: String,
+                                          table: String): Unit =
+    parseGens(head).find(!_.startsWith(".del-")).foreach { g =>
+      val cols = spark.read.parquet(entryPath(leaf, parseRefs(head), g).toString).columns
+      require(cols.contains(key),
+        s"$op: $table has no column '$key' (columns: ${cols.mkString(", ")})")
+    }
 
   /** SNAPSHOT READ (time travel): scan the table exactly as committed
     * by manifest version `version` — the Iceberg `VERSION AS OF` /
@@ -952,69 +904,50 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * materializes and retires, like any tombstone. Returns the
     * committed manifest version.
     *
-    * EXACTLY-ONCE for retrying producers (r14 — the Delta
-    * `txnAppId`/`txnVersion` idempotent-writes contract): pass
-    * `txn = Some((appId, version))` with a version that is
-    * MONOTONICALLY INCREASING per application (a foreachBatch
-    * producer passes its checkpoint-tracked batchId). The committed
-    * manifest then carries a `#txn:<appId>:<version>` marker — part
-    * of the snapshot, so every commit path (append, delete,
-    * compaction fold) carries it forward — and a replayed call whose
-    * version is ≤ the recorded one returns the CURRENT head version
-    * as a true NO-OP: no tombstone, no generation, no pointer swap.
+    * EXACTLY-ONCE for retrying producers (r14): pass `txn =
+    * Some((appId, version))` with a version MONOTONICALLY INCREASING
+    * per application (a foreachBatch producer passes its
+    * checkpoint-tracked batchId) — through the [[leafCommit]] txn gate
+    * a replay is a true no-op returning the CURRENT head version.
     * Without `txn` a replay is still content-idempotent (re-merging
-    * produces byte-identical rows) but spends one more version —
-    * the pre-r14 contract. Markers are per-app: two producers with
-    * different appIds never suppress each other. */
+    * produces byte-identical rows) but spends one more version. */
   def upsertManifested(spark: SparkSession, dir: String,
                        source: DataFrame, keyCol: String,
                        txn: Option[(String, Long)] = None): Long = {
     require(source.columns.contains(keyCol),
       s"upsertManifested: source has no column '$keyCol' " +
         s"(columns: ${source.columns.mkString(", ")})")
-    require(txn.forall(t => !t._1.contains("\n") && !t._1.contains(":")),
-      s"upsertManifested: txn appId must not contain ':' or newline: $txn")
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    withTableLock(root) {
-      val pointer = new HPath(root, "_current")
-      val head = headBody(fs, root).getOrElse(throw new IllegalArgumentException(
-        s"upsertManifested: $dir has no committed table " +
-          "(appendManifested creates one)"))
-      val gens = parseGens(head)
-      val txns = parseTxns(head)
-      val expected = manifestVersions(fs, root).lastOption.getOrElse(0L)
-      // the exactly-once gate: this (appId, version) already applied —
-      // a foreachBatch replay after a crash — so the whole call is a
-      // no-op; the caller observes the same post-state it would have
-      val alreadyApplied =
-        txn.exists { case (app, ver) => txns.get(app).exists(_ >= ver) }
-      if (alreadyApplied) expected
-      else {
-        gens.find(!_.startsWith(".del-")).foreach { g =>
-          val cols = spark.read
-            .parquet(entryPath(root, parseRefs(head), g).toString).columns
-          require(cols.contains(keyCol),
-            s"upsertManifested: $dir has no column '$keyCol' " +
-              s"(columns: ${cols.mkString(", ")})")
-        }
-        // CHECK constraints gate the incoming rows before either of
-        // the two writes below (one O(batch) job; replays above never
-        // pay it)
-        requireConstraints(Some(head), source, "upsertManifested",
-          readManifested(spark, dir).schema)
-        val base = nextEntryId(fs, root, gens)
-        val del = s".del-$base"
-        val gen = s".gen-${base + 1}"
-        source.select(col(keyCol)).distinct().write.mode("overwrite")
-          .parquet(new HPath(root, del).toString)
-        source.write.mode("overwrite").parquet(new HPath(root, gen).toString)
-        commitManifest(fs, root, pointer, gens :+ del :+ gen, expected,
-          txn.fold(txns) { case (app, ver) => txns + (app -> ver) },
-          statsForGens(parseStats(head), gens) ++
-            collectStats(fs, hconf(spark), root, gen))
-      }
+    mergeCommit(spark, fs, root, "upsertManifested", txn, probe = { h =>
+      requireKeyColumn(spark, root, h.body, keyCol, "upsertManifested", dir)
+      // CHECK constraints gate the incoming rows before either of the
+      // two writes (one O(batch) job; replays never pay it)
+      requireConstraints(Some(h.body), source, "upsertManifested",
+        readManifested(spark, dir).schema)
+    }) { (del, gen) =>
+      source.select(col(keyCol)).distinct().write.mode("overwrite")
+        .parquet(del.toString)
+      source.write.mode("overwrite").parquet(gen.toString)
     }
   }
+
+  /** The MERGE commit step both upsert forms run on [[leafCommit]]:
+    * `probe` the head, draw the tombstone id `base` and the generation
+    * id `base + 1`, `place` the key set and the data at `.del-<base>` /
+    * `.gen-<base+1>`, commit both in one pointer swap. Returns the
+    * committed version; a txn replay returns the head version. */
+  private[operators] def mergeCommit(spark: SparkSession, fs: HFs, leaf: HPath,
+      op: String, txn: Option[(String, Long)], probe: LeafHead => Unit = _ => ())(
+      place: (HPath, HPath) => Unit): Long =
+    leafCommit(fs, leaf, op, txn = txn.map(_ -> ((v: Long) => v))) { h =>
+      probe(h)
+      val base = nextEntryId(fs, leaf, h.gens)
+      val del = s".del-$base"
+      val gen = s".gen-${base + 1}"
+      place(new HPath(leaf, del), new HPath(leaf, gen))
+      h.commit(h.gens :+ del :+ gen, statsForGens(h.stats, h.gens) ++
+        collectStats(fs, hconf(spark), leaf, gen))
+    }
 
   /** DESCRIBE HISTORY for a manifested leaf — the Delta `DESCRIBE
     * HISTORY` / Iceberg snapshots-table analogue: one row per RETAINED

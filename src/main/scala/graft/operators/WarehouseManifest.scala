@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.DecimalType
 /** Manifest IO and parsing — internal module of [[Warehouse]] (r18
   * split, same public API): the filesystem seam, per-table lock,
   * pointer/trail read+parse+roll-forward, `#stats:` data-skipping
-  * metadata, the version-CAS commit, and the bounded commit pool. */
+  * metadata, the version-CAS commit, the one leaf commit every write
+  * op runs on ([[leafCommit]]), and the bounded commit pool. */
 trait WarehouseManifest { this: Warehouse.type =>
 
   /** Small-files compaction — the lakehouse maintenance op that keeps a
@@ -43,7 +44,7 @@ trait WarehouseManifest { this: Warehouse.type =>
     * local[*] multi-writer interleavings are mechanically safe
     * (SinkSpec races two appenders). Cross-PROCESS writers are caught
     * by the version CAS in [[commitManifest]] — the first committer
-    * wins, the loser throws — see [[appendManifested]]. */
+    * wins, the loser throws — see [[leafCommit]]. */
   private[operators] val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -466,6 +467,92 @@ trait WarehouseManifest { this: Warehouse.type =>
           "by genId / coordinate writers")
     ManifestIo.replace(fs, pointer, body)
     v
+  }
+
+  /** A `#txn:` marker line is ':'- and newline-delimited: an appId
+    * carrying either would corrupt every later parse of the manifest
+    * (and of the root maps that record it). Every txn entry point
+    * refuses it before anything is claimed or written. */
+  private[operators] def requireTxnAppId(op: String,
+                                         txn: Option[(String, Long)]): Unit =
+    require(txn.forall(t => !t._1.contains("\n") && !t._1.contains(":")),
+      s"$op: txn appId must not contain ':' or newline: $txn")
+
+  /** A leaf's committed head as one [[leafCommit]] step sees it: the
+    * body, the trail-head `version` its CAS anchors on, the 0-based
+    * `attempt`, and [[commit]] — the step's only way to commit, which
+    * carries the head's `#txn:` markers plus the op's own. */
+  private[operators] final class LeafHead(val body: String, val version: Long,
+                                          val attempt: Int,
+                                          commitFn: (Seq[String], Seq[String]) => Long) {
+    lazy val gens: Seq[String] = parseGens(body)
+    lazy val stats: Seq[String] = parseStats(body)
+    def commit(gens: Seq[String], stats: Seq[String]): Long = commitFn(gens, stats)
+  }
+
+  /** THE leaf commit — every head-anchored commit of a manifested leaf
+    * (append, compaction fold, delete, MERGE, restore, CHECK add/drop,
+    * and their partitioned forms, leaf by leaf) runs `step` here.
+    * The contract, stated once:
+    *
+    *  - '''Lock.''' In-process writers to one leaf serialize on the
+    *    per-table lock ([[withTableLock]]); `before` runs under it
+    *    ahead of the first head read (first-contact adoption).
+    *  - '''Early `expected` capture.''' The head body and the trail-head
+    *    version are read together, under the lock, BEFORE the step does
+    *    any work — a cross-process write landing during the step's
+    *    scans or data writes then surfaces as a lost version CAS at
+    *    [[commitManifest]], never as a commit over rows the step did not
+    *    see. `pinned` replaces the first attempt's read with a snapshot
+    *    the caller took even earlier (before a root-wide validation
+    *    scan). A missing head refuses (`"<op>: <leaf> has no committed
+    *    table"`) unless `orEmpty` lets a first append create the table.
+    *  - '''Txn gate.''' With `txn = Some(((appId, version), replay))` the
+    *    appId is checked ([[requireTxnAppId]]), and a head whose marker
+    *    for appId is already ≥ version is a completed replay: the step
+    *    never runs and `replay(head version)` is returned — no write, no
+    *    version spent. Otherwise the committed manifest carries the
+    *    marker (the Delta txnAppId/txnVersion idempotent-writes state).
+    *  - '''CAS budget.''' `attempts` bounds the whole step: a lost CAS
+    *    re-reads the head and re-runs the step (which renumbers its
+    *    entries and re-validates against the new head); the last loss
+    *    propagates as ConcurrentModificationException. Persistent loss
+    *    is a writer storm to coordinate, and failing loudly beats
+    *    spinning. */
+  private[operators] def leafCommit[T](fs: HFs, leaf: HPath, op: String,
+                                       attempts: Int = 1,
+                                       pinned: Option[(String, Long)] = None,
+                                       orEmpty: Boolean = false,
+                                       before: () => Unit = () => (),
+                                       txn: Option[((String, Long), Long => T)] = None)(
+      step: LeafHead => T): T = {
+    requireTxnAppId(op, txn.map(_._1))
+    withTableLock(leaf) {
+      before()
+      def run(attempt: Int): T = {
+        val (body, expected) = pinned.filter(_ => attempt == 0).getOrElse {
+          val b = headBody(fs, leaf).orElse(if (orEmpty) Some("") else None)
+            .getOrElse(throw new IllegalArgumentException(
+              s"$op: $leaf has no committed table"))
+          (b, headVersion(fs, leaf))
+        }
+        val txns = parseTxns(body)
+        txn.collect {
+          case ((app, ver), replay) if txns.get(app).exists(_ >= ver) => replay(expected)
+        }.getOrElse {
+          val marked = txn.fold(txns) { case ((app, ver), _) => txns + (app -> ver) }
+          val head = new LeafHead(body, expected, attempt, (gens, stats) =>
+            commitManifest(fs, leaf, new HPath(leaf, "_current"), gens, expected,
+              marked, stats))
+          try step(head)
+          catch {
+            case _: java.util.ConcurrentModificationException if attempt + 1 < attempts =>
+              run(attempt + 1)
+          }
+        }
+      }
+      run(0)
+    }
   }
 
   /** The committed snapshot versions of a manifested leaf, ascending

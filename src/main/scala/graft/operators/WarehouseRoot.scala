@@ -83,7 +83,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     // Spark job), independent across leaves — pooled, the walk over
     // thousands of steady shards pays leaves/16 × RTT, not leaves ×.
     val checked = parCommitLeaves(leaves,
-      refresh = () => refreshClaim(fs, st, root, None)) { leaf =>
+      refresh = () => refreshClaim(fs, st, root)) { leaf =>
       val rel = relPath(root, leaf)
       val body = headBody(fs, leaf)
       val gens = body.map(parseGens).getOrElse(Seq.empty)
@@ -119,7 +119,7 @@ trait WarehouseRoot { this: Warehouse.type =>
         val n = compactManifested(spark, leaf.toString, targetFileBytes,
           retainSnapshots, retainFor, clusterBy, zorderBy, zorderQuantiles,
           alsoRetainVersions = mapPins.getOrElse(rel, Set.empty))
-        refreshClaim(fs, st, root, None)
+        refreshClaim(fs, st, root)
         rel -> (n, headVersion(fs, leaf))
     }
     val map = out.map { case (r, (_, v)) => r -> v }.toMap
@@ -586,8 +586,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     * race endpoint stays LOUD either way: two writers at one
     * transition collide on the root-manifest CAS with different
     * content). */
-  private[operators] def refreshClaim(fs: HFs, st: RootTransition, root: HPath,
-                           txn: Option[(String, Long)]): Unit =
+  private[operators] def refreshClaim(fs: HFs, st: RootTransition, root: HPath): Unit =
     if (!st.fullReplay)
       try { fs.setTimes(st.claimPath(root), System.currentTimeMillis(), -1); () }
       catch { case _: java.io.IOException | _: UnsupportedOperationException => }
@@ -612,13 +611,36 @@ trait WarehouseRoot { this: Warehouse.type =>
     ManifestIo.delete(fs, st.claimPath(root))
   }
 
+  /** THE root transition of every partitioned write but compaction
+    * (which keeps its own publish for its steady-skip and root
+    * retention): claim `T+1` ([[beginRootTransition]]), run the leaf
+    * commits `plan` returns on the bounded pool with the claim
+    * heartbeat between chunks ([[refreshClaim]]), publish the version
+    * map of the leaf heads they return ([[commitRootManifest]]).
+    * `plan` runs under the claim — staging writes happen only once the
+    * transition is ours — and each of its thunks commits (or skips)
+    * one leaf, returning (rel path, the leaf's head version, the op's
+    * per-leaf result). A completed replay runs no plan and publishes
+    * nothing (`fullReplay`, empty results). */
+  private[operators] def rootTransition[R](fs: HFs, root: HPath, leaves: Seq[HPath],
+      txn: Option[(String, Long)], op: String)(
+      plan: RootTransition => Seq[() => (String, Long, R)]): (RootTransition, Seq[(String, Long, R)]) = {
+    val st = beginRootTransition(fs, root, leaves, txn, op)
+    if (st.fullReplay) (st, Seq.empty)
+    else {
+      val out = parCommitLeaves(plan(st), refresh = () => refreshClaim(fs, st, root))(_())
+      commitRootManifest(fs, root, st, out.map(o => o._1 -> o._2).toMap, txn)
+      (st, out)
+    }
+  }
+
   // ------------------------------- partitioned row-level ops (r14/r16)
   // The row-level commits above are leaf-scoped; a 100 TB table is a
   // PARTITIONED root, and "delete these keys" must not require hand-
-  // iterating leaves. Each op below claims its root transition, walks
-  // [[manifestLeaves]] committing ONLY where it has work (each leaf's
-  // commit the same CAS-guarded atomic pointer swap as its leaf-scoped
-  // form), and publishes one root version map. At 100 TB the per-leaf
+  // iterating leaves. Each op below is a [[rootTransition]] whose leaf
+  // commits run ONLY where it has work, each one its leaf-scoped
+  // form's commit step ([[tombstoneCommit]], [[mergeCommit]]) with the
+  // files placed from a once-written stage. At 100 TB the per-leaf
   // commits are embarrassingly parallel (no two leaves share state —
   // the sequential walk here becomes a foreachPartition over leaf
   // names running the same rename+CAS sequence; they are pure FS ops,
@@ -640,75 +662,45 @@ trait WarehouseRoot { this: Warehouse.type =>
   def deleteManifestedPartitioned(spark: SparkSession, rootDir: String,
                                   keys: DataFrame,
                                   txn: Option[(String, Long)] = None): Map[String, Long] = {
+    val op = "deleteManifestedPartitioned"
     require(keys.columns.length == 1,
-      s"deleteManifestedPartitioned: keys must be exactly the key " +
-        s"column, got ${keys.columns.mkString(", ")}")
-    require(txn.forall(t => !t._1.contains("\n") && !t._1.contains(":")),
-      s"deleteManifestedPartitioned: txn appId must not contain ':' or " +
-        s"newline: $txn")
+      s"$op: keys must be exactly the key column, got ${keys.columns.mkString(", ")}")
+    requireTxnAppId(op, txn)
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
-    require(ManifestIo.isDirectory(fs, root),
-      s"deleteManifestedPartitioned: $rootDir is not a directory")
+    require(ManifestIo.isDirectory(fs, root), s"$op: $rootDir is not a directory")
     val leaves = manifestLeaves(fs, root)
-    val key = keys.columns.head
     // key probe BEFORE the root claim (r17), once per ROOT (leaves
     // share one schema): a typo'd key column must throw while nothing
     // is claimed — probing after would strand `_root-claim-(T+1)` and
     // block every root op on the table until the takeover grace
     leaves.headOption.foreach { leaf =>
-      parseGens(headBody(fs, leaf).getOrElse(throw new IllegalArgumentException(
-        s"deleteManifestedPartitioned: $leaf has no committed table")))
-        .find(!_.startsWith(".del-")).foreach { g =>
-          val cols = spark.read.parquet(new HPath(leaf, g).toString).columns
-          require(cols.contains(key),
-            s"deleteManifestedPartitioned: $rootDir has no column '$key' " +
-              s"(columns: ${cols.mkString(", ")})")
-        }
+      requireKeyColumn(spark, leaf, headBody(fs, leaf).getOrElse(
+        throw new IllegalArgumentException(s"$op: $leaf has no committed table")),
+        keys.columns.head, op, rootDir)
     }
-    val st = beginRootTransition(fs, root, leaves, txn,
-      "deleteManifestedPartitioned")
-    if (st.fullReplay) return leaves.map(l => relPath(root, l) -> -1L).toMap
-    // stage the key set once; per-leaf commits copy its files
     val stage = new HPath(root,
       s".delete-stage-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    keys.distinct().write.mode("overwrite").parquet(stage.toString)
-    val parts = ManifestIo.list(fs, stage)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).toSeq
-    val out = parCommitLeaves(leaves,
-      refresh = () => refreshClaim(fs, st, root, txn)) { leaf =>
-      val rel = relPath(root, leaf)
-      val r = withTableLock(leaf) {
-        val pointer = new HPath(leaf, "_current")
-        val head = headBody(fs, leaf).getOrElse(
-          throw new IllegalArgumentException(
-            s"deleteManifestedPartitioned: $leaf has no committed table"))
-        val gens = parseGens(head)
-        val txns = parseTxns(head)
-        val expected = manifestVersions(fs, leaf).lastOption.getOrElse(0L)
-        val alreadyApplied =
-          txn.exists { case (app, ver) => txns.get(app).exists(_ >= ver) }
-        if (alreadyApplied) (-1L, expected)
-        else {
-          val nextId = nextEntryId(fs, leaf, gens)
-          val del = new HPath(leaf, s".del-$nextId")
+    val (st, out) = rootTransition(fs, root, leaves, txn, op) { _ =>
+      // stage the key set once; per-leaf commits copy its files
+      keys.distinct().write.mode("overwrite").parquet(stage.toString)
+      val parts = ManifestIo.list(fs, stage)
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .map(_.getPath).toSeq
+      leaves.map(leaf => () => {
+        val (id, v) = tombstoneCommit(fs, leaf, op, txn) { del =>
           if (ManifestIo.exists(fs, del)) ManifestIo.delete(fs, del)
           fs.mkdirs(del)
           parts.foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
             new HPath(del, p.getName), false, hconf(spark)))
-          val v = commitManifest(fs, leaf, pointer, gens :+ s".del-$nextId",
-            expected,
-            txn.fold(txns) { case (app, ver) => txns + (app -> ver) },
-            statsForGens(parseStats(head), gens))
-          (nextId, v)
         }
-      }
-      rel -> r
+        (relPath(root, leaf), v, id)
+      })
     }
-    commitRootManifest(fs, root, st,
-      out.map { case (r, (_, v)) => r -> v }.toMap, txn)
-    ManifestIo.delete(fs, stage)
-    out.map { case (r, (id, _)) => r -> id }.toMap
+    if (st.fullReplay) leaves.map(l => relPath(root, l) -> -1L).toMap
+    else {
+      ManifestIo.delete(fs, stage)
+      out.map(o => o._1 -> o._3).toMap
+    }
   }
 
   /** [[upsertManifested]] over a partitioned root — MERGE INTO the
@@ -752,6 +744,7 @@ trait WarehouseRoot { this: Warehouse.type =>
   def upsertManifestedPartitioned(spark: SparkSession, rootDir: String,
                                   source: DataFrame, keyCol: String,
                                   txn: Option[(String, Long)] = None): Map[String, Long] = {
+    requireTxnAppId("upsertManifestedPartitioned", txn)
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
     require(ManifestIo.isDirectory(fs, root),
       s"upsertManifestedPartitioned: $rootDir is not a directory")
@@ -773,13 +766,8 @@ trait WarehouseRoot { this: Warehouse.type =>
     // would strand `_root-claim-(T+1)` and block every root op on
     // the table until the takeover grace passes
     leaves.headOption.foreach { case (leaf, _) =>
-      parseGens(headBody(fs, leaf).getOrElse(""))
-        .find(!_.startsWith(".del-")).foreach { g =>
-          val cols = spark.read.parquet(new HPath(leaf, g).toString).columns
-          require(cols.contains(keyCol),
-            s"upsertManifestedPartitioned: $rootDir has no column " +
-              s"'$keyCol' (columns: ${cols.mkString(", ")})")
-        }
+      requireKeyColumn(spark, leaf, headBody(fs, leaf).getOrElse(""), keyCol,
+        "upsertManifestedPartitioned", rootDir)
     }
     // one materialization of the source; every leaf's two writes
     // (tombstone keys + data) filter the cut, not the original plan
@@ -853,173 +841,137 @@ trait WarehouseRoot { this: Warehouse.type =>
     val toCreate = parCommitLeaves(combos) { c =>
       c -> hasCommittedHead(fs, leafFor(c))
     }.collect { case (c, committed) if !committed => c }
-    val st = beginRootTransition(fs, root, leaves.map(_._1), txn,
-      "upsertManifestedPartitioned")
+    val stage = new HPath(root,
+      s".upsert-stage-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    val (st, out) = rootTransition(fs, root, leaves.map(_._1), txn,
+        "upsertManifestedPartitioned") { st =>
+      // PARTITION ADOPTION (r17): create the missing leaves under THIS
+      // claim — one schema-bearing empty template (the leaf schema =
+      // source minus partition columns; limit(0).repartition(1) writes
+      // exactly one empty part file carrying it), then per missing leaf
+      // a pure-FS copy + a v1 commit CAS-ANCHORED AT 0, re-probing the
+      // head first: any interim commit (our crashed prior attempt) owns
+      // `_manifest-1` and the creation no-ops instead of resetting the
+      // leaf. Creation and the slice's data commit land in ONE root
+      // version below.
+      val adopted: Seq[(HPath, Seq[(String, String)])] =
+        if (toCreate.isEmpty) Seq.empty
+        else {
+          val tmpl = new HPath(root,
+            s".adopt-template-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+          cut.limit(0).drop(pcols: _*).repartition(1).write
+            .mode("overwrite").parquet(tmpl.toString)
+          val part = ManifestIo.list(fs, tmpl)
+            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+            .head.getPath
+          val created = parCommitLeaves(toCreate,
+            refresh = () => refreshClaim(fs, st, root)) { combo =>
+            val leaf = leafFor(combo)
+            if (!hasCommittedHead(fs, leaf)) {
+              val gen0 = new HPath(leaf, ".gen-0")
+              fs.mkdirs(gen0)
+              // ADOPT, never reset (r18): a headless leaf is not always
+              // empty — loose parquet files are a partitioned write
+              // awaiting first contact (the [[appendManifested]]/
+              // [[compactManifested]] adoption contract), and a
+              // non-empty `.gen-0` is a crashed prior adoption's
+              // half-moved state. Both become generation 0: loose files
+              // rename INTO `.gen-0` (idempotent — a replay moves the
+              // remainder and converges), existing `.gen-0` contents are
+              // KEPT; only a leaf with no data at all gets the empty
+              // schema template. (r17 deleted `.gen-0` and committed the
+              // template unconditionally — silent data loss on exactly
+              // the crashed-adoption state the head probe exists to
+              // converge.)
+              ManifestIo.list(fs, leaf)
+                .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+                .foreach(s => ManifestIo.rename(fs, s.getPath,
+                  new HPath(gen0, s.getPath.getName)))
+              val hasData = ManifestIo.list(fs, gen0)
+                .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+              if (!hasData)
+                org.apache.hadoop.fs.FileUtil.copy(fs, part, fs,
+                  new HPath(gen0, part.getName), false, hconf(spark))
+              // the adopted leaf INHERITS the root's constraint set in
+              // its very first commit (r20): a reader never observes a
+              // constrained root with an unconstrained partition
+              try { commitManifest(fs, leaf, new HPath(leaf, "_current"),
+                Seq(".gen-0"), 0L,
+                stats = collectStats(fs, hconf(spark), leaf, ".gen-0") ++
+                  consInherit); () }
+              catch { case _: java.util.ConcurrentModificationException => () }
+            }
+            leaf -> pcols.zip(combo)
+          }
+          ManifestIo.delete(fs, tmpl)
+          created
+        }
+      // the commit walk covers walked + adopted leaves exactly once (a
+      // half-created directory appears in both — the adopted entry wins)
+      val allLeaves = {
+        val createdPaths = adopted.map(_._1.toString).toSet
+        leaves.filterNot { case (l, _) => createdPaths.contains(l.toString) } ++
+          adopted
+      }
+      // STAGE ONCE, MOVE PER TOUCHED LEAF (r15/r16): two partitionBy
+      // jobs write every NON-EMPTY slice's data and tombstone key set
+      // under a root-local dot-prefixed staging dir (invisible to
+      // discovery and the leaf walk). Each touched leaf's commit is two
+      // renames + one CAS'd pointer swap; an UNTOUCHED leaf commits
+      // NOTHING — the root version map records it at its prior head
+      // (r16; the r15 lockstep scheme committed an empty tombstone +
+      // generation pair to every one of them, the measured O(total
+      // shards) per-batch floor of §6.1o). Per-merge Spark jobs are
+      // O(1) and per-batch commit cost O(touched shards) + one root
+      // manifest. A crash mid-walk strands only the staging dir (aged
+      // `.upsert-stage-*` is vacuumPartitioned food) and partially-
+      // committed leaves that the txn replay converges.
+      val dataStage = new HPath(stage, "data")
+      val keyStage = new HPath(stage, "keys")
+      cut.write.partitionBy(pcols: _*).mode("overwrite")
+        .parquet(dataStage.toString)
+      cut.select((pcols :+ keyCol).map(c => col(c)): _*).distinct()
+        .write.partitionBy(pcols: _*).mode("overwrite")
+        .parquet(keyStage.toString)
+      def staged(stageRoot: HPath, kvs: Seq[(String, String)]): HPath =
+        kvs.foldLeft(stageRoot) { case (acc, (k, v)) =>
+          new HPath(acc, s"$k=${org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils.escapePathName(v)}")
+        }
+      // the TOUCHED slice set from ONE staging walk (r17): per-leaf
+      // existence stats against the stage were the last O(all leaves)
+      // FS term per merge batch — the staged tree holds exactly the
+      // non-empty slices, and its dir names carry the same partitionBy
+      // escaping as the leaf walk, so the rel paths compare directly
+      val touched: Set[String] =
+        manifestLeaves(fs, dataStage).filter(_ != dataStage)
+          .map(l => relPath(dataStage, l)).toSet
+      allLeaves.map { case (leaf, kvs) => () =>
+        val rel = relPath(root, leaf)
+        if (!touched.contains(rel))
+          (rel, st.prior.getOrElse(rel, headVersion(fs, leaf)), ())
+        else
+          (rel, mergeCommit(spark, fs, leaf, "upsertManifestedPartitioned", txn) {
+            (del, gen) =>
+              // orphan dirs under the target names (a crashed prior
+              // attempt — the ids are head-derived, so a replay
+              // recomputes them) are cleared, never silently merged into
+              Seq(del, gen).foreach(d => if (ManifestIo.exists(fs, d)) ManifestIo.delete(fs, d))
+              ManifestIo.rename(fs, staged(keyStage, kvs), del)
+              ManifestIo.rename(fs, staged(dataStage, kvs), gen)
+          }, ())
+      }
+    }
     if (st.fullReplay)
-      return leaves.map { case (leaf, _) =>
+      leaves.map { case (leaf, _) =>
         val rel = relPath(root, leaf)
         rel -> st.prior.getOrElse(rel, headVersion(fs, leaf))
       }.toMap
-    // PARTITION ADOPTION (r17): create the missing leaves under THIS
-    // claim — one schema-bearing empty template (the leaf schema =
-    // source minus partition columns; limit(0).repartition(1) writes
-    // exactly one empty part file carrying it), then per missing leaf
-    // a pure-FS copy + a v1 commit CAS-ANCHORED AT 0, re-probing the
-    // head first: any interim commit (our crashed prior attempt) owns
-    // `_manifest-1` and the creation no-ops instead of resetting the
-    // leaf. Creation and the slice's data commit land in ONE root
-    // version below.
-    val adopted: Seq[(HPath, Seq[(String, String)])] =
-      if (toCreate.isEmpty) Seq.empty
-      else {
-        val tmpl = new HPath(root,
-          s".adopt-template-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-        cut.limit(0).drop(pcols: _*).repartition(1).write
-          .mode("overwrite").parquet(tmpl.toString)
-        val part = ManifestIo.list(fs, tmpl)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .head.getPath
-        val created = parCommitLeaves(toCreate,
-          refresh = () => refreshClaim(fs, st, root, txn)) { combo =>
-          val leaf = leafFor(combo)
-          if (!hasCommittedHead(fs, leaf)) {
-            val gen0 = new HPath(leaf, ".gen-0")
-            fs.mkdirs(gen0)
-            // ADOPT, never reset (r18): a headless leaf is not always
-            // empty — loose parquet files are a partitioned write
-            // awaiting first contact (the [[appendManifested]]/
-            // [[compactManifested]] adoption contract), and a
-            // non-empty `.gen-0` is a crashed prior adoption's
-            // half-moved state. Both become generation 0: loose files
-            // rename INTO `.gen-0` (idempotent — a replay moves the
-            // remainder and converges), existing `.gen-0` contents are
-            // KEPT; only a leaf with no data at all gets the empty
-            // schema template. (r17 deleted `.gen-0` and committed the
-            // template unconditionally — silent data loss on exactly
-            // the crashed-adoption state the head probe exists to
-            // converge.)
-            ManifestIo.list(fs, leaf)
-              .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              .foreach(s => ManifestIo.rename(fs, s.getPath,
-                new HPath(gen0, s.getPath.getName)))
-            val hasData = ManifestIo.list(fs, gen0)
-              .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            if (!hasData)
-              org.apache.hadoop.fs.FileUtil.copy(fs, part, fs,
-                new HPath(gen0, part.getName), false, hconf(spark))
-            // the adopted leaf INHERITS the root's constraint set in
-            // its very first commit (r20): a reader never observes a
-            // constrained root with an unconstrained partition
-            try { commitManifest(fs, leaf, new HPath(leaf, "_current"),
-              Seq(".gen-0"), 0L,
-              stats = collectStats(fs, hconf(spark), leaf, ".gen-0") ++
-                consInherit); () }
-            catch { case _: java.util.ConcurrentModificationException => () }
-          }
-          leaf -> pcols.zip(combo)
-        }
-        ManifestIo.delete(fs, tmpl)
-        created
-      }
-    // the commit walk covers walked + adopted leaves exactly once (a
-    // half-created directory appears in both — the adopted entry wins)
-    val allLeaves = {
-      val createdPaths = adopted.map(_._1.toString).toSet
-      leaves.filterNot { case (l, _) => createdPaths.contains(l.toString) } ++
-        adopted
+    else {
+      ManifestIo.delete(fs, stage)
+      out.map(o => o._1 -> o._2).toMap
     }
-    // STAGE ONCE, MOVE PER TOUCHED LEAF (r15/r16): two partitionBy
-    // jobs write every NON-EMPTY slice's data and tombstone key set
-    // under a root-local dot-prefixed staging dir (invisible to
-    // discovery and the leaf walk). Each touched leaf's commit is two
-    // renames + one CAS'd pointer swap; an UNTOUCHED leaf commits
-    // NOTHING — the root version map records it at its prior head
-    // (r16; the r15 lockstep scheme committed an empty tombstone +
-    // generation pair to every one of them, the measured O(total
-    // shards) per-batch floor of §6.1o). Per-merge Spark jobs are
-    // O(1) and per-batch commit cost O(touched shards) + one root
-    // manifest. A crash mid-walk strands only the staging dir (aged
-    // `.upsert-stage-*` is vacuumPartitioned food) and partially-
-    // committed leaves that the txn replay converges.
-    val stage = new HPath(root,
-      s".upsert-stage-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    val dataStage = new HPath(stage, "data")
-    val keyStage = new HPath(stage, "keys")
-    cut.write.partitionBy(pcols: _*).mode("overwrite")
-      .parquet(dataStage.toString)
-    cut.select((pcols :+ keyCol).map(c => col(c)): _*).distinct()
-      .write.partitionBy(pcols: _*).mode("overwrite")
-      .parquet(keyStage.toString)
-    def staged(stageRoot: HPath, kvs: Seq[(String, String)]): HPath =
-      kvs.foldLeft(stageRoot) { case (acc, (k, v)) =>
-        new HPath(acc, s"$k=${org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(v)}")
-      }
-    // the TOUCHED slice set from ONE staging walk (r17): per-leaf
-    // existence stats against the stage were the last O(all leaves)
-    // FS term per merge batch — the staged tree holds exactly the
-    // non-empty slices, and its dir names carry the same partitionBy
-    // escaping as the leaf walk, so the rel paths compare directly
-    val touched: Set[String] =
-      manifestLeaves(fs, dataStage).filter(_ != dataStage)
-        .map(l => relPath(dataStage, l)).toSet
-    val out = parCommitLeaves(allLeaves,
-      refresh = () => refreshClaim(fs, st, root, txn)) { case (leaf, kvs) =>
-      val rel = relPath(root, leaf)
-      if (!touched.contains(rel))
-        rel -> st.prior.getOrElse(rel, headVersion(fs, leaf))
-      else
-        rel -> upsertManifestedStagedMove(spark, fs, leaf,
-          staged(keyStage, kvs), staged(dataStage, kvs), keyCol, txn)
-    }.toMap
-    commitRootManifest(fs, root, st, out, txn)
-    ManifestIo.delete(fs, stage)
-    out
   }
-
-  /** [[upsertManifested]] from PRE-STAGED directories — the
-    * write-once path under [[upsertManifestedPartitioned]]: the
-    * staged tombstone-key and data-slice dirs are MOVED into the leaf
-    * as `.del-v` / `.gen-(v+1)` (two renames, zero Spark jobs) and
-    * committed atomically under the same txn gate, key probe, stats
-    * collection and carry as the rewrite form. Orphan dirs under the
-    * same target names (a crashed prior attempt — `base` is
-    * head-derived, so a replay recomputes the same ids) are cleared
-    * before the move, never silently merged into. */
-  private[operators] def upsertManifestedStagedMove(spark: SparkSession, fs: HFs,
-      leaf: HPath, stagedDel: HPath, stagedGen: HPath, keyCol: String,
-      txn: Option[(String, Long)]): Long =
-    withTableLock(leaf) {
-      val pointer = new HPath(leaf, "_current")
-      val head = headBody(fs, leaf).getOrElse(
-        throw new IllegalArgumentException(
-          s"upsertManifestedPartitioned: $leaf has no committed table"))
-      val gens = parseGens(head)
-      val txns = parseTxns(head)
-      val expected = manifestVersions(fs, leaf).lastOption.getOrElse(0L)
-      val alreadyApplied =
-        txn.exists { case (app, ver) => txns.get(app).exists(_ >= ver) }
-      if (alreadyApplied) expected
-      else {
-        // key-column presence is probed ONCE per root (the leaves of
-        // one partitioned table share a writer and a schema) — a
-        // per-leaf footer probe would re-plan a scan per leaf per
-        // batch, O(leaves) driver work for one fact
-        val base = nextEntryId(fs, leaf, gens)
-        val del = s".del-$base"
-        val gen = s".gen-${base + 1}"
-        Seq(del, gen).foreach { d =>
-          val p = new HPath(leaf, d)
-          if (ManifestIo.exists(fs, p)) ManifestIo.delete(fs, p)
-        }
-        ManifestIo.rename(fs, stagedDel, new HPath(leaf, del))
-        ManifestIo.rename(fs, stagedGen, new HPath(leaf, gen))
-        commitManifest(fs, leaf, pointer, gens :+ del :+ gen, expected,
-          txn.fold(txns) { case (app, ver) => txns + (app -> ver) },
-          statsForGens(parseStats(head), gens) ++
-            collectStats(fs, hconf(spark), leaf, gen))
-      }
-    }
 
   /** DESCRIBE HISTORY of the ROOT version-map line (r16): one row per
     * retained `_root-manifest-<T>` — the map entries, how many leaves

@@ -163,12 +163,6 @@ object CdcApply {
     val spark = batch.sparkSession
     val W = graft.operators.Warehouse
     type HPath = org.apache.hadoop.fs.Path
-    val dbg = sys.env.contains("GRAFT_CDC_DEBUG")
-    var t0 = System.nanoTime()
-    def tick(label: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      println(f"[cdc] $label ${(t - t0) / 1e6}%.0f ms"); t0 = t
-    }
     // ONE materialization of the reduced batch: it feeds the shard
     // set, the state semi-join and the merge — without the cut the
     // lastPerKey shuffle would run once per consumer
@@ -198,7 +192,6 @@ object CdcApply {
     val missing = W.parCommitLeaves(candidates) { k =>
       k -> W.hasCommittedHead(fs, new HPath(root, s"shard=$k"))
     }.collect { case (k, committed) if !committed => k }
-    tick("probe")
     if (missing.nonEmpty) {
       // ONE empty-parquet write job produces the schema-bearing
       // template; every missing leaf then gets an FS copy + a direct
@@ -241,10 +234,8 @@ object CdcApply {
           catch { case _: java.util.ConcurrentModificationException => }
         ()
       }
-      ()
       graft.operators.ManifestIo.delete(fs, tmpl)
     }
-    tick("bootstrap")
     val freshTable = missing.length == nShards
     val merged = graft.operators.eagerCut {
       val routed =
@@ -267,14 +258,12 @@ object CdcApply {
           val batchShards = updates
             .select(pmod(col("user_id"), lit(nShards)).as("k"))
             .distinct().collect().map(_.getLong(0)).toSeq.sorted
-          tick("shards")
           val cur =
             if (batchShards.isEmpty) updates.limit(0) // empty batch
             else batchShards
               .map(k => W.readManifested(spark, s"$rootDir/shard=$k"))
               .reduceLeft(_.unionByName(_))
               .join(updates.select(col("user_id")), Seq("user_id"), "left_semi")
-          tick("resolve")
           cur.select(col("user_id"), col("s").as("cur_s"))
             .join(updates.select(col("user_id"), col("s").as("new_s")),
               Seq("user_id"), "full_outer")
@@ -282,10 +271,8 @@ object CdcApply {
         }
       routed.withColumn("shard", pmod(col("user_id"), lit(nShards)))
     }
-    tick("merge")
     W.upsertManifestedPartitioned(spark, rootDir, merged, "user_id",
       txnVersion.map(v => CdcTxnApp -> v))
-    tick("upsert")
     ()
   }
 

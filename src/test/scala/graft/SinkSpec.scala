@@ -3150,6 +3150,94 @@ class SinkSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 
+  test("partitioned shallow clone: DELETE and MERGE work while unmaterialized (ref-resolved key probe)") {
+    val W = graft.operators.Warehouse
+    val sp = spark; import sp.implicits._
+    val base = Files.createTempDirectory("graft_pshclone_dm")
+    val src = base.resolve("src").toString
+    val cl = base.resolve("clone").toString
+    def state(d: String) = W.readManifestedPartitioned(spark, d)
+      .select(col("id"), col("lang"), col("n")).as[(Long, String, Long)]
+      .collect().toSet
+    Seq((1L, "en", 10L), (2L, "de", 20L), (3L, "de", 30L))
+      .toDF("id", "lang", "n").write.partitionBy("lang").parquet(src)
+    W.compactManifestedPartitioned(spark, src, targetFileBytes = 1L << 30)
+    val srcBefore = state(src)
+    W.cloneManifestedShallowPartitioned(spark, src, cl) // zero local files
+    // the root-level key probe reads one leaf's data generation: on an
+    // unmaterialized clone that generation lives in the SOURCE leaf,
+    // so the probe must resolve the #ref: entry
+    W.deleteManifestedPartitioned(spark, cl, Seq(3L).toDF("id"))
+    W.upsertManifestedPartitioned(spark, cl,
+      Seq((1L, "en", -1L), (4L, "de", 40L)).toDF("id", "lang", "n"), "id")
+    assert(state(cl) == Set((1L, "en", -1L), (2L, "de", 20L), (4L, "de", 40L)))
+    assert(state(src) == srcBefore, "the source must stay untouched")
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("append keeps a cross-process commit that lands while its batch is CHECK-validated") {
+    val W = graft.operators.Warehouse
+    val sp = spark; import sp.implicits._
+    val base = Files.createTempDirectory("graft_earlycap")
+    val dir = base.resolve("t").toString
+    W.appendManifested(spark, dir, Seq((1L, 1L)).toDF("id", "v"))
+    W.addCheckConstraint(spark, dir, "v_pos", "v >= 0")
+    Seq((2L, 2L)).toDF("id", "v").write.parquet(s"$dir/.gen-90")
+    // evaluating the batch's `v` — which the CHECK validation does —
+    // makes another writer commit `.gen-90`, outside this JVM's table
+    // lock (a cross-process writer, as far as the lock can tell)
+    SinkSpecForeignWriter.fired.set(false)
+    val foreign = udf { (v: Long) =>
+      if (SinkSpecForeignWriter.fired.compareAndSet(false, true)) {
+        val (fs, root) = graft.operators.ManifestIo.resolve(dir,
+          new org.apache.hadoop.conf.Configuration())
+        val cur = new org.apache.hadoop.fs.Path(root, "_current")
+        val lines = graft.operators.ManifestIo.readString(fs, cur).split("\n").toSeq
+        graft.operators.Warehouse.commitManifest(fs, root, cur,
+          lines.filterNot(_.startsWith("#")) :+ ".gen-90",
+          graft.operators.Warehouse.headVersion(fs, root),
+          stats = lines.filter(_.startsWith("#")))
+      }
+      v
+    }
+    W.appendManifested(spark, dir,
+      Seq((3L, 3L)).toDF("id", "v0").select(col("id"), foreign(col("v0")).as("v")))
+    assert(SinkSpecForeignWriter.fired.get())
+    // the append anchored its CAS before validating: it lost the race,
+    // re-read the head and committed past the foreign generation
+    assert(W.readManifested(spark, dir).select("id").as[Long].collect().toSet ==
+      Set(1L, 2L, 3L), "the concurrent writer's generation was dropped")
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("partitioned MERGE refuses a txn appId with ':' or newline before any claim or write") {
+    val W = graft.operators.Warehouse
+    val sp = spark; import sp.implicits._
+    val base = Files.createTempDirectory("graft_ptxnid")
+    val dir = base.resolve("root").toString
+    Seq((1L, "en", 10L), (2L, "de", 20L)).toDF("id", "lang", "n")
+      .write.partitionBy("lang").parquet(dir)
+    W.compactManifestedPartitioned(spark, dir, targetFileBytes = 1L << 30)
+    val rootsBefore = W.rootSnapshots(dir)
+    // a newline would smuggle a generation line into every touched
+    // leaf's manifest and a ':' would split the marker — both refuse
+    Seq("a\n.gen-77", "a:b").foreach { app =>
+      intercept[IllegalArgumentException] {
+        W.upsertManifestedPartitioned(spark, dir,
+          Seq((1L, "en", 11L)).toDF("id", "lang", "n"), "id", Some(app -> 1L))
+      }
+    }
+    val debris = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("_root-claim-") || n.startsWith(".upsert-stage-"))
+    assert(debris.isEmpty, s"refusal left ${debris.mkString(", ")}")
+    assert(W.rootSnapshots(dir) == rootsBefore)
+    assert(W.readManifestedPartitioned(spark, dir).count() == 2L)
+    assert(W.readManifestedPartitioned(spark, dir)
+      .filter(col("id") === 1L).head.getAs[Long]("n") == 10L)
+    assert(W.rootHistory(spark, dir).count() == rootsBefore.size.toLong)
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
   test("adopted-leaf constraint inheritance refuses when leaves disagree on one name") {
     val W = graft.operators.Warehouse
     val sp = spark; import sp.implicits._
@@ -3171,4 +3259,10 @@ class SinkSpec extends SparkSpec {
     assert(e.getMessage.contains("vmax"))
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
+}
+
+/** A once-only flag shared by every task of the JVM: a UDF closure is
+  * serialized per task, so the flag must live in an object. */
+private object SinkSpecForeignWriter {
+  val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
