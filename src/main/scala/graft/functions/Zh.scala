@@ -3,7 +3,6 @@ package graft.functions
 import com.ibm.icu.text.Transliterator
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.{graftshim => shim}
-import org.apache.spark.sql.functions.udf
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Chinese-script scalar functions — the reference's three "UDFs"
@@ -17,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Thread safety: ICU `Transliterator` instances are NOT thread-safe; one
   * instance per executor thread via `ThreadLocal` (SURVEY.md §7.5). The
-  * enclosing object is a Scala module, so UDF closures capture no state —
-  * each executor JVM lazily builds its own transliterators.
+  * enclosing object is a Scala module, so the expressions' generated code
+  * captures no state — each executor JVM lazily builds its own
+  * transliterators.
   */
 object Zh {
 
@@ -68,15 +68,4 @@ object Zh {
     shim.column(ZhToTraditional(shim.expression(c)))
   def contains_han(c: Column): Column =
     shim.column(ContainsHan(shim.expression(c)))
-
-  // Scala-UDF forms, kept as the cross-check baseline for the expression
-  // variants (ZhSpec asserts agreement) and as the API a non-classic
-  // (e.g. Connect) session would fall back to.
-  private lazy val toSimplifiedUdf = udf(toSimplified _)
-  private lazy val toTraditionalUdf = udf(toTraditional _)
-  private lazy val hasHanUdf = udf(hasHan _)
-
-  def zh_to_simplified_udf(c: Column): Column = toSimplifiedUdf(c)
-  def zh_to_traditional_udf(c: Column): Column = toTraditionalUdf(c)
-  def contains_han_udf(c: Column): Column = hasHanUdf(c)
 }

@@ -64,6 +64,13 @@ private[graft] object ManifestIo {
     try fs.getFileStatus(p).isDirectory
     catch { case _: java.io.FileNotFoundException => false }
 
+  /** The modification time of `p`, None when it is gone — every age
+    * and retention-window probe reads a file that a concurrent GC may
+    * remove between its listing and this stat. */
+  def mtime(fs: FileSystem, p: Path): Option[Long] =
+    try Some(fs.getFileStatus(p).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+
   /** List the children of `p`; a missing or non-directory path lists
     * as empty (the `Option(listFiles)` convention this replaces). */
   def list(fs: FileSystem, p: Path): Array[FileStatus] =

@@ -71,8 +71,10 @@ trait WarehouseChanges { this: Warehouse.type =>
     require(fromVersion <= toVersion,
       s"tableChanges: fromVersion $fromVersion > toVersion $toVersion")
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    val from0 = readManifestedAt(spark, dir, fromVersion)
-    val to = readManifestedAt(spark, dir, toVersion)
+    val fromSnap = snapshotAt(fs, root, fromVersion, "tableChanges", dir)
+    val toSnap = snapshotAt(fs, root, toVersion, "tableChanges", dir)
+    val from0 = scanGens(spark, root, fromSnap.gens, fromSnap.refs)
+    val to = scanGens(spark, root, toSnap.gens, toSnap.refs)
     require(from0.columns.contains(key) && to.columns.contains(key),
       s"tableChanges: $dir has no column '$key' " +
         s"(columns: ${to.columns.mkString(", ")})")
@@ -108,18 +110,14 @@ trait WarehouseChanges { this: Warehouse.type =>
     // the window — the fold retires tombstones, so a deleted key's
     // only trace is its row in a now-replaced generation (an
     // added-only candidate set silently drops those deletes). Every
-    // removed entry is one of `fromVersion`'s own entries, which
-    // readManifestedAt just validated as retained.
-    val fromBody = ManifestIo.readString(fs,
-      new HPath(root, s"_manifest-$fromVersion"))
-    val toBody = ManifestIo.readString(fs,
-      new HPath(root, s"_manifest-$toVersion"))
-    val fromEntries = parseGens(fromBody).toSet
-    val toEntries = parseGens(toBody).toSet
+    // removed entry is one of `fromVersion`'s own entries, which the
+    // snapshot lookup above validated as retained.
+    val fromEntries = fromSnap.gens.toSet
+    val toEntries = toSnap.gens.toSet
     // a shallow clone's feed windows resolve `#ref:` entries to their
     // recorded source directories, `to`'s recording winning for
     // entries both manifests carry
-    val refs = parseRefs(fromBody) ++ parseRefs(toBody)
+    val refs = fromSnap.refs ++ toSnap.refs
     val delta = (toEntries diff fromEntries) ++ (fromEntries diff toEntries)
     val candKeys =
       if (delta.isEmpty) return empty
@@ -185,22 +183,11 @@ trait WarehouseChanges { this: Warehouse.type =>
       s"tableChangesPartitioned: fromRootVersion $fromRootVersion > " +
         s"toRootVersion $toRootVersion")
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
-    def mapAt(v: Long): Map[String, Long] = {
-      val p = new HPath(root, s"_root-manifest-$v")
-      if (!ManifestIo.exists(fs, p))
-        throw new IllegalArgumentException(
-          s"tableChangesPartitioned: root version $v of $rootDir is not " +
-            s"retained (available: ${rootVersions(fs, root).mkString(", ")})")
-      parseRootMap(ManifestIo.readString(fs, p))
-    }
-    val fromMap = mapAt(fromRootVersion)
-    val toMap = mapAt(toRootVersion)
-    def withParts(df: DataFrame, rel: String): DataFrame = {
-      val leaf = new HPath(root, rel)
-      leafKvs(root, leaf).foldLeft(df) { case (acc, (k, v)) =>
-        acc.withColumn(k, lit(v))
-      }
-    }
+    val op = "tableChangesPartitioned"
+    val fromMap = rootMapAt(fs, root, fromRootVersion, op, rootDir)
+    val toMap = rootMapAt(fs, root, toRootVersion, op, rootDir)
+    def withParts(df: DataFrame, rel: String): DataFrame =
+      withLeafParts(root, new HPath(root, rel), df)
     // per-leaf plan construction runs on the bounded pool (r19 — the
     // r18 verdict's one scale seam here): each changed leaf's branch
     // costs manifest reads plus tableChanges' candidate-key cut (a
@@ -224,10 +211,13 @@ trait WarehouseChanges { this: Warehouse.type =>
         case (None, None) => None
       }
     }.flatten
-    if (parts.isEmpty)
-      readManifestedPartitioned(spark, rootDir)
-        .withColumn("change_type", lit("insert")).limit(0)
-    else parts.reduce(_.unionByName(_))
+    if (parts.nonEmpty) parts.reduce(_.unionByName(_))
+    else {
+      // the empty feed has the non-empty feed's columns in its order: a
+      // leaf's empty self-diff with its partition values re-attached
+      val (rel, v) = toMap.min
+      withParts(tableChanges(spark, new HPath(root, rel).toString, key, v, v), rel)
+    }
   }
 
   /** [[cloneManifested]] over a PARTITIONED root — deep clone of one
@@ -293,22 +283,15 @@ trait WarehouseChanges { this: Warehouse.type =>
         throw new IllegalArgumentException(
           s"$op: $srcDir has no root version map " +
             "(compactManifestedPartitioned migrates a table to one)")))
-    val mapFile = new HPath(src, s"_root-manifest-$v")
-    if (!ManifestIo.exists(fs, mapFile))
-      throw new IllegalArgumentException(
-        s"$op: root version $v of $srcDir is not " +
-          s"retained (available: ${rootVersions(fs, src).mkString(", ")})")
+    val map = rootMapAt(fs, src, v, op, srcDir)
     require(rootVersions(fs, dst).isEmpty,
       s"$op: $dstDir already holds a root-versioned " +
         "table — refusing to merge histories; clone into a fresh directory")
-    val map = parseRootMap(ManifestIo.readString(fs, mapFile))
     fs.mkdirs(dst)
     val claim = new HPath(dst, "_root-claim-1")
     if (!ManifestIo.putIfAbsent(fs, claim, "-")) {
-      val aged =
-        try fs.getFileStatus(claim).getModificationTime <
-          System.currentTimeMillis() - DefaultVacuumGraceMs
-        catch { case _: java.io.FileNotFoundException => true }
+      val aged = ManifestIo.mtime(fs, claim)
+        .forall(_ < System.currentTimeMillis() - DefaultVacuumGraceMs)
       if (!aged)
         throw new java.util.ConcurrentModificationException(
           s"$op: $dstDir is being cloned into by a " +
@@ -350,13 +333,7 @@ trait WarehouseChanges { this: Warehouse.type =>
   def restoreManifestedPartitioned(spark: SparkSession, rootDir: String,
                                    rootVersion: Long): Long = {
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
-    val mapFile = new HPath(root, s"_root-manifest-$rootVersion")
-    if (!ManifestIo.exists(fs, mapFile))
-      throw new IllegalArgumentException(
-        s"restoreManifestedPartitioned: root version $rootVersion of " +
-          s"$rootDir is not retained " +
-          s"(available: ${rootVersions(fs, root).mkString(", ")})")
-    val target = parseRootMap(ManifestIo.readString(fs, mapFile))
+    val target = rootMapAt(fs, root, rootVersion, "restoreManifestedPartitioned", rootDir)
     val leaves = manifestLeaves(fs, root)
     val extra = leaves.map(relPath(root, _)).filterNot(target.contains).sorted
     require(extra.isEmpty,
@@ -397,24 +374,11 @@ trait WarehouseChanges { this: Warehouse.type =>
     leafCommit(fs, root, "restoreManifested") { h =>
       if (version == h.version) h.version
       else {
-        val hist = new HPath(root, s"_manifest-$version")
-        if (!ManifestIo.exists(fs, hist))
-          throw new IllegalArgumentException(
-            s"restoreManifested: snapshot $version of $dir is not retained " +
-              s"(available: ${manifestVersions(fs, root).mkString(", ")})")
-        val snap = ManifestIo.readString(fs, hist)
-        val gens = parseGens(snap)
-        // resolve #ref: entries (unmaterialized shallow clones) exactly as
-        // readManifestedAt does — a referenced generation lives in the
-        // SOURCE table's directory, so probing `root/g` would spuriously
-        // report it garbage-collected
-        val refs = parseRefs(snap)
-        gens.find(g => !ManifestIo.isDirectory(fs, entryPath(root, refs, g))).foreach { g =>
-          throw new IllegalStateException(
-            s"restoreManifested: snapshot $version of $dir lists $g, which " +
-              "has been garbage-collected (retention window moved past it)")
-        }
-        h.commit(gens, statsForGens(parseStats(snap), gens))
+        // the lookup resolves #ref: entries (unmaterialized shallow
+        // clones): a referenced generation lives in the SOURCE table's
+        // directory
+        val snap = snapshotAt(fs, root, version, "restoreManifested", dir)
+        h.commit(snap.gens, statsForGens(snap.stats, snap.gens))
       }
     }
   }
@@ -450,58 +414,20 @@ trait WarehouseChanges { this: Warehouse.type =>
     * tier swap [[org.apache.hadoop.fs.FileUtil.copy]] for the store's
     * server-side copy (S3 CopyObject) behind the same walk. */
   def cloneManifested(spark: SparkSession, srcDir: String, dstDir: String,
-                      version: Option[Long] = None): Long = {
-    val (fs, src) = ManifestIo.resolve(srcDir, hconf(spark))
-    val (_, dst) = ManifestIo.resolve(dstDir, hconf(spark))
-    val v = version.getOrElse(
-      manifestVersions(fs, src).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"cloneManifested: $srcDir has no committed table")))
-    val hist = new HPath(src, s"_manifest-$v")
-    if (!ManifestIo.exists(fs, hist))
-      throw new IllegalArgumentException(
-        s"cloneManifested: snapshot $v of $srcDir is not retained " +
-          s"(available: ${manifestVersions(fs, src).mkString(", ")})")
-    val body = ManifestIo.readString(fs, hist)
-    val gens = parseGens(body)
-    val refs = parseRefs(body)
+                      version: Option[Long] = None): Long =
     // deep-cloning a SHALLOW clone copies through its references (the
     // resolved source directories) and DROPS the `#ref:` lines — the
     // result owns its data, the materialize-by-copy path
-    val dstStats = parseStats(body).filterNot(_.startsWith("#ref:"))
-    // what commitManifest below would serialize — used both to refuse
-    // a foreign table and to recognize this clone's own crashed commit
-    val wantBody = manifestBody(gens, Map.empty, dstStats)
-    headBody(fs, dst) match {
-      case Some(h) if h == wantBody && headVersion(fs, dst) == 1L =>
-        // a prior run of THIS clone crashed (or completed) after its
-        // version-1 CAS: the data and trail are committed; heal the
-        // pointer if the crash left it absent and converge
-        val pointer = new HPath(dst, "_current")
-        if (!ManifestIo.exists(fs, pointer)) ManifestIo.replace(fs, pointer, h)
-        return 1L
-      case Some(_) =>
-        throw new IllegalArgumentException(
-          s"cloneManifested: $dstDir already holds a committed table — " +
-            "refusing to merge histories; clone into a fresh directory")
-      case None => // fresh or pre-CAS crash: (re-)copy and commit
+    cloneCommit(spark, "cloneManifested", srcDir, dstDir, version)(
+      _.stats.filterNot(_.startsWith("#ref:"))) { (snap, dst) =>
+      parCommitLeaves(snap.gens) { g =>
+        val out = new HPath(dst, g)
+        // converge over a crashed prior clone's partial copy
+        if (ManifestIo.exists(snap.fs, out)) ManifestIo.delete(snap.fs, out)
+        org.apache.hadoop.fs.FileUtil.copy(snap.fs, snap.entryDir(g), snap.fs, out,
+          false, hconf(spark))
+      }
     }
-    gens.find(g => !ManifestIo.isDirectory(fs, entryPath(src, refs, g))).foreach { g =>
-      throw new IllegalStateException(
-        s"cloneManifested: snapshot $v of $srcDir lists $g, which has " +
-          "been garbage-collected (retention window moved past it)")
-    }
-    fs.mkdirs(dst)
-    parCommitLeaves(gens) { g =>
-      val out = new HPath(dst, g)
-      // converge over a crashed prior clone's partial copy
-      if (ManifestIo.exists(fs, out)) ManifestIo.delete(fs, out)
-      org.apache.hadoop.fs.FileUtil.copy(fs, entryPath(src, refs, g), fs, out,
-        false, hconf(spark))
-    }
-    commitManifest(fs, dst, new HPath(dst, "_current"), gens,
-      headVersion(fs, dst), stats = dstStats)
-  }
 
   /** SHALLOW CLONE (r20 — `CREATE TABLE ... SHALLOW CLONE` parity):
     * an independent manifested table whose version-1 manifest lists
@@ -530,47 +456,49 @@ trait WarehouseChanges { this: Warehouse.type =>
     * semantics (public docs); OMT has no table-copy surface. */
   def cloneManifestedShallow(spark: SparkSession, srcDir: String,
                              dstDir: String,
-                             version: Option[Long] = None): Long = {
+                             version: Option[Long] = None): Long =
+    // a shallow source's refs re-resolve to the original directories
+    cloneCommit(spark, "cloneManifestedShallow", srcDir, dstDir, version)(snap =>
+      snap.stats.filterNot(_.startsWith("#ref:")) ++ snap.gens.map(g =>
+        refLine(g, snap.fs.makeQualified(snap.entryDir(g)).toString))) { (_, _) => }
+
+  /** THE leaf clone commit of both clone forms: resolve the source
+    * snapshot `version` (default: head; [[snapshotAt]]), then
+    *
+    *  - recognize this clone's own crashed commit — destination head at
+    *    version 1 with exactly the entries and `dstStats` this clone
+    *    writes — heal `_current` if the crash left it absent, return 1;
+    *  - refuse any other committed head ("already holds");
+    *  - refuse a source entry that was garbage-collected;
+    *  - `place` the entries under the destination, commit version 1.
+    *
+    * `#txn:` markers never transfer. The version-1 CAS is the commit
+    * point, so a crash before it re-runs from a headless destination. */
+  private def cloneCommit(spark: SparkSession, op: String, srcDir: String,
+                          dstDir: String, version: Option[Long])(
+      dstStats: Snapshot => Seq[String])(place: (Snapshot, HPath) => Unit): Long = {
     val (fs, src) = ManifestIo.resolve(srcDir, hconf(spark))
     val (_, dst) = ManifestIo.resolve(dstDir, hconf(spark))
-    val v = version.getOrElse(
-      manifestVersions(fs, src).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"cloneManifestedShallow: $srcDir has no committed table")))
-    val hist = new HPath(src, s"_manifest-$v")
-    if (!ManifestIo.exists(fs, hist))
-      throw new IllegalArgumentException(
-        s"cloneManifestedShallow: snapshot $v of $srcDir is not retained " +
-          s"(available: ${manifestVersions(fs, src).mkString(", ")})")
-    val body = ManifestIo.readString(fs, hist)
-    val gens = parseGens(body)
-    val srcRefs = parseRefs(body) // re-resolve a shallow source's refs
-    val refLines = gens.map(g =>
-      refLine(g, fs.makeQualified(entryPath(src, srcRefs, g)).toString))
-    val dstStats =
-      parseStats(body).filterNot(_.startsWith("#ref:")) ++ refLines
-    val wantBody = manifestBody(gens, Map.empty, dstStats)
+    val v = version.getOrElse(manifestVersions(fs, src).lastOption.getOrElse(
+      throw new IllegalArgumentException(s"$op: $srcDir has no committed table")))
+    val snap = snapshotAt(fs, src, v, op, srcDir, live = false)
+    val stats = dstStats(snap)
     headBody(fs, dst) match {
-      case Some(h) if h == wantBody && headVersion(fs, dst) == 1L =>
+      case Some(h) if h == manifestBody(snap.gens, Map.empty, stats) &&
+          headVersion(fs, dst) == 1L =>
         val pointer = new HPath(dst, "_current")
         if (!ManifestIo.exists(fs, pointer)) ManifestIo.replace(fs, pointer, h)
-        return 1L
+        1L
       case Some(_) =>
         throw new IllegalArgumentException(
-          s"cloneManifestedShallow: $dstDir already holds a committed " +
-            "table — refusing to merge histories; clone into a fresh " +
-            "directory")
+          s"$op: $dstDir already holds a committed table — refusing to " +
+            "merge histories; clone into a fresh directory")
       case None =>
+        snap.requireLive()
+        fs.mkdirs(dst)
+        place(snap, dst)
+        commitManifest(fs, dst, new HPath(dst, "_current"), snap.gens,
+          headVersion(fs, dst), stats = stats)
     }
-    gens.find(g => !ManifestIo.isDirectory(fs, entryPath(src, srcRefs, g)))
-      .foreach { g =>
-        throw new IllegalStateException(
-          s"cloneManifestedShallow: snapshot $v of $srcDir lists $g, " +
-            "which has been garbage-collected (retention window moved " +
-            "past it)")
-      }
-    fs.mkdirs(dst)
-    commitManifest(fs, dst, new HPath(dst, "_current"), gens,
-      headVersion(fs, dst), stats = dstStats)
   }
 }

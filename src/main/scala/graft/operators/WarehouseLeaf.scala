@@ -303,58 +303,13 @@ trait WarehouseLeaf { this: Warehouse.type =>
     // content-preserving, so the invariant they state still holds
     val v = h.commit(Seq(next),
       constraintLines(h.body) ++ collectStats(fs, hconf(spark), root, next))
-    // SNAPSHOT RETENTION: a manifest version survives this GC if it is
-    // within the COUNT window (the last `retainSnapshots` before this
-    // commit) OR within the TIME window (`retainFor`, anchored on the
-    // manifest file's commit mtime — on an object store that is the
-    // PUT instant, exactly what Delta's log-cleanup clock uses). The
-    // count knob is the reader grace window (default 1 = the previous
-    // contract: the entire pre-commit manifest survives one compaction
-    // cycle); the time knob is the operator-facing "keep 7 days"
-    // retention real deployments configure — they compose as a union,
-    // like Iceberg's min-snapshots-to-keep + max-snapshot-age pair.
-    // Everything outside both windows — manifest files and the
-    // generations only expired manifests reference — is deleted.
-    // CLOCK-SKEW caveat (shared with the vacuum grace — the same
-    // caveat Delta documents for its log-cleanup clock): the cutoff
-    // compares THIS writer's wall clock against STORAGE mtimes; skew
-    // between the writer host and the store (or between two writers)
-    // eats into the window symmetrically. Size retainFor/graceMs with
-    // the deployment's worst-case skew as padding — the 1 h default
-    // grace is the only thing protecting a live cross-process
-    // writer's in-flight commit.
-    val timeCutoff = retainFor.map(d => System.currentTimeMillis() - d.toMillis)
-    def inTimeWindow(x: Long): Boolean = timeCutoff.exists { c =>
-      try fs.getFileStatus(new HPath(root, s"_manifest-$x"))
-        .getModificationTime >= c
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-    val allVersions = manifestVersions(fs, root)
-    val kept = allVersions
-      .filter(x => x >= v - retainSnapshots || inTimeWindow(x) ||
-        alsoRetainVersions.contains(x))
-    val keepGens: Set[String] =
-      (kept.flatMap(x => readPointer(fs, new HPath(root, s"_manifest-$x"))) ++
-        (if (retainSnapshots >= 1) cur else Seq.empty) :+ next).toSet
-    // same in-flight discipline as [[gcLeafRetention]] (r18): a dir no
-    // manifest ever referenced may be a cross-process appender's
-    // not-yet-committed generation — grace it; expired-manifest
-    // references are retention food, deletable now
-    val expiredGens: Set[String] = allVersions.filterNot(kept.contains)
-      .flatMap(x => readPointer(fs, new HPath(root, s"_manifest-$x"))).toSet
-    val graceCutoff = System.currentTimeMillis() - DefaultVacuumGraceMs
-    ManifestIo.list(fs, root)
-      .filter(st => st.isDirectory &&
-        (st.getPath.getName.startsWith(".gen-") ||
-          st.getPath.getName.startsWith(".del-")) &&
-        !keepGens.contains(st.getPath.getName) &&
-        (expiredGens.contains(st.getPath.getName) ||
-          st.getModificationTime < graceCutoff))
-      .foreach(st => ManifestIo.delete(fs, st.getPath))
-    ManifestIo.list(fs, root)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("_manifest-") &&
-        !kept.contains(st.getPath.getName.stripPrefix("_manifest-").toLong))
-      .foreach(st => ManifestIo.delete(fs, st.getPath))
+    // SNAPSHOT RETENTION ([[gcLeafRetention]]) anchored on this fold's
+    // commit: everything outside the count/time windows and the pins —
+    // manifest files and the generations only they reference — is
+    // deleted. The pre-fold list survives a count window of >= 1 (the
+    // reader grace set), and aged never-referenced dirs are swept.
+    gcLeafRetention(fs, root, retainSnapshots, retainFor, alsoRetainVersions,
+      fold = Some(v -> ((if (retainSnapshots >= 1) cur else Seq.empty) :+ next)))
     ManifestIo.list(fs, new HPath(root, next))
       .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     }
@@ -809,23 +764,11 @@ trait WarehouseLeaf { this: Warehouse.type =>
   def readManifestedAt(spark: SparkSession, dir: String,
                        version: Long): DataFrame = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    val hist = new HPath(root, s"_manifest-$version")
-    if (!ManifestIo.exists(fs, hist))
-      throw new IllegalArgumentException(
-        s"readManifestedAt: snapshot $version of $dir is not retained " +
-          s"(available: ${manifestVersions(fs, root).mkString(", ")})")
-    val histBody = ManifestIo.readString(fs, hist)
-    val gens = parseGens(histBody)
-    val refs = parseRefs(histBody)
-    gens.find(g => !ManifestIo.isDirectory(fs, entryPath(root, refs, g))).foreach { g =>
-      throw new IllegalStateException(
-        s"readManifestedAt: snapshot $version of $dir lists $g, which " +
-          "has been garbage-collected (retention window moved past it)")
-    }
     // scanGens: a snapshot taken BEFORE a delete reads with its rows;
     // one taken after applies the tombstone — deletes are versioned
     // like any commit
-    scanGens(spark, root, gens, refs)
+    val snap = snapshotAt(fs, root, version, "readManifestedAt", dir)
+    scanGens(spark, root, snap.gens, snap.refs)
   }
 
   // The pointer swap itself — synced tmp write, atomic rename, parent
@@ -953,19 +896,19 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * HISTORY` / Iceberg snapshots-table analogue: one row per RETAINED
     * manifest version (ascending), with the committed entry list, the
     * generation/tombstone split, and whether this version is the
-    * current pointer. Table metadata is manifest-sized by design, so
-    * this is a driver-side listing materialized as a local DataFrame —
-    * the audit/debug companion to [[readManifestedAt]] (its `version`
+    * current pointer — exactly one row, [[pointerVersion]] (a restore
+    * target that lists the head's entries is history, not current).
+    * Table metadata is manifest-sized by design, so this is a
+    * driver-side listing materialized as a local DataFrame — the
+    * audit/debug companion to [[readManifestedAt]] (its `version`
     * column is exactly what that call accepts). */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    val cur = headBody(fs, root).map(parseGens).getOrElse(Seq.empty)
     // a concurrent compaction may GC a manifest between the listing
     // and the per-version reads — skip versions that vanish mid-walk
-    // (the same FNFE tolerance inTimeWindow/aged use) instead of
-    // letting DESCRIBE HISTORY throw on an expired version
-    val rows = manifestVersions(fs, root).flatMap { v =>
+    // instead of letting DESCRIBE HISTORY throw on an expired version
+    val trail = manifestVersions(fs, root).flatMap { v =>
       val mf = new HPath(root, s"_manifest-$v")
       // commit_ts = the manifest file's mtime: the create-exclusive
       // claim instant locally/HDFS, the PUT instant on an object store
@@ -973,16 +916,21 @@ trait WarehouseLeaf { this: Warehouse.type =>
       // txns = the exactly-once markers AS OF this version (app:ver,
       // app-sorted) — the debugging surface for "which batch applied".
       try {
-        val gens = readPointer(fs, mf)
-        Some(org.apache.spark.sql.Row(v,
-          gens.mkString(","),
-          gens.count(!_.startsWith(".del-")).toLong,
-          gens.count(_.startsWith(".del-")).toLong,
-          gens == cur,
-          new java.sql.Timestamp(fs.getFileStatus(mf).getModificationTime),
-          readTxns(fs, mf).toSeq.sortBy(_._1)
-            .map { case (a, x) => s"$a:$x" }.mkString(",")))
+        val body = ManifestIo.readString(fs, mf)
+        Some((v, parseGens(body), fs.getFileStatus(mf).getModificationTime,
+          parseTxns(body)))
       } catch { case _: java.io.FileNotFoundException => None }
+    }
+    val current = headBody(fs, root).flatMap(b =>
+      pointerVersion(trail.map(t => t._1 -> t._2), parseGens(b)))
+    val rows = trail.map { case (v, gens, mtime, txns) =>
+      org.apache.spark.sql.Row(v,
+        gens.mkString(","),
+        gens.count(!_.startsWith(".del-")).toLong,
+        gens.count(_.startsWith(".del-")).toLong,
+        current.contains(v),
+        new java.sql.Timestamp(mtime),
+        txns.toSeq.sortBy(_._1).map { case (a, x) => s"$a:$x" }.mkString(","))
     }
     spark.createDataFrame(rows.asJava,
       org.apache.spark.sql.types.StructType.fromDDL(

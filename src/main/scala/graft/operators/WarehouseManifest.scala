@@ -102,6 +102,12 @@ trait WarehouseManifest { this: Warehouse.type =>
     body.trim.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
       .filterNot(_.startsWith("#"))
 
+  /** The `#txn:<appId>:<version>` markers of a committed manifest —
+    * one entry per writer application, highest version applied (the
+    * Delta `txnAppId`/`txnVersion` idempotent-writes state). Carried
+    * forward by EVERY commit path (append, delete, upsert, compaction
+    * fold), so the marker survives maintenance exactly like the data:
+    * the manifest is a full snapshot, and the txn state is part of it. */
   private[operators] def parseTxns(body: String): Map[String, Long] =
     body.trim.split("\n").toSeq.map(_.trim)
       .filter(_.startsWith("#txn:"))
@@ -163,15 +169,6 @@ trait WarehouseManifest { this: Warehouse.type =>
     * anchors its CAS on. */
   private[graft] def headVersion(fs: HFs, root: HPath): Long =
     manifestVersions(fs, root).lastOption.getOrElse(0L)
-
-  /** The `#txn:<appId>:<version>` markers of a committed manifest —
-    * one entry per writer application, highest version applied (the
-    * Delta `txnAppId`/`txnVersion` idempotent-writes state). Carried
-    * forward by EVERY commit path (append, delete, upsert, compaction
-    * fold), so the marker survives maintenance exactly like the data:
-    * the manifest is a full snapshot, and the txn state is part of it. */
-  private[operators] def readTxns(fs: HFs, pointer: HPath): Map[String, Long] =
-    parseTxns(ManifestIo.readString(fs, pointer))
 
   /** Serialize a manifest body: generation list, then the `#stats:`
     * file-skipping lines (sorted), then the txn markers (app-sorted) —
@@ -555,6 +552,49 @@ trait WarehouseManifest { this: Warehouse.type =>
     }
   }
 
+  /** A retained leaf snapshot as [[snapshotAt]] resolved it: the
+    * `_manifest-<version>` body with its entries, `#ref:` references
+    * and carried metadata lines, and [[entryDir]], where an entry's
+    * data lives. */
+  private[operators] final class Snapshot(val fs: HFs, val root: HPath,
+                                          val version: Long, val body: String,
+                                          op: String, table: String) {
+    lazy val gens: Seq[String] = parseGens(body)
+    lazy val refs: Map[String, String] = parseRefs(body)
+    lazy val stats: Seq[String] = parseStats(body)
+    def entryDir(g: String): HPath = entryPath(root, refs, g)
+
+    /** Refuse a snapshot whose entry directory is gone (the retention
+      * window moved past it between the listing and now): never a
+      * silently partial read, restore or clone. */
+    def requireLive(): Unit =
+      gens.find(g => !ManifestIo.isDirectory(fs, entryDir(g))).foreach { g =>
+        throw new IllegalStateException(
+          s"$op: snapshot $version of $table lists $g, which has been " +
+            "garbage-collected (retention window moved past it)")
+      }
+  }
+
+  /** THE leaf snapshot lookup of every versioned op — time travel,
+    * restore, both clones and the change feed: `_manifest-<version>`
+    * must exist (else IllegalArgumentException "`<op>`: snapshot v of
+    * `table` is not retained", listing what is), and unless `live` is
+    * off every entry it lists must still have its directory
+    * ([[Snapshot.requireLive]]; a clone checks after its destination
+    * probe, so a completed clone re-run converges first). */
+  private[operators] def snapshotAt(fs: HFs, root: HPath, version: Long,
+                                    op: String, table: String,
+                                    live: Boolean = true): Snapshot = {
+    val hist = new HPath(root, s"_manifest-$version")
+    if (!ManifestIo.exists(fs, hist))
+      throw new IllegalArgumentException(
+        s"$op: snapshot $version of $table is not retained " +
+          s"(available: ${manifestVersions(fs, root).mkString(", ")})")
+    val snap = new Snapshot(fs, root, version, ManifestIo.readString(fs, hist), op, table)
+    if (live) snap.requireLive()
+    snap
+  }
+
   /** The committed snapshot versions of a manifested leaf, ascending
     * (the surviving `_manifest-*` trail — older versions disappear as
     * [[compactManifested]]'s retention window GCs them). Resolves the
@@ -571,7 +611,7 @@ trait WarehouseManifest { this: Warehouse.type =>
     * fall back to a bare Configuration and lose user-set Hadoop conf
     * (object-store credentials, custom fs impls) — fall through to the
     * process-wide default session before giving up. */
-  private def sessionHconf(): org.apache.hadoop.conf.Configuration =
+  private[operators] def sessionHconf(): org.apache.hadoop.conf.Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())

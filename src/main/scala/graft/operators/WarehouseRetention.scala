@@ -9,52 +9,78 @@ import org.apache.spark.sql.types.DecimalType
   * leaf/root vacuum passes with their in-flight grace discipline. */
 trait WarehouseRetention { this: Warehouse.type =>
 
-  /** Retention GC for a leaf WITHOUT a new fold commit — the steady-
-    * skip companion (r17). Applies [[compactManifested]]'s retention
-    * union relative to the CURRENT head `h` instead of a new commit:
-    * a manifest survives inside the count window (`x >= h -
-    * retainSnapshots` — exactly the shape a fold at `h` left behind,
-    * so a freshly-folded leaf is a no-op) or the time window
-    * (`retainFor` against the manifest's commit mtime); expired
-    * manifests and the generation/tombstone dirs only they reference
-    * are deleted. Pure FS metadata work — no Spark job, no manifest
-    * version spent, the head untouched. Returns the head version.
-    * Caller holds the table lock; the same single-maintainer
-    * discipline as the fold GC applies across processes.
+  /** THE retention window of every trail GC — a leaf fold's, the
+    * steady-skip GC's, and the root maps' (their pins and their GC):
+    * version `x` of `versions` survives inside the COUNT window (`x >=
+    * anchor - retainSnapshots`), or when pinned, or inside the TIME
+    * window (`retainFor`, against the `<prefix><x>` file's commit mtime
+    * — on an object store the PUT instant, exactly what Delta's
+    * log-cleanup clock uses; a file gone mid-walk is outside it). The
+    * count knob is the reader grace window; the time knob is the
+    * operator-facing "keep 7 days" retention — they compose as a
+    * union, like Iceberg's min-snapshots-to-keep + max-snapshot-age
+    * pair. Returns the surviving versions.
+    *
+    * CLOCK-SKEW caveat (shared with the vacuum grace — the same caveat
+    * Delta documents for its log-cleanup clock): the cutoff compares
+    * THIS writer's wall clock against STORAGE mtimes; skew between the
+    * writer host and the store (or between two writers) eats into the
+    * window symmetrically. Size retainFor/graceMs with the deployment's
+    * worst-case skew as padding — the 1 h default grace is the only
+    * thing protecting a live cross-process writer's in-flight commit. */
+  private[operators] def retained(fs: HFs, root: HPath, prefix: String,
+                                  versions: Seq[Long], anchor: Long,
+                                  retainSnapshots: Int,
+                                  retainFor: Option[java.time.Duration],
+                                  pins: Set[Long] = Set.empty): Seq[Long] = {
+    val cutoff = retainFor.map(d => System.currentTimeMillis() - d.toMillis)
+    versions.filter(x => x >= anchor - retainSnapshots || pins.contains(x) ||
+      cutoff.exists(c => ManifestIo.mtime(fs, new HPath(root, s"$prefix$x")).exists(_ >= c)))
+  }
+
+  /** THE retention GC of a leaf's trail ([[retained]]'s window over its
+    * `_manifest-*` versions): expired manifests and the
+    * generation/tombstone dirs only they reference are deleted. Pure
+    * FS metadata work — no Spark job, no manifest version spent.
+    * Returns the anchor. Caller holds the table lock; one maintainer
+    * per leaf across processes.
+    *
+    *  - Without `fold` (the steady-skip companion, r17) the window is
+    *    anchored on the CURRENT head — exactly the shape a fold at the
+    *    head left behind, so a freshly-folded leaf is a no-op — and
+    *    nothing is touched unless a version expired.
+    *  - With `fold = Some((v, entries))` the window is anchored on the
+    *    version `v` the fold committed, `entries` are kept too (the
+    *    pre-fold list, the reader grace set), and the sweep always runs.
+    *
+    * A dir referenced ONLY by expired manifests was committed once and
+    * is plain retention food — deletable now; a dir referenced by NO
+    * manifest at all may be a live cross-process appender's in-flight
+    * (not-yet-committed) generation, so it gets the vacuum mtime grace
+    * instead of an instant delete (r18; an aged true orphan falls to
+    * this sweep or vacuum).
     *
     * `alsoRetain` (r19): leaf versions referenced by RETAINED root
     * version maps — an out-of-band leaf-level fold can advance a leaf
     * several versions inside one root window, putting a root-map-
-    * referenced version below `h - retainSnapshots`; GC'ing it would
-    * leave a retained root snapshot resolving to a deleted leaf
-    * manifest ([[readManifestedPartitionedAt]] throws). The
-    * partitioned walk passes the union of its surviving maps' entries
-    * for this leaf. */
+    * referenced version below the count window; GC'ing it would leave
+    * a retained root snapshot resolving to a deleted leaf manifest
+    * ([[readManifestedPartitionedAt]] throws). The partitioned walk
+    * passes the union of its surviving maps' entries for this leaf. */
   private[operators] def gcLeafRetention(fs: HFs, leaf: HPath, retainSnapshots: Int,
                               retainFor: Option[java.time.Duration],
-                              alsoRetain: Set[Long] = Set.empty): Long = {
+                              alsoRetain: Set[Long] = Set.empty,
+                              fold: Option[(Long, Seq[String])] = None): Long = {
     val vs = manifestVersions(fs, leaf)
-    val h = vs.lastOption.getOrElse(0L)
-    val timeCutoff = retainFor.map(d => System.currentTimeMillis() - d.toMillis)
-    def inTime(x: Long): Boolean = timeCutoff.exists { c =>
-      try fs.getFileStatus(new HPath(leaf, s"_manifest-$x"))
-        .getModificationTime >= c
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-    val kept = vs.filter(x =>
-      x >= h - retainSnapshots || inTime(x) || alsoRetain.contains(x))
-    if (kept.size != vs.size) {
-      val keepGens: Set[String] = kept
-        .flatMap(x => readPointer(fs, new HPath(leaf, s"_manifest-$x"))).toSet
-      // a dir referenced ONLY by expired manifests was committed once
-      // and is plain retention food — deletable now; a dir referenced
-      // by NO manifest at all may be a live cross-process appender's
-      // in-flight (not-yet-committed) generation on this steady leaf,
-      // so it gets the vacuum mtime grace instead of an instant delete
-      // (r18 — the fold GC's documented in-flight protection applied
-      // here too; an aged true orphan falls to the next pass/vacuum)
-      val expiredGens: Set[String] = vs.filterNot(kept.contains)
-        .flatMap(x => readPointer(fs, new HPath(leaf, s"_manifest-$x"))).toSet
+    val anchor = fold.fold(vs.lastOption.getOrElse(0L))(_._1)
+    val kept = retained(fs, leaf, "_manifest-", vs, anchor, retainSnapshots,
+      retainFor, alsoRetain)
+    val expired = vs.filterNot(kept.contains)
+    if (fold.isDefined || expired.nonEmpty) {
+      def entriesOf(xs: Seq[Long]): Set[String] =
+        xs.flatMap(x => readPointer(fs, new HPath(leaf, s"_manifest-$x"))).toSet
+      val keepGens = entriesOf(kept) ++ fold.toSeq.flatMap(_._2)
+      val expiredGens = entriesOf(expired)
       val graceCutoff = System.currentTimeMillis() - DefaultVacuumGraceMs
       ManifestIo.list(fs, leaf)
         .filter(st => st.isDirectory &&
@@ -64,11 +90,19 @@ trait WarehouseRetention { this: Warehouse.type =>
           (expiredGens.contains(st.getPath.getName) ||
             st.getModificationTime < graceCutoff))
         .foreach(st => ManifestIo.delete(fs, st.getPath))
-      vs.filterNot(kept.contains).foreach(x =>
-        ManifestIo.delete(fs, new HPath(leaf, s"_manifest-$x")))
+      expired.foreach(x => ManifestIo.delete(fs, new HPath(leaf, s"_manifest-$x")))
     }
-    h
+    anchor
   }
+
+  /** The version `_current` was swapped to: the NEWEST trail version
+    * whose entry list equals the head's. A crash-stranded trailer above
+    * it is uncommitted, and an older version listing the same entries
+    * (a restore's target) is history. Shared by [[history]]'s
+    * `is_current` and [[vacuum]]'s crashed-trailer rule. */
+  private[operators] def pointerVersion(trail: Seq[(Long, Seq[String])],
+                                        head: Seq[String]): Option[Long] =
+    trail.filter(_._2 == head).lastOption.map(_._1)
 
   /** [[vacuum]] over a partitioned root: the [[manifestLeaves]] walk,
     * one vacuum per leaf (each under its own table lock — leaves are
@@ -142,24 +176,19 @@ trait WarehouseRetention { this: Warehouse.type =>
         // the grace clock: anything modified at/after this instant may
         // be a live cross-process writer's in-flight commit — skip it
         val cutoff = System.currentTimeMillis() - graceMs
-        def aged(p: HPath): Boolean =
-          try fs.getFileStatus(p).getModificationTime < cutoff
-          catch { case _: java.io.FileNotFoundException => false }
+        def aged(p: HPath): Boolean = ManifestIo.mtime(fs, p).exists(_ < cutoff)
         val cur = parseGens(liveHead)
-        val curBody = cur.mkString("\n")
         val versions = manifestVersions(fs, root)
         val bodies = versions
           .map(v => v -> readPointer(fs, new HPath(root, s"_manifest-$v")))
-          .toMap
-        val head = versions.filter(v => bodies(v).mkString("\n") == curBody)
-          .lastOption
+        val head = pointerVersion(bodies, cur)
         val crashed = head.map(h => versions.filter(_ > h)).getOrElse(Seq.empty)
           .filter(v => aged(new HPath(root, s"_manifest-$v")))
         // liveness anchors on every NON-vacuumed manifest: a young
         // trailer (possibly a live writer about to swap the pointer)
         // keeps both itself and the generations it references safe
         val referenced: Set[String] =
-          (versions.filterNot(crashed.contains).flatMap(bodies) ++ cur).toSet
+          (bodies.filterNot(b => crashed.contains(b._1)).flatMap(_._2) ++ cur).toSet
         val orphans = ManifestIo.list(fs, root)
           .filter(st => st.isDirectory &&
             (st.getPath.getName.startsWith(".gen-") ||

@@ -56,15 +56,8 @@ trait WarehouseRoot { this: Warehouse.type =>
     // hold every leaf's rolled-past generations one pass too long and
     // change the documented GC shape. One read of the (small) map
     // files, before the pooled walk.
-    val pinTimeCutoff =
-      retainFor.map(d => System.currentTimeMillis() - d.toMillis)
-    def mapInTimeWindow(v: Long): Boolean = pinTimeCutoff.exists { c =>
-      try fs.getFileStatus(new HPath(root, s"_root-manifest-$v"))
-        .getModificationTime >= c
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-    val mapPins: Map[String, Set[Long]] = rootVersions(fs, root)
-      .filter(v => v >= st.next - retainSnapshots || mapInTimeWindow(v))
+    val mapPins: Map[String, Set[Long]] = retained(fs, root, "_root-manifest-",
+        rootVersions(fs, root), st.next, retainSnapshots, retainFor)
       .flatMap(v => parseRootMap(ManifestIo.readString(fs,
         new HPath(root, s"_root-manifest-$v"))).toSeq)
       .groupMap(_._1)(_._2).map { case (rel, vs) => rel -> vs.toSet }
@@ -140,19 +133,12 @@ trait WarehouseRoot { this: Warehouse.type =>
     // ages maps out, or a steady table's "retain 0" would never
     // reclaim them (the same storage leak the leaf-side
     // [[gcLeafRetention]] closes).
-    val rootHead =
-      if (skipped) rootVersions(fs, root).lastOption.getOrElse(0L) else st.next
-    val rootTimeCutoff =
-      retainFor.map(d => System.currentTimeMillis() - d.toMillis)
-    def rootInTimeWindow(v: Long): Boolean = rootTimeCutoff.exists { c =>
-      try fs.getFileStatus(new HPath(root, s"_root-manifest-$v"))
-        .getModificationTime >= c
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-    rootVersions(fs, root)
-      .filter(v => v < rootHead - retainSnapshots && !rootInTimeWindow(v))
-      .foreach(v =>
-        ManifestIo.delete(fs, new HPath(root, s"_root-manifest-$v")))
+    val rvs = rootVersions(fs, root)
+    val rootHead = if (skipped) rvs.lastOption.getOrElse(0L) else st.next
+    val keptMaps = retained(fs, root, "_root-manifest-", rvs, rootHead,
+      retainSnapshots, retainFor).toSet
+    rvs.filterNot(keptMaps).foreach(v =>
+      ManifestIo.delete(fs, new HPath(root, s"_root-manifest-$v")))
     out.map { case (r, (n, _)) => r -> n }.toMap
   }
 
@@ -250,24 +236,16 @@ trait WarehouseRoot { this: Warehouse.type =>
   def readManifestedPartitionedAt(spark: SparkSession, rootDir: String,
                                   version: Long): DataFrame = {
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
-    val rvs = rootVersions(fs, root)
-    if (rvs.isEmpty)
+    if (rootVersions(fs, root).isEmpty)
       unionLeaves(fs, root, leaf => readManifestedAt(spark, leaf.toString, version))
-    else if (!rvs.contains(version))
-      throw new IllegalArgumentException(
-        s"readManifestedPartitionedAt: root snapshot $version of $rootDir " +
-          s"is not retained (available: ${rvs.mkString(", ")})")
     else {
-      val map = parseRootMap(ManifestIo.readString(fs,
-        new HPath(root, s"_root-manifest-$version")))
+      val map = rootMapAt(fs, root, version, "readManifestedPartitionedAt", rootDir)
       // per-leaf PLAN construction on the bounded pool (r17) — the
       // same O(leaves) sequential driver term unionLeaves shed for
       // live reads applies to the snapshot read's resolution walk
       parCommitLeaves(map.toSeq.sortBy(_._1)) { case (rel, v) =>
         val leaf = new HPath(root, rel)
-        leafKvs(root, leaf).foldLeft(readManifestedAt(spark, leaf.toString, v)) {
-          case (df, (k, vv)) => df.withColumn(k, lit(vv))
-        }
+        withLeafParts(root, leaf, readManifestedAt(spark, leaf.toString, v))
       }.reduceLeft(_.unionByName(_))
     }
   }
@@ -283,12 +261,17 @@ trait WarehouseRoot { this: Warehouse.type =>
   private[operators] def unionLeaves(fs: HFs, root: HPath,
                           read: HPath => DataFrame): DataFrame = {
     val parts = parCommitLeaves(manifestLeaves(fs, root)) { leaf =>
-      leafKvs(root, leaf).foldLeft(read(leaf)) {
-        case (df, (k, v)) => df.withColumn(k, lit(v))
-      }
+      withLeafParts(root, leaf, read(leaf))
     }
     parts.reduceLeft(_.unionByName(_))
   }
+
+  /** `df` with the leaf's `k=v` partition values appended as literal
+    * string columns ([[leafKvs]]) — the one re-attach of every
+    * partitioned read and change feed. */
+  private[operators] def withLeafParts(root: HPath, leaf: HPath,
+                                       df: DataFrame): DataFrame =
+    leafKvs(root, leaf).foldLeft(df) { case (acc, (k, v)) => acc.withColumn(k, lit(v)) }
 
   /** The `k=v` partition (column, value) pairs a leaf's root-relative
     * path carries, unescaped with Spark's own path-escaping inverse
@@ -328,12 +311,11 @@ trait WarehouseRoot { this: Warehouse.type =>
   /** The committed root-manifest versions of a partitioned root,
     * ascending — the root-level [[snapshots]] (empty for a legacy /
     * never-root-committed tree, whose snapshots still resolve by the
-    * per-leaf lockstep rule). */
+    * per-leaf lockstep rule). Resolves the filesystem like
+    * [[snapshots]]: the active session's Hadoop conf, else the default
+    * session's. */
   def rootSnapshots(dir: String): Seq[Long] = {
-    val conf = SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val (fs, root) = ManifestIo.resolve(dir, conf)
+    val (fs, root) = ManifestIo.resolve(dir, sessionHconf())
     rootVersions(fs, root)
   }
 
@@ -343,8 +325,6 @@ trait WarehouseRoot { this: Warehouse.type =>
       .map(_.getPath.getName.stripPrefix("_root-manifest-").toLong)
       .sorted.toSeq
 
-  /** `<leafRelPath>:<leafVersion>` lines of a root manifest (rel paths
-    * are the on-disk escaped form, which never contains a raw ':'). */
   /** Root-relative leaf paths recorded by the LAST root version map —
     * None when the root carries no maps yet. The O(1) committed-leaf
     * inventory a sharded-CDC batch reads instead of probing every
@@ -359,6 +339,8 @@ trait WarehouseRoot { this: Warehouse.type =>
       catch { case _: java.io.FileNotFoundException => None }
     }
 
+  /** `<leafRelPath>:<leafVersion>` lines of a root manifest (rel paths
+    * are the on-disk escaped form, which never contains a raw ':'). */
   private[operators] def parseRootMap(body: String): Map[String, Long] =
     body.trim.split("\n").toSeq.map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#"))
@@ -366,6 +348,21 @@ trait WarehouseRoot { this: Warehouse.type =>
         val i = l.lastIndexOf(':')
         l.substring(0, i) -> l.substring(i + 1).toLong
       }.toMap
+
+  /** THE root version-map lookup of every root-versioned op — the
+    * partitioned snapshot read, change feed, clone and restore:
+    * `_root-manifest-<version>` must exist (else
+    * IllegalArgumentException "`<op>`: root version v of `table` is not
+    * retained", listing what is); returns its leaf → version map. */
+  private[operators] def rootMapAt(fs: HFs, root: HPath, version: Long,
+                                   op: String, table: String): Map[String, Long] = {
+    val p = new HPath(root, s"_root-manifest-$version")
+    if (!ManifestIo.exists(fs, p))
+      throw new IllegalArgumentException(
+        s"$op: root version $version of $table is not retained " +
+          s"(available: ${rootVersions(fs, root).mkString(", ")})")
+    parseRootMap(ManifestIo.readString(fs, p))
+  }
 
   private[operators] def rootManifestBody(map: Map[String, Long],
                                txns: Map[String, Long]): String =
@@ -438,11 +435,8 @@ trait WarehouseRoot { this: Warehouse.type =>
           catch { case _: java.io.FileNotFoundException => None }
         if (owner.isDefined && mine.isDefined && owner.map(ownerLine) == mine) ()
         else {
-          val aged = owner.isEmpty || {
-            try fs.getFileStatus(c).getModificationTime <
-              System.currentTimeMillis() - takeoverGraceMs
-            catch { case _: java.io.FileNotFoundException => true }
-          }
+          val aged = owner.isEmpty || ManifestIo.mtime(fs, c)
+            .forall(_ < System.currentTimeMillis() - takeoverGraceMs)
           if (!aged) refuse(owner.map(ownerLine).getOrElse("?"))
           // takeover moves the corpse aside by RENAME + token verify,
           // never delete+re-claim (r19 ADVICE): two rivals that both

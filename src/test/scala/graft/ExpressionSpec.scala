@@ -12,12 +12,18 @@ class ExpressionSpec extends SparkSpec {
     "北京", "臺北市", "头发", "頭髮", "hello", "", "mixed 中文 text",
     "乾燥 干燥", "こんにちは", "한국")
 
+  // Scala-UDF forms of the three functions: the baseline the native
+  // expressions must agree with.
+  private lazy val toSimplifiedUdf = udf(Zh.toSimplified _)
+  private lazy val toTraditionalUdf = udf(Zh.toTraditional _)
+  private lazy val hasHanUdf = udf(Zh.hasHan _)
+
   test("native zh expressions agree with the UDF baseline on all samples") {
     import spark.implicits._
     val out = samples.toDF("s").select(
-      Zh.contains_han(col("s")).as("h_n"), Zh.contains_han_udf(col("s")).as("h_u"),
-      Zh.zh_to_simplified(col("s")).as("s_n"), Zh.zh_to_simplified_udf(col("s")).as("s_u"),
-      Zh.zh_to_traditional(col("s")).as("t_n"), Zh.zh_to_traditional_udf(col("s")).as("t_u"))
+      Zh.contains_han(col("s")).as("h_n"), hasHanUdf(col("s")).as("h_u"),
+      Zh.zh_to_simplified(col("s")).as("s_n"), toSimplifiedUdf(col("s")).as("s_u"),
+      Zh.zh_to_traditional(col("s")).as("t_n"), toTraditionalUdf(col("s")).as("t_u"))
       .collect()
     out.foreach { r =>
       assert(r.get(0) == r.get(1), s"contains_han mismatch: $r")

@@ -3259,6 +3259,106 @@ class SinkSpec extends SparkSpec {
     assert(e.getMessage.contains("vmax"))
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
+
+  test("rootSnapshots resolves the session's Hadoop conf on a thread with no active session") {
+    val W = graft.operators.Warehouse
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.hdfslike.impl", classOf[HdfsLikeFileSystem].getName)
+    val base = Files.createTempDirectory("graft_rootsnap")
+    spark.range(0, 10).toDF("id").withColumn("p", (col("id") % 2).cast("string"))
+      .write.partitionBy("p").parquet(s"$base/t")
+    W.compactManifestedPartitioned(spark, s"$base/t", targetFileBytes = 1L << 30)
+    // a cached FileSystem instance answers without reading the conf it
+    // is handed: drop it, so the scheme resolves from the call's conf
+    org.apache.hadoop.fs.FileSystem.get(HdfsLikeFileSystem.Uri, conf).close()
+    // a raw consumer thread: no active session, only the default one
+    val seen = new java.util.concurrent.atomic.AtomicReference[Any]()
+    val t = new Thread(() => {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      seen.set(try W.rootSnapshots(s"hdfslike://$base/t")
+        catch { case e: Throwable => e })
+    })
+    t.start(); t.join()
+    assert(seen.get() == Seq(1L), String.valueOf(seen.get()))
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("history marks exactly one version current: a restore's target is history") {
+    val W = graft.operators.Warehouse
+    val base = Files.createTempDirectory("graft_histcur")
+    val dir = s"$base/t"
+    (0L until 3L).foreach(i =>
+      W.appendManifested(spark, dir, spark.range(i * 5, i * 5 + 5).toDF("id")))
+    assert(W.restoreManifested(spark, dir, 1L) == 4L) // v4 lists v1's entries
+    val current = W.history(spark, dir).filter(col("is_current"))
+      .collect().map(_.getAs[Long]("version")).toSeq
+    assert(current == Seq(4L), s"current versions: $current")
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("partitioned change feed: an empty window has the non-empty window's columns in the same order") {
+    val W = graft.operators.Warehouse
+    val base = Files.createTempDirectory("graft_pcdfcols")
+    val root = s"$base/t"
+    spark.range(0, 10).toDF("id").withColumn("p", (col("id") % 2).cast("string"))
+      .withColumn("v", lit("base")).write.partitionBy("p").parquet(root)
+    W.compactManifestedPartitioned(spark, root, targetFileBytes = 1L << 30)
+    W.upsertManifestedPartitioned(spark, root, spark.range(0, 2).toDF("id")
+      .withColumn("p", lit("0")).withColumn("v", lit("upd")), "id")
+    val Seq(r1, r2) = W.rootSnapshots(root)
+    val changed = W.tableChangesPartitioned(spark, root, "id", r1, r2)
+    val empty = W.tableChangesPartitioned(spark, root, "id", r2, r2)
+    assert(changed.count() > 0L && empty.count() == 0L)
+    assert(empty.columns.toSeq == changed.columns.toSeq,
+      s"${empty.columns.mkString(",")} vs ${changed.columns.mkString(",")}")
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
+  test("versioned ops refuse an un-retained snapshot and a garbage-collected generation at every caller") {
+    val W = graft.operators.Warehouse
+    val base = Files.createTempDirectory("graft_refuse")
+    val dir = s"$base/t"
+    (0L until 3L).foreach(i =>                                      // v1..v3
+      W.appendManifested(spark, dir, spark.range(i * 5, i * 5 + 5).toDF("id")))
+    val dst = Iterator.from(1).map(i => s"$base/dst$i")
+    val leafOps: Seq[(String, Long => Any)] = Seq(
+      "readManifestedAt" -> (v => W.readManifestedAt(spark, dir, v).collect()),
+      "restoreManifested" -> (v => W.restoreManifested(spark, dir, v)),
+      "cloneManifested" -> (v => W.cloneManifested(spark, dir, dst.next(), Some(v))),
+      "cloneManifestedShallow" ->
+        (v => W.cloneManifestedShallow(spark, dir, dst.next(), Some(v))),
+      "tableChanges" -> (v => W.tableChanges(spark, dir, "id", 1L, v).collect()))
+    leafOps.foreach { case (name, op) =>
+      val e = intercept[IllegalArgumentException](op(99L))
+      assert(e.getMessage.contains("not retained"), s"$name: ${e.getMessage}")
+    }
+    // v2 stays retained, but the generation it added is deleted
+    // out-of-band: every caller refuses instead of reading partially
+    val gen = java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "_manifest-2"))
+      .trim.split("\n").filter(_.startsWith(".gen-")).last
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, gen))
+    leafOps.foreach { case (name, op) =>
+      val e = intercept[IllegalStateException](op(2L))
+      assert(e.getMessage.contains("garbage-collected"), s"$name: ${e.getMessage}")
+    }
+    val root = s"$base/r"
+    spark.range(0, 10).toDF("id").withColumn("p", (col("id") % 2).cast("string"))
+      .write.partitionBy("p").parquet(root)
+    W.compactManifestedPartitioned(spark, root, targetFileBytes = 1L << 30) // root v1
+    val rootOps: Seq[(String, Long => Any)] = Seq(
+      "readManifestedPartitionedAt" ->
+        (v => W.readManifestedPartitionedAt(spark, root, v).collect()),
+      "tableChangesPartitioned" ->
+        (v => W.tableChangesPartitioned(spark, root, "id", 1L, v).collect()),
+      "cloneManifestedPartitioned" ->
+        (v => W.cloneManifestedPartitioned(spark, root, dst.next(), Some(v))),
+      "restoreManifestedPartitioned" -> (v => W.restoreManifestedPartitioned(spark, root, v)))
+    rootOps.foreach { case (name, op) =>
+      val e = intercept[IllegalArgumentException](op(99L))
+      assert(e.getMessage.contains("not retained"), s"$name: ${e.getMessage}")
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
 }
 
 /** A once-only flag shared by every task of the JVM: a UDF closure is
