@@ -67,7 +67,17 @@ object Bench {
   /** Runs the catalog rows whose names start with one of `prefixes`
     * (every row when none are given) under the protocol above, and
     * returns the summary line and the `bench_detail.json` body. */
-  def run(spark: SparkSession, sfDir: String, prefixes: Seq[String]): (String, String) = {
+  def run(spark: SparkSession, sfDir: String, prefixes: Seq[String]): (String, String) =
+    runRows(spark, sfDir, Harness.select(prefixes))
+
+  /** [[run]] over the given rows. A row that throws in any pass is
+    * FAILED: counted as `failed` in the summary line and the detail
+    * file, marked `"failed":true` on its detail entry (its raw runs
+    * stay there), and left out of `value`, `cold_total` and the
+    * summary's per-query map — a broken query never reads as a fast
+    * one. */
+  private[graft] def runRows(spark: SparkSession, sfDir: String,
+                             rows: Seq[(String, Harness.Query)]): (String, String) = {
     Harness.warmUp(spark, sfDir)
     // EXECUTION order is a seeded shuffle (r12): the r6/r7/r10/r11
     // host-drag episodes each landed on a contiguous span of the fixed
@@ -83,12 +93,13 @@ object Bench {
     // executed position as "pos" so any drag window is locatable in
     // the artifact.
     val orderSeed = 21L
-    val ordered = new scala.util.Random(orderSeed).shuffle(Harness.select(prefixes))
+    val ordered = new scala.util.Random(orderSeed).shuffle(rows)
     val SentinelEvery = 10
     // sentinel entries: (key, runs, pass, pos-within-pass)
     val sentinels = ArrayBuffer[(String, Seq[Double], Int, Int)]()
     val runsOf = mutable.Map[String, ArrayBuffer[Double]]()
     val healthOf = mutable.Map[String, (Int, Double, Int)]()
+    val failed = mutable.Set[String]()
     TempDirs.withTempDir("graft_sentinel") { dir =>
       // the drag sentinel's fixed workload: one 1-row parquet, written
       // once outside the timed region; each sentinel run reads it
@@ -121,7 +132,11 @@ object Bench {
           }
           runsOf.getOrElseUpdate(name, ArrayBuffer[Double]()) += Harness.timed {
             try Harness.sink(fn(spark, sfDir))
-            catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
+            catch {
+              case e: Throwable =>
+                failed += name
+                System.err.println(s"[bench] $name: ${e.getMessage}")
+            }
           }._2
           // Health sentinel (r8 item 2): cache/storage state AFTER each
           // run. A leaked cache/localCheckpoint shows up as monotone
@@ -150,7 +165,7 @@ object Bench {
     def spread(xs: Seq[Double]): Double = xs.max - xs.min
     def f(v: Double): String = Harness.num(v)
     def f1(v: Double): String = Harness.num(v, 1)
-    val timings = results.map(r => (r._1, r._2))
+    val timings = results.filterNot(r => failed(r._1)).map(r => (r._1, r._2))
     val medTotal = timings.map(r => median(r._2)).sum
     val coldTotal = timings.map(_._2.head).sum
     val sfName = new java.io.File(sfDir).getName
@@ -163,7 +178,7 @@ object Bench {
         "],\"cold\":" + f(runs.head) + ",\"med\":" + f(median(runs)) +
         ",\"spread\":" + f(spread(runs)) +
         ",\"prdds\":" + prdds + ",\"storage_mb\":" + f1(storageMb) +
-        ",\"pos\":" + pos + "}"
+        ",\"pos\":" + pos + (if (failed(k)) ",\"failed\":true" else "") + "}"
     }.mkString("{", ",", "}")
     val sent = sentinels.map { case (k, runs, pass, pos) =>
       "\"" + k + "\":{\"runs\":[" + runs.map(f).mkString(",") +
@@ -172,7 +187,7 @@ object Bench {
         ",\"pass\":" + pass + ",\"pos\":" + pos + "}"
     }.mkString("{", ",", "}")
     val detail =
-      s"""{"value":${f(medTotal)},"cold_total":${f(coldTotal)},""" +
+      s"""{"value":${f(medTotal)},"cold_total":${f(coldTotal)},"failed":${failed.size},""" +
       s""""runs_per_query":3,"order_seed":$orderSeed,""" +
       s""""sentinel_every":$SentinelEvery,"sentinels":$sent,""" +
       s""""queries":$full,"sf":"$sfDir"}"""
@@ -198,7 +213,7 @@ object Bench {
       }.mkString("{", ",", "}")
       val om = if (omitted > 0)
         s""","omitted":$omitted,"omitted_max_med":${f(omittedMax)}""" else ""
-      s"""{"metric":"total","value":${f(medTotal)},"unit":"sec","cold_total":${f(coldTotal)},"queries":$qs$om,"sf":"$sfName","detail":"bench_detail.json"}"""
+      s"""{"metric":"total","value":${f(medTotal)},"unit":"sec","cold_total":${f(coldTotal)},"failed":${failed.size},"queries":$qs$om,"sf":"$sfName","detail":"bench_detail.json"}"""
     }
     val byCost = timings.sortBy(r => median(r._2)) // cheapest first
     var drop = 0

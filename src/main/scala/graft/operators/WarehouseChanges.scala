@@ -73,8 +73,8 @@ trait WarehouseChanges { this: Warehouse.type =>
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
     val fromSnap = snapshotAt(fs, root, fromVersion, "tableChanges", dir)
     val toSnap = snapshotAt(fs, root, toVersion, "tableChanges", dir)
-    val from0 = scanGens(spark, root, fromSnap.gens, fromSnap.refs)
-    val to = scanGens(spark, root, toSnap.gens, toSnap.refs)
+    val from0 = scanGens(spark, fs, root, fromSnap.body)
+    val to = scanGens(spark, fs, root, toSnap.body)
     require(from0.columns.contains(key) && to.columns.contains(key),
       s"tableChanges: $dir has no column '$key' " +
         s"(columns: ${to.columns.mkString(", ")})")
@@ -139,19 +139,22 @@ trait WarehouseChanges { this: Warehouse.type =>
         .when(col(s"_t_$key").isNull, "d")
         .when(!samePayload, "u")
     val marked = j.withColumn("_cls", cls).filter(col("_cls").isNotNull)
-    def side(prefix: String, types: Column): DataFrame = marked
-      .filter(types.isNotNull)
+    // one side's rows: class `cls` typed `clsType`, plus the update's
+    // image typed `updType`. `change_type` is a two-way `when` with an
+    // `otherwise` — NON-nullable, like the `lit` of the empty feed and
+    // of a partitioned feed's adopted or dropped leaf, so every feed
+    // shape reports one schema
+    def side(prefix: String, cls: String, clsType: String,
+             updType: String): DataFrame = marked
+      .filter(col("_cls").isin(cls, "u"))
       .select(((key +: payload).map(c => col(s"${prefix}$c").as(c)) :+
-        types.as("change_type")): _*)
+        when(col("_cls") === cls, clsType).otherwise(updType)
+          .as("change_type")): _*)
     // PRE-images: deletes and the update's before-row; POST-images:
     // inserts and the update's after-row. Two passes over one
     // candidate-bounded join — each side stays a straight projection.
-    val pre = side("_f_",
-      when(col("_cls") === "d", "delete")
-        .when(col("_cls") === "u", "update_preimage"))
-    val post = side("_t_",
-      when(col("_cls") === "i", "insert")
-        .when(col("_cls") === "u", "update_postimage"))
+    val pre = side("_f_", "d", "delete", "update_preimage")
+    val post = side("_t_", "i", "insert", "update_postimage")
     pre.unionByName(post)
   }
 

@@ -10,6 +10,24 @@ import org.apache.spark.sql.types.DecimalType
   * and time travel, history. */
 trait WarehouseLeaf { this: Warehouse.type =>
 
+  /** Small-files compaction — the lakehouse maintenance op that keeps a
+    * streamed-into table scannable (thousands of micro-batch shards →
+    * target-sized files): size the target file count from the on-disk
+    * byte total, rewrite into a staging dir, then swap via two ATOMIC
+    * renames. Each rename is atomic, but the PAIR is not: a reader
+    * racing the swap can see the path missing for the instant between
+    * them, and a crash there leaves the data under `.compact_old` —
+    * the table-format snapshot commit (Delta/Iceberg) is precisely
+    * what removes that window; this is its closest plain-filesystem
+    * analogue, and the leftover dirs are self-healing (pre-cleaned on
+    * the next run). Returns the file count actually written (≤ the
+    * computed target — trailing partitions can come up empty).
+    *
+    * Scale: runs per partition-leaf directory (compact each `lang=xx`
+    * independently — embarrassingly parallel, and a leaf is the natural
+    * isolation unit); targetFileBytes ≈ 128 MB matches the scan split
+    * size so one task reads one file. Content is pinned unchanged by
+    * SinkSpec's count + order-free fingerprint. */
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L << 20): Int = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
@@ -163,7 +181,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
       // adopt a plain leaf on first contact: its loose parquet files
       // become generation 0 (one-time migration — run it before any
       // concurrent reader exists, like any format conversion)
-      adoptLoose(fs, root, hconf(spark), always = true)(())
+      adoptLeaf(fs, hconf(spark), root, always = true)
     }) { h =>
     // the manifest may list SEVERAL generations (streaming appends via
     // appendManifested) — compaction folds them all into one. Txn
@@ -197,7 +215,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
     // a shallow clone's `#ref:` entries resolve to the source here
     // and the fold WRITES LOCALLY — compaction doubles as "materialize
     // the clone" (the refs retire with the entries they annotated)
-    val folded = scanGens(spark, root, cur, curRefs)
+    val folded = scanGens(spark, fs, root, h.body)
     (if (zorderBy.nonEmpty) {
       // Morton key over linearly-bucketed dimensions: one small agg
       // for the (min, max) of each column, then a 16-bit scale —
@@ -380,7 +398,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
     leafCommit(fs, root, "appendManifested", attempts = 5, orEmpty = true,
       before = () => {
         fs.mkdirs(root)
-        adoptLoose(fs, root, hconf(spark), always = false)(
+        adoptLeaf(fs, hconf(spark), root, refuseLoose = () =>
           require(genId.forall(_ != 0L),
             s"appendManifested: $dir holds pre-existing loose parquet " +
               "files, adopted as generation 0 — a genId=0 append would " +
@@ -403,76 +421,91 @@ trait WarehouseLeaf { this: Warehouse.type =>
     }
   }
 
-  /** First-contact ADOPTION of a leaf, run under its lock before the
-    * first head read: when nothing is committed, the loose parquet
-    * files become generation 0 (`refuseLoose` runs first when there
-    * are any), committed at the trail head. Adoption keys off the
-    * HEAD, not the pointer file: a pointer-less leaf with a live
-    * `_manifest-*` trail is a crashed pointer swap (see [[headBody]]),
-    * and re-adopting it would drop every post-gen-0 generation.
-    * `always` (compaction) commits an empty `.gen-0` too. Otherwise a
-    * leaf without loose files commits only a populated `.gen-0`: a
-    * crash BETWEEN the adoption move and its pointer commit leaves
-    * gen-0 populated with no pointer — without this, a no-genId
-    * append would number itself 0 and OVERWRITE the adopted data. (A
-    * producer's own stranded genId=0 first batch lands here too,
-    * harmlessly: its retry overwrites generation 0 with identical
-    * deterministic content, pointer unchanged.) */
-  private def adoptLoose(fs: HFs, root: HPath,
-                         conf: org.apache.hadoop.conf.Configuration,
-                         always: Boolean)(refuseLoose: => Unit): Unit =
-    if (headBody(fs, root).isEmpty) {
-      val gen0 = new HPath(root, ".gen-0")
-      val loose = ManifestIo.list(fs, root)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      if (loose.nonEmpty) refuseLoose
-      if (always || loose.nonEmpty || ManifestIo.list(fs, gen0)
-            .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))) {
-        fs.mkdirs(gen0)
-        loose.foreach(st => ManifestIo.rename(fs, st.getPath,
-          new HPath(gen0, st.getPath.getName)))
-        commitManifest(fs, root, new HPath(root, "_current"), Seq(".gen-0"),
-          headVersion(fs, root), stats = collectStats(fs, conf, root, ".gen-0"))
-      }
-    }
-
-  /** Scan a committed generation list: the union of the data
-    * generations with any `.del-` tombstones applied in ID ORDER — a
-    * tombstoned key disappears from every generation committed BEFORE
-    * the tombstone and SURVIVES in any committed after (re-insert
-    * semantics: delete then append genuinely resurrects the key),
-    * exactly the merge-on-read contract of Delta deletion vectors /
-    * Iceberg equality deletes, keyed rather than positional.
+  /** THE leaf scan planner — every read of a committed manifest body
+    * (the live read, time travel, the change feed's two images, the
+    * compaction fold and the data-skipping reads) plans here: the
+    * union of the data generations with any `.del-` tombstones applied
+    * in ID ORDER — a tombstoned key disappears from every generation
+    * committed BEFORE the tombstone and SURVIVES in any committed after
+    * (re-insert semantics: delete then append genuinely resurrects the
+    * key), exactly the merge-on-read contract of Delta deletion vectors
+    * / Iceberg equality deletes, keyed rather than positional.
+    * Shallow-clone `#ref:` entries resolve to their recorded source
+    * directories.
     *
-    * Fast path: no tombstones in the list (the steady state —
-    * compaction retires them) reads as ONE multi-path mergeSchema
-    * scan, unchanged from pre-delete rounds. With tombstones, each
-    * generation is read tagged with its id (union-by-name with
-    * null-fill — the same additive-evolution semantics mergeSchema
-    * gives) and the suppression is one left_anti join against the
-    * tombstone keys with the `tid > gid` ordering predicate; the
-    * tombstone side is delete-sized (small), so at scale this is a
-    * broadcast anti join over the scan, not a second shuffle. */
-  private[operators] def scanGens(spark: SparkSession, root: HPath,
-                       gens: Seq[String],
-                       refs: Map[String, String] = Map.empty): DataFrame = {
+    * Without `keep` a generation is its DIRECTORY (one path; Spark
+    * lists it). Fast path: no tombstones in the list (the steady state
+    * — compaction retires them) reads as ONE multi-path mergeSchema
+    * scan. With tombstones, each generation is read tagged with its id
+    * (union-by-name with null-fill — the same additive-evolution
+    * semantics mergeSchema gives) and the suppression is one left_anti
+    * join against the tombstone keys with the `tid > gid` ordering
+    * predicate; the tombstone side is delete-sized (small), so at scale
+    * this is a broadcast anti join over the scan, not a second shuffle.
+    *
+    * With `keep` (the data-skipping reads) a generation is the FILES
+    * `keep(generation, file)` admits, planned from the manifest's
+    * `#file:` inventory (r16) — zero directory lists; a legacy
+    * generation without `#file:` lines falls back to one list, judged
+    * per generation so mixed trails stay correct. A generation whose
+    * files ALL pruned still contributes its SCHEMA (one footer via a
+    * limit(0) branch), so the pruned read stays semantically identical
+    * to the unpruned one: columns added by that generation survive
+    * (null-filled), and a retyped column still refuses through
+    * [[requireAdditiveOnly]]. When every file pruned, the unpruned
+    * plan supplies the schema; the caller's predicate returns zero rows
+    * through it. Tombstones are always read in full — delete-sized. */
+  private[operators] def scanGens(spark: SparkSession, fs: HFs, root: HPath,
+                                  body: String,
+                                  keep: Option[(String, String) => Boolean] = None): DataFrame = {
+    val gens = parseGens(body)
+    val refs = parseRefs(body)
     val (dels, datas) = gens.partition(_.startsWith(".del-"))
     // not producible by current writers (every commit path lists at
     // least one data generation), but a hand-edited or future-writer
     // manifest must fail loudly here, not as reduceLeft-on-empty
     require(datas.nonEmpty,
       s"scanGens: manifest lists only tombstones: ${gens.mkString(", ")}")
-    if (dels.isEmpty)
-      spark.read.option("mergeSchema", "true")
-        .parquet(datas.map(g => entryPath(root, refs, g).toString): _*)
-    else {
-      val tagged = datas.map(g =>
-        g -> spark.read.parquet(entryPath(root, refs, g).toString))
+    def read(paths: Seq[HPath]): DataFrame = spark.read.parquet(paths.map(_.toString): _*)
+    def union(tagged: Seq[(String, DataFrame)]): DataFrame = {
       requireAdditiveOnly(tagged)
       val data = tagged.map { case (g, df) =>
         df.withColumn("_gid", lit(entryId(g)))
       }.reduceLeft(_.unionByName(_, allowMissingColumns = true))
-      applyTombstones(spark, root, dels, data, refs)
+      if (dels.isEmpty) data.drop("_gid")
+      else applyTombstones(spark, root, dels, data, refs)
+    }
+    keep match {
+      case None =>
+        if (dels.isEmpty) spark.read.option("mergeSchema", "true")
+          .parquet(datas.map(g => entryPath(root, refs, g).toString): _*)
+        else union(datas.map(g => g -> read(Seq(entryPath(root, refs, g)))))
+      case Some(k) =>
+        val inventory: Map[String, Seq[String]] =
+          parseStats(body).filter(_.startsWith("#file:"))
+            .map(_.stripPrefix("#file:")).map { ef =>
+              val slash = ef.indexOf('/')
+              ef.take(slash) -> ef.drop(slash + 1)
+            }.groupBy(_._1).map { case (g, xs) => g -> xs.map(_._2) }
+        // (generation, all files, files `keep` admits)
+        val selected: Seq[(String, Seq[HPath], Seq[HPath])] = datas.map { g =>
+          val d = entryPath(root, refs, g)
+          val all = inventory.get(g) match {
+            case Some(names) => names.map(n => new HPath(d, n))
+            case None => ManifestIo.list(fs, d)
+              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+              .map(_.getPath).toSeq
+          }
+          (g, all, all.filter(f => k(g, f.getName)))
+        }
+        if (selected.forall(_._3.isEmpty)) scanGens(spark, fs, root, body)
+        else if (dels.isEmpty && selected.forall(s => s._3.nonEmpty || s._2.isEmpty))
+          spark.read.option("mergeSchema", "true")
+            .parquet(selected.flatMap(_._3).map(_.toString): _*)
+        else union(selected.collect {
+          case (g, _, kept) if kept.nonEmpty => g -> read(kept)
+          case (g, all, _) if all.nonEmpty => g -> read(all.take(1)).limit(0)
+        })
     }
   }
 
@@ -503,11 +536,10 @@ trait WarehouseLeaf { this: Warehouse.type =>
     }
   }
 
-  /** Apply `.del-` tombstones to `_gid`-tagged data rows — the shared
-    * merge-on-read suppression of [[scanGens]] and the pruned
-    * [[readManifestedRange]] path: one left_anti join against the
-    * (delete-sized, broadcast) tombstone keys with the `tid > gid`
-    * ordering predicate. Every tombstone carries ONE column whose NAME
+  /** Apply `.del-` tombstones to `_gid`-tagged data rows — the
+    * merge-on-read suppression of [[scanGens]]: one left_anti join
+    * against the (delete-sized, broadcast) tombstone keys with the
+    * `tid > gid` ordering predicate. Every tombstone carries ONE column whose NAME
     * is the table's key column ([[deleteManifested]] enforces it at
     * write time). */
   private[operators] def applyTombstones(spark: SparkSession, root: HPath,
@@ -544,8 +576,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * they are delete-sized — and apply exactly as in [[scanGens]]. */
   def readManifestedRange(spark: SparkSession, dir: String, column: String,
                           lower: Any, upper: Any): DataFrame =
-    readManifestedSkipping(spark, dir, "readManifestedRange",
-      col(column) >= lit(lower) && col(column) <= lit(upper)) { meta =>
+    readHead(spark, dir, "readManifestedRange", Some { meta =>
       val ranges: Map[(String, String), (String, String, String)] =
         meta.filter(_.startsWith("#stats:")).flatMap { l =>
           // #stats:<entry>/<file>:<col>:<kind>:<min>:<max>
@@ -561,7 +592,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
         case Some((kind, mn, mx)) => statsOverlap(kind, mn, mx, lower, upper)
         case None => true
       }
-    }
+    }).filter(col(column) >= lit(lower) && col(column) <= lit(upper))
 
   /** NULL-SKIPPING READ (r20): [[readManifested]] restricted to
     * `column IS NULL` (`wantNull = true`) or `IS NOT NULL`, opening
@@ -575,8 +606,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * — a file without a recorded null count is always read. */
   def readManifestedNull(spark: SparkSession, dir: String, column: String,
                          wantNull: Boolean): DataFrame =
-    readManifestedSkipping(spark, dir, "readManifestedNull",
-      if (wantNull) col(column).isNull else col(column).isNotNull) { meta =>
+    readHead(spark, dir, "readManifestedNull", Some { meta =>
       val nulls: Map[(String, String), (Long, Long)] =
         meta.filter(_.startsWith("#nulls:")).flatMap { l =>
           // #nulls:<entry>/<file>:<col>:<nullCount>:<numRows>
@@ -593,93 +623,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
         case Some((nn, nr)) => if (wantNull) nn > 0L else nn < nr
         case None => true
       }
-    }
-
-  /** The shared manifest-metadata pruned scan behind
-    * [[readManifestedRange]] and [[readManifestedNull]]: plan the
-    * scan from the manifest's `#file:` inventory, keep only the files
-    * `keepOf(meta)` admits (no metadata line ⇒ keep — conservative by
-    * construction), re-apply `pred` on the survivors so pruning can
-    * only cut IO, never change the answer. */
-  private def readManifestedSkipping(spark: SparkSession, dir: String,
-      op: String, pred: Column)(
-      keepOf: Seq[String] => (String, String) => Boolean): DataFrame = {
-    val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    def resolveDf(): DataFrame = {
-      val body = headBody(fs, root).getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"$op: $dir has no committed table"))
-      val gens = parseGens(body)
-      val meta = parseStats(body)
-      val refs = parseRefs(body)
-      val keep = keepOf(meta)
-      // the manifest as file INVENTORY (r16): a generation with
-      // `#file:` lines plans from them — zero directory lists on the
-      // read path; a legacy generation (no lines) falls back to one
-      // list. Inventory presence is judged per generation, so mixed
-      // trails (old generations carried into new manifests) stay
-      // correct.
-      val inventory: Map[String, Seq[String]] =
-        meta.filter(_.startsWith("#file:"))
-          .map(_.stripPrefix("#file:")).map { ef =>
-            val slash = ef.indexOf('/')
-            ef.take(slash) -> ef.drop(slash + 1)
-          }.groupBy(_._1).map { case (g, xs) => g -> xs.map(_._2) }
-      def filesOf(g: String): Seq[HPath] = inventory.get(g) match {
-        case Some(names) =>
-          val d = entryPath(root, refs, g)
-          names.map(n => new HPath(d, n))
-        case None => ManifestIo.list(fs, entryPath(root, refs, g))
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath).toSeq
-      }
-      val (dels, datas) = gens.partition(_.startsWith(".del-"))
-      require(datas.nonEmpty,
-        s"$op: manifest lists only tombstones: $gens")
-      // (generation, all files, files surviving the stats prune)
-      val selected: Seq[(String, Seq[HPath], Seq[HPath])] = datas.map { g =>
-        val all = filesOf(g)
-        (g, all, all.filter(f => keep(g, f.getName)))
-      }
-      val live = selected.filter(_._3.nonEmpty)
-      // a generation whose files ALL pruned still contributes its
-      // SCHEMA (one footer via a limit(0) branch): the pruned read
-      // must stay semantically identical to readManifested().filter()
-      // — columns added by that generation survive (null-filled), and
-      // a retyped column still refuses loudly instead of escaping
-      // requireAdditiveOnly through the prune
-      val prunedOut = selected.filter(s => s._3.isEmpty && s._2.nonEmpty)
-      if (live.isEmpty)
-        // every file excluded — plan the ordinary scan only for its
-        // schema; the predicate returns zero rows through it
-        scanGens(spark, root, gens, refs).filter(pred)
-      else if (dels.isEmpty && prunedOut.isEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(live.flatMap(_._3).map(_.toString): _*)
-          .filter(pred)
-      else {
-        val tagged = selected.collect {
-          case (g, _, fl) if fl.nonEmpty =>
-            g -> spark.read.parquet(fl.map(_.toString): _*)
-          case (g, all, _) if all.nonEmpty =>
-            g -> spark.read.parquet(all.head.toString).limit(0)
-        }
-        requireAdditiveOnly(tagged)
-        val data = tagged.map { case (g, df) =>
-          df.withColumn("_gid", lit(entryId(g)))
-        }.reduceLeft(_.unionByName(_, allowMissingColumns = true))
-        val undeleted =
-          if (dels.isEmpty) data.drop("_gid")
-          else applyTombstones(spark, root, dels, data, refs)
-        undeleted.filter(pred)
-      }
-    }
-    try resolveDf()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException => resolveDf()
-      case _: java.io.FileNotFoundException => resolveDf()
-    }
-  }
+    }).filter(if (wantNull) col(column).isNull else col(column).isNotNull)
 
   /** ROW-LEVEL DELETE as a tombstone commit — the merge-on-read
     * delete (Delta deletion vectors / Iceberg equality-delete files,
@@ -768,7 +712,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
     // one taken after applies the tombstone — deletes are versioned
     // like any commit
     val snap = snapshotAt(fs, root, version, "readManifestedAt", dir)
-    scanGens(spark, root, snap.gens, snap.refs)
+    scanGens(spark, fs, root, snap.body)
   }
 
   // The pointer swap itself — synced tmp write, atomic rename, parent
@@ -792,38 +736,37 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * its generation is GC'd two commits later fails at the ACTION, not
     * here — run such actions through [[withManifested]], which retries
     * that class too. */
-  def readManifested(spark: SparkSession, dir: String): DataFrame = {
+  def readManifested(spark: SparkSession, dir: String): DataFrame =
+    readHead(spark, dir, "readManifested")
+
+  /** Resolve a leaf's committed head and plan its scan ([[scanGens]],
+    * pruned by `keepOf(the head's metadata lines)` when given) — the
+    * head resolution of every live read. "No committed table" is a
+    * MOMENTOUS conclusion for a reader — downstream it means
+    * bootstrap/empty, so a transient resolution failure (an fd-starved
+    * stat reading as absence, an object store's transient list
+    * inconsistency) must not reach it on first sight: verify once
+    * after a short pause before concluding (r19; costs 50 ms only on
+    * the genuinely-nothing-there path). One retry covers BOTH
+    * stale-resolve shapes: a GC'd generation surfaces as
+    * AnalysisException from the eager listing, and a pointer
+    * mid-replace on a scheme whose rename refuses an existing
+    * destination (the HDFS delete+rename fallback — see
+    * [[ManifestIo.replace]]) surfaces as FileNotFoundException from the
+    * `_current` open itself. Direct callers (CdcApply, Quality) get the
+    * documented one-retry contract without withManifested. */
+  private def readHead(spark: SparkSession, dir: String, op: String,
+                       keepOf: Option[Seq[String] => (String, String) => Boolean] =
+                         None): DataFrame = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
     def resolveDf(): DataFrame = {
-      // "no committed table" is a MOMENTOUS conclusion for a reader —
-      // downstream it means bootstrap/empty, so a transient resolution
-      // failure (an fd-starved stat reading as absence, an object
-      // store's transient list inconsistency) must not reach it on
-      // first sight: verify once after a short pause before concluding
-      // (r19; costs 50 ms only on the genuinely-nothing-there path)
       val head = headBody(fs, root).orElse {
         Thread.sleep(50)
         headBody(fs, root)
-      }
-      val gens = parseGens(head.getOrElse(
-        throw new java.io.FileNotFoundException(
-          s"readManifested: $dir has no committed table")))
-      // scanGens: additive schema evolution carries (mergeSchema /
-      // union-by-name null-fill — cost is one footer read per file at
-      // planning, paid only while the manifest lists >1 generation),
-      // and `.del-` tombstones apply in id order (merge-on-read; the
-      // tombstone-free steady state is the same single multi-path
-      // scan as always). Shallow-clone `#ref:` entries resolve to
-      // their recorded source directories.
-      scanGens(spark, root, gens, head.map(parseRefs).getOrElse(Map.empty))
+      }.getOrElse(throw new java.io.FileNotFoundException(
+        s"$op: $dir has no committed table"))
+      scanGens(spark, fs, root, head, keepOf.map(_(parseStats(head))))
     }
-    // one retry covers BOTH stale-resolve shapes: a GC'd generation
-    // surfaces as AnalysisException from the eager listing, and a
-    // pointer mid-replace on a scheme whose rename refuses an existing
-    // destination (the HDFS delete+rename fallback — see
-    // [[ManifestIo.replace]]) surfaces as FileNotFoundException from
-    // the `_current` open itself. Direct callers (CdcApply, Quality)
-    // get the documented one-retry contract without withManifested.
     try resolveDf()
     catch {
       case _: org.apache.spark.sql.AnalysisException => resolveDf()

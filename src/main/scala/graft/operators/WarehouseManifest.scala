@@ -11,24 +11,6 @@ import org.apache.spark.sql.types.DecimalType
   * op runs on ([[leafCommit]]), and the bounded commit pool. */
 trait WarehouseManifest { this: Warehouse.type =>
 
-  /** Small-files compaction — the lakehouse maintenance op that keeps a
-    * streamed-into table scannable (thousands of micro-batch shards →
-    * target-sized files): size the target file count from the on-disk
-    * byte total, rewrite into a staging dir, then swap via two ATOMIC
-    * renames. Each rename is atomic, but the PAIR is not: a reader
-    * racing the swap can see the path missing for the instant between
-    * them, and a crash there leaves the data under `.compact_old` —
-    * the table-format snapshot commit (Delta/Iceberg) is precisely
-    * what removes that window; this is its closest plain-filesystem
-    * analogue, and the leftover dirs are self-healing (pre-cleaned on
-    * the next run). Returns the file count actually written (≤ the
-    * computed target — trailing partitions can come up empty).
-    *
-    * Scale: runs per partition-leaf directory (compact each `lang=xx`
-    * independently — embarrassingly parallel, and a leaf is the natural
-    * isolation unit); targetFileBytes ≈ 128 MB matches the scan split
-    * size so one task reads one file. Content is pinned unchanged by
-    * SinkSpec's count + order-free fingerprint. */
   // ------------------------------------------------------ filesystem seam
   // All table IO below runs through org.apache.hadoop.fs via
   // ManifestIo (r13): the SAME commit code serves file:, hdfs:, and
@@ -155,18 +137,9 @@ trait WarehouseManifest { this: Warehouse.type =>
         .find(_.trim.nonEmpty))
   }
 
-  /** Does the leaf hold a committed table at all? The [[headBody]]
-    * predicate exposed for the streaming bootstrap (CdcApply): a leaf
-    * whose `_current` is missing but whose `_manifest-*` trail is not
-    * is a CRASHED POINTER SWAP, not a missing leaf — re-bootstrapping
-    * it would commit an empty `.gen-0` over the rolled-forward head
-    * and silently reset that shard's state. */
-  private[graft] def hasCommittedHead(fs: HFs, root: HPath): Boolean =
-    headBody(fs, root).isDefined
-
   /** The head version of the committed `_manifest-*` trail (0 when
-    * nothing committed) — what a direct [[commitManifest]] caller
-    * anchors its CAS on. */
+    * nothing committed) — what [[leafCommit]] and first-contact
+    * [[adoptLeaf]] anchor their CAS on. */
   private[graft] def headVersion(fs: HFs, root: HPath): Long =
     manifestVersions(fs, root).lastOption.getOrElse(0L)
 
@@ -552,6 +525,72 @@ trait WarehouseManifest { this: Warehouse.type =>
     }
   }
 
+  /** THE first commit of a leaf — first-contact adoption (append,
+    * compaction), partition adoption (the partitioned MERGE) and the
+    * sharded CDC bootstrap, the last two through [[createLeaves]].
+    * Under the leaf's lock, when the re-probed head is empty: loose
+    * parquet files move into `.gen-0` (`refuseLoose` runs first when
+    * there are any), a `.gen-0` holding no data gets the schema
+    * `template` file, and version 1 commits with `.gen-0`'s
+    * `#file:`/stats lines plus the `inherit`ed `#constraint:` lines (a
+    * reader never observes a constrained root with an unconstrained
+    * partition).
+    *
+    * Adopt, never reset: a headless leaf is not always empty. Loose
+    * files are a plain write awaiting first contact, and a populated
+    * `.gen-0` with no commit is a crashed prior adoption's half-moved
+    * state; both become generation 0 (the move is idempotent — a
+    * replay moves the remainder and converges) and keep their data.
+    * The probe is the committed HEAD, not the pointer file: a
+    * pointer-less leaf with a live `_manifest-*` trail is a crashed
+    * pointer swap (see [[headBody]]), and re-adopting it would drop
+    * every post-gen-0 generation. Without a template, a leaf with no
+    * data at all commits only when `always` (compaction commits an
+    * empty `.gen-0`); otherwise a no-genId append would number itself
+    * 0 and overwrite adopted data.
+    *
+    * The CAS anchor is the one rule the callers differ on.
+    * `sharedCreate` (the pooled root creations): rival creators race
+    * to the same missing leaf and the probe-to-commit window spans the
+    * template's Spark job, so the CAS anchors at version 0 — any
+    * interim commit owns `_manifest-1` and this creation no-ops
+    * instead of claiming `_manifest-(head+1)` over it. Otherwise (first
+    * contact inside a writer's own [[leafCommit]]) the CAS anchors on
+    * the trail head, so a leaf whose trail holds only blank claims
+    * ([[headBody]]'s r19 window) commits past them, and a lost race
+    * propagates. */
+  private[operators] def adoptLeaf(fs: HFs, conf: org.apache.hadoop.conf.Configuration,
+                                   leaf: HPath, template: Option[HPath] = None,
+                                   inherit: Seq[String] = Nil,
+                                   always: Boolean = false,
+                                   sharedCreate: Boolean = false,
+                                   refuseLoose: () => Unit = () => ()): Unit =
+    withTableLock(leaf) {
+      if (headBody(fs, leaf).isEmpty) {
+        def parquet(d: HPath) = ManifestIo.list(fs, d)
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        val gen0 = new HPath(leaf, ".gen-0")
+        val loose = parquet(leaf)
+        if (loose.nonEmpty) refuseLoose()
+        val hasData = loose.nonEmpty || parquet(gen0).nonEmpty
+        if (hasData || always || template.isDefined) {
+          fs.mkdirs(gen0)
+          loose.foreach(st => ManifestIo.rename(fs, st.getPath,
+            new HPath(gen0, st.getPath.getName)))
+          if (!hasData) template.foreach(t => org.apache.hadoop.fs.FileUtil.copy(
+            fs, t, fs, new HPath(gen0, t.getName), false, conf))
+          try {
+            commitManifest(fs, leaf, new HPath(leaf, "_current"), Seq(".gen-0"),
+              if (sharedCreate) 0L else headVersion(fs, leaf),
+              stats = collectStats(fs, conf, leaf, ".gen-0") ++ inherit)
+            ()
+          } catch {
+            case _: java.util.ConcurrentModificationException if sharedCreate => ()
+          }
+        }
+      }
+    }
+
   /** A retained leaf snapshot as [[snapshotAt]] resolved it: the
     * `_manifest-<version>` body with its entries, `#ref:` references
     * and carried metadata lines, and [[entryDir]], where an entry's
@@ -675,7 +714,7 @@ trait WarehouseManifest { this: Warehouse.type =>
     * Failures propagate with their original exception (CME from a
     * lost CAS included); the chunk boundary bounds how much work can
     * follow a failure. */
-  private[graft] def parCommitLeaves[A, B](xs: Seq[A], parallelism: Int = 16,
+  private[operators] def parCommitLeaves[A, B](xs: Seq[A], parallelism: Int = 16,
                                     chunk: Int = 64,
                                     refresh: () => Unit = () => ())(f: A => B): Seq[B] =
     if (xs.size <= 1) xs.map(f)

@@ -142,9 +142,11 @@ trait WarehouseRetention { this: Warehouse.type =>
         v <= completedHead || st.getModificationTime < cutoff
       }.map(_.getPath).toSeq
     claims.foreach(p => ManifestIo.delete(fs, p))
-    // staging debris of a crashed partitioned MERGE/DELETE/adoption
-    // (the dirs a completed op deletes itself) — aged only, the same
-    // grace
+    // staging debris of a crashed partitioned MERGE/DELETE/leaf
+    // creation (the dirs a completed op deletes itself) — aged only,
+    // the same grace. `.bootstrap-template` is the CDC bootstrap's
+    // template name before it moved to [[createLeaves]]'
+    // `.adopt-template-` prefix: older runs still leave it behind
     ManifestIo.list(fs, root)
       .filter(st => st.isDirectory &&
         (st.getPath.getName.startsWith(".upsert-stage-") ||

@@ -332,7 +332,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     * inventory: the log IS the listing). A map GC'd between the
     * version list and the read (a concurrent compaction's retention)
     * degrades to None — the caller's per-leaf probe fallback. */
-  private[graft] def lastRootMapRels(fs: HFs, root: HPath): Option[Set[String]] =
+  private[operators] def lastRootMapRels(fs: HFs, root: HPath): Option[Set[String]] =
     rootVersions(fs, root).lastOption.flatMap { v =>
       try Some(parseRootMap(ManifestIo.readString(fs,
         new HPath(root, s"_root-manifest-$v"))).keySet)
@@ -628,6 +628,51 @@ trait WarehouseRoot { this: Warehouse.type =>
     }
   }
 
+  /** THE pooled leaf creation of the root writers — the partitioned
+    * MERGE's partition adoption and the sharded CDC bootstrap: probe
+    * which `leaves` hold no committed head, write ONE schema-bearing
+    * empty template from `schema` (`limit(0).repartition(1)` — limit(0)
+    * alone has zero partitions and writes no part file), then
+    * [[adoptLeaf]] each missing leaf on the bounded pool with the
+    * caller's claim heartbeat `refresh` between chunks; created leaves
+    * inherit `inherit` (the root's `#constraint:` lines). One Spark job
+    * and O(missing) driver FS calls — creation stays cheap at
+    * thousands of shards. Returns the leaves found missing, in order.
+    *
+    * The probe is the committed HEAD ([[headBody]]), never the
+    * directory or `_current`: a crashed prior creation leaves a
+    * directory without a commit (re-creating it must converge), and a
+    * crashed pointer swap leaves a live trail without `_current`
+    * (re-creating it would reset the leaf). With `mapped`, a leaf the
+    * root's last version map records counts as committed — ONE map
+    * read replaces a head probe per leaf (r17; the sharded CDC's
+    * per-batch fast path at thousands of shards). A leaf created by a
+    * crashed run is in no map yet, so it is still probed. */
+  private[graft] def createLeaves(spark: SparkSession, fs: HFs, root: HPath,
+                                  leaves: Seq[HPath], schema: DataFrame,
+                                  inherit: Seq[String] = Nil,
+                                  mapped: Boolean = false,
+                                  refresh: () => Unit = () => ()): Seq[HPath] = {
+    val inMap = if (mapped) lastRootMapRels(fs, root).getOrElse(Set.empty[String])
+      else Set.empty[String]
+    val missing = parCommitLeaves(leaves.filterNot(l => inMap.contains(relPath(root, l))),
+      refresh = refresh)(l => l -> headBody(fs, l).isEmpty)
+      .collect { case (l, true) => l }
+    if (missing.nonEmpty) {
+      val tmpl = new HPath(root,
+        s".adopt-template-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+      schema.limit(0).repartition(1).write.mode("overwrite").parquet(tmpl.toString)
+      val part = ManifestIo.list(fs, tmpl)
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .head.getPath
+      parCommitLeaves(missing, refresh = refresh) { leaf =>
+        adoptLeaf(fs, hconf(spark), leaf, Some(part), inherit, sharedCreate = true)
+      }
+      ManifestIo.delete(fs, tmpl)
+    }
+    missing
+  }
+
   // ------------------------------- partitioned row-level ops (r14/r16)
   // The row-level commits above are leaf-scoped; a 100 TB table is a
   // PARTITIONED root, and "delete these keys" must not require hand-
@@ -713,9 +758,9 @@ trait WarehouseRoot { this: Warehouse.type =>
     * A source partition value with NO existing leaf CREATES it (r17 —
     * partition adoption, what a real MERGE does when a new `lang=`
     * value arrives in a CDC feed): the missing leaves are
-    * bootstrapped from one schema-bearing empty template (one Spark
-    * job total, then pure-FS copy + v1 commit per leaf on the bounded
-    * pool) UNDER THE SAME ROOT CLAIM as the data commits, so creation
+    * created by [[createLeaves]] (one Spark job total, then pure-FS
+    * adoption + v1 commit per leaf on the bounded pool) UNDER THE SAME
+    * ROOT CLAIM as the data commits, so creation
     * and first data land in ONE root version — a reader at T-1 never
     * sees the partition, a reader at T sees it with its rows. Two
     * concurrent writers introducing the same new partition serialize
@@ -827,79 +872,20 @@ trait WarehouseRoot { this: Warehouse.type =>
             .ExternalCatalogUtils.escapePathName(v)
         new HPath(acc, s"$k=$dir")
       }
-    // adoption probe: a combo needs creation when its leaf holds NO
-    // COMMITTED HEAD — head-probed, not directory-probed, because a
-    // crashed prior adoption leaves the directory without a commit
-    // and re-creating it must converge (the CDC-bootstrap predicate).
-    // O(touched) pointer reads, on the pool.
-    val toCreate = parCommitLeaves(combos) { c =>
-      c -> hasCommittedHead(fs, leafFor(c))
-    }.collect { case (c, committed) if !committed => c }
     val stage = new HPath(root,
       s".upsert-stage-${ProcessHandle.current().pid()}-${System.nanoTime()}")
     val (st, out) = rootTransition(fs, root, leaves.map(_._1), txn,
         "upsertManifestedPartitioned") { st =>
-      // PARTITION ADOPTION (r17): create the missing leaves under THIS
-      // claim — one schema-bearing empty template (the leaf schema =
-      // source minus partition columns; limit(0).repartition(1) writes
-      // exactly one empty part file carrying it), then per missing leaf
-      // a pure-FS copy + a v1 commit CAS-ANCHORED AT 0, re-probing the
-      // head first: any interim commit (our crashed prior attempt) owns
-      // `_manifest-1` and the creation no-ops instead of resetting the
-      // leaf. Creation and the slice's data commit land in ONE root
-      // version below.
-      val adopted: Seq[(HPath, Seq[(String, String)])] =
-        if (toCreate.isEmpty) Seq.empty
-        else {
-          val tmpl = new HPath(root,
-            s".adopt-template-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-          cut.limit(0).drop(pcols: _*).repartition(1).write
-            .mode("overwrite").parquet(tmpl.toString)
-          val part = ManifestIo.list(fs, tmpl)
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .head.getPath
-          val created = parCommitLeaves(toCreate,
-            refresh = () => refreshClaim(fs, st, root)) { combo =>
-            val leaf = leafFor(combo)
-            if (!hasCommittedHead(fs, leaf)) {
-              val gen0 = new HPath(leaf, ".gen-0")
-              fs.mkdirs(gen0)
-              // ADOPT, never reset (r18): a headless leaf is not always
-              // empty — loose parquet files are a partitioned write
-              // awaiting first contact (the [[appendManifested]]/
-              // [[compactManifested]] adoption contract), and a
-              // non-empty `.gen-0` is a crashed prior adoption's
-              // half-moved state. Both become generation 0: loose files
-              // rename INTO `.gen-0` (idempotent — a replay moves the
-              // remainder and converges), existing `.gen-0` contents are
-              // KEPT; only a leaf with no data at all gets the empty
-              // schema template. (r17 deleted `.gen-0` and committed the
-              // template unconditionally — silent data loss on exactly
-              // the crashed-adoption state the head probe exists to
-              // converge.)
-              ManifestIo.list(fs, leaf)
-                .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-                .foreach(s => ManifestIo.rename(fs, s.getPath,
-                  new HPath(gen0, s.getPath.getName)))
-              val hasData = ManifestIo.list(fs, gen0)
-                .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-              if (!hasData)
-                org.apache.hadoop.fs.FileUtil.copy(fs, part, fs,
-                  new HPath(gen0, part.getName), false, hconf(spark))
-              // the adopted leaf INHERITS the root's constraint set in
-              // its very first commit (r20): a reader never observes a
-              // constrained root with an unconstrained partition
-              try { commitManifest(fs, leaf, new HPath(leaf, "_current"),
-                Seq(".gen-0"), 0L,
-                stats = collectStats(fs, hconf(spark), leaf, ".gen-0") ++
-                  consInherit); () }
-              catch { case _: java.util.ConcurrentModificationException => () }
-            }
-            leaf -> pcols.zip(combo)
-          }
-          ManifestIo.delete(fs, tmpl)
-          created
-        }
+      // PARTITION ADOPTION (r17): the combos whose leaf holds no
+      // committed head are created under THIS claim ([[createLeaves]] —
+      // the schema template is the source minus the partition columns,
+      // and each created leaf inherits the root's constraint set), so
+      // creation and the slice's data commit land in ONE root version
+      val byLeaf = combos.map(c => leafFor(c) -> pcols.zip(c))
+      val created = createLeaves(spark, fs, root, byLeaf.map(_._1),
+        cut.drop(pcols: _*), consInherit,
+        refresh = () => refreshClaim(fs, st, root)).toSet
+      val adopted = byLeaf.filter(b => created.contains(b._1))
       // the commit walk covers walked + adopted leaves exactly once (a
       // half-created directory appears in both — the adopted entry wins)
       val allLeaves = {

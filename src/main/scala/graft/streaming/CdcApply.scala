@@ -39,6 +39,15 @@ object CdcApply {
       .groupBy(col("user_id"))
       .agg(max(col("s")).as("s"))
 
+  /** The LWW merge of every state mechanism: `cur` state rows against
+    * the batch's `lastPerKey` rows, full-outer on the key, the greater
+    * struct winning per key. */
+  private def lww(cur: DataFrame, updates: DataFrame): DataFrame =
+    cur.select(col("user_id"), col("s").as("cur_s"))
+      .join(updates.select(col("user_id"), col("s").as("new_s")),
+        Seq("user_id"), "full_outer")
+      .select(col("user_id"), greatest(col("cur_s"), col("new_s")).as("s"))
+
   /** Merge one (micro-)batch of raw events into the keyed state table.
     * Associative + commutative in the batch partitioning — see above. */
   def applyBatch(batch: DataFrame, stateDir: String): Unit = {
@@ -49,11 +58,7 @@ object CdcApply {
         graft.operators.eagerCut(
           batch.sparkSession.read.parquet(stateDir))
       else updates.limit(0)
-    val merged = cur.select(col("user_id"), col("s").as("cur_s"))
-      .join(updates.select(col("user_id"), col("s").as("new_s")), Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        greatest(col("cur_s"), col("new_s")).as("s"))
-    merged.write.mode("overwrite").parquet(stateDir)
+    lww(cur, updates).write.mode("overwrite").parquet(stateDir)
   }
 
   /** Read the state table back in flat row form. */
@@ -113,11 +118,7 @@ object CdcApply {
         W.readManifested(spark, tableDir)
           .join(updates.select(col("user_id")), Seq("user_id"), "left_semi")
       else updates.limit(0)
-    val merged = graft.operators.eagerCut(
-      cur.select(col("user_id"), col("s").as("cur_s"))
-        .join(updates.select(col("user_id"), col("s").as("new_s")),
-          Seq("user_id"), "full_outer")
-        .select(col("user_id"), greatest(col("cur_s"), col("new_s")).as("s")))
+    val merged = graft.operators.eagerCut(lww(cur, updates))
     if (W.snapshots(tableDir).nonEmpty)
       W.upsertManifested(spark, tableDir, merged, "user_id",
         txnVersion.map(v => CdcTxnApp -> v))
@@ -144,10 +145,10 @@ object CdcApply {
     * per leaf and at the root; a crash mid-merge (some shards
     * committed, some not) converges on the replay — the resumability
     * `upsertManifestedPartitioned` pins. Before the first merge, every
-    * missing `shard=<k>` leaf is bootstrapped EMPTY (appendManifested
-    * with genId 0 — idempotent: a crash mid-bootstrap replays by
+    * missing `shard=<k>` leaf is bootstrapped EMPTY (the warehouse's
+    * one leaf creation — idempotent: a crash mid-bootstrap replays by
     * creating only the still-missing leaves, and a raced creator's
-    * retry is a no-op rewrite), so ALL nShards leaves exist and share
+    * v1 commit no-ops), so ALL nShards leaves exist and share
     * version numbering before any routed merge; the merge itself —
     * including batch 0 — then always goes through the marker-gated
     * upsert path, closing the two r14 holes: bootstrap detection ran
@@ -167,75 +168,23 @@ object CdcApply {
     // set, the state semi-join and the merge — without the cut the
     // lastPerKey shuffle would run once per consumer
     val updates = graft.operators.eagerCut(lastPerKey(batch))
+    // every missing `shard=<k>` leaf is created EMPTY before the first
+    // merge (Warehouse.createLeaves: one template job, then a pure-FS
+    // adoption + v1 commit per missing leaf on the bounded pool). A
+    // leaf is missing only when NOTHING is committed — the headBody
+    // predicate, NOT `_current` existence: in the crashed-pointer-swap
+    // window (the non-atomic delete+rename replace on hdfs/object
+    // stores) the pointer is absent but the `_manifest-*` trail is the
+    // committed head, and re-creating it would reset the shard's LWW
+    // state (the r15 pointer-vs-head bug, at the CDC layer). Fast path
+    // (r17, `mapped`): once any root manifest exists, its version map
+    // lists every committed leaf — ONE map read replaces nShards
+    // per-leaf head probes per batch.
     val (fs, root) = graft.operators.ManifestIo.resolve(rootDir,
       spark.sparkContext.hadoopConfiguration)
-    // a leaf is missing only when NOTHING is committed — judged by the
-    // same headBody predicate every Warehouse adoption path uses, NOT
-    // by `_current` existence: in the crashed-pointer-swap window (the
-    // non-atomic delete+rename replace on hdfs/object stores) the
-    // pointer is absent but the `_manifest-*` trail is the committed
-    // head, and "missing" there would let the bootstrap's empty
-    // `.gen-0` commit WIN a putIfAbsent on a GC'd low version and
-    // replace `_current` with it — silently resetting the shard's
-    // entire LWW state (the r15 pointer-vs-head bug, at the CDC layer)
-    // Bootstrap-detection fast path (r17): once any root manifest
-    // exists, its version map lists every committed leaf — ONE pointer
-    // read replaces nShards per-leaf head probes per batch (at 1024
-    // shards the sequential probe walk is otherwise the dominant
-    // steady-state per-batch driver cost). Shards absent from the map
-    // — all of them when no map exists yet — fall back to the per-leaf
-    // head probe, run on the bounded pool. Crash safety holds: a leaf
-    // created by a crashed bootstrap is not yet in any map, so it is
-    // re-probed, and its re-creation converges on the v1 CAS skip.
-    val mapped = W.lastRootMapRels(fs, root).getOrElse(Set.empty)
-    val candidates = (0 until nShards).filterNot(k => mapped.contains(s"shard=$k"))
-    val missing = W.parCommitLeaves(candidates) { k =>
-      k -> W.hasCommittedHead(fs, new HPath(root, s"shard=$k"))
-    }.collect { case (k, committed) if !committed => k }
-    if (missing.nonEmpty) {
-      // ONE empty-parquet write job produces the schema-bearing
-      // template; every missing leaf then gets an FS copy + a direct
-      // v1 manifest commit — O(shards) driver FS calls, ZERO per-leaf
-      // Spark jobs, so table creation stays cheap at thousands of
-      // shards. Races/replays: a lost v1 CAS means another creator
-      // (or our own crashed bootstrap) already committed the
-      // identical empty leaf — skip. (limit(0) alone has zero
-      // partitions and would write NO part file; the generation must
-      // carry the schema, hence repartition(1).)
-      val tmpl = new HPath(root, ".bootstrap-template")
-      updates.limit(0).repartition(1).write.mode("overwrite")
-        .parquet(tmpl.toString)
-      val part = graft.operators.ManifestIo.list(fs, tmpl)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .head.getPath
-      // pure-FS leaf creations, parallelized like every per-leaf
-      // commit walk (r16): table creation at thousands of shards is
-      // shards/16 × RTT, not shards × RTT
-      W.parCommitLeaves(missing) { k =>
-        val leaf = new HPath(root, s"shard=$k")
-        val gen0 = new HPath(leaf, ".gen-0")
-        fs.mkdirs(gen0)
-        org.apache.hadoop.fs.FileUtil.copy(fs, part, fs,
-          new HPath(gen0, part.getName), false,
-          spark.sparkContext.hadoopConfiguration)
-        // CAS anchored at 0 — NOT at the live trail head (r17): the
-        // probe-to-commit window spans the template-write Spark job,
-        // and anchoring at the head would claim `_manifest-(head+1)`,
-        // which is ALWAYS absent — the putIfAbsent would succeed over
-        // any generation a concurrent writer committed since the
-        // probe, replacing `_current` with the empty .gen-0 body and
-        // silently resetting the shard. Anchored at 0, any interim
-        // commit holds `_manifest-1` and the bootstrap LOSES the CAS.
-        // Belt-and-braces: re-probe the head right before the commit
-        // (cheap — one pointer read) and skip on either signal.
-        if (!W.hasCommittedHead(fs, leaf))
-          try W.commitManifest(fs, leaf, new HPath(leaf, "_current"),
-            Seq(".gen-0"), 0L)
-          catch { case _: java.util.ConcurrentModificationException => }
-        ()
-      }
-      graft.operators.ManifestIo.delete(fs, tmpl)
-    }
+    val missing = W.createLeaves(spark, fs, root,
+      (0 until nShards).map(k => new HPath(root, s"shard=$k")), updates,
+      mapped = true)
     val freshTable = missing.length == nShards
     val merged = graft.operators.eagerCut {
       val routed =
@@ -264,10 +213,7 @@ object CdcApply {
               .map(k => W.readManifested(spark, s"$rootDir/shard=$k"))
               .reduceLeft(_.unionByName(_))
               .join(updates.select(col("user_id")), Seq("user_id"), "left_semi")
-          cur.select(col("user_id"), col("s").as("cur_s"))
-            .join(updates.select(col("user_id"), col("s").as("new_s")),
-              Seq("user_id"), "full_outer")
-            .select(col("user_id"), greatest(col("cur_s"), col("new_s")).as("s"))
+          lww(cur, updates)
         }
       routed.withColumn("shard", pmod(col("user_id"), lit(nShards)))
     }

@@ -68,7 +68,7 @@ class HarnessSpec extends SparkSpec {
   test("Bench.run keeps the summary line and bench_detail.json shapes") {
     val (line, detail) = Bench.run(spark, sf, Seq("z0", "q01"))
     assert(mask(line) ==
-      """{"metric":"total","value":#,"unit":"sec","cold_total":#,""" +
+      """{"metric":"total","value":#,"unit":"sec","cold_total":#,"failed":#,""" +
       """"queries":{"q01":#,"z01":#,"z02":#,"z03":#,"z04":#,"z05":#},""" +
       """"sf":"sf0.001","detail":"bench_detail.json"}""")
     def sentinel(pass: Int) =
@@ -76,11 +76,28 @@ class HarnessSpec extends SparkSpec {
     def query(name: String) =
       s""""$name":{"runs":[#,#,#],"cold":#,"med":#,"spread":#,"prdds":#,"storage_mb":#,"pos":#}"""
     assert(mask(detail) ==
-      """{"value":#,"cold_total":#,"runs_per_query":#,"order_seed":#,"sentinel_every":#,""" +
+      """{"value":#,"cold_total":#,"failed":#,"runs_per_query":#,"order_seed":#,"sentinel_every":#,""" +
       (0 to 2).map(sentinel).mkString(""""sentinels":{""", ",", "},") +
       Seq("q01_pricing_summary", "z01_zh_enrich", "z02_zh_enrich_applied",
         "z03_han_script_stats", "z04_zh_convert_throughput",
         "z05_zh_enrich_structure").map(query).mkString(""""queries":{""", ",", "},") +
       s""""sf":"$sf"}""")
+    assert(line.contains("\"failed\":0,") && detail.contains("\"failed\":0,"))
+    // a throwing row is FAILED: counted, marked on its detail entry, and
+    // left out of value, cold_total and the summary's per-query map
+    val boom: Harness.Query = (_, _) => throw new IllegalStateException("boom")
+    val (fLine, fDetail) = Bench.runRows(spark, sf,
+      Harness.select(Seq("q01")) :+ ("q00_throws" -> boom))
+    assert(mask(fLine) ==
+      """{"metric":"total","value":#,"unit":"sec","cold_total":#,"failed":#,""" +
+      """"queries":{"q01":#},"sf":"sf0.001","detail":"bench_detail.json"}""")
+    assert(fLine.contains("\"failed\":1,"), fLine)
+    val d = new ObjectMapper().readTree(fDetail)
+    assert(d.get("failed").asInt == 1)
+    assert(d.get("queries").get("q00_throws").get("failed").asBoolean)
+    assert(d.get("queries").get("q01_pricing_summary").get("failed") == null)
+    val q01 = d.get("queries").get("q01_pricing_summary")
+    assert(d.get("value").asDouble == q01.get("med").asDouble, fDetail)
+    assert(d.get("cold_total").asDouble == q01.get("cold").asDouble, fDetail)
   }
 }

@@ -3311,6 +3311,22 @@ class SinkSpec extends SparkSpec {
     assert(changed.count() > 0L && empty.count() == 0L)
     assert(empty.columns.toSeq == changed.columns.toSeq,
       s"${empty.columns.mkString(",")} vs ${changed.columns.mkString(",")}")
+    // one SCHEMA too (`change_type` non-nullable in every shape): the empty
+    // window, and a window that only adopts a partition (the feed is
+    // the adopted leaf's whole snapshot)
+    assert(empty.schema == changed.schema, s"${empty.schema} vs ${changed.schema}")
+    W.upsertManifestedPartitioned(spark, root, spark.range(20, 22).toDF("id")
+      .withColumn("p", lit("2")).withColumn("v", lit("new")), "id")
+    val adopted = W.tableChangesPartitioned(spark, root, "id", r2,
+      W.rootSnapshots(root).last)
+    assert(adopted.count() == 2L)
+    assert(adopted.schema == changed.schema, s"${adopted.schema} vs ${changed.schema}")
+    // the leaf feed: its empty window has its non-empty window's schema
+    val leaf = s"$root/p=0"
+    val Seq(l1, l2) = W.snapshots(leaf).takeRight(2)
+    val leafChanged = W.tableChanges(spark, leaf, "id", l1, l2)
+    assert(leafChanged.count() > 0L)
+    assert(W.tableChanges(spark, leaf, "id", l2, l2).schema == leafChanged.schema)
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 

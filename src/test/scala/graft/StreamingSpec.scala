@@ -769,6 +769,19 @@ class StreamingSpec extends SparkSpec {
     // every shard is committed and the root publishes version maps
     (0 until 4).foreach(k => assert(W.snapshots(s"$root/shard=$k").nonEmpty))
     assert(W.rootSnapshots(root).nonEmpty)
+    // a bootstrapped shard's first manifest inventories its `.gen-0`
+    // files as `#file:` lines, so a range read of a fresh shard plans
+    // without listing the generation
+    (1 until 4).foreach { k =>
+      val leaf = java.nio.file.Paths.get(root, s"shard=$k")
+      val inventory = java.nio.file.Files.readString(leaf.resolve("_manifest-1"))
+        .split("\n").filter(_.startsWith("#file:.gen-0/"))
+        .map(_.stripPrefix("#file:.gen-0/")).toSet
+      val onDisk = leaf.resolve(".gen-0").toFile.listFiles()
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+      assert(inventory.nonEmpty && inventory == onDisk,
+        s"shard=$k: manifest lists $inventory, .gen-0 holds $onDisk")
+    }
 
     // (2) the r14 bootstrap probe ran java.nio on the LOCAL fs — on any
     // non-local scheme it was always false, so EVERY batch re-appended
