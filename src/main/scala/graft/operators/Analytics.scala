@@ -582,15 +582,13 @@ object Analytics {
   /** Window value functions + ratio-to-report, appended to `queries`. */
   private val sqlQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- first/last/nth value over a full-partition frame
-    "q46_window_values" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d); s.sql(WindowValuesSql)
-    }),
+    "q46_window_values" -> ((s, d) =>
+      graft.sources.Tables.sql(s, d, WindowValuesSql)),
     // ---- ratio-to-report: each nation's share of its region total
     //      (window denominator summed in exact decimal so the single
     //      double division is engine-identical)
-    "q47_ratio_to_report" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d); s.sql(RatioToReportSql)
-    })
+    "q47_ratio_to_report" -> ((s, d) =>
+      graft.sources.Tables.sql(s, d, RatioToReportSql))
   )
 
   def oracleSql: Map[String, String] = Map(

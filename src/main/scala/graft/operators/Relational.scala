@@ -357,10 +357,8 @@ object Relational {
     }),
 
     // ---- GROUPING SETS via the SQL entry point (same text runs in DuckDB)
-    "q27_grouping_sets" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d)
-      s.sql(GroupingSetsSql)
-    }),
+    "q27_grouping_sets" -> ((s, d) =>
+      graft.sources.Tables.sql(s, d, GroupingSetsSql)),
 
     // ---- Spark 4 VARIANT: parse once into the binary-encoded Variant
     //      (shredded typed access; the 4.x replacement for per-path
@@ -391,7 +389,6 @@ object Relational {
     //      edge relation's physical source changed), and the driver's
     //      oracle re-proves it value-level.
     "q55_recursive_bfs" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d)
       val pairs = t(s, d, "lineitem")
         .select(col("l_partkey").as("p"), col("l_suppkey").as("s")).distinct()
       val nPart = s.sessionState.conf.numShufflePartitions
@@ -400,7 +397,7 @@ object Relational {
           .unionAll(pairs.select((col("s") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
           .repartition(nPart, col("src")))
       withTempView(und, "q55_und") { v =>
-        s.sql(s"""WITH RECURSIVE reach(node, dist) AS (
+        graft.sources.Tables.sql(s, d, s"""WITH RECURSIVE reach(node, dist) AS (
            SELECT DISTINCT src AS node, 0 AS dist FROM $v WHERE src % 200 = 1
            UNION ALL
            SELECT u.dst AS node, r.dist + 1 AS dist
@@ -413,10 +410,8 @@ object Relational {
     }),
 
     // ---- correlated LATERAL top-n (same text runs in DuckDB)
-    "q56_lateral_topn" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d)
-      s.sql(LateralTopNSql)
-    }),
+    "q56_lateral_topn" -> ((s, d) =>
+      graft.sources.Tables.sql(s, d, LateralTopNSql)),
 
     // ---- salted two-phase aggregation: the 100 TB skew pattern. 5
     //      distinct event_types over N executors would hot-spot 5
@@ -457,10 +452,8 @@ object Relational {
     }),
 
     // ---- correlated scalar subquery (Catalyst decorrelates to a join)
-    "q30_correlated_subquery" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d)
-      s.sql(CorrelatedSql)
-    }),
+    "q30_correlated_subquery" -> ((s, d) =>
+      graft.sources.Tables.sql(s, d, CorrelatedSql)),
 
     // ---- ranking-function family (all order-exact: unique tie-break)
     "q31_window_ranks" -> ((s, d) => {

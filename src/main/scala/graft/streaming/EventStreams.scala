@@ -35,14 +35,14 @@ object EventStreams {
     * The testdata's ts column has shipped under two parquet
     * annotations across driver generations — TIMESTAMP(NANOS) (reads
     * as int64 nanos under the legacy conf) and TIMESTAMP(MICROS)
-    * (reads as TIMESTAMP_NTZ) — so probe the footer ONCE via batch
-    * schema inference and parameterize the stream's explicit schema +
-    * normalization accordingly; both paths land on identical
-    * micros-truncated instants (session timezone pinned UTC). */
+    * (reads as TIMESTAMP_NTZ) — so take the source file's inferred
+    * schema from `Tables`' schema cache (the staged copy has the same
+    * bytes; a cache hit starts no job) and parameterize the stream's
+    * explicit schema + normalization accordingly; both paths land on
+    * identical micros-truncated instants (session timezone pinned UTC). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     val staged = stagedTable(dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(staged).schema("ts").dataType match {
+    graft.sources.Tables.schema(spark, s"$dir/events.parquet")("ts").dataType match {
       case LongType =>
         spark.readStream
           .schema(rawSchema)
@@ -65,7 +65,8 @@ object EventStreams {
     * directory. The file is hard-linked, or copied where a link fails.
     *
     * Staleness guard: the staged copy is reused only while its size AND
-    * mtime still match the source. The staging dir is keyed by the sf
+    * mtime still match the source (`Tables.Stamp.sameContent`, the
+    * guard of the schema cache too). The staging dir is keyed by the sf
     * dir's basename, so testdata regenerated in place (a hard link to
     * the old inode would keep serving deleted data) and a second sf dir
     * with the same basename both re-stage on their next use. */
@@ -77,9 +78,8 @@ object EventStreams {
       Paths.get(dir).getFileName.toString)
     Files.createDirectories(staged)
     val dst = staged.resolve(fileName)
-    val fresh = Files.exists(dst) &&
-      Files.size(dst) == Files.size(src) &&
-      Files.getLastModifiedTime(dst) == Files.getLastModifiedTime(src)
+    val fresh = graft.sources.Tables.stamp(src).exists(s =>
+      graft.sources.Tables.stamp(dst).exists(_.sameContent(s)))
     if (!fresh) {
       Files.deleteIfExists(dst)
       try Files.createLink(dst, src)

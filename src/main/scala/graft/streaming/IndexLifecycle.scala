@@ -161,7 +161,8 @@ object IndexLifecycle {
     val staged = EventStreams.stagedTable(dir, s"${ix.table}.parquet")
     val out = ix.fresh("serve_out", dir)
     EventStreams.runForeachBatch(
-      scoped.readStream.schema(scoped.read.parquet(staged).schema).parquet(staged)
+      scoped.readStream.schema(graft.sources.Tables.schema(scoped, s"$dir/${ix.table}.parquet"))
+        .parquet(staged)
         .filter(col(ix.key) % ix.queryMod === 0)) { (batch, batchId) =>
       answer(batch, grown).write.mode("overwrite").parquet(s"$out/batch=$batchId")
     }

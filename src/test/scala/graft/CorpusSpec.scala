@@ -12,6 +12,31 @@ class CorpusSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private def docs = graft.sources.Tables(spark, sf, "documents")
 
+  test("bigramSurprise: one dominant first word, counts == groupBy+join c1/c2 reference") {
+    import spark.implicits._
+    // six "the" then two rare words per doc: 6 of every 7 bigrams have
+    // the prefix "the", so its c1 window runs in one task
+    val skewed = (0 until 400).map { i =>
+      (i.toLong, (Seq.fill(6)("the") ++ Seq(s"w${i % 13}", s"v${i % 3}")).mkString(" "))
+    }.toDF("doc_id", "text")
+    val tok = skewed.select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("i", "w")))
+    val pairs = tok.as("a").join(tok.as("b"),
+        col("a.doc_id") === col("b.doc_id") && col("b.i") === col("a.i") + 1)
+      .select(col("a.doc_id").as("doc_id"), col("a.w").as("w1"), col("b.w").as("w2"))
+    val c2 = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+    val c1 = pairs.groupBy("w1").agg(count(lit(1)).as("c1"))
+    val top = c1.orderBy(col("c1").desc).first()
+    assert(top.getString(0) == "the" && top.getLong(1) * 7 == pairs.count() * 6)
+    val want = pairs.join(c2, Seq("w1", "w2")).join(c1, Seq("w1"))
+      .select(col("doc_id"), expr("least((c1 * 10000) div c2, 1000000000000)").as("r"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n"), sum(col("r")).as("s"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    val got = rows(TextAnalysis.bigramSurprise(skewed)
+      .select(col("doc_id"), col("n_bigrams"), col("surprise_sum")))
+    assert(got.length == 400 && got == rows(want))
+  }
+
   test("length buckets: batch bound, bucket homogeneity, one partial batch per cell, waste law") {
     val batches = Corpus.lengthBucketBatches(docs).collect()
     assert(batches.nonEmpty)

@@ -22,7 +22,9 @@ error as it finishes.
 
 After the pairs it runs `--trace 1` once per side at the first seed and
 prints the listener counts (`spark.jobs`, `spark.stages`, `spark.tasks`)
-and every `sources.*` and `sinks.*` layer metric side by side, so the
+and every `sources.*`, `sinks.*`, `operators.*` and `plans.*` layer
+metric side by side, with catalog_mix's per-family layer seconds
+(`operators.build_s/q`, ...) from each traced run's `detail.json`, so the
 count a change names can be read off the same invocation.
 """
 import argparse
@@ -34,23 +36,37 @@ import sys
 
 
 COUNTS = ("spark.jobs", "spark.stages", "spark.tasks")
-LAYERS = ("sources.", "sinks.")
+LAYERS = ("sources.", "sinks.", "operators.", "plans.")
 
 
 def run_once(checkout, workload, seed, seconds, trace=0):
-    """One benchmark run; returns its result object, or None if it failed."""
+    """One benchmark run; returns its result object, or None if it failed.
+    A traced run's result also carries, under `family_layers`, the
+    per-family layer seconds of its `detail.json` (`catalog_layers_s`)."""
     cmd = [sys.executable, "zhbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
-    p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
-                       stderr=subprocess.PIPE, text=True)
-    lines = p.stdout.strip().splitlines()
+    p = subprocess.Popen(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                         stderr=subprocess.PIPE, text=True)
+    out, err = p.communicate()
+    lines = out.strip().splitlines()
     if p.returncode != 0 or not lines:
-        sys.stderr.write(p.stderr[-2000:])
+        sys.stderr.write(err[-2000:])
         return None
     try:
-        return json.loads(lines[-1])
+        r = json.loads(lines[-1])
     except ValueError:
         return None
+    if trace:
+        # run.py names its output folder after its own pid
+        detail = os.path.join(checkout, ".bench_out",
+                              f"{workload}-s{seed}-t{trace}-{p.pid}", "detail.json")
+        try:
+            with open(detail) as fh:
+                layers = json.load(fh).get("catalog_layers_s", {})
+            r["family_layers"] = {k: v for k, v in layers.items() if "/" in k}
+        except (OSError, ValueError):
+            pass
+    return r
 
 
 def quartiles(xs):
@@ -83,15 +99,22 @@ def note_bad(bad, side, seed, r):
 
 
 def print_counts(traced, seed):
-    """The traced runs' listener counts and source/sink layer metrics."""
-    mp, mc = (traced[s]["metrics"] if traced[s] else {} for s in ("parent", "change"))
+    """The traced runs' listener counts, layer metrics and per-family
+    layer seconds."""
+    mp, mc = ({k: v["value"] for k, v in traced[s]["metrics"].items()} if traced[s] else {}
+              for s in ("parent", "change"))
     names = [n for n in COUNTS if n in mp or n in mc]
     names += sorted(n for n in set(mp) | set(mc) if n.startswith(LAYERS))
+    fp, fc = (traced[s].get("family_layers", {}) if traced[s] else {}
+              for s in ("parent", "change"))
+    mp.update(fp)
+    mc.update(fc)
+    names += sorted(set(fp) | set(fc))
     print(f"traced (--trace 1) seed {seed}:")
-    print(f"{'metric':24} {'parent':>14} {'change':>14}")
+    print(f"{'metric':30} {'parent':>14} {'change':>14}")
     for n in names:
-        p, c = (f"{m[n]['value']:.4g}" if n in m else "-" for m in (mp, mc))
-        print(f"{n:24} {p:>14} {c:>14}")
+        p, c = (f"{m[n]:.4g}" if n in m else "-" for m in (mp, mc))
+        print(f"{n:30} {p:>14} {c:>14}")
 
 
 def main():
