@@ -1,11 +1,11 @@
 package graft.operators
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path,
-  StreamCapabilities}
+import org.apache.hadoop.fs.{CommonPathCapabilities, FileStatus, FileSystem,
+  LocalFileSystem, Path, StreamCapabilities}
 
-/** The filesystem seam under [[Warehouse]]'s manifest/pointer commit
-  * protocol: every byte of table-metadata IO (pointer reads, manifest
+/** The filesystem seam under [[Warehouse]]'s manifest commit
+  * protocol: every byte of table-metadata IO (manifest reads and
   * commits, generation renames/GC walks) routes through
   * `org.apache.hadoop.fs.FileSystem`, resolved per-path from the
   * Hadoop configuration — so the SAME commit code runs against
@@ -13,40 +13,40 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path,
   * the per-store commit semantics live in ONE place, documented at
   * each primitive instead of implied by POSIX calls.
   *
-  * Per-scheme commit semantics (the 100 TB deployment notes):
+  * [[putIfAbsent]] — the create-exclusive claim of an immutable
+  * `_manifest-v` / `_root-manifest-T` — is the ONLY commit primitive:
+  * a leaf's and a root's head is the newest claimed version of its
+  * trail, and no file is ever overwritten to publish a commit.
+  * Per-scheme semantics of that claim (the 100 TB deployment notes):
   *
   *  - '''file:''' — the local filesystem resolves to the RAW local
   *    FileSystem (not the checksummed wrapper, which would shadow
-  *    every pointer with `.crc` siblings and silently drop fsync):
-  *    [[replace]] is POSIX `rename(2)` (atomic, overwrites),
-  *    [[putIfAbsent]] is `O_EXCL` create (atomic), and the synced
-  *    writes / [[syncDir]] are real `fsync(2)` — byte-for-byte the
-  *    pre-r13 `java.nio` behavior, now behind the seam.
-  *  - '''hdfs:''' — `create(overwrite=false)` is atomic at the
-  *    NameNode (putIfAbsent holds); plain `rename` refuses an
-  *    existing destination, so [[replace]] falls back to
-  *    delete-then-rename with a documented pointer-absent instant
-  *    (readers retry through `readManifested`'s one-retry contract);
-  *    `hsync` is a real pipeline flush; directory sync is the
-  *    NameNode journal's job (no-op here).
-  *  - '''object stores (s3a:, gs:, abfs:)''' — rename is
-  *    copy+delete (NOT atomic) and fsync does not exist: a production
-  *    deployment makes the pointer a CONDITIONAL-PUT object
-  *    (if-match/if-none-match — S3/GCS/Azure all offer it; the
-  *    connector surfaces create-exclusive for putIfAbsent on recent
-  *    releases) and relies on PUT-durable-on-ack instead of fsync.
-  *    [[replace]]'s fallback works but its non-atomic window means
-  *    pointer swaps should go through the store's conditional PUT in
-  *    anger — the protocol above it (immutable `_manifest-v` trail,
-  *    CAS on version, `_current` as a cache of the head) is already
-  *    shaped for exactly that substitution.
+  *    every manifest with `.crc` siblings and silently drop fsync):
+  *    the claim is a staged, fsynced body `link(2)`ed into place
+  *    (atomic, content-complete), and the synced writes /
+  *    [[syncDir]] are real `fsync(2)`.
+  *  - '''hdfs:''' (stores that keep a writer's lease on an open
+  *    file, `LEASE_RECOVERABLE`) — readers see a file's bytes as the
+  *    pipeline acks them, so a body written in place under its claimed
+  *    name could be read cut off. The claim is a staged, hsynced,
+  *    closed body `rename`d into place: the NameNode refuses an
+  *    existing destination atomically (the CAS) and the name appears
+  *    with its full bytes. Directory sync is the NameNode journal's
+  *    job (no-op here).
+  *  - '''object stores (s3a:, gs:, abfs:)''' — the claim is the
+  *    store's CONDITIONAL PUT (if-none-match — S3/GCS/Azure all offer
+  *    it; the connector surfaces create-exclusive on recent releases),
+  *    content-atomic by construction and durable on ack, so no fsync
+  *    is needed. Rename is copy+delete (NOT atomic); the protocol
+  *    renames only generation directories and files that no claimed
+  *    manifest references yet.
   */
 private[graft] object ManifestIo {
 
   /** Resolve `dir` to its (FileSystem, fully-qualified Path). Local
     * paths resolve to the RAW local filesystem: the checksummed
     * `LocalFileSystem` would write `.crc` siblings beside every
-    * pointer/manifest (polluting the layout contract) and its output
+    * manifest (polluting the layout contract) and its output
     * streams do not implement Syncable (hsync would silently degrade
     * to flush) — raw gives true `fsync(2)` and a clean directory. */
   def resolve(dir: String, conf: Configuration): (FileSystem, Path) = {
@@ -80,7 +80,7 @@ private[graft] object ManifestIo {
   /** Read a small metadata file fully. Resource exhaustion must never
     * read as ABSENCE (r19): on the local scheme an fd-starved open
     * throws FileNotFoundException whose message is "(Too many open
-    * files)" — callers catch FNF to mean "pointer/manifest absent",
+    * files)" — callers catch FNF to mean "manifest absent",
     * and a starved process concluding "no committed table" is the
     * silent-wrong answer; rethrow it as the IO failure it is. */
   def readString(fs: FileSystem, p: Path): String = {
@@ -95,13 +95,12 @@ private[graft] object ManifestIo {
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  /** Write `body` then force it to stable storage where the stream
-    * can (`hsync`; capability-checked so stores without sync — object
-    * stores, which are PUT-durable-on-ack instead — skip it rather
-    * than pretend). */
-  private def writeSynced(fs: FileSystem, p: Path, body: String,
-                          overwrite: Boolean): Unit = {
-    val out = fs.create(p, overwrite)
+  /** Create `p` exclusively, write `body`, then force it to stable
+    * storage where the stream can (`hsync`; capability-checked so
+    * stores without sync — object stores, which are PUT-durable-on-ack
+    * instead — skip it rather than pretend). */
+  private def createSynced(fs: FileSystem, p: Path, body: String): Unit = {
+    val out = fs.create(p, false)
     try {
       out.write(body.getBytes("UTF-8"))
       if (out.hasCapability(StreamCapabilities.HSYNC)) out.hsync()
@@ -113,21 +112,20 @@ private[graft] object ManifestIo {
     * create its file). Returns false if the file already exists (a
     * concurrent writer claimed v).
     *
-    * On `file:` the claim is CONTENT-ATOMIC (r19): the body is staged
-    * to a unique dot-prefixed tmp sibling, fsynced, then `link(2)`d
-    * into place — `Files.createLink` fails with EEXIST atomically
-    * (the O_EXCL-grade CAS) and the claimed name appears WITH its
-    * full bytes, never empty. The previous form (O_EXCL create, then
-    * write) left a claimed-but-empty window in which a reader rolling
-    * forward from a missed pointer could resolve an EMPTY head
-    * trailer — see [[graft.operators.Warehouse]]'s headBody, which
-    * also defends in depth by walking past blank trail heads, because
-    * the window still exists off-`file:`: HDFS `create(overwrite =
-    * false)` claims at the NameNode before any byte is written (tiny
-    * window, covered by the reader's blank-head walk + one-retry
-    * contract), and an object-store deployment replaces this whole
-    * primitive with the store's conditional PUT, which is
-    * content-atomic by construction. */
+    * The claim is CONTENT-ATOMIC: the claimed name appears with its
+    * full bytes, never empty or cut off (r19).
+    *  - On `file:` the body is staged to a unique dot-prefixed sibling
+    *    ([[isClaimStaging]]), fsynced, then `link(2)`d into place —
+    *    `Files.createLink` fails with EEXIST atomically.
+    *  - On lease-keeping stores (HDFS) the staged, hsynced and closed
+    *    body is `rename`d into place, which refuses an existing
+    *    destination atomically at the NameNode.
+    *  - Elsewhere the claim is `create(overwrite = false)` — on an
+    *    object store the conditional PUT, whose object appears whole.
+    * A crash strands only the staging file, which [[Warehouse.vacuum]]
+    * removes once aged; [[graft.operators.Warehouse]]'s trailHead still
+    * walks past a blank claim that a store outside these families or
+    * an older build leaves. */
   def putIfAbsent(fs: FileSystem, p: Path, body: String): Boolean =
     try {
       if (fs.getUri.getScheme == "file") {
@@ -136,8 +134,7 @@ private[graft] object ManifestIo {
         // unique per attempt: two writers racing the same claim must
         // never share a staging file (a shared name could link the
         // LOSER's bytes under the winner's claim)
-        val tmp = Files.createTempFile(dst.getParent,
-          s".${dst.getFileName}.claim", "")
+        val tmp = Files.createTempFile(dst.getParent, stagingPrefix(p), "")
         try {
           val ch = java.nio.channels.FileChannel.open(tmp, O.WRITE,
             O.TRUNCATE_EXISTING)
@@ -148,30 +145,27 @@ private[graft] object ManifestIo {
           Files.createLink(dst, tmp)
           syncDir(fs, p.getParent)
         } finally Files.deleteIfExists(tmp)
-      } else writeSynced(fs, p, body, overwrite = false)
-      true
+        true
+      } else if (fs.hasPathCapability(p.getParent, CommonPathCapabilities.LEASE_RECOVERABLE)) {
+        val tmp = new Path(p.getParent, stagingPrefix(p) + java.util.UUID.randomUUID())
+        var won = false
+        try { createSynced(fs, tmp, body); won = fs.rename(tmp, p) }
+        finally if (!won) fs.delete(tmp, false)
+        if (!won && !fs.exists(p))
+          throw new java.io.IOException(s"cannot publish claim $p")
+        won
+      } else { createSynced(fs, p, body); true }
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
     }
 
-  /** Atomically replace `dst` with `body` (the `_current` pointer
-    * swap): synced tmp write, then rename. On `file:` the rename is
-    * POSIX `rename(2)` — atomic, overwriting; a store whose rename
-    * refuses an existing destination (HDFS contract) falls back to
-    * delete+rename, whose pointer-absent instant is covered by the
-    * reader's one-retry contract; an object-store deployment uses the
-    * store's conditional PUT for this swap instead (scaladoc above). */
-  def replace(fs: FileSystem, dst: Path, body: String): Unit = {
-    val tmp = new Path(dst.getParent, "._current.tmp")
-    writeSynced(fs, tmp, body, overwrite = true)
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(dst, false)
-      if (!fs.rename(tmp, dst))
-        throw new java.io.IOException(s"cannot commit pointer $dst")
-    }
-    syncDir(fs, dst.getParent)
-  }
+  private def stagingPrefix(p: Path): String = s".${p.getName}.claim."
+
+  /** A [[putIfAbsent]] staging file: debris once aged, as a crashed
+    * claim leaves it. */
+  def isClaimStaging(name: String): Boolean =
+    name.startsWith(".") && name.contains(".claim.")
 
   /** Directory fsync after a rename — the POSIX durability tail (the
     * Lucene pattern): only the local scheme HAS the concept; HDFS
@@ -189,7 +183,7 @@ private[graft] object ManifestIo {
     }
 
   /** Move `src` to `dst` failing loudly; dst must not exist (generation
-    * adoption moves, swap staging — never the pointer overwrite). */
+    * adoption moves and staged MERGE placement). */
   def rename(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"cannot rename $src -> $dst")

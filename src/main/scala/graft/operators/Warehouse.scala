@@ -119,48 +119,46 @@ object Warehouse
   }
 
 
-  /** What [[vacuum]] removed from a manifested leaf. */
+  /** What [[vacuum]] removed from a manifested leaf: orphan
+    * generation/tombstone directories and blank `_manifest-v` claims
+    * (claim staging files go unreported: they carry no version). */
   case class VacuumReport(removedGenerations: Seq[String],
-                          removedManifests: Seq[Long],
-                          removedPointerTmp: Boolean)
+                          removedManifests: Seq[Long])
 
   /** GC the debris an ABORTED commit strands in a manifested leaf —
     * the maintenance op (Delta VACUUM / Iceberg remove-orphan-files)
     * that the retention GC inside [[compactManifested]] cannot cover,
-    * because that GC only walks REFERENCED generations. Three debris
+    * because that GC only walks REFERENCED generations. Two debris
     * classes, each from a specific crash window:
     *
     *  - '''orphan generation directories''' — a crash after the
-    *    generation's data write but before its manifest commit
+    *    generation's data write but before its manifest claim
     *    (append or compaction fold), or a compaction whose CAS lost;
-    *    referenced by no retained manifest and not by `_current`.
-    *  - '''uncommitted manifest trailers''' — a crash between the
-    *    `_manifest-v` claim and the `_current` swap: versions ABOVE
-    *    the committed head (the highest version whose content equals
-    *    `_current`'s). Removing them keeps [[readManifestedAt]]'s
-    *    contract honest — only snapshots a reader could ever have
-    *    resolved remain in the trail.
-    *  - '''pointer tmp''' — `._current.tmp` from a crash inside the
-    *    swap itself.
+    *    referenced by no retained manifest.
+    *  - '''uncommitted manifest claims''' — a crash inside a claim:
+    *    the staging file a content-atomic claim writes before it
+    *    links or renames it into place (`file:`, HDFS), or a blank
+    *    `_manifest-v` that a store claiming before it writes (or an
+    *    older build) leaves. Neither is ever a head, so removing them
+    *    changes no read. A NON-blank `_manifest-v` is a committed
+    *    snapshot — the claim is the commit — and only the retention GC
+    *    removes it.
     *
     * The RETENTION window is honored by construction: liveness is
-    * anchored on the surviving `_manifest-*` trail ∪ `_current`, so
-    * every generation any retained snapshot references stays readable
-    * via [[readManifestedAt]] afterwards. Conservative by design: a
-    * pointer matching NO manifest (a legacy or hand-edited leaf)
-    * anchors every manifest as live and vacuums only truly
-    * unreferenced generations; a leaf with no `_current` at all is
-    * left untouched (nothing committed to anchor liveness — e.g. a
-    * crash mid-adoption, which the next append self-heals). Runs
-    * under the per-table lock; at 100 TB this is the same listing +
-    * bounded-delete pass per leaf, embarrassingly parallel across
-    * leaves.
+    * anchored on the surviving `_manifest-*` trail, so every
+    * generation any retained snapshot references stays readable via
+    * [[readManifestedAt]] afterwards. A leaf with no committed
+    * snapshot at all is left untouched (nothing committed to anchor
+    * liveness — e.g. a crash mid-adoption, which the next append
+    * self-heals). Runs under the per-table lock; at 100 TB this is
+    * the same listing + bounded-delete pass per leaf, embarrassingly
+    * parallel across leaves.
     *
     * CROSS-PROCESS writers (r14): crash debris and a live foreign
     * writer mid-commit are indistinguishable by layout alone — every
     * append/compaction has a window where its generation is written
-    * (or its `_manifest-v` trailer claimed) but the pointer not yet
-    * swapped, and vacuuming that writer's files would break its
+    * (or its `_manifest-v` claimed) but the manifest body not yet
+    * complete, and vacuuming that writer's files would break its
     * in-flight commit. The AGE GRACE closes it, the Delta VACUUM /
     * Iceberg remove-orphan-files convention: only debris whose
     * modification time is older than `graceMs` (default 1 h) is

@@ -404,11 +404,10 @@ trait WarehouseChanges { this: Warehouse.type =>
     * leaves a headless destination (copied dirs, no manifest): re-run
     * to converge — the copy overwrites its own partial debris and the
     * single version-1 CAS is the commit point, so a reader never sees
-    * a half-clone. A crash AFTER the CAS is a clone that already
-    * COMPLETED with an unhealed pointer (headBody rolls forward): the
-    * re-run recognizes its own committed body — destination head is
-    * version 1 with exactly the entries+stats this clone would write —
-    * heals `_current`, and returns 1 idempotently (r19; any OTHER
+    * a half-clone. A re-run after the CAS finds a clone that already
+    * COMPLETED: it recognizes its own committed body — destination
+    * head is version 1 with exactly the entries+stats this clone
+    * would write — and returns 1 idempotently (r19; any OTHER
     * committed head still refuses). Returns the destination's
     * committed version (1).
     *
@@ -437,7 +436,7 @@ trait WarehouseChanges { this: Warehouse.type =>
     * the source snapshot's entries as `#ref:` REFERENCES to the
     * source's absolute directories — metadata-only, ZERO data files
     * copied, the zero-cost test-against-prod pattern (a 100 TB table
-    * clones in one pointer write). The clone pins snapshot `version`
+    * clones in one manifest write). The clone pins snapshot `version`
     * (default: head): later source commits never change what it
     * reads, because the referenced generation DIRECTORIES are
     * immutable — only compaction retires them. Stats/file-inventory/
@@ -468,9 +467,9 @@ trait WarehouseChanges { this: Warehouse.type =>
   /** THE leaf clone commit of both clone forms: resolve the source
     * snapshot `version` (default: head; [[snapshotAt]]), then
     *
-    *  - recognize this clone's own crashed commit — destination head at
-    *    version 1 with exactly the entries and `dstStats` this clone
-    *    writes — heal `_current` if the crash left it absent, return 1;
+    *  - recognize this clone's own completed commit — destination head
+    *    at version 1 with exactly the entries and `dstStats` this clone
+    *    writes — and return 1;
     *  - refuse any other committed head ("already holds");
     *  - refuse a source entry that was garbage-collected;
     *  - `place` the entries under the destination, commit version 1.
@@ -486,11 +485,10 @@ trait WarehouseChanges { this: Warehouse.type =>
       throw new IllegalArgumentException(s"$op: $srcDir has no committed table")))
     val snap = snapshotAt(fs, src, v, op, srcDir, live = false)
     val stats = dstStats(snap)
-    headBody(fs, dst) match {
+    val head = trailHead(fs, dst)
+    head.body match {
       case Some(h) if h == manifestBody(snap.gens, Map.empty, stats) &&
-          headVersion(fs, dst) == 1L =>
-        val pointer = new HPath(dst, "_current")
-        if (!ManifestIo.exists(fs, pointer)) ManifestIo.replace(fs, pointer, h)
+          head.version == 1L =>
         1L
       case Some(_) =>
         throw new IllegalArgumentException(
@@ -500,8 +498,7 @@ trait WarehouseChanges { this: Warehouse.type =>
         snap.requireLive()
         fs.mkdirs(dst)
         place(snap, dst)
-        commitManifest(fs, dst, new HPath(dst, "_current"), snap.gens,
-          headVersion(fs, dst), stats = stats)
+        commitManifest(fs, dst, snap.gens, head.anchor, stats = stats)
     }
   }
 }

@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
   * unconstrained. Line format `#constraint:<name>:<base64(pred)>` —
   * the predicate is base64-coded so arbitrary SQL (colons, quotes,
   * newlines) survives the line-oriented manifest format with
-  * deterministic bytes (the trail-head == pointer byte-equality
-  * invariant).
+  * deterministic bytes.
   *
   * Partitioned roots: [[addCheckConstraintPartitioned]] /
   * [[dropCheckConstraintPartitioned]] manage the constraint as TABLE
@@ -69,7 +68,7 @@ trait WarehouseConstraints { this: Warehouse.type =>
   /** The live CHECK constraints of a committed table. */
   def checkConstraints(spark: SparkSession, dir: String): Map[String, String] = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    headBody(fs, root).map(parseConstraints).getOrElse(Map.empty)
+    trailHead(fs, root).body.map(parseConstraints).getOrElse(Map.empty)
   }
 
   /** Validate `df` against the constraints committed in `head` —
@@ -181,7 +180,7 @@ trait WarehouseConstraints { this: Warehouse.type =>
     * and converges on a leaf already carrying the line. */
   private def addConstraintCommit(spark: SparkSession, fs: HFs, leaf: HPath,
                                   op: String, name: String, predicate: String,
-                                  pinned: Option[(String, Long)]): Long = {
+                                  pinned: Option[TrailHead]): Long = {
     val line = constraintLine(name, predicate)
     leafCommit(fs, leaf, op, attempts = 5, pinned = pinned) { h =>
       if (constraintPresent(op, leaf, h.body, name, predicate, pinned.isDefined))
@@ -239,11 +238,12 @@ trait WarehouseConstraints { this: Warehouse.type =>
     // re-validation path. Refusals (dup name with different predicate,
     // headless leaf) happen here, before the claim — they leave
     // nothing behind.
-    val pre: Map[HPath, (String, Long)] = parCommitLeaves(leaves) { leaf =>
-      val h = headBody(fs, leaf).getOrElse(throw new IllegalArgumentException(
+    val pre: Map[HPath, TrailHead] = parCommitLeaves(leaves) { leaf =>
+      val head = trailHead(fs, leaf)
+      val h = head.body.getOrElse(throw new IllegalArgumentException(
         s"$op: leaf ${relPath(root, leaf)} has no committed table"))
       constraintPresent(op, leaf, h, name, predicate, converge = true)
-      leaf -> ((h, headVersion(fs, leaf)))
+      leaf -> head
     }.toMap
     requireConstraints(
       Some(manifestBody(Seq.empty, Map.empty, Seq(constraintLine(name, predicate)))),
@@ -265,7 +265,7 @@ trait WarehouseConstraints { this: Warehouse.type =>
     val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
     val leaves = requireKvLeaves(fs, root, op, rootDir, "dropCheckConstraint")
     val anywhere = parCommitLeaves(leaves) { leaf =>
-      headBody(fs, leaf).exists(h => parseConstraints(h).contains(name))
+      trailHead(fs, leaf).body.exists(h => parseConstraints(h).contains(name))
     }
     require(anywhere.contains(true),
       s"$op: no leaf of $rootDir has constraint '$name'")

@@ -10,125 +10,27 @@ import org.apache.spark.sql.types.DecimalType
   * and time travel, history. */
 trait WarehouseLeaf { this: Warehouse.type =>
 
-  /** Small-files compaction — the lakehouse maintenance op that keeps a
-    * streamed-into table scannable (thousands of micro-batch shards →
-    * target-sized files): size the target file count from the on-disk
-    * byte total, rewrite into a staging dir, then swap via two ATOMIC
-    * renames. Each rename is atomic, but the PAIR is not: a reader
-    * racing the swap can see the path missing for the instant between
-    * them, and a crash there leaves the data under `.compact_old` —
-    * the table-format snapshot commit (Delta/Iceberg) is precisely
-    * what removes that window; this is its closest plain-filesystem
-    * analogue, and the leftover dirs are self-healing (pre-cleaned on
-    * the next run). Returns the file count actually written (≤ the
-    * computed target — trailing partitions can come up empty).
-    *
-    * Scale: runs per partition-leaf directory (compact each `lang=xx`
-    * independently — embarrassingly parallel, and a leaf is the natural
-    * isolation unit); targetFileBytes ≈ 128 MB matches the scan split
-    * size so one task reads one file. Content is pinned unchanged by
-    * SinkSpec's count + order-free fingerprint. */
-  def compact(spark: SparkSession, dir: String,
-              targetFileBytes: Long = 128L << 20): Int = {
-    val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    val (tmp, old) = stagingPaths(root)
-    // self-heal a crash BETWEEN the two renames of a prior run: the data
-    // sits only under the hidden old path — restore it (loudly visible
-    // in the fact that compact proceeds rather than throwing)
-    restoreIfStranded(fs, root)
-    if (!ManifestIo.isDirectory(fs, root))
-      throw new IllegalArgumentException(
-        s"compact: $dir is not a readable directory " +
-          s"(a crashed swap leaves the data under $old)")
-    val shards = ManifestIo.list(fs, root)
-    // LEAF directories only: called on a partitioned root, the top-level
-    // *.parquet glob would size bytes = 0 → one giant output file, while
-    // spark.read.parquet recursed into every partition — and the swap
-    // would flatten the partition columns out of the layout. Fail loud
-    // and point at the per-leaf entry point instead.
-    shards.find(st => st.isDirectory &&
-        !st.getPath.getName.startsWith(".") &&
-        !st.getPath.getName.startsWith("_")).foreach { sub =>
-      throw new IllegalArgumentException(
-        s"compact: $dir contains subdirectory ${sub.getPath.getName} — it is a " +
-          "partitioned root, not a leaf; use compactPartitioned")
-    }
-    val bytes = shards
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // self-heal leftovers from a crashed prior run: mode(overwrite)
-    // clears tmp, but a stale old dir would fail the first rename —
-    // and that failure must be LOUD, not a silent leak
-    if (ManifestIo.exists(fs, old)) {
-      ManifestIo.delete(fs, old)
-      if (ManifestIo.exists(fs, old))
-        throw new IllegalStateException(s"compact: cannot clear stale $old")
-    }
-    spark.read.parquet(root.toString).repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    ManifestIo.rename(fs, root, old)
-    ManifestIo.rename(fs, tmp, root)
-    ManifestIo.delete(fs, old)
-    ManifestIo.list(fs, root)
-      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** Per-leaf compaction over a partitioned root: walk the `k=v`
-    * directory tree to its leaves and [[compact]] each independently.
-    * Returns root-relative leaf path → file count written.
-    *
-    * Each leaf is its own rewrite + atomic swap, so (a) partition
-    * values survive untouched — the leaf DIRECTORY name carries them
-    * and only its contents are rewritten; (b) a failure mid-run leaves
-    * every other leaf intact (the leaf is the isolation unit); (c) at
-    * 100 TB the leaves are embarrassingly parallel — this sequential
-    * driver loop becomes one job per leaf (or one multi-threaded
-    * scheduler pool), because no two leaves share any state. Staging
-    * dirs are dot-prefixed siblings, so a concurrent partition-
-    * discovering reader never sees a non-`k=v` directory — but the
-    * two-rename swap has an instant where the leaf directory itself
-    * does not exist, and a reader listing the root in that window
-    * silently misses the whole partition. Use this variant only for
-    * single-writer, no-concurrent-reader maintenance windows;
-    * [[compactManifestedPartitioned]] runs the SAME per-leaf walk
-    * through per-leaf `_current` pointer commits, which close that
-    * window for readers that consult the manifests
-    * ([[readManifestedPartitioned]]) — at every instant, every leaf
-    * has a complete resolvable generation. */
-  def compactPartitioned(spark: SparkSession, rootDir: String,
-                         targetFileBytes: Long = 128L << 20): Map[String, Int] = {
-    val (fs, root) = ManifestIo.resolve(rootDir, hconf(spark))
-    require(ManifestIo.isDirectory(fs, root),
-      s"compactPartitioned: $rootDir is not a directory")
-    // the walk is [[manifestLeaves]] — the same recursion (including
-    // the stranded-.compact_old restore) serves both the two-rename
-    // and the manifested partitioned schemes
-    manifestLeaves(fs, root).map { leaf =>
-      relPath(root, leaf) -> compact(spark, leaf.toString, targetFileBytes)
-    }.toMap
-  }
-
   // ---------------------------------------------- manifested compaction
-  /** Manifest-pointer commit — the table-format move (Delta/Iceberg
-    * snapshot commit) that CLOSES [[compact]]'s absence window, on a
-    * plain filesystem: data files live in dot-prefixed GENERATION
-    * directories (`.gen-<n>` — invisible to naive discovery), and the
-    * `_current` manifest file holds the live generation list — one
-    * name in the compaction steady state, several while streaming
-    * appends ([[appendManifested]]) accumulate. A commit
-    * writes the new generation in full, claims its `_manifest-v`
-    * history file by create-exclusive (the version CAS — see
-    * [[commitManifest]]), then atomically replaces `_current`
-    * ([[ManifestIo.replace]] — a reader sees the old pointer or the
-    * new, never a missing or partial one). [[readManifested]]
-    * resolves the pointer per read, so at every instant of a
-    * compaction there is a complete generation to read — no absence
-    * window, by construction.
+  /** Small-files compaction as a manifest commit — the table-format
+    * move (Delta/Iceberg snapshot commit) on a plain filesystem: data
+    * files live in dot-prefixed GENERATION directories (`.gen-<n>` —
+    * invisible to naive discovery), and the newest `_manifest-v` of
+    * the leaf's trail holds the live generation list — one name in
+    * the compaction steady state, several while streaming appends
+    * ([[appendManifested]]) accumulate. A fold writes the new
+    * generation in full, then claims its `_manifest-v` by
+    * create-exclusive (the version CAS and the commit — see
+    * [[commitManifest]]). [[readManifested]] resolves the trail head
+    * per read, so at every instant of a compaction there is a
+    * complete generation to read — no absence window, by
+    * construction. Returns the file count written (≤ the computed
+    * target — trailing partitions can come up empty); targetFileBytes
+    * ≈ 128 MB matches the scan split size so one task reads one
+    * file.
     *
     * GC retains the last `retainSnapshots` committed manifests (and
     * every generation they reference) and deletes older ones — at the
-    * default 1, a reader that resolved the pointer just before a
+    * default 1, a reader that resolved the head just before a
     * commit may still be scanning the old generation and gets a full
     * compaction cycle of grace (transient cost ≤ 2× the leaf). The
     * same window bounds [[readManifestedAt]] time travel: raise
@@ -152,7 +54,19 @@ trait WarehouseLeaf { this: Warehouse.type =>
                         clusterBy: Option[String] = None,
                         zorderBy: Seq[String] = Nil,
                         zorderQuantiles: Boolean = false,
-                        alsoRetainVersions: Set[Long] = Set.empty): Int = {
+                        alsoRetainVersions: Set[Long] = Set.empty): Int =
+    foldLeaf(spark, dir, targetFileBytes, retainSnapshots, retainFor, clusterBy,
+      zorderBy, zorderQuantiles, alsoRetainVersions)._1
+
+  /** [[compactManifested]], returning the file count and the version
+    * the fold committed (the partitioned walk records that version in
+    * its root map without reading the head again). */
+  private[operators] def foldLeaf(spark: SparkSession, dir: String,
+                                  targetFileBytes: Long, retainSnapshots: Int,
+                                  retainFor: Option[java.time.Duration],
+                                  clusterBy: Option[String], zorderBy: Seq[String],
+                                  zorderQuantiles: Boolean,
+                                  alsoRetainVersions: Set[Long]): (Int, Long) = {
     require(retainSnapshots >= 0,
       s"retainSnapshots must be >= 0, got $retainSnapshots")
     require(retainFor.forall(!_.isNegative),
@@ -164,11 +78,11 @@ trait WarehouseLeaf { this: Warehouse.type =>
         s"than 4 would overflow the 64-bit Morton key; beyond 4, cluster " +
         s"on the highest-selectivity pair instead), got $zorderBy")
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
-    leafCommit(fs, root, "compactManifested", before = () => {
-      // LEAF directories only (the compact() convention): a partitioned
-      // root's k=v children each get their OWN manifest — adoption here
-      // would create an empty generation beside them and readers through
-      // the pointer would see an empty table. Fail loud, point at the
+    leafCommit(fs, root, "compactManifested", before = head => {
+      // LEAF directories only: a partitioned root's k=v children each
+      // get their OWN manifest — adoption here would create an empty
+      // generation beside them and readers through the head would see
+      // an empty table. Fail loud, point at the
       // per-leaf entry point. (.gen-* dirs are dot-prefixed, so a
       // manifested leaf itself still walks as a leaf.)
       ManifestIo.list(fs, root)
@@ -181,7 +95,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
       // adopt a plain leaf on first contact: its loose parquet files
       // become generation 0 (one-time migration — run it before any
       // concurrent reader exists, like any format conversion)
-      adoptLeaf(fs, hconf(spark), root, always = true)
+      adoptLeaf(fs, hconf(spark), root, always = true, head = Some(head))
     }) { h =>
     // the manifest may list SEVERAL generations (streaming appends via
     // appendManifested) — compaction folds them all into one. Txn
@@ -195,7 +109,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val nextId = nextEntryId(fs, root, cur)
     val next = s".gen-$nextId"
-    // the new generation is invisible until the pointer flips, so it
+    // the new generation is invisible until its manifest is claimed, so it
     // can be written in place — no staging rename needed. The fold
     // reads through [[scanGens]]: schema evolution carries forward
     // (mergeSchema / union-by-name), and any `.del-` tombstones are
@@ -328,14 +242,14 @@ trait WarehouseLeaf { this: Warehouse.type =>
     // reader grace set), and aged never-referenced dirs are swept.
     gcLeafRetention(fs, root, retainSnapshots, retainFor, alsoRetainVersions,
       fold = Some(v -> ((if (retainSnapshots >= 1) cur else Seq.empty) :+ next)))
-    ManifestIo.list(fs, new HPath(root, next))
-      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    (ManifestIo.list(fs, new HPath(root, next))
+      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet")), v)
     }
   }
 
-  /** Manifest-pointer APPEND — the streaming-ingest commit: `df`
-    * becomes ONE new immutable generation directory, and the pointer
-    * atomically swaps to the old list PLUS the new name (the manifest
+  /** Manifest APPEND — the streaming-ingest commit: `df` becomes ONE
+    * new immutable generation directory, and the next `_manifest-v`
+    * lists the old list PLUS the new name (the manifest
     * is newline-separated generation names; [[readManifested]] scans
     * their union). A reader resolves the old list or the new — either
     * way a complete, committed set of files — so arriving batches
@@ -348,7 +262,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * `genId` makes the commit IDEMPOTENT for retrying producers (a
     * foreachBatch re-fired after a restart): the caller keys the
     * generation by a stable id (batchId), a re-fire overwrites its own
-    * generation with identical deterministic content and the pointer —
+    * generation with identical deterministic content and the head —
     * already listing it — is left untouched, so the retry is a no-op
     * rewrite instead of a duplicate append. The overwrite of an
     * already-visible generation can momentarily remove files under a
@@ -356,10 +270,10 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * missing-file retry covers exactly this. Without `genId`,
     * generations number monotonically from the current maximum.
     *
-    * A plain leaf already holding LOOSE parquet files (no `_current`)
+    * A plain leaf already holding LOOSE parquet files (no manifest)
     * is adopted on first contact exactly as [[compactManifested]]
     * adopts it: the loose files become generation 0, THEN the batch
-    * appends — never a pointer that silently excludes pre-existing
+    * appends — never a manifest that silently excludes pre-existing
     * data. A batchId-keyed producer whose first batch would ALSO be
     * generation 0 fails loudly instead of overwriting the adopted
     * data.
@@ -396,9 +310,9 @@ trait WarehouseLeaf { this: Warehouse.type =>
     // head and spends no extra job.
     var validatedCons: Option[Map[String, String]] = None
     leafCommit(fs, root, "appendManifested", attempts = 5, orEmpty = true,
-      before = () => {
+      before = head => {
         fs.mkdirs(root)
-        adoptLeaf(fs, hconf(spark), root, refuseLoose = () =>
+        adoptLeaf(fs, hconf(spark), root, head = Some(head), refuseLoose = () =>
           require(genId.forall(_ != 0L),
             s"appendManifested: $dir holds pre-existing loose parquet " +
               "files, adopted as generation 0 — a genId=0 append would " +
@@ -628,9 +542,9 @@ trait WarehouseLeaf { this: Warehouse.type =>
   /** ROW-LEVEL DELETE as a tombstone commit — the merge-on-read
     * delete (Delta deletion vectors / Iceberg equality-delete files,
     * keyed): `keys` (exactly one column, named the table's key
-    * column) becomes an immutable `.del-<id>` generation and the
-    * pointer swaps to the old list plus the tombstone — one O(delete
-    * set) write and one pointer commit, NEVER a rewrite of the data
+    * column) becomes an immutable `.del-<id>` generation and the next
+    * manifest lists the old list plus the tombstone — one O(delete
+    * set) write and one manifest commit, NEVER a rewrite of the data
     * (the delete-a-few-rows-from-100 TB operation). Readers apply it
     * ordered (see [[scanGens]]): earlier generations lose the keys,
     * a LATER append legitimately re-inserts them. Compaction
@@ -715,20 +629,10 @@ trait WarehouseLeaf { this: Warehouse.type =>
     scanGens(spark, fs, root, snap.body)
   }
 
-  // The pointer swap itself — synced tmp write, atomic rename, parent
-  // sync — lives at [[ManifestIo.replace]], with the per-scheme
-  // semantics (POSIX rename on file:, delete+rename fallback on HDFS,
-  // conditional-PUT note for object stores) documented there. Scope
-  // of the durability claim is unchanged from the java.nio era: the
-  // POINTER commit is durable where the store can make it so; the
-  // generation's DATA files are written by Spark's parquet committer,
-  // whose durability is the filesystem/object store's contract.
-  // Reader-visibility atomicity needs none of this: a reader sees the
-  // old pointer or the new, never a partial one.
-
   /** Read a [[compactManifested]] leaf through its manifest: resolve
-    * `_current`, scan that generation. `spark.read.parquet` lists the
-    * generation eagerly, so a stale pointer usually surfaces here (not
+    * the trail head ([[trailHead]]), scan its generations.
+    * `spark.read.parquet` lists the generation eagerly, so a stale
+    * head usually surfaces here (not
     * at some later action) and the one retry re-resolves it — that
     * race is possible only when the resolve races TWO commits back to
     * back (the one-generation retention grace has run out). A reader
@@ -749,20 +653,19 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * after a short pause before concluding (r19; costs 50 ms only on
     * the genuinely-nothing-there path). One retry covers BOTH
     * stale-resolve shapes: a GC'd generation surfaces as
-    * AnalysisException from the eager listing, and a pointer
-    * mid-replace on a scheme whose rename refuses an existing
-    * destination (the HDFS delete+rename fallback — see
-    * [[ManifestIo.replace]]) surfaces as FileNotFoundException from the
-    * `_current` open itself. Direct callers (CdcApply, Quality) get the
-    * documented one-retry contract without withManifested. */
+    * AnalysisException from the eager listing, and a head
+    * `_manifest-v` GC'd between the trail listing and its read
+    * surfaces as FileNotFoundException from that open. Direct callers
+    * (CdcApply, Quality) get the documented one-retry contract without
+    * withManifested. */
   private def readHead(spark: SparkSession, dir: String, op: String,
                        keepOf: Option[Seq[String] => (String, String) => Boolean] =
                          None): DataFrame = {
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
     def resolveDf(): DataFrame = {
-      val head = headBody(fs, root).orElse {
+      val head = trailHead(fs, root).body.orElse {
         Thread.sleep(50)
-        headBody(fs, root)
+        trailHead(fs, root).body
       }.getOrElse(throw new java.io.FileNotFoundException(
         s"$op: $dir has no committed table"))
       scanGens(spark, fs, root, head, keepOf.map(_(parseStats(head))))
@@ -779,8 +682,8 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * lakehouse write): every source row REPLACES the target rows
     * carrying its key, or inserts if none exist. ONE atomic commit:
     * the key tombstone (`.del-<v>`) and the source data (`.gen-<v+1>`)
-    * are staged invisibly and enter the manifest in a single pointer
-    * swap — a reader sees the table before the merge or after it,
+    * are staged invisibly and enter the manifest in a single
+    * commit — a reader sees the table before the merge or after it,
     * never the deleted-but-not-yet-inserted middle (which a
     * delete-then-append pair would expose between its two commits).
     * The tombstone's LOWER id suppresses only the pre-merge
@@ -820,7 +723,7 @@ trait WarehouseLeaf { this: Warehouse.type =>
   /** The MERGE commit step both upsert forms run on [[leafCommit]]:
     * `probe` the head, draw the tombstone id `base` and the generation
     * id `base + 1`, `place` the key set and the data at `.del-<base>` /
-    * `.gen-<base+1>`, commit both in one pointer swap. Returns the
+    * `.gen-<base+1>`, commit both in one manifest. Returns the
     * committed version; a txn replay returns the head version. */
   private[operators] def mergeCommit(spark: SparkSession, fs: HFs, leaf: HPath,
       op: String, txn: Option[(String, Long)], probe: LeafHead => Unit = _ => ())(
@@ -839,8 +742,9 @@ trait WarehouseLeaf { this: Warehouse.type =>
     * HISTORY` / Iceberg snapshots-table analogue: one row per RETAINED
     * manifest version (ascending), with the committed entry list, the
     * generation/tombstone split, and whether this version is the
-    * current pointer — exactly one row, [[pointerVersion]] (a restore
-    * target that lists the head's entries is history, not current).
+    * committed head — exactly one row, the newest non-blank version
+    * ([[trailHead]]'s rule; a restore target that lists the head's
+    * entries is history, not current).
     * Table metadata is manifest-sized by design, so this is a
     * driver-side listing materialized as a local DataFrame — the
     * audit/debug companion to [[readManifestedAt]] (its `version`
@@ -861,12 +765,11 @@ trait WarehouseLeaf { this: Warehouse.type =>
       try {
         val body = ManifestIo.readString(fs, mf)
         Some((v, parseGens(body), fs.getFileStatus(mf).getModificationTime,
-          parseTxns(body)))
+          parseTxns(body), isBlank(body)))
       } catch { case _: java.io.FileNotFoundException => None }
     }
-    val current = headBody(fs, root).flatMap(b =>
-      pointerVersion(trail.map(t => t._1 -> t._2), parseGens(b)))
-    val rows = trail.map { case (v, gens, mtime, txns) =>
+    val current = trail.filterNot(_._5).lastOption.map(_._1)
+    val rows = trail.map { case (v, gens, mtime, txns, _) =>
       org.apache.spark.sql.Row(v,
         gens.mkString(","),
         gens.count(!_.startsWith(".del-")).toLong,

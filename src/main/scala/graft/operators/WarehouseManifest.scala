@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Manifest IO and parsing — internal module of [[Warehouse]] (r18
   * split, same public API): the filesystem seam, per-table lock,
-  * pointer/trail read+parse+roll-forward, `#stats:` data-skipping
+  * the trail-head read and manifest parsing, `#stats:` data-skipping
   * metadata, the version-CAS commit, the one leaf commit every write
   * op runs on ([[leafCommit]]), and the bounded commit pool. */
 trait WarehouseManifest { this: Warehouse.type =>
@@ -34,30 +34,6 @@ trait WarehouseManifest { this: Warehouse.type =>
     tableLocks.computeIfAbsent(root.toString, _ => new Object)
       .synchronized(body)
 
-  /** The swap-staging siblings for a leaf directory: DOT-PREFIXED, so
-    * Spark's file/partition discovery (which skips `.`/`_` names) never
-    * sees a non-`k=v` directory inside a partitioned root while a leaf
-    * is mid-compaction. */
-  private[operators] def stagingPaths(root: HPath): (HPath, HPath) = {
-    val parent = root.getParent
-    (new HPath(parent, s".${root.getName}.compact_tmp"),
-      new HPath(parent, s".${root.getName}.compact_old"))
-  }
-
-  /** Recover a directory stranded by a crash between [[compact]]'s two
-    * renames: the data then lives ONLY under the dot-prefixed
-    * `.name.compact_old` sibling — which Spark's discovery and the
-    * [[compactPartitioned]] walk both skip — so it MUST be moved back
-    * before anything else reads or compacts the tree. Returns true if a
-    * restore happened. */
-  private[operators] def restoreIfStranded(fs: HFs, target: HPath): Boolean = {
-    val (_, old) = stagingPaths(target)
-    if (!ManifestIo.exists(fs, target) && ManifestIo.isDirectory(fs, old)) {
-      ManifestIo.rename(fs, old, target)
-      true
-    } else false
-  }
-
   /** Root-relative leaf path for the partitioned-compaction report
     * maps (`.` for the root itself). */
   private[operators] def relPath(root: HPath, leaf: HPath): String =
@@ -66,8 +42,9 @@ trait WarehouseManifest { this: Warehouse.type =>
       case p => p
     }
 
-  /** The manifest's generation list (newline-separated; single-line
-    * pointers — the compaction steady state — are a 1-element list).
+  /** The manifest's generation list (newline-separated; a
+    * single-generation manifest — the compaction steady state — is a
+    * 1-element list).
     * Entries are data generations (`.gen-<id>`) or tombstone
     * generations (`.del-<id>`, [[deleteManifested]]); both draw ids
     * from ONE sequence, because the id ORDER is the merge-on-read
@@ -77,8 +54,8 @@ trait WarehouseManifest { this: Warehouse.type =>
     * exactly-once contract — and are filtered here so every
     * generation-walking reader (scan, GC, vacuum, history) is
     * oblivious to them. */
-  private[operators] def readPointer(fs: HFs, pointer: HPath): Seq[String] =
-    parseGens(ManifestIo.readString(fs, pointer))
+  private[operators] def readGens(fs: HFs, manifest: HPath): Seq[String] =
+    parseGens(ManifestIo.readString(fs, manifest))
 
   private[operators] def parseGens(body: String): Seq[String] =
     body.trim.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
@@ -99,54 +76,53 @@ trait WarehouseManifest { this: Warehouse.type =>
         rest.substring(0, i) -> rest.substring(i + 1).toLong
       }.toMap
 
-  /** The committed HEAD body of a leaf: `_current` when present; when
-    * the pointer is ABSENT but the `_manifest-*` trail is not — the
-    * crash window inside a non-atomic pointer replace (the HDFS
-    * delete+rename fallback, an object store's copy+delete rename) —
-    * ROLL FORWARD to the trail head. The claimed version's data files
-    * and its `_manifest-v` are both durable before the swap starts, so
-    * the head trailer is a complete committed snapshot; resolving it
-    * is the in-doubt-transaction roll-forward. The alternative was a
-    * silent catastrophe: a writer that treated the pointer-less leaf
-    * as fresh re-adopted `.gen-0` ALONE and committed a pointer that
-    * dropped every later generation (r15 fix — every pointer consumer
-    * below resolves through here). None = nothing committed at all.
-    * The next commit's [[ManifestIo.replace]] heals the pointer.
+  /** A leaf's head as [[trailHead]] resolved it: the CAS `anchor` and
+    * the committed snapshot (`version`, `body`; 0 and None when nothing
+    * is committed). */
+  private[graft] final class TrailHead(val anchor: Long, val version: Long,
+                                       val body: Option[String])
+
+  /** THE head read of a leaf, from ONE listing of its `_manifest-*`
+    * trail — the leaf's only commit record, as the `_root-manifest-*`
+    * trail is the root's and `_delta_log/N.json` is Delta's: claiming
+    * `_manifest-v` IS the commit, and the version's data is durable
+    * before the claim. Two results, read together:
     *
-    * A BLANK body is never a committed head (r19): every commit path
-    * serializes at least one generation line, so an empty/whitespace
-    * trail head is a claimed-but-unwritten `_manifest-v` — the window
-    * between a store's create-exclusive and its body write (closed on
-    * `file:` by [[ManifestIo.putIfAbsent]]'s link(2) staging, still
-    * real on HDFS-contract stores). The roll-forward walks DOWN the
-    * trail past blank claims to the newest complete snapshot instead
-    * of resolving an in-flight claim as an empty table; a blank
-    * `_current` (torn non-atomic pointer swap) falls through to the
-    * same walk. */
-  private[operators] def headBody(fs: HFs, root: HPath): Option[String] = {
-    val direct =
-      try Some(ManifestIo.readString(fs, new HPath(root, "_current")))
-      catch { case _: java.io.FileNotFoundException => None }
-    // a listed version GC'd between the list and the read propagates
-    // as FileNotFoundException — the caller's one-retry contract
-    // re-resolves from a fresh listing (walking past it here could
-    // resolve a STALE retained snapshot as the head)
-    direct.filter(_.trim.nonEmpty).orElse(
-      manifestVersions(fs, root).reverseIterator
-        .map(v => ManifestIo.readString(fs, new HPath(root, s"_manifest-$v")))
-        .find(_.trim.nonEmpty))
+    *  - `anchor`, the highest trail version, blank claims included —
+    *    what [[leafCommit]], first-contact [[adoptLeaf]], the CHECK
+    *    pins and the clone commit anchor their version CAS on, so a
+    *    writer commits past a blank claim (r19);
+    *  - `version`/`body`, the newest non-[[isBlank]] `_manifest-v`.
+    *    Every commit path serializes at least one generation line, so
+    *    a blank body is never a head: it is a claim whose body is not
+    *    written yet. [[ManifestIo.putIfAbsent]] publishes a claim with
+    *    its full bytes on `file:` (link(2)), on HDFS-contract stores
+    *    (rename) and on object stores (conditional PUT), so a writer
+    *    of this build leaves no such window there; the walk down is
+    *    for a claim an older build or another store left blank.
+    *
+    * A listed version GC'd between the listing and its read propagates
+    * as FileNotFoundException — the caller's one-retry re-lists
+    * (walking past it here could resolve a STALE retained snapshot as
+    * the head). */
+  private[graft] def trailHead(fs: HFs, root: HPath): TrailHead = {
+    val vs = manifestVersions(fs, root)
+    val anchor = vs.lastOption.getOrElse(0L)
+    vs.reverseIterator
+      .map(v => v -> ManifestIo.readString(fs, new HPath(root, s"_manifest-$v")))
+      .find(vb => !isBlank(vb._2))
+      .fold(new TrailHead(anchor, 0L, None)) { case (v, b) => new TrailHead(anchor, v, Some(b)) }
   }
 
-  /** The head version of the committed `_manifest-*` trail (0 when
-    * nothing committed) — what [[leafCommit]] and first-contact
-    * [[adoptLeaf]] anchor their CAS on. */
-  private[graft] def headVersion(fs: HFs, root: HPath): Long =
-    manifestVersions(fs, root).lastOption.getOrElse(0L)
+  /** A claimed `_manifest-v` whose body is not written: never a head
+    * ([[trailHead]], `history`'s `is_current`), and vacuum food once
+    * aged. */
+  private[operators] def isBlank(body: String): Boolean = body.trim.isEmpty
 
   /** Serialize a manifest body: generation list, then the `#stats:`
     * file-skipping lines (sorted), then the txn markers (app-sorted) —
-    * deterministic bytes, so trail-head == pointer stays a
-    * byte-equality invariant. */
+    * deterministic bytes, so a re-run that recommits the same state
+    * (a converging clone) compares byte-equal. */
   private[operators] def manifestBody(gens: Seq[String], txns: Map[String, Long],
                            stats: Seq[String] = Seq.empty): String =
     (gens ++ stats.sorted ++
@@ -407,35 +383,26 @@ trait WarehouseManifest { this: Warehouse.type =>
   }
 
   /** Commit manifest VERSION `expectedVersion + 1`: claim the
-    * immutable history file `_manifest-<v>` by CREATE-EXCLUSIVE (the
-    * Delta `_delta_log/N.json` analogue — one file per commit, and
-    * put-if-absent on its name IS the concurrency control: r13), then
-    * swap `_current` to the same content. A writer whose
-    * `expectedVersion` was overtaken — another process committed
-    * since it read the pointer — fails the claim and gets
-    * ConcurrentModificationException BEFORE anything becomes visible:
-    * a committed generation can never be silently dropped by a stale
-    * writer's pointer swap. `_current` stays the single reader entry
-    * point ([[readManifested]] — no history scan on the hot path);
-    * the `_manifest-*` trail is what [[readManifestedAt]]
-    * time-travels through. A crash between the claim and the pointer
-    * swap strands `_manifest-<v>` as an uncommitted trailer —
-    * [[vacuum]] removes it; the next writer (anchored on the POINTER,
-    * and claiming max-trail-version + 1) simply commits past it.
-    * Returns the committed version id. */
-  private[graft] def commitManifest(fs: HFs, root: HPath, pointer: HPath,
+    * immutable `_manifest-<v>` by CREATE-EXCLUSIVE — the claim IS the
+    * commit (the Delta `_delta_log/N.json` analogue — one file per
+    * commit, and put-if-absent on its name IS the concurrency control:
+    * r13). A writer whose `expectedVersion` was overtaken — another
+    * process committed since it read the head — fails the claim and
+    * gets ConcurrentModificationException BEFORE anything becomes
+    * visible, so a committed generation can never be silently dropped
+    * by a stale writer. Returns the committed version id. */
+  private[graft] def commitManifest(fs: HFs, root: HPath,
                              gens: Seq[String], expectedVersion: Long,
                              txns: Map[String, Long] = Map.empty,
                              stats: Seq[String] = Seq.empty): Long = {
     val v = expectedVersion + 1
-    val body = manifestBody(gens, txns, stats)
-    if (!ManifestIo.putIfAbsent(fs, new HPath(root, s"_manifest-$v"), body))
+    if (!ManifestIo.putIfAbsent(fs, new HPath(root, s"_manifest-$v"),
+        manifestBody(gens, txns, stats)))
       throw new java.util.ConcurrentModificationException(
         s"commit of $root at version $v lost the race: another writer " +
-          "committed after this writer read the pointer (version CAS " +
+          "committed after this writer read the head (version CAS " +
           "on the _manifest trail) — re-read and retry, or key batches " +
           "by genId / coordinate writers")
-    ManifestIo.replace(fs, pointer, body)
     v
   }
 
@@ -466,17 +433,19 @@ trait WarehouseManifest { this: Warehouse.type =>
     * The contract, stated once:
     *
     *  - '''Lock.''' In-process writers to one leaf serialize on the
-    *    per-table lock ([[withTableLock]]); `before` runs under it
-    *    ahead of the first head read (first-contact adoption).
-    *  - '''Early `expected` capture.''' The head body and the trail-head
-    *    version are read together, under the lock, BEFORE the step does
+    *    per-table lock ([[withTableLock]]).
+    *  - '''Early `expected` capture.''' The head body and the CAS
+    *    anchor come from one [[trailHead]] read, under the lock, BEFORE the step does
     *    any work — a cross-process write landing during the step's
     *    scans or data writes then surfaces as a lost version CAS at
     *    [[commitManifest]], never as a commit over rows the step did not
-    *    see. `pinned` replaces the first attempt's read with a snapshot
-    *    the caller took even earlier (before a root-wide validation
-    *    scan). A missing head refuses (`"<op>: <leaf> has no committed
-    *    table"`) unless `orEmpty` lets a first append create the table.
+    *    see. `before` maps the first read to the head the first attempt
+    *    runs on (first-contact adoption: [[adoptLeaf]] commits over an
+    *    empty head and returns the new one). `pinned` replaces the
+    *    first attempt's read with a head the caller took even earlier
+    *    (before a root-wide validation scan). A missing head refuses
+    *    (`"<op>: <leaf> has no committed table"`) unless `orEmpty` lets
+    *    a first append create the table.
     *  - '''Txn gate.''' With `txn = Some(((appId, version), replay))` the
     *    appId is checked ([[requireTxnAppId]]), and a head whose marker
     *    for appId is already ≥ version is a completed replay: the step
@@ -491,37 +460,33 @@ trait WarehouseManifest { this: Warehouse.type =>
     *    spinning. */
   private[operators] def leafCommit[T](fs: HFs, leaf: HPath, op: String,
                                        attempts: Int = 1,
-                                       pinned: Option[(String, Long)] = None,
+                                       pinned: Option[TrailHead] = None,
                                        orEmpty: Boolean = false,
-                                       before: () => Unit = () => (),
+                                       before: TrailHead => TrailHead = identity,
                                        txn: Option[((String, Long), Long => T)] = None)(
       step: LeafHead => T): T = {
     requireTxnAppId(op, txn.map(_._1))
     withTableLock(leaf) {
-      before()
-      def run(attempt: Int): T = {
-        val (body, expected) = pinned.filter(_ => attempt == 0).getOrElse {
-          val b = headBody(fs, leaf).orElse(if (orEmpty) Some("") else None)
-            .getOrElse(throw new IllegalArgumentException(
-              s"$op: $leaf has no committed table"))
-          (b, headVersion(fs, leaf))
-        }
+      def run(attempt: Int, h: TrailHead): T = {
+        val body = h.body.orElse(if (orEmpty) Some("") else None)
+          .getOrElse(throw new IllegalArgumentException(
+            s"$op: $leaf has no committed table"))
+        val expected = h.anchor
         val txns = parseTxns(body)
         txn.collect {
           case ((app, ver), replay) if txns.get(app).exists(_ >= ver) => replay(expected)
         }.getOrElse {
           val marked = txn.fold(txns) { case ((app, ver), _) => txns + (app -> ver) }
           val head = new LeafHead(body, expected, attempt, (gens, stats) =>
-            commitManifest(fs, leaf, new HPath(leaf, "_current"), gens, expected,
-              marked, stats))
+            commitManifest(fs, leaf, gens, expected, marked, stats))
           try step(head)
           catch {
             case _: java.util.ConcurrentModificationException if attempt + 1 < attempts =>
-              run(attempt + 1)
+              run(attempt + 1, trailHead(fs, leaf))
           }
         }
       }
-      run(0)
+      run(0, pinned.getOrElse(before(trailHead(fs, leaf))))
     }
   }
 
@@ -541,13 +506,15 @@ trait WarehouseManifest { this: Warehouse.type =>
     * `.gen-0` with no commit is a crashed prior adoption's half-moved
     * state; both become generation 0 (the move is idempotent — a
     * replay moves the remainder and converges) and keep their data.
-    * The probe is the committed HEAD, not the pointer file: a
-    * pointer-less leaf with a live `_manifest-*` trail is a crashed
-    * pointer swap (see [[headBody]]), and re-adopting it would drop
-    * every post-gen-0 generation. Without a template, a leaf with no
-    * data at all commits only when `always` (compaction commits an
-    * empty `.gen-0`); otherwise a no-genId append would number itself
-    * 0 and overwrite adopted data.
+    * The probe is the committed HEAD — `head` when the caller has just
+    * read it under the lock (a [[leafCommit]] `before`), else one
+    * [[trailHead]] read: re-adopting a leaf with a committed trail
+    * would drop every post-gen-0 generation. Returns the head after
+    * the adoption.
+    * Without a template, a leaf with no data at all commits only when
+    * `always` (compaction commits an empty `.gen-0`); otherwise a
+    * no-genId append would number itself 0 and overwrite adopted
+    * data.
     *
     * The CAS anchor is the one rule the callers differ on.
     * `sharedCreate` (the pooled root creations): rival creators race
@@ -556,36 +523,41 @@ trait WarehouseManifest { this: Warehouse.type =>
     * interim commit owns `_manifest-1` and this creation no-ops
     * instead of claiming `_manifest-(head+1)` over it. Otherwise (first
     * contact inside a writer's own [[leafCommit]]) the CAS anchors on
-    * the trail head, so a leaf whose trail holds only blank claims
-    * ([[headBody]]'s r19 window) commits past them, and a lost race
-    * propagates. */
+    * the probe's trail anchor, so a leaf whose trail holds only blank
+    * claims ([[trailHead]]'s r19 window) commits past them, and a lost
+    * race — any commit landing after the probe — propagates. */
   private[operators] def adoptLeaf(fs: HFs, conf: org.apache.hadoop.conf.Configuration,
                                    leaf: HPath, template: Option[HPath] = None,
                                    inherit: Seq[String] = Nil,
                                    always: Boolean = false,
                                    sharedCreate: Boolean = false,
-                                   refuseLoose: () => Unit = () => ()): Unit =
+                                   refuseLoose: () => Unit = () => (),
+                                   head: Option[TrailHead] = None): TrailHead =
     withTableLock(leaf) {
-      if (headBody(fs, leaf).isEmpty) {
+      val h = head.getOrElse(trailHead(fs, leaf))
+      if (h.body.nonEmpty) h
+      else {
         def parquet(d: HPath) = ManifestIo.list(fs, d)
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         val gen0 = new HPath(leaf, ".gen-0")
         val loose = parquet(leaf)
         if (loose.nonEmpty) refuseLoose()
         val hasData = loose.nonEmpty || parquet(gen0).nonEmpty
-        if (hasData || always || template.isDefined) {
+        if (!(hasData || always || template.isDefined)) h
+        else {
           fs.mkdirs(gen0)
           loose.foreach(st => ManifestIo.rename(fs, st.getPath,
             new HPath(gen0, st.getPath.getName)))
           if (!hasData) template.foreach(t => org.apache.hadoop.fs.FileUtil.copy(
             fs, t, fs, new HPath(gen0, t.getName), false, conf))
+          val stats = collectStats(fs, conf, leaf, ".gen-0") ++ inherit
           try {
-            commitManifest(fs, leaf, new HPath(leaf, "_current"), Seq(".gen-0"),
-              if (sharedCreate) 0L else headVersion(fs, leaf),
-              stats = collectStats(fs, conf, leaf, ".gen-0") ++ inherit)
-            ()
+            val v = commitManifest(fs, leaf, Seq(".gen-0"),
+              if (sharedCreate) 0L else h.anchor, stats = stats)
+            new TrailHead(v, v, Some(manifestBody(Seq(".gen-0"), Map.empty, stats)))
           } catch {
-            case _: java.util.ConcurrentModificationException if sharedCreate => ()
+            case _: java.util.ConcurrentModificationException if sharedCreate =>
+              trailHead(fs, leaf)
           }
         }
       }
@@ -663,7 +635,7 @@ trait WarehouseManifest { this: Warehouse.type =>
     * crashes, folds and RESTORE exactly like the data they gate. */
   def committedTxns(dir: String): Map[String, Long] = {
     val (fs, root) = ManifestIo.resolve(dir, sessionHconf())
-    headBody(fs, root).map(parseTxns).getOrElse(Map.empty)
+    trailHead(fs, root).body.map(parseTxns).getOrElse(Map.empty)
   }
 
   private[operators] def manifestVersions(fs: HFs, root: HPath): Seq[Long] =
@@ -687,7 +659,7 @@ trait WarehouseManifest { this: Warehouse.type =>
     retryOnMissingFile(action(readManifested(spark, dir)))
 
   /** [[withManifested]] over a partitioned root: the action re-resolves
-    * EVERY leaf pointer and re-runs once if any leaf's generation
+    * EVERY leaf head and re-runs once if any leaf's generation
     * expired mid-action (same retry budget, same reasoning — per leaf
     * now, since each leaf commits independently). */
   def withManifestedPartitioned[T](spark: SparkSession, rootDir: String)(
@@ -704,9 +676,9 @@ trait WarehouseManifest { this: Warehouse.type =>
 
   /** Run `f` over the leaves a root op touches with a BOUNDED driver-
     * side pool (r16): per-leaf commits are pure filesystem sequences
-    * (renames + create-exclusive CAS + pointer swap — no Spark jobs),
-    * independent across leaves (separate locks, separate `_current`
-    * tmp files), so they parallelize trivially; at object-store
+    * (renames + one create-exclusive CAS — no Spark jobs),
+    * independent across leaves (separate locks, separate trails), so
+    * they parallelize trivially; at object-store
     * latencies this is the difference between `touched × RTT` and
     * `touched/16 × RTT` per batch. Work runs in CHUNKS with the claim
     * heartbeat refreshed between chunks (the refresh rewrites one

@@ -78,7 +78,7 @@ trait WarehouseRetention { this: Warehouse.type =>
     val expired = vs.filterNot(kept.contains)
     if (fold.isDefined || expired.nonEmpty) {
       def entriesOf(xs: Seq[Long]): Set[String] =
-        xs.flatMap(x => readPointer(fs, new HPath(leaf, s"_manifest-$x"))).toSet
+        xs.flatMap(x => readGens(fs, new HPath(leaf, s"_manifest-$x"))).toSet
       val keepGens = entriesOf(kept) ++ fold.toSeq.flatMap(_._2)
       val expiredGens = entriesOf(expired)
       val graceCutoff = System.currentTimeMillis() - DefaultVacuumGraceMs
@@ -94,15 +94,6 @@ trait WarehouseRetention { this: Warehouse.type =>
     }
     anchor
   }
-
-  /** The version `_current` was swapped to: the NEWEST trail version
-    * whose entry list equals the head's. A crash-stranded trailer above
-    * it is uncommitted, and an older version listing the same entries
-    * (a restore's target) is history. Shared by [[history]]'s
-    * `is_current` and [[vacuum]]'s crashed-trailer rule. */
-  private[operators] def pointerVersion(trail: Seq[(Long, Seq[String])],
-                                        head: Seq[String]): Option[Long] =
-    trail.filter(_._2 == head).lastOption.map(_._1)
 
   /** [[vacuum]] over a partitioned root: the [[manifestLeaves]] walk,
     * one vacuum per leaf (each under its own table lock — leaves are
@@ -127,8 +118,7 @@ trait WarehouseRetention { this: Warehouse.type =>
     val leafReports = parCommitLeaves(leaves) { leaf =>
       relPath(root, leaf) -> vacuum(spark, leaf.toString, graceMs)
     }.filter { case (_, r) =>
-      r.removedGenerations.nonEmpty || r.removedManifests.nonEmpty ||
-        r.removedPointerTmp
+      r.removedGenerations.nonEmpty || r.removedManifests.nonEmpty
     }.toMap
     val completedHead = rootVersions(fs, root).lastOption.getOrElse {
       val heads = leaves.map(l => manifestVersions(fs, l).lastOption.getOrElse(0L))
@@ -156,15 +146,17 @@ trait WarehouseRetention { this: Warehouse.type =>
         st.getModificationTime < cutoff)
       .foreach(st => ManifestIo.delete(fs, st.getPath))
     // a crashed claim takeover strands its renamed-aside corpse file
-    // (r19 — the rename-based takeover's only debris); aged only
+    // (r19 — the rename-based takeover's only debris), a crashed claim
+    // its staging file; aged only
     ManifestIo.list(fs, root)
       .filter(st => st.isFile &&
-        st.getPath.getName.startsWith(".claim-corpse-") &&
+        (st.getPath.getName.startsWith(".claim-corpse-") ||
+          ManifestIo.isClaimStaging(st.getPath.getName)) &&
         st.getModificationTime < cutoff)
       .foreach(st => ManifestIo.delete(fs, st.getPath))
     if (claims.isEmpty) leafReports
     else leafReports + ("." -> VacuumReport(Nil,
-      claims.map(_.getName.stripPrefix("_root-claim-").toLong).sorted, false))
+      claims.map(_.getName.stripPrefix("_root-claim-").toLong).sorted))
   }
 
   def vacuum(spark: SparkSession, dir: String,
@@ -172,39 +164,28 @@ trait WarehouseRetention { this: Warehouse.type =>
     require(graceMs >= 0, s"graceMs must be >= 0, got $graceMs")
     val (fs, root) = ManifestIo.resolve(dir, hconf(spark))
     withTableLock(root) {
-      headBody(fs, root) match {
-      case None => VacuumReport(Nil, Nil, false)
-      case Some(liveHead) =>
+      val bodies = manifestVersions(fs, root)
+        .map(v => v -> ManifestIo.readString(fs, new HPath(root, s"_manifest-$v")))
+      if (bodies.forall(b => isBlank(b._2))) VacuumReport(Nil, Nil)
+      else {
         // the grace clock: anything modified at/after this instant may
         // be a live cross-process writer's in-flight commit — skip it
         val cutoff = System.currentTimeMillis() - graceMs
-        def aged(p: HPath): Boolean = ManifestIo.mtime(fs, p).exists(_ < cutoff)
-        val cur = parseGens(liveHead)
-        val versions = manifestVersions(fs, root)
-        val bodies = versions
-          .map(v => v -> readPointer(fs, new HPath(root, s"_manifest-$v")))
-        val head = pointerVersion(bodies, cur)
-        val crashed = head.map(h => versions.filter(_ > h)).getOrElse(Seq.empty)
-          .filter(v => aged(new HPath(root, s"_manifest-$v")))
-        // liveness anchors on every NON-vacuumed manifest: a young
-        // trailer (possibly a live writer about to swap the pointer)
-        // keeps both itself and the generations it references safe
-        val referenced: Set[String] =
-          (bodies.filterNot(b => crashed.contains(b._1)).flatMap(_._2) ++ cur).toSet
-        val orphans = ManifestIo.list(fs, root)
+        val blank = bodies.collect { case (v, b) if isBlank(b) &&
+          ManifestIo.mtime(fs, new HPath(root, s"_manifest-$v")).exists(_ < cutoff) => v }
+        val referenced = bodies.flatMap(b => parseGens(b._2)).toSet
+        val aged = ManifestIo.list(fs, root).filter(_.getModificationTime < cutoff)
+        val orphans = aged
           .filter(st => st.isDirectory &&
             (st.getPath.getName.startsWith(".gen-") ||
               st.getPath.getName.startsWith(".del-")) &&
-            !referenced.contains(st.getPath.getName) &&
-            st.getModificationTime < cutoff)
+            !referenced.contains(st.getPath.getName))
           .map(_.getPath).toSeq
         orphans.foreach(p => ManifestIo.delete(fs, p))
-        crashed.foreach(v =>
-          ManifestIo.delete(fs, new HPath(root, s"_manifest-$v")))
-        val tmp = new HPath(root, "._current.tmp")
-        val hadTmp = ManifestIo.exists(fs, tmp) && aged(tmp)
-        if (hadTmp) ManifestIo.delete(fs, tmp)
-        VacuumReport(orphans.map(_.getName).sorted, crashed, hadTmp)
+        blank.foreach(v => ManifestIo.delete(fs, new HPath(root, s"_manifest-$v")))
+        aged.filter(st => st.isFile && ManifestIo.isClaimStaging(st.getPath.getName))
+          .foreach(st => ManifestIo.delete(fs, st.getPath))
+        VacuumReport(orphans.map(_.getName).sorted, blank)
       }
     }
   }

@@ -11,17 +11,16 @@ import org.apache.spark.sql.types.DecimalType
 trait WarehouseRoot { this: Warehouse.type =>
 
   /** [[compactManifested]] over a partitioned root: walk the `k=v`
-    * tree to its leaves (the [[compactPartitioned]] walk, including
-    * the stranded-`.compact_old` restore for trees migrating from the
-    * two-rename scheme) and give each leaf its OWN `_current` manifest
-    * commit. Returns root-relative leaf path → file count written.
+    * tree to its leaves ([[manifestLeaves]]) and give each leaf its
+    * OWN manifest commit. Returns root-relative leaf path → file count
+    * written.
     *
-    * This closes the one hole the two-rename per-leaf swap left: a
-    * reader listing the root during a leaf's swap could silently miss
-    * that whole partition for an instant. With a per-leaf pointer
-    * there is — by the same construction as the single-leaf argument —
-    * a complete generation resolvable in every leaf at every instant;
-    * [[readManifestedPartitioned]] is the reader that consults them.
+    * Each leaf folds independently (partition values live in the leaf
+    * DIRECTORY name and survive untouched), and with a per-leaf
+    * manifest trail there is — by the same construction as the
+    * single-leaf argument — a complete generation resolvable in every
+    * leaf at every instant; [[readManifestedPartitioned]] is the
+    * reader that consults them.
     * Contract stays single-WRITER per leaf (writers to different
     * leaves are independent, exactly like every table format's
     * partition-level commit). */
@@ -78,7 +77,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     val checked = parCommitLeaves(leaves,
       refresh = () => refreshClaim(fs, st, root)) { leaf =>
       val rel = relPath(root, leaf)
-      val body = headBody(fs, leaf)
+      val body = trailHead(fs, leaf).body
       val gens = body.map(parseGens).getOrElse(Seq.empty)
       val steady = gens.size == 1 && gens.head.startsWith(".gen-") &&
         clusterBy.isEmpty && zorderBy.isEmpty
@@ -109,11 +108,11 @@ trait WarehouseRoot { this: Warehouse.type =>
       case (_, Some(r)) => r
       case (leaf, None) =>
         val rel = relPath(root, leaf)
-        val n = compactManifested(spark, leaf.toString, targetFileBytes,
+        val folded = foldLeaf(spark, leaf.toString, targetFileBytes,
           retainSnapshots, retainFor, clusterBy, zorderBy, zorderQuantiles,
-          alsoRetainVersions = mapPins.getOrElse(rel, Set.empty))
+          mapPins.getOrElse(rel, Set.empty))
         refreshClaim(fs, st, root)
-        rel -> (n, headVersion(fs, leaf))
+        rel -> folded
     }
     val map = out.map { case (r, (_, v)) => r -> v }.toMap
     // a fully-steady walk (every leaf skipped, heads unchanged) spends
@@ -143,11 +142,9 @@ trait WarehouseRoot { this: Warehouse.type =>
   }
 
   /** The `k=v` leaf walk shared by the manifested-partitioned compact
-    * and read paths: recurse into visible directories, restoring any
-    * child stranded mid-swap by a crashed two-rename run first (the
-    * [[compactPartitioned]] self-heal — a tree migrating to manifests
-    * may carry that debris). A manifested leaf's `.gen-*`/`_current`
-    * entries are dot/underscore-prefixed, so it walks as a leaf. */
+    * and read paths: recurse into visible directories, ONE `LIST` per
+    * directory. A manifested leaf's `.gen-*`/`_manifest-*` entries are
+    * dot/underscore-prefixed, so it walks as a leaf. */
   private[operators] def manifestLeaves(fs: HFs, d: HPath): Seq[HPath] = {
     // breadth-first on ONE bounded pool per LEVEL (r18): each frontier
     // directory's walk step is one independent LIST, and the whole
@@ -158,14 +155,6 @@ trait WarehouseRoot { this: Warehouse.type =>
     // level tree nested a fresh 16-thread pool per non-leaf child —
     // ~16^depth threads, outer workers blocked on inner pools.)
     def step(dir: HPath): Either[HPath, Seq[HPath]] = {
-      ManifestIo.list(fs, dir)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(".") &&
-          st.getPath.getName.endsWith(".compact_old"))
-        .foreach { o =>
-          val target = new HPath(dir,
-            o.getPath.getName.stripPrefix(".").stripSuffix(".compact_old"))
-          restoreIfStranded(fs, target)
-        }
       val sub = ManifestIo.list(fs, dir)
         .filter(st => st.isDirectory &&
           !st.getPath.getName.startsWith(".") &&
@@ -187,7 +176,7 @@ trait WarehouseRoot { this: Warehouse.type =>
   }
 
   /** Read a [[compactManifestedPartitioned]] tree: every leaf resolves
-    * through its own `_current` (so a compaction in one leaf is
+    * through its own manifest trail (so a compaction in one leaf is
     * invisible to reads of another, and no leaf is ever absent), with
     * the `k=v` partition values re-attached from the directory names
     * as literal columns — the same VALUES a partition-discovering scan
@@ -254,7 +243,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     * `k=v` partition values re-attached from the directory names (see
     * [[readManifestedPartitioned]] for the unescaping + string-typing
     * contract), leaves unioned by name. Per-leaf PLAN construction
-    * (pointer read + file listing + footer schema) runs on the
+    * (trail-head read + file listing + footer schema) runs on the
     * bounded pool (r16): it is metadata IO, independent across
     * leaves, and sequential it is the dominant driver cost of a read
     * over a many-leaf root — leaves/16 × RTT instead of leaves × RTT. */
@@ -495,12 +484,12 @@ trait WarehouseRoot { this: Warehouse.type =>
       case None =>
         // migration from the lockstep scheme: one per-leaf walk (only
         // ever paid once per root)
-        val heads = leaves.map(l => l -> headVersion(fs, l))
-        val headMap = heads.map { case (l, v) => relPath(root, l) -> v }.toMap
-        val vMin = heads.map(_._2).min
-        val vMax = heads.map(_._2).max
+        val heads = leaves.map(l => l -> trailHead(fs, l))
+        val headMap = heads.map { case (l, h) => relPath(root, l) -> h.version }.toMap
+        val vMin = headMap.values.min
+        val vMax = headMap.values.max
         val fullReplay = txn.exists { case (app, ver) =>
-          leaves.forall(l => headBody(fs, l).exists(b =>
+          heads.forall(_._2.body.exists(b =>
             parseTxns(b).get(app).exists(_ >= ver)))
         }
         if (fullReplay) RootTransition(vMax, headMap, Map.empty, fullReplay = true)
@@ -639,11 +628,9 @@ trait WarehouseRoot { this: Warehouse.type =>
     * and O(missing) driver FS calls — creation stays cheap at
     * thousands of shards. Returns the leaves found missing, in order.
     *
-    * The probe is the committed HEAD ([[headBody]]), never the
-    * directory or `_current`: a crashed prior creation leaves a
-    * directory without a commit (re-creating it must converge), and a
-    * crashed pointer swap leaves a live trail without `_current`
-    * (re-creating it would reset the leaf). With `mapped`, a leaf the
+    * The probe is the committed HEAD ([[trailHead]]), never the
+    * directory: a crashed prior creation leaves a directory without a
+    * commit (re-creating it must converge). With `mapped`, a leaf the
     * root's last version map records counts as committed — ONE map
     * read replaces a head probe per leaf (r17; the sharded CDC's
     * per-batch fast path at thousands of shards). A leaf created by a
@@ -656,7 +643,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     val inMap = if (mapped) lastRootMapRels(fs, root).getOrElse(Set.empty[String])
       else Set.empty[String]
     val missing = parCommitLeaves(leaves.filterNot(l => inMap.contains(relPath(root, l))),
-      refresh = refresh)(l => l -> headBody(fs, l).isEmpty)
+      refresh = refresh)(l => l -> trailHead(fs, l).body.isEmpty)
       .collect { case (l, true) => l }
     if (missing.nonEmpty) {
       val tmpl = new HPath(root,
@@ -713,7 +700,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     // is claimed — probing after would strand `_root-claim-(T+1)` and
     // block every root op on the table until the takeover grace
     leaves.headOption.foreach { leaf =>
-      requireKeyColumn(spark, leaf, headBody(fs, leaf).getOrElse(
+      requireKeyColumn(spark, leaf, trailHead(fs, leaf).body.getOrElse(
         throw new IllegalArgumentException(s"$op: $leaf has no committed table")),
         keys.columns.head, op, rootDir)
     }
@@ -805,7 +792,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     // would strand `_root-claim-(T+1)` and block every root op on
     // the table until the takeover grace passes
     leaves.headOption.foreach { case (leaf, _) =>
-      requireKeyColumn(spark, leaf, headBody(fs, leaf).getOrElse(""), keyCol,
+      requireKeyColumn(spark, leaf, trailHead(fs, leaf).body.getOrElse(""), keyCol,
         "upsertManifestedPartitioned", rootDir)
     }
     // one materialization of the source; every leaf's two writes
@@ -819,10 +806,10 @@ trait WarehouseRoot { this: Warehouse.type =>
     // enforceable via addCheckConstraintPartitioned — costs one
     // O(batch) job, zero when unconstrained; drifted leaves validate
     // against each distinct set, so a row violating ANY leaf's
-    // constraint refuses. Pointer reads pooled, O(leaves) like the
+    // constraint refuses. Head reads pooled, O(leaves) like the
     // walk that produced them.
     val consSets = parCommitLeaves(leaves.map(_._1)) { leaf =>
-      headBody(fs, leaf).map(h => constraintLines(h).sorted)
+      trailHead(fs, leaf).body.map(h => constraintLines(h).sorted)
         .getOrElse(Seq.empty)
     }.filter(_.nonEmpty).distinct
     consSets.foreach { set =>
@@ -897,7 +884,7 @@ trait WarehouseRoot { this: Warehouse.type =>
       // jobs write every NON-EMPTY slice's data and tombstone key set
       // under a root-local dot-prefixed staging dir (invisible to
       // discovery and the leaf walk). Each touched leaf's commit is two
-      // renames + one CAS'd pointer swap; an UNTOUCHED leaf commits
+      // renames + one CAS'd manifest claim; an UNTOUCHED leaf commits
       // NOTHING — the root version map records it at its prior head
       // (r16; the r15 lockstep scheme committed an empty tombstone +
       // generation pair to every one of them, the measured O(total
@@ -928,8 +915,10 @@ trait WarehouseRoot { this: Warehouse.type =>
           .map(l => relPath(dataStage, l)).toSet
       allLeaves.map { case (leaf, kvs) => () =>
         val rel = relPath(root, leaf)
+        // only a leaf the prior map does not name reads its head: the
+        // map records a committed version, never a blank claim's
         if (!touched.contains(rel))
-          (rel, st.prior.getOrElse(rel, headVersion(fs, leaf)), ())
+          (rel, st.prior.getOrElse(rel, trailHead(fs, leaf).version), ())
         else
           (rel, mergeCommit(spark, fs, leaf, "upsertManifestedPartitioned", txn) {
             (del, gen) =>
@@ -945,7 +934,7 @@ trait WarehouseRoot { this: Warehouse.type =>
     if (st.fullReplay)
       leaves.map { case (leaf, _) =>
         val rel = relPath(root, leaf)
-        rel -> st.prior.getOrElse(rel, headVersion(fs, leaf))
+        rel -> st.prior.getOrElse(rel, trailHead(fs, leaf).version) // as above
       }.toMap
     else {
       ManifestIo.delete(fs, stage)

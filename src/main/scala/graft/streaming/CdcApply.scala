@@ -81,7 +81,7 @@ object CdcApply {
     * reads through the manifest, then the superseded rows retire and
     * the merged rows land via `upsertManifested` — the key tombstone
     * and the data generation enter the manifest in ONE CAS-guarded
-    * pointer swap (O(batch keys) written, never a state rewrite). One
+    * manifest claim (O(batch keys) written, never a state rewrite). One
     * commit per batch means (a) no reader ever sees the
     * deleted-but-not-reinserted middle a delete+append pair exposes
     * between its two commits, and (b) a crash leaves the table at a
@@ -171,12 +171,9 @@ object CdcApply {
     // every missing `shard=<k>` leaf is created EMPTY before the first
     // merge (Warehouse.createLeaves: one template job, then a pure-FS
     // adoption + v1 commit per missing leaf on the bounded pool). A
-    // leaf is missing only when NOTHING is committed — the headBody
-    // predicate, NOT `_current` existence: in the crashed-pointer-swap
-    // window (the non-atomic delete+rename replace on hdfs/object
-    // stores) the pointer is absent but the `_manifest-*` trail is the
-    // committed head, and re-creating it would reset the shard's LWW
-    // state (the r15 pointer-vs-head bug, at the CDC layer). Fast path
+    // leaf is missing only when its `_manifest-*` trail holds no
+    // committed snapshot — re-creating a committed shard would reset
+    // its LWW state. Fast path
     // (r17, `mapped`): once any root manifest exists, its version map
     // lists every committed leaf — ONE map read replaces nShards
     // per-leaf head probes per batch.

@@ -220,7 +220,7 @@ object ChangeFeedStream {
     * accumulated net changes, not N.
     *
     * The returned handle stops it; errors rethrow there. The poll is
-    * pure manifest metadata (one pointer read) — an idle tail costs
+    * pure manifest metadata (one trail listing) — an idle tail costs
     * no Spark job. */
   def startCdfConsumer(spark: SparkSession, srcTable: String,
                        mirrorTable: String, key: String,

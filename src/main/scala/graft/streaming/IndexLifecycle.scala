@@ -25,12 +25,13 @@ import graft.operators.{Similarity, TextAnalysis, Warehouse}
   *    two real commits. Per batch: encode the batch alone into one frame
   *    per grown relation (a narrow map over the arrival), commit each
   *    through [[Warehouse.appendManifested]] (one immutable generation
-  *    and one atomic pointer swap, so a reader at any instant resolves a
-  *    complete committed relation), then serve against base +
-  *    delta-so-far. The last batch's serve covers the complete delta and
-  *    is the result: batching must be invisible to the final answer.
+  *    and one create-exclusive manifest claim, so a reader at any
+  *    instant resolves a complete committed relation), then serve
+  *    against base + delta-so-far. The last batch's serve covers the
+  *    complete delta and is the result: batching must be invisible to
+  *    the final answer.
   *  - [[compactedServe]]: folds each grown relation's generation list
-  *    back to one ([[Warehouse.compactManifested]], a pointer commit, so
+  *    back to one ([[Warehouse.compactManifested]], a manifest commit, so
   *    a racing reader resolves the old list or the folded one, both
   *    complete), then serves again. Compaction must be invisible to
   *    results, so st23/st26 answer to the st22/st25 oracles. It ingests
@@ -44,7 +45,7 @@ import graft.operators.{Similarity, TextAnalysis, Warehouse}
   * `batch=<batchId>` directory, and the ingest commit writes generation
   * `batchId + 1` (`appendManifested(genId = ...)`; the base seed is
   * generation 0), so a re-fired batch rewrites identical content and
-  * leaves the pointer untouched. At-least-once execution plus
+  * leaves the committed head untouched. At-least-once execution plus
   * idempotent per-batch writes gives exactly-once index state and
   * results.
   *
@@ -209,7 +210,7 @@ object IndexLifecycle {
   /** Compacts every grown relation to one generation, then serves. */
   def compactedServe(spark: SparkSession, dir: String, ix: Index): DataFrame = {
     val tables = ix.grown.map(ix.tableDir(_, dir))
-    if (!new java.io.File(tables.head, "_current").exists()) ingest(spark, dir, ix)
+    if (Warehouse.snapshots(tables.head).isEmpty) ingest(spark, dir, ix)
     val idx = ix.built(spark, dir, base = true)
     val scoped = EventStreams.scopedSession(spark)
     tables.foreach(Warehouse.compactManifested(scoped, _))

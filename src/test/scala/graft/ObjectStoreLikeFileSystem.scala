@@ -10,15 +10,9 @@ import org.apache.hadoop.fs.Path
   *  - '''rename of a FILE is COPY + DELETE, not atomic''': the copy
   *    materializes the destination atomically (a PUT/CopyObject is
   *    atomic — a reader never sees a partial object; modeled as
-  *    temp + POSIX rename), and an injectable crash lands BETWEEN the
-  *    copy and the source delete (`crashAfterCopyOf`) — the window
-  *    where both objects exist.
+  *    temp + POSIX rename), then the source is deleted.
   *  - '''rename onto an existing destination FILE refuses''' (the S3A
-  *    contract), so `ManifestIo.replace` must walk its delete+rename
-  *    fallback on every pointer swap after the first — and the
-  *    injectable crash after the delete (`crashAfterDeleteOf`) is the
-  *    pointer-ABSENT window that only the trail-head roll-forward
-  *    closes.
+  *    contract).
   *  - '''create-exclusive through the generic branch''' — `putIfAbsent`
   *    rides `create(overwrite = false)`, standing in for the store's
   *    conditional PUT (if-none-match), the one atomic primitive the
@@ -27,7 +21,11 @@ import org.apache.hadoop.fs.Path
   * DIRECTORY renames delegate to the POSIX parent: they occur only
   * inside Spark's output committer (whose object-store story is its
   * own special committer, out of scope here) — the protocol under
-  * test is the pointer/manifest commit, which renames FILES only.
+  * test is the manifest commit, which claims FILES only.
+  *
+  * Every `open`, `create`, `rename` (by source) and `listStatus` is
+  * counted per (operation, file name) in `calls` — the storage round
+  * trips a read or a commit costs, pinned by name in SinkSpec.
   * Registered per test via `fs.objstore.impl`; must stay a public
   * no-arg-constructible top-level class (instantiated reflectively).
   */
@@ -37,15 +35,14 @@ class ObjectStoreLikeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem 
   override def getScheme: String = "objstore"
 
   override def rename(src: Path, dst: Path): Boolean = {
+    ObjectStoreLikeFileSystem.record("rename", src)
     val srcIsFile = try getFileStatus(src).isFile
     catch { case _: java.io.FileNotFoundException => false }
     val dstFileExists = try getFileStatus(dst).isFile
     catch { case _: java.io.FileNotFoundException => false }
     if (!srcIsFile) super.rename(src, dst) // committer dir moves: see scaladoc
-    else if (dstFileExists) {
-      ObjectStoreLikeFileSystem.refusedRenames.incrementAndGet()
-      false
-    } else {
+    else if (dstFileExists) false
+    else {
       // server-side COPY: atomic materialization of dst
       val part = new Path(dst.getParent, s".${dst.getName}.putpart")
       val in = super.open(src, 4096)
@@ -54,58 +51,48 @@ class ObjectStoreLikeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem 
       try out.write(bytes) finally out.close()
       if (!super.rename(part, dst))
         throw new java.io.IOException(s"objstore copy: cannot put $dst")
-      ObjectStoreLikeFileSystem.copyRenames.incrementAndGet()
-      val fault = ObjectStoreLikeFileSystem.crashAfterCopyOf.get()
-      if (fault != null && dst.getName == fault &&
-          ObjectStoreLikeFileSystem.crashAfterCopyOf.compareAndSet(fault, null))
-        throw new ObjectStoreLikeFileSystem.InjectedCrashException(
-          s"injected crash after copy, before source delete: $src -> $dst")
       super.delete(src, false)
       true
     }
   }
 
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    ObjectStoreLikeFileSystem.record("open", f)
+    super.open(f, bufferSize)
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    ObjectStoreLikeFileSystem.record("create", f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
   override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ObjectStoreLikeFileSystem.record("list", f)
     if (f.getName.startsWith(".gen-") || f.getName.startsWith(".del-"))
       ObjectStoreLikeFileSystem.generationLists.incrementAndGet()
     super.listStatus(f)
-  }
-
-  override def delete(f: Path, recursive: Boolean): Boolean = {
-    val r = super.delete(f, recursive)
-    val fault = ObjectStoreLikeFileSystem.crashAfterDeleteOf.get()
-    if (fault != null && f.getName == fault &&
-        ObjectStoreLikeFileSystem.crashAfterDeleteOf.compareAndSet(fault, null))
-      throw new ObjectStoreLikeFileSystem.InjectedCrashException(
-        s"injected crash after delete: $f")
-    r
   }
 }
 
 object ObjectStoreLikeFileSystem {
   val Uri: URI = URI.create("objstore:///")
 
-  /** The process died between `delete(dst)` and the copy inside
-    * `ManifestIo.replace`'s fallback — the pointer-ABSENT window. */
-  class InjectedCrashException(msg: String) extends java.io.IOException(msg)
-
-  /** Renames refused by the existing-destination contract — proves the
-    * fallback ran rather than an atomic-overwrite fast path. */
-  val refusedRenames = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** File renames that went through the copy+delete path. */
-  val copyRenames = new java.util.concurrent.atomic.AtomicInteger()
-
   /** LIST calls against generation/tombstone directories — the
     * per-object-LIST metadata cost the `#file:` manifest inventory
     * exists to eliminate on the read path. */
   val generationLists = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** File NAME whose next rename-copy crashes after materializing the
-    * destination, before deleting the source (one-shot). */
-  val crashAfterCopyOf = new java.util.concurrent.atomic.AtomicReference[String]()
+  /** Calls per (operation, file name); see the class scaladoc. */
+  val calls = new java.util.concurrent.ConcurrentHashMap[(String, String),
+    java.util.concurrent.atomic.AtomicInteger]()
 
-  /** File NAME whose next delete crashes immediately after removing it
-    * (one-shot) — dst gone, replacement not yet copied. */
-  val crashAfterDeleteOf = new java.util.concurrent.atomic.AtomicReference[String]()
+  def callCount(op: String, name: String): Int =
+    Option(calls.get(op -> name)).fold(0)(_.get)
+
+  private def record(op: String, p: Path): Unit =
+    calls.computeIfAbsent(op -> p.getName,
+      _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet()
 }

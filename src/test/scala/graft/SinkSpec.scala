@@ -19,6 +19,15 @@ class SinkSpec extends SparkSpec {
     df.select(xxhash64(col("doc_id"), col("text"), col("lang")).as("h"))
       .agg(expr("bit_xor(h)")).head.getLong(0)
 
+  /** The committed head body of a manifested leaf: the newest
+    * non-blank `_manifest-v` of its trail. */
+  private def headBody(dir: String): String = {
+    val (fs, root) = graft.operators.ManifestIo.resolve(dir,
+      spark.sparkContext.hadoopConfiguration)
+    graft.operators.Warehouse.trailHead(fs, root).body
+      .getOrElse(fail(s"$dir has no committed head"))
+  }
+
   test("partitioned write: prunable layout, bounded files, lossless read-back") {
     val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
     val out = Files.createTempDirectory("graft_sink").resolve("corpus").toString
@@ -51,31 +60,6 @@ class SinkSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan)
   }
 
-  test("compaction: many micro-batch shards collapse to sized files, content bit-identical") {
-    val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val out = Files.createTempDirectory("graft_compact").resolve("tbl").toString
-    // simulate a streamed-into table: lots of tiny files
-    docs.repartition(1).write.option("maxRecordsPerFile", 25)
-      .mode("overwrite").parquet(out)
-    def files() = new java.io.File(out).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    val before = files().length
-    val beforeN = docs.count()
-    val beforeFp = docFp(spark.read.parquet(out))
-    assert(before >= 10, s"fixture should fragment, got $before files")
-    val n = graft.operators.Warehouse.compact(spark, out, targetFileBytes = 1L << 30)
-    assert(n == 1 && files().length == 1, s"expected 1 compacted file, got ${files().length}")
-    // content invariant under the rewrite+swap: count AND order-free
-    // fingerprint (the xor alone is blind to even-multiplicity changes)
-    assert(spark.read.parquet(out).count() == beforeN)
-    assert(docFp(spark.read.parquet(out)) == beforeFp)
-    // staging/old dirs fully cleaned up (dot-prefixed siblings)
-    val parent = new java.io.File(out).getParentFile
-    val base = new java.io.File(out).getName
-    assert(!new java.io.File(parent, s".$base.compact_tmp").exists())
-    assert(!new java.io.File(parent, s".$base.compact_old").exists())
-  }
-
   test("manifested compaction: a concurrent reader never sees an absent or partial table") {
     val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
     val out = Files.createTempDirectory("graft_mcompact").resolve("tbl").toString
@@ -89,9 +73,9 @@ class SinkSpec extends SparkSpec {
     graft.operators.Warehouse.compactManifested(spark, out, targetFileBytes = 1L << 30)
 
     // a reader hammering the manifest WHILE commits happen: every
-    // single read must land on a complete generation — the assertion
-    // compact()'s two-rename swap cannot make (its absence window
-    // would surface here as a missing-path failure or a partial count)
+    // single read must land on a complete generation (an absence
+    // window would surface here as a missing-path failure or a
+    // partial count)
     @volatile var stop = false
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val reads = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -139,7 +123,7 @@ class SinkSpec extends SparkSpec {
     val nLangs = docs.select(col("lang")).distinct().count()
 
     // adoption (one-time migration, pre-concurrency): every leaf gets
-    // its own gen-0 + _current
+    // its own gen-0 + _manifest-1
     val adopted = graft.operators.Warehouse
       .compactManifestedPartitioned(spark, out, targetFileBytes = 1L << 30)
     assert(adopted.size == nLangs, s"leaves adopted: $adopted")
@@ -147,9 +131,9 @@ class SinkSpec extends SparkSpec {
 
     // a reader hammering ALL leaves through their manifests while
     // per-leaf commits land: every read must see every partition,
-    // complete — the per-leaf absence window compactPartitioned's
-    // two-rename swap leaves would surface here as a missing leaf
-    // (count short by a whole language) or a resolve failure
+    // complete — a per-leaf absence window would surface here as a
+    // missing leaf (count short by a whole language) or a resolve
+    // failure
     @volatile var stop = false
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val reads = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -157,7 +141,7 @@ class SinkSpec extends SparkSpec {
       while (!stop) {
         try {
           // withManifestedPartitioned: any leaf whose generation is
-          // GC'd mid-count re-resolves every pointer and re-runs once
+          // GC'd mid-count re-resolves every leaf head and re-runs once
           val n = graft.operators.Warehouse
             .withManifestedPartitioned(spark, out)(_.count())
           reads.incrementAndGet()
@@ -214,7 +198,7 @@ class SinkSpec extends SparkSpec {
     // seeded pseudo-random op sequences over the two commit kinds the
     // protocol exposes (streaming append, maintenance compact): after
     // EVERY op, the manifested read must equal the exact union of the
-    // batches appended so far, every generation the pointer lists must
+    // batches appended so far, every generation the head lists must
     // exist on disk, and a compact must leave a single-entry list.
     // This is the algebra st22/st23 rely on, checked shape-free.
     for (seed <- Seq(11L, 42L, 77L)) {
@@ -233,26 +217,14 @@ class SinkSpec extends SparkSpec {
             targetFileBytes = 1L << 30)
           // generation lines only — `#stats:`/`#txn:` lines are
           // manifest METADATA, not directories (the format contract)
-          val listed = java.nio.file.Files
-            .readString(java.nio.file.Paths.get(dir, "_current")).trim.split("\n")
+          val listed = headBody(dir).trim.split("\n")
             .filterNot(_.startsWith("#"))
           assert(listed.length == 1, s"seed=$seed: compact left ${listed.toSeq}")
         }
-        val pointerGens = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(dir, "_current")).trim.split("\n")
+        val headGens = headBody(dir).trim.split("\n")
           .filterNot(_.startsWith("#"))
-        pointerGens.foreach(g => assert(new java.io.File(dir, g).isDirectory,
-          s"seed=$seed: pointer lists missing generation $g"))
-        // r12 invariant: the newest _manifest-<v> history file always
-        // carries exactly the live pointer's content (the trail is the
-        // pointer's commit log, never behind and never divergent)
-        val vs = graft.operators.Warehouse.snapshots(dir)
-        assert(vs.nonEmpty, s"seed=$seed: no manifest trail")
-        val newest = java.nio.file.Files.readString(
-          java.nio.file.Paths.get(dir, s"_manifest-${vs.last}")).trim.split("\n")
-          .filterNot(_.startsWith("#"))
-        assert(newest.toSeq == pointerGens.toSeq,
-          s"seed=$seed: trail head ${newest.toSeq} != pointer ${pointerGens.toSeq}")
+        headGens.foreach(g => assert(new java.io.File(dir, g).isDirectory,
+          s"seed=$seed: head lists missing generation $g"))
         val got = graft.operators.Warehouse.readManifested(spark, dir)
           .collect().map(_.getLong(0)).sorted.toSeq
         assert(got == expectIds(appended),
@@ -261,70 +233,6 @@ class SinkSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(dir).getParentFile)
     }
-  }
-
-  test("per-leaf compaction: each lang=xx leaf compacts independently, partition values intact") {
-    val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val out = Files.createTempDirectory("graft_leafcompact").resolve("tbl").toString
-    // a partitioned root whose every leaf is fragmented
-    docs.repartition(1).write.partitionBy("lang")
-      .option("maxRecordsPerFile", 20).mode("overwrite").parquet(out)
-    def leafFiles(leaf: String) = new java.io.File(out, leaf).listFiles()
-      .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    val leafNames = new java.io.File(out).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("lang=")).map(_.getName).sorted
-    assert(leafNames.length >= 2, s"fixture needs ≥2 leaves, got ${leafNames.toSeq}")
-    assert(leafNames.forall(leafFiles(_) >= 2), "each leaf should be fragmented")
-    val beforeN = docs.count()
-    val beforeFp = docFp(spark.read.parquet(out)
-      .select(col("doc_id"), col("text"), col("lang")))
-
-    // compact() on the root must refuse — it is not a leaf
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Warehouse.compact(spark, out)
-    }
-    assert(e.getMessage.contains("compactPartitioned"), e.getMessage)
-
-    val counts = graft.operators.Warehouse.compactPartitioned(
-      spark, out, targetFileBytes = 1L << 30)
-    // one compacted file per leaf, keyed by the leaf's relative path
-    assert(counts.keySet == leafNames.toSet, s"$counts vs ${leafNames.toSeq}")
-    assert(counts.values.forall(_ == 1), counts.toString)
-    assert(leafNames.forall(leafFiles(_) == 1))
-    // partition values preserved: the read-back still carries lang from
-    // the directory names, rows + content identical
-    val back = spark.read.parquet(out)
-    assert(back.count() == beforeN)
-    assert(docFp(back.select(col("doc_id"), col("text"), col("lang"))) == beforeFp)
-    // and the partition column still prunes
-    val plan = back.filter(col("lang") === "en").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan)
-  }
-
-  test("per-leaf compaction self-heals a leaf stranded mid-swap (crash between renames)") {
-    val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val out = Files.createTempDirectory("graft_strand").resolve("tbl").toString
-    docs.repartition(1).write.partitionBy("lang")
-      .option("maxRecordsPerFile", 20).mode("overwrite").parquet(out)
-    val beforeN = docs.count()
-    val beforeFp = docFp(spark.read.parquet(out)
-      .select(col("doc_id"), col("text"), col("lang")))
-    // simulate the crash window: first rename done, second never ran —
-    // one leaf's data lives ONLY under its hidden .leaf.compact_old
-    val leaf = new java.io.File(out).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("lang=")).minBy(_.getName)
-    val hidden = new java.io.File(leaf.getParentFile, s".${leaf.getName}.compact_old")
-    java.nio.file.Files.move(leaf.toPath, hidden.toPath)
-    assert(!leaf.exists() && hidden.isDirectory)
-    // a naive reader would now silently drop the partition...
-    val counts = graft.operators.Warehouse.compactPartitioned(
-      spark, out, targetFileBytes = 1L << 30)
-    // ...but the walk restores it, compacts it, and loses nothing
-    assert(counts.contains(leaf.getName), s"stranded leaf missing from $counts")
-    assert(leaf.isDirectory && !hidden.exists())
-    val back = spark.read.parquet(out)
-    assert(back.count() == beforeN)
-    assert(docFp(back.select(col("doc_id"), col("text"), col("lang"))) == beforeFp)
   }
 
   test("ivf-pq layout: cid-partitioned corpus — a probe reads only the probed partition dirs") {
@@ -579,7 +487,7 @@ class SinkSpec extends SparkSpec {
     spark.range(0, 30).toDF("id").repartition(1)
       .write.mode("overwrite").parquet(dir)
     // sanity: plain leaf, no manifest yet
-    assert(!new java.io.File(dir, "_current").exists())
+    assert(graft.operators.Warehouse.snapshots(dir).isEmpty)
     // the ADVICE r11 hole: an append here used to commit a pointer
     // excluding the loose files — now they become generation 0 first
     W.appendManifested(spark, dir, spark.range(100, 120).toDF("id"))
@@ -597,12 +505,12 @@ class SinkSpec extends SparkSpec {
     }
     assert(clash.getMessage.contains("generation 0"), clash.getMessage)
     // crash-window recovery: an adoption that moved the loose files
-    // into .gen-0 but died before its pointer commit must NOT be
-    // overwritten by the next append — it recovers the pointer first
+    // into .gen-0 but died before its manifest commit must NOT be
+    // overwritten by the next append — it commits .gen-0 first
     val dir3 = Files.createTempDirectory("graft_adopt3").resolve("tbl").toString
     spark.range(0, 7).toDF("id").repartition(1)
       .write.mode("overwrite").parquet(new java.io.File(dir3, ".gen-0").getPath)
-    assert(!new java.io.File(dir3, "_current").exists()) // the stranded state
+    assert(W.snapshots(dir3).isEmpty) // the stranded state
     W.appendManifested(spark, dir3, spark.range(100, 104).toDF("id"))
     assert(W.readManifested(spark, dir3)
       .collect().map(_.getLong(0)).sorted.toSeq ==
@@ -687,28 +595,24 @@ class SinkSpec extends SparkSpec {
     assert(errs.isEmpty, s"appender threads failed: ${errs.asScala.toList}")
     assert(W.readManifested(spark, dir).count() == 200L,
       "a concurrent append was silently lost")
-    // the trail head always equals the pointer (the r12 invariant,
-    // preserved under concurrency)
     val (fs, root) = graft.operators.ManifestIo.resolve(
       dir, spark.sparkContext.hadoopConfiguration)
     val P = new org.apache.hadoop.fs.Path(_: org.apache.hadoop.fs.Path, _: String)
     val vMax = W.snapshots(dir).max
     assert(vMax == 8L, s"expected 8 committed versions, got $vMax")
-    assert(graft.operators.ManifestIo.readString(fs, P(root, s"_manifest-$vMax"))
-      == graft.operators.ManifestIo.readString(fs, P(root, "_current")))
 
-    // (b) CROSS-PROCESS CAS: a writer that read the pointer at version
+    // (b) CROSS-PROCESS CAS: a writer that read the head at version
     // v, then was overtaken (simulated: another committer claimed
     // v+1), must fail its commit LOUDLY — the version file is
-    // create-exclusive, so the stale writer cannot swap the pointer
-    // over the winner's generation list
-    val curGens = graft.operators.ManifestIo.readString(fs, P(root, "_current"))
+    // create-exclusive, so the stale writer cannot commit over the
+    // winner's generation list
+    val curGens = headBody(dir)
     intercept[java.util.ConcurrentModificationException] {
-      W.commitManifest(fs, root, P(root, "_current"),
+      W.commitManifest(fs, root,
         Seq(".gen-99"), expectedVersion = vMax - 1) // stale: vMax exists
     }
-    // nothing moved: pointer and trail untouched by the refused commit
-    assert(graft.operators.ManifestIo.readString(fs, P(root, "_current")) == curGens)
+    // nothing moved: head and trail untouched by the refused commit
+    assert(headBody(dir) == curGens)
     assert(W.snapshots(dir).max == vMax)
     // and the CAS primitive itself: second claim of the same version
     // file reports the loss (first claim wins)
@@ -780,8 +684,7 @@ class SinkSpec extends SparkSpec {
     // any generation: with the window, not before it)
     W.compactManifested(spark, dir, targetFileBytes = 1L << 30)      // v5
     assert(W.readManifested(spark, dir).count() == 60L)
-    assert(!java.nio.file.Files.readString(
-      java.nio.file.Paths.get(dir, "_current")).contains(".del-"))
+    assert(!headBody(dir).contains(".del-"))
     assert(W.readManifestedAt(spark, dir, 4L).count() == 60L)
     // the second compaction moves the window past it: tombstone dir GC'd
     W.compactManifested(spark, dir, targetFileBytes = 1L << 30)      // v6
@@ -865,13 +768,12 @@ class SinkSpec extends SparkSpec {
       new java.io.File(empty).getParentFile)
   }
 
-  test("hdfs-contract scheme: pointer swaps walk the delete+rename fallback; CAS holds; content identical") {
+  test("hdfs-contract scheme: full lifecycle over refusing renames; CAS holds; content identical") {
     // ManifestIo.scala documents per-scheme commit semantics in prose;
     // this runs them: a FileSystem whose rename REFUSES an existing
-    // destination file (the HDFS contract) forces every pointer swap
-    // after the first through replace's delete+rename fallback, and
-    // putIfAbsent's CAS through the generic create(overwrite=false)
-    // branch instead of the local O_EXCL fast path.
+    // destination file (the HDFS contract), with putIfAbsent's CAS
+    // through the staged-rename branch of lease-keeping stores instead
+    // of the local link(2) path.
     val W = graft.operators.Warehouse
     val IO = graft.operators.ManifestIo
     val conf = spark.sparkContext.hadoopConfiguration
@@ -891,25 +793,17 @@ class SinkSpec extends SparkSpec {
     assert(IO.readString(fs, P(root, "b")) == "b")
 
     // full lifecycle on the scheme: append, append, fold, delete —
-    // four pointer swaps, three onto an existing _current (each forced
-    // through the fallback), every commit CAS-guarded
-    val before = HdfsLikeFileSystem.refusedRenames.get()
+    // four manifest claims, every commit CAS-guarded
     W.appendManifested(spark, dir, spark.range(0, 50).toDF("id"))     // v1
     W.appendManifested(spark, dir, spark.range(50, 100).toDF("id"))   // v2
     W.compactManifested(spark, dir, targetFileBytes = 1L << 30)       // v3
     W.deleteManifested(spark, dir,
       spark.range(0, 100).toDF("id").filter(col("id") % 2 === 0))     // v4
-    assert(HdfsLikeFileSystem.refusedRenames.get() - before >= 3,
-      "the fallback never ran — the fast path silently covered for it")
     assert(W.readManifested(spark, dir).count() == 50L)
     assert(W.readManifested(spark, dir).agg(min(col("id"))).head.getLong(0) == 1L)
     assert(W.snapshots(dir) == Seq(2L, 3L, 4L)) // v1 GC'd by the fold's retention
-    // trail head == pointer (the protocol invariant, now on a scheme
-    // with no atomic-overwrite rename)
-    assert(IO.readString(fs, P(root, s"_manifest-4")) ==
-      IO.readString(fs, P(root, "_current")))
 
-    // the CAS primitive through the non-O_EXCL branch: first claim of
+    // the CAS primitive through the staged-rename branch: first claim of
     // a fresh version wins, second claim of the SAME version loses
     assert(IO.putIfAbsent(fs, P(root, "_claim-x"), "w1"))
     assert(!IO.putIfAbsent(fs, P(root, "_claim-x"), "w2"))
@@ -918,21 +812,20 @@ class SinkSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(local.toFile)
   }
 
-  test("hdfs-contract scheme: a reader at the fallback's pointer-absent instant retries through") {
-    // replace's fallback has a documented instant where _current does
-    // not exist; a reader resolving exactly then gets
-    // FileNotFoundException from the pointer open and must recover via
-    // readManifested's one-retry (the r14 widening — AnalysisException
-    // alone missed this shape). The one-shot open fault is the
-    // deterministic stand-in: first open of _current throws, the
-    // retry's open (the writer's rename has landed) succeeds.
+  test("hdfs-contract scheme: a reader whose head manifest open fails once retries through") {
+    // a head _manifest-v GC'd between the trail listing and its read
+    // surfaces as FileNotFoundException from that open, and the reader
+    // must recover via readManifested's one-retry (the r14 widening —
+    // AnalysisException alone missed this shape). The one-shot open
+    // fault is the deterministic stand-in: the first open of the head
+    // manifest throws, the retry's fresh listing and open succeed.
     val W = graft.operators.Warehouse
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.hdfslike.impl", classOf[HdfsLikeFileSystem].getName)
     val local = Files.createTempDirectory("graft_faultfs2")
     val dir = s"hdfslike://$local/tbl"
     W.appendManifested(spark, dir, spark.range(0, 30).toDF("id"))
-    HdfsLikeFileSystem.failNextOpenOf.set("_current")
+    HdfsLikeFileSystem.failNextOpenOf.set(s"_manifest-${W.snapshots(dir).last}")
     // direct readManifested — the CdcApply/Quality call shape, no
     // withManifested wrapper in the way
     assert(W.readManifested(spark, dir).count() == 30L)
@@ -941,12 +834,11 @@ class SinkSpec extends SparkSpec {
   }
 
   test("hdfs-contract scheme: a blank trail head (claimed-but-unwritten manifest) is never resolved; readers walk down, writers commit past it") {
-    // HDFS create(overwrite=false) claims the _manifest-v NAME at the
-    // NameNode before any byte is written; a reader whose _current
-    // read missed (the fallback's pointer-absent instant) and rolled
-    // forward used to land on that EMPTY head and resolve a committed
-    // table as empty/none (the r18 judge-run flake's suspected product
-    // mechanism). Freeze exactly that state and pin the r19 contract:
+    // a writer that claims the _manifest-v NAME before it writes any
+    // byte (an older build's create(overwrite=false) claim on HDFS)
+    // leaves a window in which a reader resolving the trail head would
+    // land on an EMPTY head and resolve a committed table as
+    // empty/none. Freeze exactly that state and pin the r19 contract:
     // a blank body is never a committed head.
     val W = graft.operators.Warehouse
     val IO = graft.operators.ManifestIo
@@ -958,22 +850,111 @@ class SinkSpec extends SparkSpec {
     W.appendManifested(spark, dir, spark.range(0, 30).toDF("id"))   // v1
     W.appendManifested(spark, dir, spark.range(30, 40).toDF("id"))  // v2
     val (fs, root) = IO.resolve(dir, conf)
-    // the frozen window: a rival claimed v3 and has written nothing
-    // yet, and _current is ALSO absent (mid-fallback pointer swap)
+    // the frozen window: a rival claimed v3 and has written nothing yet
     fs.create(P(root, "_manifest-3"), false).close()
-    fs.delete(P(root, "_current"), false)
-    // reader rolls forward PAST the blank claim to v2's snapshot
+    // reader walks DOWN past the blank claim to v2's snapshot
     assert(W.readManifested(spark, dir).count() == 40L,
       "blank trail head resolved instead of the newest complete snapshot")
-    // a blank _current (torn non-atomic swap) falls through the same way
-    IO.replace(fs, P(root, "_current"), "")
-    assert(W.readManifested(spark, dir).count() == 40L,
-      "blank _current resolved instead of the trail walk")
     // the next writer anchors on max trail version: it claims v4 PAST
     // the stale blank claim, carrying v2's state — nothing lost
     W.appendManifested(spark, dir, spark.range(40, 45).toDF("id"))
     assert(W.readManifested(spark, dir).count() == 45L)
     assert(W.snapshots(dir).max == 4L)
+    org.apache.commons.io.FileUtils.deleteQuietly(local.toFile)
+  }
+
+  test("hdfs-contract scheme: a claim whose writer crashes mid-body is never visible; readers and the next writer see the prior head") {
+    // HDFS shows a file's bytes to readers as the pipeline acks them,
+    // so a body written in place under its claimed _manifest-v could
+    // be read cut off: a truncated #file: inventory or stats line, and
+    // the next commit built on it. The claim stages its body and
+    // renames it into place; crash that staged write halfway and pin
+    // that nothing of it becomes the head.
+    val W = graft.operators.Warehouse
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.hdfslike.impl", classOf[HdfsLikeFileSystem].getName)
+    val local = Files.createTempDirectory("graft_faultfs4")
+    val dir = s"hdfslike://$local/tbl"
+    W.appendManifested(spark, dir, spark.range(0, 30).toDF("id"))    // v1
+    HdfsLikeFileSystem.crashMidWriteOf.set("_manifest-2")
+    val crash = intercept[java.io.IOException] {
+      W.appendManifested(spark, dir, spark.range(30, 40).toDF("id"))
+    }
+    assert(crash.getMessage.contains("injected crash mid-write"), crash.getMessage)
+    assert(HdfsLikeFileSystem.crashMidWriteOf.get() == null, "fault not consumed")
+    assert(W.snapshots(dir) == Seq(1L), "a half-written claim became visible")
+    assert(W.readManifested(spark, dir).count() == 30L)
+    W.appendManifested(spark, dir, spark.range(40, 45).toDF("id"))   // v2
+    assert(W.snapshots(dir) == Seq(1L, 2L))
+    assert(W.readManifested(spark, dir).collect().map(_.getLong(0)).sorted.toSeq ==
+      ((0L until 30L) ++ (40L until 45L)))
+    org.apache.commons.io.FileUtils.deleteQuietly(local.toFile)
+  }
+
+  test("lost commit: a claim overtaken before its late pointer write loses no committed id (file:, hdfslike:, objstore:)") {
+    // a foreign writer claims _manifest-2 and pauses; an append commits
+    // v3 over it; the foreign writer then writes a stale `_current`
+    // (what an older build swapped after its claim); a further append
+    // follows. Every committed id must survive on every scheme.
+    val W = graft.operators.Warehouse
+    val IO = graft.operators.ManifestIo
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.hdfslike.impl", classOf[HdfsLikeFileSystem].getName)
+    conf.set("fs.objstore.impl", classOf[ObjectStoreLikeFileSystem].getName)
+    val P = new org.apache.hadoop.fs.Path(_: org.apache.hadoop.fs.Path, _: String)
+    val local = Files.createTempDirectory("graft_lostcommit")
+    for (scheme <- Seq("file", "hdfslike", "objstore")) {
+      val dir = s"$scheme://$local/$scheme"
+      val (fs, root) = IO.resolve(dir, conf)
+      W.appendManifested(spark, dir, spark.range(1, 2).toDF("id"))   // v1
+      spark.range(2, 3).toDF("id").write.parquet(P(root, ".gen-90").toString)
+      val (gens, meta) = IO.readString(fs, P(root, "_manifest-1")).trim
+        .split("\n").toSeq.partition(!_.startsWith("#"))
+      val foreign = ((gens :+ ".gen-90") ++ meta).mkString("\n")
+      assert(IO.putIfAbsent(fs, P(root, "_manifest-2"), foreign))    // v2
+      W.appendManifested(spark, dir, spark.range(3, 4).toDF("id"))   // v3
+      val late = fs.create(P(root, "_current"), true)
+      try late.write(foreign.getBytes("UTF-8")) finally late.close()
+      W.appendManifested(spark, dir, spark.range(4, 5).toDF("id"))   // v4
+      val ids = W.readManifested(spark, dir).collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(1L, 2L, 3L, 4L), s"$scheme: committed ids lost, read $ids")
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(local.toFile)
+  }
+
+  test("object-store storage calls: a steady read is one leaf LIST + one manifest open; a commit is one claim, no pointer") {
+    val W = graft.operators.Warehouse
+    val OS = ObjectStoreLikeFileSystem
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.objstore.impl", classOf[ObjectStoreLikeFileSystem].getName)
+    val local = Files.createTempDirectory("graft_oscalls")
+    val dir = s"objstore://$local/tbl"
+    W.appendManifested(spark, dir, spark.range(0, 50).toDF("id"))    // v1
+    W.appendManifested(spark, dir, spark.range(50, 100).toDF("id"))  // v2
+    def delta(body: => Unit): Map[(String, String), Int] = {
+      val keys = Seq("list" -> "tbl", "open" -> "_manifest-2", "open" -> "_current",
+        "create" -> "_manifest-3", "create" -> "._current.tmp",
+        "rename" -> "._current.tmp")
+      val before = keys.map(k => k -> OS.callCount(k._1, k._2)).toMap
+      body
+      keys.map(k => k -> (OS.callCount(k._1, k._2) - before(k))).toMap
+    }
+    // the steady read resolves the head from ONE trail listing and
+    // ONE open of the head manifest
+    val read = delta { W.readManifested(spark, dir) }
+    assert(read == Map(("list", "tbl") -> 1, ("open", "_manifest-2") -> 1,
+      ("open", "_current") -> 0, ("create", "_manifest-3") -> 0,
+      ("create", "._current.tmp") -> 0, ("rename", "._current.tmp") -> 0), read)
+    // an append commit claims _manifest-3 and writes nothing else: no
+    // pointer tmp, no pointer rename. Its two leaf LISTs are
+    // leafCommit's one head read (which the first-contact adoption
+    // step reuses) and nextEntryId; the head read opens the head
+    // manifest once
+    val commit = delta { W.appendManifested(spark, dir, spark.range(100, 110).toDF("id")) }
+    assert(commit == Map(("list", "tbl") -> 2, ("open", "_manifest-2") -> 1,
+      ("open", "_current") -> 0, ("create", "_manifest-3") -> 1,
+      ("create", "._current.tmp") -> 0, ("rename", "._current.tmp") -> 0), commit)
+    assert(W.readManifested(spark, dir).count() == 110L)
     org.apache.commons.io.FileUtils.deleteQuietly(local.toFile)
   }
 
@@ -1259,52 +1240,55 @@ class SinkSpec extends SparkSpec {
     val (fs, root) = IO.resolve(dir, spark.sparkContext.hadoopConfiguration)
     val P = new org.apache.hadoop.fs.Path(_: org.apache.hadoop.fs.Path, _: String)
 
-    // simulate THREE crash windows:
     // (1) crash after a generation's data write, before its commit
     //     (an append that died, or a compaction fold whose CAS lost)
     spark.range(900, 950).toDF("id").write.parquet(P(root, ".gen-9").toString)
-    // (2) crash between the _manifest-v claim and the _current swap:
-    //     an uncommitted trailer referencing an in-flight generation
+    // a cross-process writer's NON-blank claim is a commit, not debris:
+    // v3 is the head, and its generation is live
     spark.range(950, 999).toDF("id").write.parquet(P(root, ".gen-7").toString)
     assert(IO.putIfAbsent(fs, P(root, "_manifest-3"), ".gen-0\n.gen-1\n.gen-7"))
-    // (3) crash inside the pointer swap itself
-    assert(IO.putIfAbsent(fs, P(root, "._current.tmp"), "junk"))
-
-    // the damage is real before vacuum: the trail advertises v3,
-    // which no reader could ever have resolved through _current
-    assert(W.snapshots(dir) == Seq(1L, 2L, 3L))
+    // (2) crash between a store's create-exclusive claim and its body
+    //     write: a BLANK v4, never a head
+    fs.create(P(root, "_manifest-4"), false).close()
+    // (3) crash inside a content-atomic claim: its staging file, never
+    //     linked or renamed into place
+    val staged = P(root, "._manifest-5.claim.1234")
+    IO.putIfAbsent(fs, staged, ".gen-0")
+    assert(W.snapshots(dir) == Seq(1L, 2L, 3L, 4L))
+    assert(W.readManifested(spark, dir).count() == beforeN + 49)
 
     // AGE GRACE (r14): under the default grace window this just-written
     // debris is indistinguishable from a LIVE cross-process writer
-    // mid-commit (generation written / trailer claimed, pointer not yet
-    // swapped) — vacuum must leave every byte of it alone
+    // mid-commit (generation written / claim not yet filled) — vacuum
+    // must leave every byte of it alone
     val graced = W.vacuum(spark, dir)
-    assert(graced == W.VacuumReport(Nil, Nil, removedPointerTmp = false),
+    assert(graced == W.VacuumReport(Nil, Nil),
       s"default grace vacuumed a possibly-live writer's commit: $graced")
-    assert(W.snapshots(dir) == Seq(1L, 2L, 3L))
-    assert(IO.isDirectory(fs, P(root, ".gen-9")) &&
-      IO.isDirectory(fs, P(root, ".gen-7")))
+    assert(W.snapshots(dir) == Seq(1L, 2L, 3L, 4L))
+    assert(IO.isDirectory(fs, P(root, ".gen-9")))
+    assert(IO.exists(fs, staged))
 
     // graceMs = 0: the caller asserts no concurrent cross-process
-    // writer exists, so the same debris is GC'd in full
+    // writer exists, so the debris is GC'd in full and the committed
+    // head stays
     val report = W.vacuum(spark, dir, graceMs = 0L)
-    assert(report.removedGenerations == Seq(".gen-7", ".gen-9"), report)
-    assert(report.removedManifests == Seq(3L), report)
-    assert(report.removedPointerTmp, report)
+    assert(report.removedGenerations == Seq(".gen-9"), report)
+    assert(report.removedManifests == Seq(4L), report)
+    assert(IO.isDirectory(fs, P(root, ".gen-7")))
+    assert(!IO.exists(fs, staged))
 
-    // table content unchanged; both RETAINED snapshots still resolve
-    assert(W.readManifested(spark, dir).count() == beforeN)
-    assert(W.snapshots(dir) == Seq(1L, 2L))
+    // table content unchanged; every RETAINED snapshot still resolves
+    assert(W.readManifested(spark, dir).count() == beforeN + 49)
+    assert(W.snapshots(dir) == Seq(1L, 2L, 3L))
     assert(W.readManifestedAt(spark, dir, 1L).count() == 50)
     assert(W.readManifestedAt(spark, dir, 2L).count() == 100)
+    assert(W.readManifestedAt(spark, dir, 3L).count() == 149)
     // idempotent: a second vacuum finds nothing
     val again = W.vacuum(spark, dir, graceMs = 0L)
-    assert(again.removedGenerations.isEmpty && again.removedManifests.isEmpty
-      && !again.removedPointerTmp, again)
+    assert(again == W.VacuumReport(Nil, Nil), again)
     // and a leaf with nothing committed is left untouched
     val empty = Files.createTempDirectory("graft_vac2").resolve("t2").toString
-    assert(W.vacuum(spark, empty, graceMs = 0L) ==
-      W.VacuumReport(Nil, Nil, removedPointerTmp = false))
+    assert(W.vacuum(spark, empty, graceMs = 0L) == W.VacuumReport(Nil, Nil))
     // partitioned root: per-leaf vacuum, only dirty leaves reported
     val proot = Files.createTempDirectory("graft_vac3").resolve("tbl").toString
     spark.range(0, 20).toDF("id")
@@ -1318,7 +1302,7 @@ class SinkSpec extends SparkSpec {
     // no "." entry: a completed root op deletes its own claim (r16) —
     // vacuum only ever collects crashed-claim debris
     assert(preport == Map(
-      "lang=en" -> W.VacuumReport(Seq(".gen-9"), Nil, removedPointerTmp = false)),
+      "lang=en" -> W.VacuumReport(Seq(".gen-9"), Nil)),
       preport)
     assert(W.readManifestedPartitioned(spark, proot).count() == 20L)
     org.apache.commons.io.FileUtils.deleteQuietly(
@@ -1399,12 +1383,9 @@ class SinkSpec extends SparkSpec {
 
     // (g) legacy manifests (no #stats lines, the r14 format) read
     // everything but stay CORRECT — the conservative contract
-    Seq("_current", s"_manifest-${W.snapshots(dir).last}").foreach { f =>
-      val p = java.nio.file.Paths.get(dir, f)
-      val stripped = java.nio.file.Files.readString(p).split("\n")
-        .filterNot(_.startsWith("#stats:")).mkString("\n")
-      java.nio.file.Files.writeString(p, stripped)
-    }
+    val headPath = java.nio.file.Paths.get(dir, s"_manifest-${W.snapshots(dir).last}")
+    java.nio.file.Files.writeString(headPath, java.nio.file.Files.readString(headPath)
+      .split("\n").filterNot(_.startsWith("#stats:")).mkString("\n"))
     val legacy = W.readManifestedRange(spark, dir, "id", 250L, 250L)
     assert(legacy.collect().map(_.getLong(0)).toSeq == Seq(250L))
     assert(legacy.inputFiles.length == totalAfter,
@@ -1589,9 +1570,8 @@ class SinkSpec extends SparkSpec {
     W.compactManifestedPartitioned(spark, dst, targetFileBytes = 1L << 30)
     assert(parquets(dst) > 0)
     Seq("en", "de").foreach { l =>
-      assert(!Files.readString(
-        java.nio.file.Paths.get(dst, s"lang=$l", "_current"))
-        .contains("#ref:"), s"leaf $l still holds references")
+      assert(!headBody(s"$dst/lang=$l").contains("#ref:"),
+        s"leaf $l still holds references")
     }
     assert(state(dst) == want)
 
@@ -1636,12 +1616,11 @@ class SinkSpec extends SparkSpec {
     // fall back to listing, still correct
     val (fs, root) = IO.resolve(dir, conf)
     val P = new org.apache.hadoop.fs.Path(_: org.apache.hadoop.fs.Path, _: String)
-    Seq("_current", s"_manifest-${W.snapshots(dir).last}").foreach { f =>
-      val body = IO.readString(fs, P(root, f)).split("\n")
-        .filterNot(_.startsWith("#file:")).mkString("\n")
-      fs.delete(P(root, f), false)
-      assert(IO.putIfAbsent(fs, P(root, f), body))
-    }
+    val headMf = P(root, s"_manifest-${W.snapshots(dir).last}")
+    val legacyBody = IO.readString(fs, headMf).split("\n")
+      .filterNot(_.startsWith("#file:")).mkString("\n")
+    fs.delete(headMf, false)
+    assert(IO.putIfAbsent(fs, headMf, legacyBody))
     val before2 = ObjectStoreLikeFileSystem.generationLists.get()
     val legacy = W.readManifestedRange(spark, dir, "id", 150L, 150L)
     assert(legacy.collect().map(_.getLong(0)).toSeq == Seq(150L))
@@ -1790,7 +1769,7 @@ class SinkSpec extends SparkSpec {
       new java.io.File(root).getParentFile)
   }
 
-  test("object-store contract: full lifecycle over copy+delete renames; both crash windows resolve forward, never losing a generation") {
+  test("object-store contract: full lifecycle over copy+delete renames; CAS holds; content identical") {
     val W = graft.operators.Warehouse
     val IO = graft.operators.ManifestIo
     val P = new org.apache.hadoop.fs.Path(_: org.apache.hadoop.fs.Path, _: String)
@@ -1801,9 +1780,8 @@ class SinkSpec extends SparkSpec {
     val (fs, root) = IO.resolve(dir, conf)
     assert(fs.isInstanceOf[ObjectStoreLikeFileSystem], fs.getClass.getName)
 
-    // full lifecycle on the scheme — every pointer swap after the
-    // first walks the refuse → delete → COPY+delete fallback
-    val refusedBefore = ObjectStoreLikeFileSystem.refusedRenames.get()
+    // full lifecycle on the scheme — every commit is one
+    // conditional-PUT-style claim, no file is renamed over another
     W.appendManifested(spark, dir, spark.range(0, 50).toDF("id"))    // v1
     W.appendManifested(spark, dir, spark.range(50, 100).toDF("id"))  // v2
     W.upsertManifested(spark, dir,
@@ -1811,55 +1789,35 @@ class SinkSpec extends SparkSpec {
     W.deleteManifested(spark, dir,
       spark.range(0, 100).toDF("id").filter(col("id") % 2 === 0))    // v4
     W.compactManifested(spark, dir, targetFileBytes = 1L << 30)      // v5
-    assert(ObjectStoreLikeFileSystem.refusedRenames.get() - refusedBefore >= 4,
-      "the copy+delete fallback never ran")
     assert(W.readManifested(spark, dir).count() == 50L)
     assert(W.history(spark, dir).filter(col("is_current")).count() == 1L)
     assert(W.readManifestedAt(spark, dir, 5L).count() == 50L)
 
-    // CRASH WINDOW A — between delete(_current) and the copy: the
-    // pointer is ABSENT, the claimed _manifest-v6 is the truth. The
-    // reader must roll FORWARD to the trail head, and the next append
-    // must commit PAST it — r14 re-adopted .gen-0 alone here and
-    // silently dropped every later generation.
-    ObjectStoreLikeFileSystem.crashAfterDeleteOf.set("_current")
-    intercept[ObjectStoreLikeFileSystem.InjectedCrashException] {
-      W.appendManifested(spark, dir, spark.range(100, 110).toDF("id")) // v6
+    // no pointer: the trail head is the head, and a `_current` file an
+    // older build left in the leaf is ignored by readers and writers
+    val stale = fs.create(P(root, "_current"), true)
+    try stale.write(".gen-0".getBytes("UTF-8")) finally stale.close()
+    assert(W.readManifested(spark, dir).count() == 50L)
+    W.appendManifested(spark, dir, spark.range(100, 110).toDF("id")) // v6
+    assert(W.readManifested(spark, dir).count() == 60L)
+    // the CAS over the create-exclusive claim: a writer anchored on an
+    // overtaken version loses loudly and changes nothing
+    intercept[java.util.ConcurrentModificationException] {
+      W.commitManifest(fs, root, Seq(".gen-99"), expectedVersion = 5L)
     }
-    assert(ObjectStoreLikeFileSystem.crashAfterDeleteOf.get() == null,
-      "fault not consumed")
-    assert(!IO.exists(fs, P(root, "_current")), "window A needs an absent pointer")
-    assert(W.readManifested(spark, dir).count() == 60L,
-      "reader did not roll forward to the trail head")
-    W.appendManifested(spark, dir, spark.range(110, 120).toDF("id"))  // v7
-    assert(IO.exists(fs, P(root, "_current")), "commit did not heal the pointer")
-    assert(W.readManifested(spark, dir).count() == 70L,
-      "a generation was lost across the pointer-absent window")
-    assert(W.snapshots(dir).takeRight(2) == Seq(6L, 7L))
-
-    // CRASH WINDOW B — after the copy, before the source delete: the
-    // destination materialized atomically, so the commit COMPLETED
-    // from every reader's view; only ._current.tmp is stranded, and
-    // vacuum collects it past the grace.
-    ObjectStoreLikeFileSystem.crashAfterCopyOf.set("_current")
-    intercept[ObjectStoreLikeFileSystem.InjectedCrashException] {
-      W.appendManifested(spark, dir, spark.range(120, 130).toDF("id")) // v8
-    }
-    assert(W.readManifested(spark, dir).count() == 80L,
-      "window B's commit must be complete — the copy landed")
-    assert(IO.exists(fs, P(root, "._current.tmp")), "window B strands the tmp")
-    val rep = W.vacuum(spark, dir, graceMs = 0L)
-    assert(rep.removedPointerTmp && rep.removedManifests.isEmpty, rep)
+    assert(W.snapshots(dir).last == 6L)
+    assert(W.readManifested(spark, dir).count() == 60L)
+    assert(W.vacuum(spark, dir, graceMs = 0L).removedManifests.isEmpty)
     // and the table keeps committing normally afterwards
-    W.appendManifested(spark, dir, spark.range(130, 140).toDF("id"))  // v9
-    assert(W.readManifested(spark, dir).count() == 90L)
+    W.appendManifested(spark, dir, spark.range(130, 140).toDF("id"))  // v7
+    assert(W.readManifested(spark, dir).count() == 70L)
     org.apache.commons.io.FileUtils.deleteQuietly(local.toFile)
   }
 
   test("object-store partitioned root: version maps, touched-only commits and time travel hold over copy+delete renames") {
     // the r16 root-map protocol on the objstore scheme: root-manifest
-    // CAS via create-exclusive, claim refresh + pointer swaps through
-    // the delete+rename fallback, per-leaf staged moves — the whole
+    // CAS via create-exclusive, claim refresh + per-leaf manifest
+    // claims, per-leaf staged moves — the whole
     // partitioned lifecycle must behave exactly as on file:
     val W = graft.operators.Warehouse
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1884,7 +1842,7 @@ class SinkSpec extends SparkSpec {
     val cur = W.readManifestedPartitioned(spark, root)
     assert(cur.count() == 30L)
     assert(cur.filter(col("v") === "new").count() == 3L)
-    // time travel through the maps, over the fallback-swapped pointers
+    // time travel through the maps
     assert(W.readManifestedPartitionedAt(spark, root, 1L).count() == 40L)
     assert(W.readManifestedPartitionedAt(spark, root, 2L).count() == 40L)
     assert(W.readManifestedPartitionedAt(spark, root, 3L).count() == 30L)
@@ -2485,8 +2443,7 @@ class SinkSpec extends SparkSpec {
     val c2 = s"$base/c2"
     W.cloneManifested(spark, src, c2)
     assert(W.readManifested(spark, c2).count() == 13L)
-    assert(!java.nio.file.Files.readString(
-      java.nio.file.Paths.get(c2, "_current")).contains("#txn:"),
+    assert(!headBody(c2).contains("#txn:"),
       "writer idempotence state must not transfer to a clone")
     // independence both directions: mutate source -> clone unchanged;
     // mutate clone -> source unchanged
@@ -2509,19 +2466,15 @@ class SinkSpec extends SparkSpec {
     W.cloneManifested(spark, src, c3)
     assert(W.readManifested(spark, c3).collect().map(_.getLong(0)).toSet ==
       W.readManifested(spark, src).collect().map(_.getLong(0)).toSet)
-    // crash AFTER the version-1 CAS: the trail committed, the pointer
-    // never swapped — the re-run must recognize its own body, heal
-    // `_current`, and return 1 (r18 ADVICE: it used to refuse through
-    // the roll-forward's hasCommittedHead, breaking the documented
-    // re-run-to-converge recovery)
+    // a re-run AFTER the version-1 CAS (the clone committed, its
+    // caller crashed before seeing the result) must recognize its own
+    // body and return 1 (r18 ADVICE: it used to refuse, breaking the
+    // documented re-run-to-converge recovery)
     val c4 = s"$base/c4"
     W.cloneManifested(spark, src, c4)
     val want4 = W.readManifested(spark, c4).collect().map(_.getLong(0)).toSet
-    assert(new java.io.File(c4, "_current").delete())
     assert(W.cloneManifested(spark, src, c4) == 1L,
       "a post-CAS crashed clone must converge on re-run")
-    assert(new java.io.File(c4, "_current").exists(),
-      "the converging re-run must heal the pointer")
     assert(W.snapshots(c4) == Seq(1L))
     assert(W.readManifested(spark, c4).collect().map(_.getLong(0)).toSet == want4)
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
@@ -3032,12 +2985,10 @@ class SinkSpec extends SparkSpec {
 
     // legacy manifest (pre-r20 writer: no #nulls lines): conservative
     // — every file opens, the answer is unchanged
-    val cur = java.nio.file.Paths.get(dir, "_current")
+    val cur = java.nio.file.Paths.get(dir, s"_manifest-${W.snapshots(dir).last}")
     val legacy = Files.readAllLines(cur).asScala
       .filterNot(_.startsWith("#nulls:")).asJava
     Files.write(cur, legacy)
-    val head = W.snapshots(dir).last
-    Files.write(java.nio.file.Paths.get(dir, s"_manifest-$head"), legacy)
     val isNull2 = W.readManifestedNull(spark, dir, "v", wantNull = true)
     assert(isNull2.count() == 300L)
     assert(isNull2.inputFiles.length == full.inputFiles.length,
@@ -3104,16 +3055,14 @@ class SinkSpec extends SparkSpec {
     val deep = base.resolve("deep").toString
     W.cloneManifested(spark, cl, deep)
     assert(parquets(deep) > 0)
-    assert(!Files.readString(java.nio.file.Paths.get(deep, "_current"))
-      .contains("#ref:"))
+    assert(!headBody(deep).contains("#ref:"))
     assert(W.readManifested(spark, deep).count() == 86L)
 
     // OPTIMIZE materializes: the fold reads through the refs, writes
     // locally, retires the reference lines
     W.compactManifested(spark, cl, targetFileBytes = 1L << 30,
       retainSnapshots = 0)
-    assert(!Files.readString(java.nio.file.Paths.get(cl, "_current"))
-      .contains("#ref:"))
+    assert(!headBody(cl).contains("#ref:"))
     assert(W.readManifested(spark, cl).count() == 86L)
 
     // the Delta stance, pinned: source compaction + GC retires the
@@ -3191,11 +3140,10 @@ class SinkSpec extends SparkSpec {
       if (SinkSpecForeignWriter.fired.compareAndSet(false, true)) {
         val (fs, root) = graft.operators.ManifestIo.resolve(dir,
           new org.apache.hadoop.conf.Configuration())
-        val cur = new org.apache.hadoop.fs.Path(root, "_current")
-        val lines = graft.operators.ManifestIo.readString(fs, cur).split("\n").toSeq
-        graft.operators.Warehouse.commitManifest(fs, root, cur,
-          lines.filterNot(_.startsWith("#")) :+ ".gen-90",
-          graft.operators.Warehouse.headVersion(fs, root),
+        val head = graft.operators.Warehouse.trailHead(fs, root)
+        val lines = head.body.get.split("\n").toSeq
+        graft.operators.Warehouse.commitManifest(fs, root,
+          lines.filterNot(_.startsWith("#")) :+ ".gen-90", head.anchor,
           stats = lines.filter(_.startsWith("#")))
       }
       v

@@ -469,14 +469,14 @@ class StreamingSpec extends SparkSpec {
     // reader thread: from the moment the codes table exists, every
     // resolved snapshot must be COMPLETE — every visible vector carries
     // exactly m=8 subspace codes (a partially-written batch visible
-    // through the pointer would surface as a vec_id with < 8 rows),
+    // through the manifest would surface as a vec_id with < 8 rows),
     // and whole snapshots only ever grow (commits append, never tear)
     @volatile var stop = false
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val reader = new Thread(() => {
       while (!stop) {
-        if (new java.io.File(codesDir, "_current").exists()) {
+        if (graft.operators.Warehouse.snapshots(codesDir).nonEmpty) {
           try {
             val snap = graft.operators.Warehouse
               .withManifested(spark, codesDir) { df =>
@@ -535,9 +535,12 @@ class StreamingSpec extends SparkSpec {
                               ingested: Seq[Row]): Unit = {
     // generation lines only — `#stats:`/`#txn:` lines are manifest
     // METADATA, not generations (the format contract)
-    def gensListed(rel: String) = Files
-      .readString(java.nio.file.Paths.get(ix.tableDir(rel, sf), "_current"))
-      .trim.split("\n").count(!_.startsWith("#"))
+    def gensListed(rel: String) = {
+      val dir = ix.tableDir(rel, sf)
+      Files.readString(java.nio.file.Paths.get(dir,
+        s"_manifest-${graft.operators.Warehouse.snapshots(dir).last}"))
+        .trim.split("\n").count(!_.startsWith("#"))
+    }
     for (rel <- ix.grown)
       assert(gensListed(rel) == 3, s"$rel: expected 3 listed generations, got ${gensListed(rel)}")
     val compacted = IndexLifecycle.compactedServe(spark, sf, ix)
@@ -859,22 +862,20 @@ class StreamingSpec extends SparkSpec {
       new java.io.File(table).getParentFile)
   }
 
-  test("sharded CDC: a crashed pointer swap rolls FORWARD — never re-bootstrapped into an empty shard") {
+  test("sharded CDC: a shard whose trail was folded past v1 is never re-bootstrapped into an empty shard") {
     // the ADVICE-high window: compaction (retainSnapshots=1) GC'd
-    // _manifest-1, then a crash inside a non-atomic pointer replace
-    // left shard=0 with NO _current but a live _manifest-* trail. The
-    // r15 bootstrap probe keyed off `_current` existence, saw the leaf
-    // as 'missing', and its empty .gen-0 commit WON putIfAbsent on the
-    // GC'd _manifest-1 — replacing _current with the empty body and
-    // silently resetting the shard's LWW state. The headBody-based
-    // probe resolves the trail head instead.
+    // _manifest-1 of shard=0. The r15 bootstrap probe keyed off a
+    // pointer file's existence; a leaf it saw as 'missing' had its
+    // empty .gen-0 commit WIN putIfAbsent on the GC'd _manifest-1,
+    // silently resetting the shard's LWW state. The committed-head
+    // probe reads the trail, which still holds the folded head.
     import graft.streaming.CdcApply
     val W = graft.operators.Warehouse
     val events = graft.sources.Tables(spark, "/root/testdata/sf0.001", "events")
     val odd = events.filter(col("event_id") % 2 === 1)
     val even = events.filter(col("event_id") % 2 === 0)
     // one tiny batch 2: it must NOT be able to rebuild shard=0's state
-    // by itself — survival of the other keys proves the roll-forward
+    // by itself — survival of the other keys proves no reset
     val tiny = events.orderBy(col("event_id")).limit(1)
     val want = {
       val dir = Files.createTempDirectory("graft_cdcr_ref").resolve("st").toString
@@ -889,15 +890,14 @@ class StreamingSpec extends SparkSpec {
     val leaf = java.nio.file.Paths.get(root, "shard=0")
     assert(!java.nio.file.Files.exists(leaf.resolve("_manifest-1")),
       "precondition: _manifest-1 must be GC'd for the window to exist")
-    // the crash window: pointer gone, trail intact
-    java.nio.file.Files.delete(leaf.resolve("_current"))
+    assert(W.snapshots(leaf.toString).nonEmpty, "precondition: shard=0 has a trail")
     CdcApply.applyBatchManifestedPartitioned(tiny, root, nShards = 4, Some(2L))
     val got = W.readManifestedPartitioned(spark, root)
       .select(col("user_id"), col("s.ts_us"), col("s.event_id"),
         col("s.event_type"), col("s.value_q"))
       .orderBy("user_id").collect().toSeq
     assert(got == want,
-      "shard state was reset by a re-bootstrap instead of rolling forward")
+      "shard state was reset by a re-bootstrap")
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(root).getParentFile)
   }
