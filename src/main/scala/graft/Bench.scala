@@ -10,7 +10,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Measurement protocol (r8, r21): THREE timed runs per query — run 1
   * is COLD (absorbs plan analysis, codegen compile, file-index misses),
-  * runs 2-3 are WARM (steady-state plan cost). Per query we report
+  * runs 2-3 are WARM (steady-state plan cost). Codegen compile lands in
+  * run 1 only because `GraftSession` sizes the codegen cache to the
+  * catalog's working set and lets stream sessions share it; with
+  * Spark's defaults every pass recompiled. Each detail entry's
+  * `codegen_compiles` / `codegen_compile_s` (per run, aligned with
+  * `runs`) show where compile landed. Per query we report
   *  - `med`    — median of the three runs, the round-over-round
   *               comparable figure: a single host stall (the r6/r7
   *               contiguous-span artifact) lands in one run and the
@@ -98,6 +103,8 @@ object Bench {
     // sentinel entries: (key, runs, pass, pos-within-pass)
     val sentinels = ArrayBuffer[(String, Seq[Double], Int, Int)]()
     val runsOf = mutable.Map[String, ArrayBuffer[Double]]()
+    // per run: generated classes compiled and their compile seconds
+    val compilesOf = mutable.Map[String, ArrayBuffer[(Long, Double)]]()
     val healthOf = mutable.Map[String, (Int, Double, Int)]()
     val failed = mutable.Set[String]()
     TempDirs.withTempDir("graft_sentinel") { dir =>
@@ -130,6 +137,7 @@ object Bench {
             si += 1
             execPos += 1
           }
+          val (c0, cs0) = Harness.codegenCompiles()
           runsOf.getOrElseUpdate(name, ArrayBuffer[Double]()) += Harness.timed {
             try Harness.sink(fn(spark, sfDir))
             catch {
@@ -138,6 +146,9 @@ object Bench {
                 System.err.println(s"[bench] $name: ${e.getMessage}")
             }
           }._2
+          val (c1, cs1) = Harness.codegenCompiles()
+          compilesOf.getOrElseUpdate(name, ArrayBuffer[(Long, Double)]()) +=
+            ((c1 - c0, cs1 - cs0))
           // Health sentinel (r8 item 2): cache/storage state AFTER each
           // run. A leaked cache/localCheckpoint shows up as monotone
           // growth of these two numbers across the suite — the r8 "p01
@@ -159,7 +170,7 @@ object Bench {
     }
     val results = ordered.map { case (name, _) =>
       val (prdds, storageMb, pos) = healthOf(name)
-      (name, runsOf(name).toSeq, prdds, storageMb, pos)
+      (name, runsOf(name).toSeq, prdds, storageMb, pos, compilesOf(name).toSeq)
     }.sortBy(_._1) // report alphabetically whatever the executed order
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def spread(xs: Seq[Double]): Double = xs.max - xs.min
@@ -173,12 +184,14 @@ object Bench {
     // runs, median, spread per query, full query names, 3-decimal;
     // prdds/storage_mb are the post-query cache-leak sentinel (both
     // should be flat across the alphabetical run order).
-    val full = results.map { case (k, runs, prdds, storageMb, pos) =>
+    val full = results.map { case (k, runs, prdds, storageMb, pos, compiles) =>
       "\"" + k + "\":{\"runs\":[" + runs.map(f).mkString(",") +
         "],\"cold\":" + f(runs.head) + ",\"med\":" + f(median(runs)) +
         ",\"spread\":" + f(spread(runs)) +
         ",\"prdds\":" + prdds + ",\"storage_mb\":" + f1(storageMb) +
-        ",\"pos\":" + pos + (if (failed(k)) ",\"failed\":true" else "") + "}"
+        ",\"codegen_compiles\":[" + compiles.map(_._1).mkString(",") +
+        "],\"codegen_compile_s\":[" + compiles.map(c => f(c._2)).mkString(",") +
+        "],\"pos\":" + pos + (if (failed(k)) ",\"failed\":true" else "") + "}"
     }.mkString("{", ",", "}")
     val sent = sentinels.map { case (k, runs, pass, pos) =>
       "\"" + k + "\":{\"runs\":[" + runs.map(f).mkString(",") +

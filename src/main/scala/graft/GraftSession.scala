@@ -12,7 +12,21 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.extensions=GraftExtensions` — native zh functions +
   *    the merge-then-extract optimizer rule;
   *  - shuffle partitions sized to the local core count (the 100 TB
-  *    deploy would size these to cluster cores × a small factor).
+  *    deploy would size these to cluster cores × a small factor);
+  *  - `codegen.cache.maxEntries=4096` — the JVM-wide cache of compiled
+  *    generated classes (`CodeGenerator.cache`, an LRU) must hold the
+  *    catalog's working set or it never hits. The full catalog compiles
+  *    3,036 distinct classes (`graft.Bench`'s first pass over all 239
+  *    rows at sf0.001); one pass of catalog_mix's 9 rows needs 131. At
+  *    Spark's default of 100 every pass recompiled nearly every class
+  *    (4,949 compiles, 36.5 s, on the full catalog's second pass);
+  *  - `artifact.isolation.enabled=false` — the codegen cache is keyed on
+  *    `(classloader, code)`, and with isolation each `newSession()` gets
+  *    its own artifact classloader, so every stream row (planned on a
+  *    fresh [[graft.streaming.EventStreams.scopedSession]]) missed every
+  *    entry on every run. The engine adds no jars or artifacts to any
+  *    session, so isolation bought nothing; `newSession()` still
+  *    isolates the runtime conf, which is all a scoped session needs.
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder =
@@ -25,6 +39,8 @@ object GraftSession {
       // here rather than only as a loader side effect
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // per-process warehouse: managed (bucketed) tables never collide
       // with a previous run's leftover directories
       .config("spark.sql.warehouse.dir",

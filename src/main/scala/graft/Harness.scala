@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The run harness shared by the catalog mains (Bench, Repeat, Verify,
   * Explain, Plans, ShardBench, CdfBench): session, query selection,
@@ -39,6 +41,12 @@ object Harness {
   /** Full materialization of every output row and column: a bare
     * `count()` lets Catalyst prune projections and sorts. */
   def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** Generated classes this JVM has compiled so far and the seconds spent
+    * compiling them. Only a miss in the JVM-wide codegen cache compiles,
+    * so the change across a run counts that run's misses. */
+  def codegenCompiles(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e9)
 
   /** `body`'s result and its wall-clock seconds. */
   def timed[T](body: => T): (T, Double) = {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming CDC apply — the "apply changes into a keyed table" loop
   * every lakehouse runs (Delta's `MERGE INTO` under a stream, Iceberg
@@ -48,6 +49,15 @@ object CdcApply {
         Seq("user_id"), "full_outer")
       .select(col("user_id"), greatest(col("cur_s"), col("new_s")).as("s"))
 
+  /** The state table's schema, as [[applyBatch]] writes it. The state
+    * reads pass it to the parquet reader, which then infers nothing:
+    * inference costs a Spark job per read. */
+  private val stateSchema = StructType(Seq(
+    StructField("user_id", LongType),
+    StructField("s", StructType(Seq(StructField("ts_us", LongType),
+      StructField("event_id", LongType), StructField("event_type", StringType),
+      StructField("value_q", LongType))))))
+
   /** Merge one (micro-)batch of raw events into the keyed state table.
     * Associative + commutative in the batch partitioning — see above. */
   def applyBatch(batch: DataFrame, stateDir: String): Unit = {
@@ -56,14 +66,14 @@ object CdcApply {
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(stateDir)))
         // materialize BEFORE overwriting the files it was read from
         graft.operators.eagerCut(
-          batch.sparkSession.read.parquet(stateDir))
+          batch.sparkSession.read.schema(stateSchema).parquet(stateDir))
       else updates.limit(0)
     lww(cur, updates).write.mode("overwrite").parquet(stateDir)
   }
 
   /** Read the state table back in flat row form. */
   def readState(spark: SparkSession, stateDir: String): DataFrame =
-    flatState(spark.read.parquet(stateDir))
+    flatState(spark.read.schema(stateSchema).parquet(stateDir))
 
   def runCdcApply(spark: SparkSession, dir: String, stateDir: String): DataFrame = {
     val scoped = EventStreams.scopedSession(spark)

@@ -340,7 +340,11 @@ object EventStreams {
   /** The session every bounded stream is planned on: a CLONE of `spark`
     * (`newSession()` — same SparkContext, isolated runtime conf), so the
     * streaming-specific conf below never leaks into concurrently-planned
-    * batch queries on the caller's session:
+    * batch queries on the caller's session. The clone shares compiled
+    * code with its parent: with artifact isolation off (`GraftSession`)
+    * every session uses the same classloader, so a stream row run again
+    * finds its generated classes in the JVM's codegen cache instead of
+    * recompiling them on each run. The clone's own conf:
     * - `noDataMicroBatches=false` skips the trailing watermark-only
     *   micro-batch — safe exactly when the sink does not rely on
     *   watermark-triggered emission: complete-mode aggregates (every

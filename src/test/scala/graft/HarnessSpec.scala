@@ -65,6 +65,36 @@ class HarnessSpec extends SparkSpec {
     assert(lines.forall(l => json.readTree(l).get("sec").isDouble))
   }
 
+  // Each distinct generated class is compiled once per JVM: the codegen
+  // cache holds more than a catalog pass's classes, and a stream row's
+  // scoped session shares its parent's compiled code. Compiles are
+  // counted JVM-wide, which is exact here because the suites of one test
+  // JVM run one after another.
+  private def compiles(body: => Unit): Long = {
+    val before = Harness.codegenCompiles()._1
+    body
+    Harness.codegenCompiles()._1 - before
+  }
+
+  test("a stream row run again compiles no generated class") {
+    val st11 = SparkEntry.queries("st11_cdc_apply")
+    Harness.sink(st11(spark, sf))
+    val again = compiles(Harness.sink(st11(spark, sf)))
+    assert(again == 0, s"st11's second run compiled $again classes")
+  }
+
+  test("150 distinct plans run twice compile nothing on the second cycle") {
+    // a primitive literal is inlined into the generated code, so each i
+    // is a distinct class
+    def cycle(): Unit = (0 until 150).foreach { i =>
+      spark.range(10).selectExpr(s"id * 7919 + $i").collect()
+    }
+    val first = compiles(cycle())
+    assert(first >= 150, s"the first cycle compiled only $first classes")
+    val second = compiles(cycle())
+    assert(second == 0, s"the second cycle compiled $second classes")
+  }
+
   test("Bench.run keeps the summary line and bench_detail.json shapes") {
     val (line, detail) = Bench.run(spark, sf, Seq("z0", "q01"))
     assert(mask(line) ==
@@ -74,7 +104,8 @@ class HarnessSpec extends SparkSpec {
     def sentinel(pass: Int) =
       s""""_sentinel_p${pass}_00":{"runs":[#],"med":#,"spread":#,"pass":#,"pos":#}"""
     def query(name: String) =
-      s""""$name":{"runs":[#,#,#],"cold":#,"med":#,"spread":#,"prdds":#,"storage_mb":#,"pos":#}"""
+      s""""$name":{"runs":[#,#,#],"cold":#,"med":#,"spread":#,"prdds":#,"storage_mb":#,""" +
+      s""""codegen_compiles":[#,#,#],"codegen_compile_s":[#,#,#],"pos":#}"""
     assert(mask(detail) ==
       """{"value":#,"cold_total":#,"failed":#,"runs_per_query":#,"order_seed":#,"sentinel_every":#,""" +
       (0 to 2).map(sentinel).mkString(""""sentinels":{""", ",", "},") +
@@ -83,6 +114,13 @@ class HarnessSpec extends SparkSpec {
         "z05_zh_enrich_structure").map(query).mkString(""""queries":{""", ",", "},") +
       s""""sf":"$sf"}""")
     assert(line.contains("\"failed\":0,") && detail.contains("\"failed\":0,"))
+    // codegen compile lands in the cold run: the warm runs find every
+    // generated class in the JVM's codegen cache
+    val rows = new ObjectMapper().readTree(detail).get("queries")
+    rows.fieldNames.asScala.foreach { n =>
+      val c = rows.get(n).get("codegen_compiles")
+      assert(c.get(1).asLong == 0 && c.get(2).asLong == 0, s"$n compiled $c")
+    }
     // a throwing row is FAILED: counted, marked on its detail entry, and
     // left out of value, cold_total and the summary's per-query map
     val boom: Harness.Query = (_, _) => throw new IllegalStateException("boom")
