@@ -38,10 +38,8 @@ object Analytics {
       val counts = t(s, d, "orders")
         .groupBy(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("cnt").desc, col("o_orderpriority"))
-      counts.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
+      topKPer(counts, Seq(col("o_orderstatus")),
+          Seq(col("cnt").desc, col("o_orderpriority")), 1)
         .select(col("o_orderstatus"),
           col("o_orderpriority").as("mode_priority"), col("cnt").as("mode_count"))
         .orderBy(col("o_orderstatus"))
@@ -252,15 +250,12 @@ object Analytics {
 
     // ---- deterministic stratified sample: fixed k per stratum by hash
     //      order (reproducible across runs/engines, no RNG)
-    "q43_stratified_sample" -> ((s, d) => {
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(md5(col("c_name").cast("binary")), col("c_custkey"))
-      t(s, d, "customer")
-        .select(col("c_mktsegment"), col("c_custkey"),
-          row_number().over(w).cast("long").as("rk"))
-        .filter(col("rk") <= 5)
-        .orderBy(col("c_mktsegment"), col("rk"))
-    }),
+    "q43_stratified_sample" -> ((s, d) =>
+      topKPer(t(s, d, "customer").select(col("c_mktsegment"), col("c_custkey"), col("c_name")),
+          Seq(col("c_mktsegment")),
+          Seq(md5(col("c_name").cast("binary")), col("c_custkey")), 5)
+        .select(col("c_mktsegment"), col("c_custkey"), col("rk"))
+        .orderBy(col("c_mktsegment"), col("rk"))),
 
     // ---- fixed-width histogram: bucket index from literal bounds
     //      (floor of identical IEEE double ops on both engines —

@@ -52,15 +52,11 @@ object Events {
   }
 
   /** Keyed dedup: first event per (user_id, event_type) by time. */
-  def firstPerKey(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("ts"), col("event_id"))
-    events
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def firstPerKey(events: DataFrame): DataFrame =
+    topKPer(events, Seq(col("user_id"), col("event_type")),
+        Seq(col("ts"), col("event_id")), 1)
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"))
-  }
 
   /** Fixed-point EWMA (α = 0.15) per user over the time-ordered event
     * series — the sequential-fold operator. A linear recurrence

@@ -89,15 +89,11 @@ object Relational {
     }),
 
     // ---- window top-k per group (rank-filter; no global sort)
-    "q07_topk_per_group" -> ((s, d) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, d, "orders")
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
+    "q07_topk_per_group" -> ((s, d) =>
+      topKPer(t(s, d, "orders"), Seq(col("o_custkey")),
+          Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rk"))
-        .orderBy(col("o_custkey"), col("rk"))
-    }),
+        .orderBy(col("o_custkey"), col("rk"))),
 
     // ---- running window aggregate (exact decimal prefix sums)
     "q08_window_running" -> ((s, d) => {

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -64,13 +63,10 @@ object Similarity {
 
   /** Brute-force cosine top-k: every query (vec_id ≡ 0 mod queryMod)
     * against the whole corpus; ties broken by neighbor id. */
-  def knnBruteForce(emb: DataFrame, k: Int = 5, queryMod: Int = DefaultQueryMod): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scoredAllPairs(emb, queryMod)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+  def knnBruteForce(emb: DataFrame, k: Int = 5, queryMod: Int = DefaultQueryMod): DataFrame =
+    topKPer(scoredAllPairs(emb, queryMod), Seq(col("q_id")),
+        Seq(col("cos").desc, col("neighbor_id")), k)
       .select(col("q_id"), col("neighbor_id"), col("rk"), col("cos"))
-  }
 
   /** Hard-negative mining for contrastive/embedding training (the
     * in-batch-negatives upgrade every dense-retriever recipe calls for,
@@ -93,14 +89,12 @@ object Similarity {
     val queries = base.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("qv").as("q_qv"), col("nrm").as("q_nrm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    base
+    val scored = base
       .join(broadcast(queries), col("label") =!= col("q_label"))
       .withColumn("cos", idot("qv", "q_qv").cast("double") / (col("nrm") * col("q_nrm")))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         col("label").as("neg_label"), col("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topKPer(scored, Seq(col("q_id")), Seq(col("cos").desc, col("neighbor_id")), k)
       .select(col("q_id"), col("neighbor_id"), col("neg_label"), col("rk"), col("cos"))
   }
 
@@ -177,28 +171,52 @@ object Similarity {
     * the IVF-PQ routing can reuse the same trained quantizer. */
   /** Nearest-centroid assignment over the FULL 64-dim space: the
     * centroids collapse to ONE broadcast row of (cid, cv) structs and
-    * the argmin is a per-row fold — a narrow map, the corpus never
-    * shuffles. Distance computed ONCE per centroid (transform), then a
-    * cheap struct argmin fold — inlining the distance into the IF would
-    * evaluate the 64-dim fold twice per centroid (Catalyst does not CSE
-    * inside HOF lambdas); strict < keeps ties at the smallest cid since
-    * cs is cid-sorted. Returns (vec_id, qv, cid, d2). */
-  private def assignFull(base: DataFrame, cents: DataFrame): DataFrame = {
-    val d = "aggregate(zip_with(qv, c.cv, (x, y) -> (x - y) * (x - y)), " +
-      "CAST(0 AS BIGINT), (a, v) -> a + v)"
-    val one = cents.agg(
-      expr("array_sort(collect_list(struct(cid, cv)), (l, r) -> CASE " +
-        "WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1 ELSE 0 END)")
-        .as("cs"))
-    base.crossJoin(broadcast(one))
-      .withColumn("best", expr(
-        s"""aggregate(
-              transform(cs, c -> named_struct('d2', $d, 'cid', c.cid)),
-              named_struct('d2', CAST(4611686018427387903 AS BIGINT),
-                           'cid', CAST(-1 AS BIGINT)),
-              (acc, s) -> IF(s.d2 < acc.d2, s, acc))"""))
+    * the argmin is a per-row fold ([[nearest]]) — a narrow map, the
+    * corpus never shuffles. Returns (vec_id, qv, cid, d2). */
+  private def assignFull(base: DataFrame, cents: DataFrame): DataFrame =
+    base.crossJoin(broadcast(cents.agg(cidSorted)))
+      .withColumn("best", nearest("qv"))
       .select(col("vec_id"), col("qv"),
         col("best.cid").as("cid"), col("best.d2").as("d2"))
+
+  /** Exact integer squared-L2 distance between two bigint array
+    * columns, as a SQL fragment (it also runs inside the argmin fold's
+    * lambdas, where only SQL text can name the lambda's variables). */
+  private def l2Sql(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (a, v) -> a + v)"
+
+  /** The centroids of one group as a cid-sorted array `cs` of (cid, cv)
+    * structs — the broadcast side of the argmin fold. */
+  private val cidSorted: Column =
+    expr("array_sort(collect_list(struct(cid, cv)), (l, r) -> CASE " +
+      "WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1 ELSE 0 END)").as("cs")
+
+  /** Argmin of the L2² from the `v` vector to each centroid in `cs`, as
+    * a (d2, cid) struct. Each distance is computed once (transform),
+    * then a cheap struct fold — inlining the distance into the IF would
+    * evaluate the fold twice per centroid (Catalyst does not CSE inside
+    * HOF lambdas); strict < keeps ties at the smallest cid since `cs`
+    * is cid-sorted. */
+  private def nearest(v: String): Column = expr(
+    s"""aggregate(
+          transform(cs, c -> named_struct('d2', ${l2Sql(v, "c.cv")}, 'cid', c.cid)),
+          named_struct('d2', CAST(4611686018427387903 AS BIGINT),
+                       'cid', CAST(-1 AS BIGINT)),
+          (acc, t) -> IF(t.d2 < acc.d2, t, acc))""")
+
+  /** One Lloyd update: per (`keys`, cid), the floor of the mean of each
+    * dimension of the assigned `v` vectors — exact in double for any
+    * realistic magnitude (|sum| « 2⁵³), floor ≡ DuckDB. Returns
+    * (`keys`, cid, cv); the only exchange is the map-side-combined
+    * partial sums keyed by (`keys`, cid, dim). */
+  private def floorMeans(assigned: DataFrame, keys: Seq[String], v: String): DataFrame = {
+    val g = (keys :+ "cid").map(col)
+    assigned.select(g :+ posexplode(col(v)).as(Seq("dim", "v")): _*)
+      .groupBy(g :+ col("dim"): _*)
+      .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("m"))
+      .groupBy(g: _*)
+      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
+      .select(g :+ expr("transform(dm, x -> x.m)").as("cv"): _*)
   }
 
   /** The k centroids after one deterministic Lloyd step (seeds = the k
@@ -209,13 +227,7 @@ object Similarity {
     val base = quantized(emb).select(col("vec_id"), col("qv"))
     val seeds = base.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cid"), col("qv").as("cv"))
-    assignFull(base, seeds)
-      .select(col("cid"), posexplode(col("qv")).as(Seq("dim", "v")))
-      .groupBy(col("cid"), col("dim"))
-      .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("m"))
-      .groupBy(col("cid"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-      .select(col("cid"), expr("transform(dm, x -> x.m)").as("cv"))
+    floorMeans(assignFull(base, seeds), Nil, "qv")
   }
 
   def kmeansAssign(emb: DataFrame, k: Int = 4): DataFrame =
@@ -248,23 +260,11 @@ object Similarity {
     * codebooks collapse to m broadcast rows of (cid, cv) structs, the
     * argmin is a per-row fold, the corpus never shuffles. Exact integer
     * L2², ties to the smallest cid. */
-  private def assignSub(sub: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = cents.groupBy(col("s")).agg(
-      expr("array_sort(collect_list(struct(cid, cv)), (l, r) -> CASE " +
-        "WHEN l.cid < r.cid THEN -1 WHEN l.cid > r.cid THEN 1 ELSE 0 END)")
-        .as("cs"))
-    val d = "aggregate(zip_with(sub, c.cv, (x, y) -> (x - y) * (x - y)), " +
-      "CAST(0 AS BIGINT), (a, v) -> a + v)"
-    sub.join(broadcast(packed), Seq("s"))
-      .withColumn("best", expr(
-        s"""aggregate(
-              transform(cs, c -> named_struct('d2', $d, 'cid', c.cid)),
-              named_struct('d2', CAST(4611686018427387903 AS BIGINT),
-                           'cid', CAST(-1 AS BIGINT)),
-              (acc, t) -> IF(t.d2 < acc.d2, t, acc))"""))
+  private def assignSub(sub: DataFrame, cents: DataFrame): DataFrame =
+    sub.join(broadcast(cents.groupBy(col("s")).agg(cidSorted)), Seq("s"))
+      .withColumn("best", nearest("sub"))
       .select(col("vec_id"), col("s"), col("sub"),
         col("best.cid").as("cid"), col("best.d2").as("d2"))
-  }
 
   /** Per-subspace PQ codebooks — k codewords per subspace trained with
     * the s11 recipe restricted to each subspace (deterministic seeds =
@@ -279,13 +279,7 @@ object Similarity {
       .orderBy(col("vec_id")).limit(k)
     val seeds = sub.join(broadcast(seedIds), Seq("vec_id"))
       .select(col("s"), col("vec_id").as("cid"), col("sub").as("cv"))
-    assignSub(sub, seeds)
-      .select(col("s"), col("cid"), posexplode(col("sub")).as(Seq("dim", "v")))
-      .groupBy(col("s"), col("cid"), col("dim"))
-      .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("mv"))
-      .groupBy(col("s"), col("cid"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("mv")))).as("dm"))
-      .select(col("s"), col("cid"), expr("transform(dm, x -> x.mv)").as("cv"))
+    floorMeans(assignSub(sub, seeds), Seq("s"), "sub")
   }
 
   /** PQ ENCODE: each vector compresses to m codeword ids (+ the exact
@@ -307,15 +301,16 @@ object Similarity {
     * the per-subspace terms before any shuffle (n·nq combined rows ride
     * the exchange, never n·m·nq), and WindowGroupLimit bounds the
     * final top-k sort. Exact integer arithmetic end to end, determinate
-    * ties (adc, vec_id) — hence the full value oracle. */
+    * ties (adc, vec_id) — hence the full value oracle. Trains in-query;
+    * no catalog row calls it — SimilaritySpec and StreamingSpec use it
+    * as the reference the persisted-index serves must equal. */
   def pqAdcTopK(emb: DataFrame, topK: Int = 5, queryMod: Int = 400,
                 m: Int = 8, subDim: Int = 8, k: Int = 4): DataFrame = {
     val cb = pqCodebooks(emb, m, subDim, k)
     // encode against the codebooks ALREADY in scope — calling pqCodes()
     // here would silently re-run the whole training chain a second time
-    val codes = assignSub(subvectors(emb, m, subDim), cb)
-      .select(col("vec_id"), col("s"), col("cid").as("code"))
-    adcTopKFromIndex(emb, cb, codes, topK, queryMod, m, subDim)
+    adcTopKFromIndex(emb, cb, encodeWithCodebooks(emb, cb, m, subDim),
+      topK, queryMod, m, subDim)
   }
 
   /** The ADC serve path against a PREBUILT index — (codebooks, codes)
@@ -354,40 +349,33 @@ object Similarity {
     adcTopK(adcScoredPairsQuantized(qVec, cb, codes, m, subDim), topK)
 
   /** The per-(query, vector) ADC distance relation BEFORE the top-k
-    * rank — factored out (r22) because a vector's ADC depends only on
-    * its OWN m code rows + the frozen codebooks, making the relation
-    * segment-decomposable: scoring code segments independently and
-    * unioning the per-pair rows equals scoring all codes at once.
-    * (A per-commit incremental serve for st22 built on this was
-    * measured NEUTRAL-to-worse at the bounded replay's 2 commits —
-    * the base relation's checkpoint costs one extra materialization;
-    * the shape pays only at a real deployment's commit cadence — and
-    * was reverted; the factoring stays because it is zero-cost and
-    * documents the decomposability.) */
+    * rank. A vector's ADC depends only on its OWN m code rows + the
+    * frozen codebooks, so the relation is segment-decomposable: scoring
+    * code segments independently and unioning the per-pair rows equals
+    * scoring all codes at once. */
   private def adcScoredPairsQuantized(qVec: DataFrame, cb: DataFrame,
                                       codes: DataFrame, m: Int,
-                                      subDim: Int): DataFrame = {
-    val qsub = subvectorsOf(qVec, m, subDim)
-      .select(col("vec_id").as("q_id"), col("s"), col("sub").as("qsub"))
-    val dq = "aggregate(zip_with(qsub, cv, (x, y) -> (x - y) * (x - y)), " +
-      "CAST(0 AS BIGINT), (a, v) -> a + v)"
-    val dtab = qsub.join(broadcast(cb), Seq("s"))
-      .select(col("q_id"), col("s"), col("cid").as("code"), expr(dq).as("dq"))
-    codes.join(broadcast(dtab), Seq("s", "code"))
+                                      subDim: Int): DataFrame =
+    codes.join(broadcast(adcTable(qVec, cb, m, subDim)), Seq("s", "code"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("dq")).as("adc"))
-  }
 
-  /** The rank tail of [[adcServeQueries]]: deterministic top-`topK`
-    * per query (adc asc, vec_id asc tiebreak). */
-  private[graft] def adcTopK(scored: DataFrame, topK: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    scored
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
+  /** The per-query ADC distance table (q_id, s, code, dq): the exact
+    * integer L2² from each query subvector to every codeword of its
+    * subspace — nq·m·k rows, built once per query batch. */
+  private def adcTable(qVec: DataFrame, cb: DataFrame, m: Int,
+                       subDim: Int): DataFrame =
+    subvectorsOf(qVec, m, subDim)
+      .select(col("vec_id").as("q_id"), col("s"), col("sub").as("qsub"))
+      .join(broadcast(cb), Seq("s"))
+      .select(col("q_id"), col("s"), col("cid").as("code"), expr(l2Sql("qsub", "cv")).as("dq"))
+
+  /** The ADC rank tail: deterministic top-`topK` per query (adc asc,
+    * vec_id asc tiebreak) over a scored (q_id, vec_id, adc) relation. */
+  private def adcTopK(scored: DataFrame, topK: Int): DataFrame =
+    topKPer(scored, Seq(col("q_id")), Seq(col("adc"), col("vec_id")), topK)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("adc"))
-  }
 
   /** Train the PQ index for `emb` and persist its two relations —
     * codebooks (m·k rows) and codes (n·m rows) — under `dir`. The
@@ -446,16 +434,17 @@ object Similarity {
     * is a narrow map over the arrival batch alone (codebooks are a
     * broadcast literal), appended to the codes relation; quantization
     * drift as the distribution shifts is the documented trade, with
-    * s12's reconstruction-error telemetry as the retrain trigger. */
+    * s12's reconstruction-error telemetry as the retrain trigger.
+    * Trains in-query; no catalog row calls it — SimilaritySpec uses it
+    * as the reference [[pqIndexUpsertFromBase]] must equal. */
   def pqIndexUpsert(emb: DataFrame, topK: Int = 5, queryMod: Int = 400,
                     m: Int = 8, subDim: Int = 8, k: Int = 4): DataFrame = {
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val cb = pqCodebooks(base, m, subDim, k)
     // encode base AND delta against the base-trained codebooks — one
-    // assignSub call stands in for "codes relation + delta append"
-    val codes = assignSub(subvectors(emb, m, subDim), cb)
-      .select(col("vec_id"), col("s"), col("cid").as("code"))
-    adcTopKFromIndex(emb, cb, codes, topK, queryMod, m, subDim)
+    // encode stands in for "codes relation + delta append"
+    adcTopKFromIndex(emb, cb, encodeWithCodebooks(emb, cb, m, subDim),
+      topK, queryMod, m, subDim)
   }
 
   /** The STEADY-STATE half of the upsert loop — what every ingestion
@@ -497,7 +486,10 @@ object Similarity {
     * of the corpus (·nProbe/k), met on a broadcast equi-join on cid —
     * at 100 TB the corpus is partitioned BY cid so a probe is partition
     * pruning. ADC joins ride broadcasts; per-subspace terms partial-
-    * aggregate map-side; WindowGroupLimit bounds the top-k sort. */
+    * aggregate map-side; WindowGroupLimit bounds the top-k sort.
+    * Trains in-query; no catalog row calls it — SimilaritySpec uses it
+    * for the recall sweep and, through [[retrieveRerank]], as the
+    * reference the persisted-index serve must equal. */
   def ivfPqTopK(emb: DataFrame, topK: Int = 5, queryMod: Int = 400,
                 nProbe: Int = IvfNProbe, m: Int = 8, subDim: Int = 8,
                 k: Int = 4): DataFrame = {
@@ -510,10 +502,8 @@ object Similarity {
     // compressed-domain codes against the one trained codebook set
     // (pqCodes() would train a duplicate)
     val cb = pqCodebooks(emb, m, subDim, k)
-    val codes = assignSub(subvectors(emb, m, subDim), cb)
-      .select(col("vec_id"), col("s"), col("cid").as("code"))
-    ivfPqServe(quantized(emb), cents, member, cb, codes,
-      topK, queryMod, nProbe, m, subDim)
+    ivfPqServe(quantized(emb), cents, member, cb,
+      encodeWithCodebooks(emb, cb, m, subDim), topK, queryMod, nProbe, m, subDim)
   }
 
   /** The IVF-PQ SERVE path against the index relations, however
@@ -531,33 +521,19 @@ object Similarity {
     val queries = vectors.filter(col("vec_id") % queryMod === 0)
     // query routing: exact integer L2² to each trained centroid
     // (nq·k rows), top-nProbe with (d2, cid) ties
-    val qd = "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)), " +
-      "CAST(0 AS BIGINT), (a, v) -> a + v)"
-    val wr = Window.partitionBy(col("q_id")).orderBy(col("rd2"), col("cid"))
-    val route = queries
+    val dists = queries
       .select(col("vec_id").as("q_id"), col("qv"))
       .crossJoin(broadcast(cents))
-      .withColumn("rd2", expr(qd))
-      .withColumn("rrk", row_number().over(wr))
-      .filter(col("rrk") <= nProbe)
+      .withColumn("rd2", expr(l2Sql("qv", "cv")))
+    val route = topKPer(dists, Seq(col("q_id")), Seq(col("rd2"), col("cid")), nProbe)
       .select(col("q_id"), col("cid"))
     val cand = member.join(broadcast(route), Seq("cid"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    val qsub = subvectorsOf(queries, m, subDim)
-      .select(col("vec_id").as("q_id"), col("s"), col("sub").as("qsub"))
-    val dq = "aggregate(zip_with(qsub, cv, (x, y) -> (x - y) * (x - y)), " +
-      "CAST(0 AS BIGINT), (a, v) -> a + v)"
-    val dtab = qsub.join(broadcast(cb), Seq("s"))
-      .select(col("q_id"), col("s"), col("cid").as("code"), expr(dq).as("dq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    cand.join(codes, Seq("vec_id"))
-      .join(broadcast(dtab), Seq("q_id", "s", "code"))
+    adcTopK(cand.join(codes, Seq("vec_id"))
+      .join(broadcast(adcTable(queries, cb, m, subDim)), Seq("q_id", "s", "code"))
       .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("dq")).as("adc"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("adc"))
+      .agg(sum(col("dq")).as("adc")), topK)
   }
 
   /** Train the FULL IVF-PQ index and persist its five relations under
@@ -628,7 +604,9 @@ object Similarity {
     * second broadcast; WindowGroupLimit bounds the final sort. With
     * shortlist ≥ the probed candidate count the result is EXACTLY the
     * probed-set cosine ranking (SimilaritySpec pins full-probe+full-
-    * shortlist ≡ brute force). */
+    * shortlist ≡ brute force). Trains in-query; no catalog row calls
+    * it — SimilaritySpec uses it as the reference
+    * [[retrieveRerankFromIndex]] must equal. */
   def retrieveRerank(emb: DataFrame, topK: Int = 5, shortlist: Int = 25,
                      queryMod: Int = 400, nProbe: Int = IvfNProbe,
                      m: Int = 8, subDim: Int = 8, k: Int = 4): DataFrame =
@@ -665,13 +643,11 @@ object Similarity {
     val qvec = base.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
         col("nrm").as("q_nrm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    corpus.join(broadcast(cands), Seq("neighbor_id"))
+    val scored = corpus.join(broadcast(cands), Seq("neighbor_id"))
       .join(broadcast(qvec), Seq("q_id"))
       .withColumn("cos",
         idot("c_qv", "q_qv").cast("double") / (col("c_nrm") * col("q_nrm")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
+    topKPer(scored, Seq(col("q_id")), Seq(col("cos").desc, col("neighbor_id")), topK)
       .select(col("q_id"), col("neighbor_id"), col("rk"), col("cos"))
   }
 
@@ -695,16 +671,11 @@ object Similarity {
       .select(col("vec_id"), col("qv"), slice(col("qv"), 1, prefixDims).as("pv"))
     val queries = base.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"), col("pv").as("q_pv"))
-    val w1 = Window.partitionBy(col("q_id")).orderBy(col("ip_pre").desc, col("vec_id"))
-    val cand = base.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+    val pre = base.join(broadcast(queries), col("vec_id") =!= col("q_id"))
       .withColumn("ip_pre", idot("pv", "q_pv"))
-      .withColumn("rk1", row_number().over(w1))
-      .filter(col("rk1") <= shortlist)
-    val w2 = Window.partitionBy(col("q_id")).orderBy(col("ip").desc, col("vec_id"))
-    cand
+    val cand = topKPer(pre, Seq(col("q_id")), Seq(col("ip_pre").desc, col("vec_id")), shortlist)
       .withColumn("ip", idot("qv", "q_qv"))
-      .withColumn("rk", row_number().over(w2).cast("long"))
-      .filter(col("rk") <= topK)
+    topKPer(cand, Seq(col("q_id")), Seq(col("ip").desc, col("vec_id")), topK)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("ip"))
   }
 
@@ -752,13 +723,11 @@ object Similarity {
     val base = lshBuckets(emb, nBits)
     val queries = base.filter(col("vec_id") % queryMod === 0)
       .select(col("bucket"), col("vec_id").as("q_id"), col("qv").as("q_qv"), col("nrm").as("q_nrm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    base
+    val scored = base
       .join(broadcast(queries), Seq("bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", idot("qv", "q_qv").cast("double") / (col("nrm") * col("q_nrm")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topKPer(scored, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cos"))
   }
 
@@ -794,11 +763,9 @@ object Similarity {
     val cdot = expr(
       "aggregate(zip_with(q_qv, cv, (x, y) -> cast(x as double) * y), 0d, (acc, v) -> acc + v)")
     val cnrm = expr("sqrt(aggregate(transform(cv, x -> x * x), 0d, (acc, v) -> acc + v))")
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("c_cos").desc, col("c_label"))
-    queries.join(broadcast(cents))
+    val scored = queries.join(broadcast(cents))
       .withColumn("c_cos", cdot / (col("q_nrm") * cnrm))
-      .withColumn("c_rk", row_number().over(wq))
-      .filter(col("c_rk") <= nProbe)
+    topKPer(scored, Seq(col("q_id")), Seq(col("c_cos").desc, col("c_label")), nProbe)
       .select(col("q_id"), col("q_qv"), col("q_nrm"), col("c_label"))
   }
 
@@ -812,12 +779,10 @@ object Similarity {
              nProbe: Int = IvfNProbe): DataFrame = {
     val base = quantized(emb)
     val probed = ivfProbes(emb, queryMod, nProbe)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    base.join(broadcast(probed), col("label") === col("c_label"))
+    val scored = base.join(broadcast(probed), col("label") === col("c_label"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", idot("qv", "q_qv").cast("double") / (col("nrm") * col("q_nrm")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topKPer(scored, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rk"), col("cos"))
   }
 
@@ -895,10 +860,7 @@ object Similarity {
         }
       }
       .toDF("q_id", "neighbor_id", "ip")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("ip").desc, col("neighbor_id"))
-    partials
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topKPer(partials, Seq(col("q_id")), Seq(col("ip").desc, col("neighbor_id")), k)
       .select(col("q_id"), col("neighbor_id"), col("rk"), col("ip"))
   }
 

@@ -207,17 +207,14 @@ object TextAnalysis {
     * not; the ranking they induce per document is identical whenever
     * ties are broken by term, since x ↦ ln is monotone. */
   def tfIdfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val terms = docs.select(col("doc_id"), explode(ws).as("term"))
       .filter(col("term") =!= "")
     val tf = terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("score").desc, col("term"))
-    tf.join(dfreq, Seq("term")).crossJoin(broadcast(n))
+    val scored = tf.join(dfreq, Seq("term")).crossJoin(broadcast(n))
       .withColumn("score", col("tf").cast("double") * col("n_docs") / col("df"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topKPer(scored, Seq(col("doc_id")), Seq(col("score").desc, col("term")), k)
       .select(col("doc_id"), col("rk"), col("term"), col("tf"), col("df"), col("score"))
   }
 
@@ -823,11 +820,13 @@ object TextAnalysis {
   /** The shared BM25 scoring tail (see [[bm25Retrieve]] for the score
     * arithmetic): df-cap the query terms, broadcast them over the
     * postings, attach doc lengths, sum the per-term products, rank
-    * top-`k` per query. */
+    * top-`k` per query (score desc, doc_id asc tiebreak). */
   private[graft] def bm25Score(tf: DataFrame, dl: DataFrame, dfreq: DataFrame,
                         stats: DataFrame, queries: DataFrame,
                         k: Int): DataFrame =
-    bm25TopK(bm25ScoredPairs(tf, dl, dfreq, stats, queries), k)
+    topKPer(bm25ScoredPairs(tf, dl, dfreq, stats, queries), Seq(col("q_id")),
+        Seq(col("score_x1e8").desc, col("doc_id")), k)
+      .select(col("q_id"), col("rk"), col("doc_id"), col("score_x1e8"))
 
   /** The per-(query, document) scored relation BEFORE the top-k rank —
     * factored out (r22) because a document's score depends only on ITS
@@ -856,18 +855,6 @@ object TextAnalysis {
         "(22 * avgdl * tf * 10000) div (10 * avgdl * tf + 3 * avgdl + 9 * dl)"))
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("idf_x1e4") * col("tfterm_x1e4")).as("score_x1e8"))
-  }
-
-  /** The rank tail of [[bm25Score]]: deterministic top-`k` per query
-    * (score desc, doc_id asc tiebreak) over a scored-pairs relation. */
-  private[graft] def bm25TopK(scored: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_x1e8").desc, col("doc_id"))
-    scored
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("doc_id"), col("score_x1e8"))
   }
 
   /** Bigram-CONDITIONAL surprise score — the statistical-LM quality

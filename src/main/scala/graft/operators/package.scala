@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -100,4 +101,19 @@ package object operators {
     * DuckDB: CAST(sum(CAST(x AS DECIMAL(18,4))) AS DOUBLE) / count(*). */
   def davg(c: Column): Column =
     sum(c.cast(DecimalType(18, 4))).cast("double") / count(lit(1))
+
+  /** The top `k` rows of each `by` group under `order`: adds `rk`, the
+    * 1-based `row_number()` rank cast to long, and keeps `rk <= k`; a
+    * group smaller than `k` keeps all its rows. `order` must end in a
+    * tiebreak unique within the group, so which rows survive a tie —
+    * and each row's `rk` — is the same in any engine and under any
+    * partitioning. Spark plans the rank filter as a partial
+    * `WindowGroupLimit` before the group exchange and a final one after
+    * it, so at most `k` rows per group leave each map task (PLANS.md,
+    * q07); input already partitioned by `by` gets the final node only.
+    * The caller selects its output columns, `rk` or not. */
+  def topKPer(df: DataFrame, by: Seq[Column], order: Seq[Column], k: Int): DataFrame =
+    df.withColumn("rk",
+        row_number().over(Window.partitionBy(by: _*).orderBy(order: _*)).cast("long"))
+      .filter(col("rk") <= k)
 }

@@ -137,9 +137,51 @@ class PlanSpec extends SparkSpec {
     assert(windows == 3, s"expected 3 window passes, got $windows:\n$p")
   }
 
+  // WindowGroupLimit nodes per top-k row: a rank filter behind a group
+  // exchange plans a Partial node before it and a Final one after it;
+  // s18's second rank reuses the first's q_id partitioning, so it adds
+  // one node and no exchange
+  private val groupLimits = Seq(
+    "q07_topk_per_group" -> 2, "q36_mode_per_group" -> 2,
+    "q43_stratified_sample" -> 2, "e04_first_per_key" -> 2,
+    "t08_tfidf_topterms" -> 2, "t23_bm25_retrieve" -> 2,
+    "t24_bm25_index_serve" -> 2, "s01_knn_brute" -> 2, "s02_knn_lsh" -> 2,
+    "s07_knn_mips_pruned" -> 2, "s13_pq_adc_topk" -> 2,
+    "s17_index_upsert" -> 2, "s19_hard_negatives" -> 2,
+    "s05_knn_ivf" -> 4, "s14_ivfpq_topk" -> 4, "s16_retrieve_rerank" -> 6,
+    "s18_prefix_refine" -> 3)
+
   test("q07: partial+final WindowGroupLimit bounds the shuffled rows to k per group") {
     val p = plan("q07_topk_per_group")
     assert(p.contains("WindowGroupLimit") && p.contains("Partial") && p.contains("Final"), p)
+  }
+
+  test("top-k rows: each plans its expected partial+final WindowGroupLimit nodes") {
+    groupLimits.foreach { case (q, n) =>
+      val p = plan(q)
+      val limits = "WindowGroupLimit".r.findAllIn(p).length
+      assert(limits == n, s"$q: expected $n WindowGroupLimit nodes, got $limits:\n$p")
+      assert(p.contains("Partial") && p.contains("Final"), s"$q:\n$p")
+    }
+  }
+
+  test("topKPer: 1-based long rank, tiebreak decides ties, layout-invariant, short group whole") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.LongType
+    import graft.operators.topKPer
+    // group 1 ties at score 5 (ids 3 and 1): the id tiebreak ranks 1
+    // first; group 2 holds one row, fewer than k
+    val df = Seq((1, 5, 3L), (1, 5, 1L), (1, 9, 2L), (1, 2, 4L), (2, 7, 5L))
+      .toDF("g", "score", "id")
+    def top(in: DataFrame) =
+      topKPer(in, Seq(col("g")), Seq(col("score").desc, col("id")), 3)
+    def rows(in: DataFrame) =
+      top(in).select("g", "id", "rk").orderBy("g", "rk").as[(Int, Long, Long)].collect().toSeq
+    assert(top(df).schema("rk").dataType == LongType)
+    val want = Seq((1, 2L, 1L), (1, 1L, 2L), (1, 3L, 3L), (2, 5L, 1L))
+    assert(rows(df) == want)
+    Seq(1, 7).foreach(n => assert(rows(df.repartition(n)) == want, s"repartition($n)"))
   }
 
   test("bucketed co-located join: no exchange on either side") {
